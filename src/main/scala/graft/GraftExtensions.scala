@@ -52,8 +52,9 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point: kernel SQL functions plus the
-  * as-of join planner strategy and its pushdown rule. */
+/** `spark.sql.extensions` entry point: kernel SQL functions, the as-of
+  * join planner strategy and its pushdown rule, and the ordered-carry
+  * planner strategy. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, usage, builder) =>
@@ -62,5 +63,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
+    ext.injectPlannerStrategy(_ => graft.plans.OrderedCarryStrategy)
   }
 }

@@ -48,6 +48,7 @@ object Plans {
         "ASOF" -> count(p, "AsofJoin "))
         .filter(_._2 > 0).map { case (k, n) => s"$k×$n" }.mkString(" ")
       val reuse = count(p, "ReusedExchange")
+      val carry = count(p, "OrderedCarry ")
       // unpartitioned (global) windows — every row moves to ONE task; a
       // fact-sized input here is a serial stage at 100 TB. Counted from
       // the plan TREE (partitionSpec.isEmpty), not the string, and
@@ -73,6 +74,7 @@ object Plans {
         if (p.contains("TakeOrderedAndProject")) "topK" else "",
         if (p.contains("WindowGroupLimit")) "wgl" else "",
         if (reuse > 0) s"reuse×$reuse" else "",
+        if (carry > 0) s"carry×$carry" else "",
         if (gwin > 0) s"gwin×$gwin" else "",
         if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoop"))
           "NESTED-LOOP" else "")
@@ -95,7 +97,9 @@ object Plans {
          |codegen span count, notable operators (`topK` =
          |TakeOrderedAndProject, `wgl` = WindowGroupLimit rank pushdown,
          |`reuse×N` = ReusedExchange — a repeated subtree served from one
-         |shuffle instead of recomputed, `gwin×N` = unpartitioned
+         |shuffle instead of recomputed, `carry×N` = OrderedCarry — the
+         |one-range-shuffle prefix/total operator behind PrefixSum,
+         |RangedNtile and Skyline, `gwin×N` = unpartitioned
          |(global) WindowExec count — every row moves to ONE task, so
          |each such window must sit on a census/aggregate-bounded frame,
          |never fact-scale; PlanShapeSpec's global-window allowlist is
@@ -126,7 +130,8 @@ object Plans {
          |broadcast query fleet; r16 adds q357's 1-row (mn, mx)
          |histogram-bounds broadcast under the fact scan, q359's
          |1-row Holt-Winters init broadcast onto the collected series,
-         |and q360's 5-row query-language fleet — the q238 pattern).
+         |and q360's 5-row query-language fleet — the q238 pattern;
+         |q390's 1-row median broadcast).
          |Anything else earning that flag is a regression —
          |and since round 5 that contract is EXECUTABLE: PlanShapeSpec's
          |"nested-loop joins appear ONLY on the PLANS.md-enumerated

@@ -52,13 +52,13 @@ object CorpusQueries {
       .groupBy(col("fd").as("doc_id")).agg(count(lit(1)).as("nv"))
     // r20 (verdict mandate #2): the census size fused into the prefix
     // pass (row count ≡ the max-of-rn it replaced; zero extra jobs)
-    val (c, nck) = PrefixSum.withPrefixSumsAndTotals(
+    val c = PrefixSum.withPrefixSumsAndTotals(
       toks.join(novel, Seq("doc_id"), "left")
         .select(col("doc_id"), col("nw"), coalesce(col("nv"), lit(0L)).as("nv")),
       Seq(col("doc_id")),
       Seq((lit(1L), "rn"), (col("nw"), "cum_n"), (col("nv"), "cum_v")), Nil,
       Seq((lit(1L), "nck")))
-    val ck = c.crossJoin(broadcast(nck))
+    val ck = c
       .filter(expr("exists(sequence(1, 10), " +
         "k -> rn = greatest(cast(1 as bigint), " +
         "nck div cast(shiftleft(1, 10 - k) as bigint)))"))

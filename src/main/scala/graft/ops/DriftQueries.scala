@@ -195,13 +195,12 @@ object DriftQueries {
     // r20 (verdict mandate #2): side totals fused into the prefix pass
     // (r13 read them back as max-of-cumulative; the fused form costs
     // zero extra jobs — the driver already holds the partials)
-    val (c, tot) = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
+    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
       Seq((col("ca"), "cuma"), (col("cb"), "cumb")), Nil,
       Seq((col("ca"), "ta"), (col("cb"), "tb")))
     // Fuzz hardening (r12): an empty side leaves the KS distance
     // undefined — null, not a divide-by-zero crash
-    c.crossJoin(broadcast(tot))
-      .agg(max(abs(col("cuma") * col("tb") - col("cumb") * col("ta")))
+    c.agg(max(abs(col("cuma") * col("tb") - col("cumb") * col("ta")))
           .as("ks_num"),
         max(col("ta")).as("ta"), max(col("tb")).as("tb"))
       .select(col("ks_num"), (col("ta") * col("tb")).as("ks_den"),
@@ -302,12 +301,11 @@ object DriftQueries {
     // r20 (verdict mandate #2): side totals fused into the prefix pass
     // (r13 read them back as max-of-cumulative; the fused form costs
     // zero extra jobs — the driver already holds the partials)
-    val (c, tot) = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("sc")),
+    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("sc")),
       Seq((lit(1L), "idx"), (col("p"), "cuma"), (col("q"), "cumb")), Nil,
       Seq((col("p"), "ta"), (col("q"), "tb")))
     val nxt = c.select((col("idx") - 1L).as("idx"), col("sc").as("next_sc"))
     c.join(nxt, Seq("idx"), "left")
-      .crossJoin(broadcast(tot))
       .agg(sum(abs(col("cuma") * col("tb") - col("cumb") * col("ta")) *
           (coalesce(col("next_sc"), col("sc")) - col("sc"))).as("w1_num"),
         max(col("ta")).as("ta"), max(col("tb")).as("tb"))
@@ -940,7 +938,7 @@ object DriftQueries {
     // r20 (verdict mandate #2): side totals fused into the prefix pass
     // (they equal the max-of-cumulative the r13 pattern read back, but
     // cost zero extra jobs — the driver already holds the partials)
-    val (c, tot) = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
+    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
       Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
       Seq((col("l"), "nn"), (col("cx"), "nx")))
     // A² = (1/(n·m)) Σ_j l_j·(M_jN − nF_j)²/(F_j(N−F_j)) — the Pettitt
@@ -962,7 +960,7 @@ object DriftQueries {
     val termq = floor(col("l").cast("double") *
       (num.cast("double") * num.cast("double") /
         (den * greatest(nxD * nyD, lit(1e-300)))) * 1e9 + 0.5).cast("long")
-    val g = c.crossJoin(broadcast(tot))
+    val g = c
       .filter(col("cum_all") < col("nn"))
       .agg(max(col("nn")).as("nn"), max(col("nx")).as("nx"),
         sum(termq).as("tq"))
@@ -1041,14 +1039,14 @@ object DriftQueries {
     // r20 (verdict mandate #2): side totals fused into the prefix pass
     // (they equal the max-of-cumulative the r13 pattern read back, but
     // cost zero extra jobs — the driver already holds the partials)
-    val (c, tot) = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
+    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
       Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
       Seq((col("l"), "nn"), (col("cx"), "nx")))
     // scaled ECDF gap at each block end: ny·F_x − nx·F_y, exact int
     val gap = (col("nn") - col("nx")).cast(dec) * col("cum_x").cast(dec) -
       col("nx").cast(dec) *
         (col("cum_all") - col("cum_x")).cast(dec)
-    val g = c.crossJoin(broadcast(tot))
+    val g = c
       .agg(max(col("nn")).as("nn"), max(col("nx")).as("nx"),
         max(gap).as("gmax"), min(gap).as("gmin"))
     def f(c: Column) = c.cast("double")
@@ -1227,7 +1225,7 @@ object DriftQueries {
     // r20 (verdict mandate #2): side totals fused into the prefix pass
     // (they equal the max-of-cumulative the r13 pattern read back, but
     // cost zero extra jobs — the driver already holds the partials)
-    val (c, tot) = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
+    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
       Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
       Seq((col("l"), "nn"), (col("cx"), "nx")))
     // F1 − F2 at a block end = (cum_x·ny − cum_y·nx)/(nx·ny), exact
@@ -1246,7 +1244,7 @@ object DriftQueries {
     val termq = floor(col("l").cast("double") *
       (num.cast("double") / nd) * (num.cast("double") / nd) *
       1e9 + 0.5).cast("long")
-    val g = c.crossJoin(broadcast(tot))
+    val g = c
       .withColumn("termq", termq)
       .agg(max(col("nn")).as("nn"), max(col("nx")).as("nx"),
         sum(col("termq")).as("tq"))
@@ -1345,11 +1343,11 @@ object DriftQueries {
     val h = recent.groupBy("rev").agg(count(lit(1)).as("l"),
       count(when(!col("is_we"), 1)).as("lx"))
     // r20 (verdict mandate #2): side totals fused into the prefix pass
-    val (c, tot) = graft.ops.PrefixSum.withPrefixSumsAndTotals(h,
+    val c = graft.ops.PrefixSum.withPrefixSumsAndTotals(h,
       Seq(col("rev")),
       Seq((col("l"), "cum_all"), (col("lx"), "cum_x")), Nil,
       Seq((col("l"), "nn"), (col("lx"), "nx")))
-    val withTot = c.crossJoin(broadcast(tot))
+    val withTot = c
       .withColumn("ny", col("nn") - col("nx"))
       .withColumn("num",
         col("cum_x") * col("ny") -

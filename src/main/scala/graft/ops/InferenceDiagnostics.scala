@@ -146,10 +146,10 @@ object InferenceDiagnostics {
     // 1-row totals broadcast (q147 form) for the from-both-ends fold
     // r20 (verdict mandate #2): the 1-row total fused into the prefix
     // pass (Σcnt ≡ the max-of-cumulative it replaced; zero extra jobs)
-    val (cum, tot) = PrefixSum.withPrefixSumsAndTotals(cell,
+    val cum = PrefixSum.withPrefixSumsAndTotals(cell,
       Seq(col("pc")), Seq((col("cnt"), "cumn")), Nil,
       Seq((col("cnt"), "nn")))
-    val ranked = cum.crossJoin(broadcast(tot))
+    val ranked = cum
       .withColumn("r2", lit(2L) * col("cumn") - col("cnt") + 1L)
       .withColumn("a2",
         least(col("r2"), lit(2L) * (col("nn") + 1L) - col("r2")))
@@ -243,10 +243,10 @@ object InferenceDiagnostics {
       .agg(count(lit(1)).as("cnt"), sum(col("g1")).as("c1"))
     // r20 (verdict mandate #2): the 1-row total fused into the prefix
     // pass (Σcnt ≡ the max-of-cumulative it replaced; zero extra jobs)
-    val (cum, tot) = PrefixSum.withPrefixSumsAndTotals(cell,
+    val cum = PrefixSum.withPrefixSumsAndTotals(cell,
       Seq(col("pc")), Seq((col("cnt"), "cumn")), Nil,
       Seq((col("cnt"), "nn")))
-    val ranked = cum.crossJoin(broadcast(tot))
+    val ranked = cum
       .withColumn("r2", lit(2L) * col("cumn") - col("cnt") + 1L)
       .withColumn("s2", lit(2L) * (col("nn") + 1L) - col("r2"))
     val a = ranked.agg(max(col("nn")).as("n"), sum(col("c1")).as("m"),

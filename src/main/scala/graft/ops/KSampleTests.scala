@@ -57,20 +57,20 @@ object KSampleTests {
     // r20 (verdict mandate #2): the tie correction Σ(n³−n) used to be a
     // second full aggregation over `cen`, re-executing the fact-scale
     // census build; it now rides PrefixSum's own per-partition pass
-    val (cum0, tieTot) = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+    val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
       Seq(col("c")), Seq((col("n"), "cumn")), Nil,
       Seq((col("n").cast(dec) * col("n").cast(dec) * col("n").cast(dec) -
         col("n").cast(dec), "tied")))
-    val cum = cum0
-      .select(col("c"), col("n"), (col("cumn") * 2 - col("n") + 1).as("r2"))
+      .select(col("c"), col("n"), (col("cumn") * 2 - col("n") + 1).as("r2"),
+        col("tied").cast("long").as("tie"))
     val bySeg = o.groupBy("seg", "c").agg(count(lit(1)).as("ncs"))
       .join(cum, "c")
       .groupBy("seg")
       .agg(sum(col("ncs")).as("nj"),
-        sum(col("ncs").cast(dec) * col("r2").cast(dec)).as("r2j"))
+        sum(col("ncs").cast(dec) * col("r2").cast(dec)).as("r2j"),
+        max(col("tie")).as("tie"))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    val tieDf = tieTot.select(col("tied").cast("long").as("tie"))
     val t = bySeg
       // Rⱼ²/nⱼ = (R2ⱼ/2)²/nⱼ = R2ⱼ²/(4nⱼ), pinned to int64 once
       .withColumn("vq",
@@ -78,7 +78,6 @@ object KSampleTests {
           (col("nj").cast("double") * 4.0) + 0.5).cast("long"))
       .withColumn("nt", sum(col("nj")).over(wAll))
       .withColumn("sv", sum(col("vq")).over(wAll))
-      .crossJoin(broadcast(tieDf))
     val nD = col("nt").cast("double")
     val h = lit(12.0) / (nD * (nD + 1.0)) * col("sv").cast("double") -
       lit(3.0) * (nD + 1.0)
@@ -1058,17 +1057,18 @@ object KSampleTests {
     val cen = o.groupBy("c").agg(count(lit(1)).as("n"))
     // r20 (verdict mandate #2): tie totals fused into the prefix pass —
     // the q227 note applies verbatim
-    val (cum0, tieDf) = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+    val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
       Seq(col("c")), Seq((col("n"), "cumn")), Nil,
       Seq((col("n").cast(dec) * col("n").cast(dec) * col("n").cast(dec) -
         col("n").cast(dec), "tie")))
-    val cum = cum0
-      .select(col("c"), col("n"), (col("cumn") * 2 - col("n") + 1).as("r2"))
+      .select(col("c"), col("n"), (col("cumn") * 2 - col("n") + 1).as("r2"),
+        col("tie"))
     val byg = o.groupBy("l", "c").agg(count(lit(1)).as("ncs"))
       .join(cum, "c")
       .groupBy("l")
       .agg(sum(col("ncs")).as("nj"),
-        sum(col("ncs").cast(dec) * col("r2").cast(dec)).as("r2j"))
+        sum(col("ncs").cast(dec) * col("r2").cast(dec)).as("r2j"),
+        max(col("tie")).as("tie"))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val t = byg
@@ -1076,7 +1076,6 @@ object KSampleTests {
       .withColumn("t2", sum(col("l").cast(dec) * col("r2j")).over(wAll))
       .withColumn("l1", sum(col("l") * col("nj")).over(wAll))
       .withColumn("l2", sum(col("l") * col("l") * col("nj")).over(wAll))
-      .crossJoin(broadcast(tieDf))
     val nD = col("nt").cast("double")
     val corr = lit(1.0) - col("tie").cast("double") / (nD * nD * nD - nD)
     // doubled units: T2 = 2T, E[T2] = (N+1)·L1, Var[T2] = 4·Var[T]

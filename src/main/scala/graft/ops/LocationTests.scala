@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** TWO-sample and paired location/rank tests, split out of
@@ -618,9 +617,8 @@ object LocationTests {
     * forbids. Now the q210/q254 backbone: collapse to a (pair, v)
     * census with PIVOTED per-group counts map-side, run ONE
     * multi-column [[PrefixSum]] pass over the global (pair, v) order
-    * (two-phase range-partitioned kernel — no low-cardinality
-    * window), and recover per-pair cumulatives by subtracting each
-    * pair's exclusive offset from a broadcast 2-row totals frame.
+    * (no low-cardinality window), and recover per-pair cumulatives by
+    * subtracting each pair's exclusive offset, carried by that pass.
     * Doubled midranks per value CELL (2·cum − t + 1, exact under
     * ties, identical to the per-row 2·rank + ties − 1), so the
     * per-group moments weight each cell by its count — bit-identical
@@ -649,27 +647,15 @@ object LocationTests {
       sum(when(col("grp") === "x", 1L).otherwise(0L)).as("nx"),
       sum(when(col("grp") === "y", 1L).otherwise(0L)).as("ny"))
     // ONE multi-column prefix pass over the global (pair, v) order,
-    // FUSED with the per-pair totals (r20, verdict mandate #2): the
-    // r19 census checkpoint was rejected (fact-cardinality census,
-    // ~1.4 s of block writes to save a ~0.4 s re-aggregation), so the
-    // offs-side totals re-executed the whole census build. The fused
-    // pass folds the per-pair totals out of PrefixSum's own
-    // per-partition aggregation — no second census build, no extra
-    // materialization.
-    val (cum, offs) = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+    // FUSED with the per-pair exclusive offsets (the cumulative mass of
+    // lexicographically-preceding pairs), which come out of the same
+    // per-partition partials — no second census build, no extra
+    // materialization, no window over the pair totals.
+    val cell = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
       Seq(col("pair"), col("v")),
       Seq((col("nx"), "gx"), (col("ny"), "gy")),
-      Seq("pair"),
-      Seq((col("nx"), "tx"), (col("ny"), "ty")))
-    // per-pair exclusive offsets: the 2-row pair-totals frame carries
-    // the cumulative mass of lexicographically-preceding pairs; the
-    // unpartitioned window runs over exactly |pairs| = 2 rows
-    val wOff = Window.orderBy("pair")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off2 = offs.select(col("pair"),
-      coalesce(sum(col("tx")).over(wOff), lit(0L)).as("ox"),
-      coalesce(sum(col("ty")).over(wOff), lit(0L)).as("oy"))
-    val cell = cum.join(broadcast(off2), Seq("pair"))
+      Seq("pair"), Nil,
+      Seq((col("nx"), "ox"), (col("ny"), "oy")))
       .withColumn("cx", col("gx") - col("ox"))
       .withColumn("cy", col("gy") - col("oy"))
     // doubled midranks per cell: pooled 2·cumP − t + 1 equals the
@@ -855,7 +841,7 @@ object LocationTests {
     * Scale (rewritten r17, verdict mandate #2): the census here is
     * fact-cardinality (micro-unit price domain), so cumulative
     * positions run through ONE group-masked multi-column
-    * [[PrefixSum]] pass with a broadcast 2-row offset frame — no
+    * [[PrefixSum]] pass that also carries the per-pair offsets — no
     * per-pair window anywhere; the k-th-position explode is
     * embarrassingly parallel map-side work and everything after the
     * keyed agg is a 4-row census. */
@@ -882,29 +868,18 @@ object LocationTests {
     // (v, grp) order, x before y), and pair the k-th within-position
     // with the k-th pooled rank — on tie-free data this is EXACTLY
     // the per-row construction, and on ties it is deterministic
-    // r20 (verdict mandate #2): the census' second consumer — the
-    // per-pair totals — now rides PrefixSum's own per-partition
-    // aggregation (withPrefixSumsAndTotals below), so the census has
-    // exactly ONE consumer again and the r19 lazy checkpoint (which
-    // existed only to share the build between the two) is gone with it.
+    // the census has ONE consumer, the prefix pass below, which also
+    // yields the per-pair totals — so it needs no checkpoint
     val census = base.groupBy("pair", "grp", "v")
       .agg(count(lit(1)).as("cv"))
     val dec = "decimal(38,0)"
-    // r17 (verdict mandate #2): the census itself is fact-CARDINALITY
-    // here (micro-unit prices make nearly every lineitem row a
-    // distinct v), so r16's per-pair cumulative windows were
-    // 2-partition sorts over fact-scale data. Replaced with ONE
-    // [[PrefixSum]] pass over the pooled order (pair, v, grp — x
-    // before y at ties): the within-group cumulative rides the SAME
-    // pass through group-MASKED sum columns (cvx/cvy — a grp-x row's
-    // global cvx cumulative in pooled order IS its inclusive
-    // within-x cumulative, since y rows contribute zero), and the
-    // per-pair/per-group exclusive offsets come from one broadcast
-    // 2-row pivoted totals frame, which also carries n and m.
-    // Identical i/r/n/m per row, so the per-term integers and the
-    // oracle are unchanged. (First written as two PrefixSum passes —
-    // the fold halved the round's top bench entry.)
-    val (c2, totg) = graft.ops.PrefixSum.withPrefixSumsAndTotals(
+    // the census is fact-CARDINALITY (micro-unit prices), so no
+    // per-pair window: ONE [[PrefixSum]] pass over the pooled order
+    // (pair, v, grp — x before y at ties). A grp-x row's cumulative of
+    // the group-MASKED cvx IS its inclusive within-x cumulative (y rows
+    // add zero); the per-pair totals (n, m) and exclusive offsets ride
+    // the same pass.
+    val ranked = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       census
         .withColumn("cvx", when(col("grp") === "x", col("cv"))
           .otherwise(0L))
@@ -913,18 +888,11 @@ object LocationTests {
       Seq(col("pair"), col("v"), col("grp")),
       Seq((col("cv"), "gp"), (col("cvx"), "gwx"), (col("cvy"), "gwy")),
       Seq("pair"),
-      // per-pair totals of the SAME masked columns (tx ≡ Σ cv·[grp=x]),
-      // fused out of the prefix pass — no totg-side census re-read
-      Seq((col("cvx"), "tx"), (col("cvy"), "ty")))
-    val wOffP = Window.orderBy("pair")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totg.select(col("pair"), col("tx"), col("ty"),
-      coalesce(sum(col("tx")).over(wOffP), lit(0L)).as("offx"),
-      coalesce(sum(col("ty")).over(wOffP), lit(0L)).as("offy"),
-      coalesce(sum(col("tx") + col("ty")).over(wOffP), lit(0L))
-        .as("offp"))
-    val ranked = c2
-      .join(broadcast(offs), Seq("pair"))
+      // per-pair totals of the SAME masked columns (tx ≡ Σ cv·[grp=x])
+      // and the pairs' exclusive offsets, fused out of the prefix pass
+      Seq((col("cvx"), "tx"), (col("cvy"), "ty")),
+      Seq((col("cvx"), "offx"), (col("cvy"), "offy"),
+        (col("cvx") + col("cvy"), "offp")))
       .withColumn("gw", when(col("grp") === "x", col("gwx"))
         .otherwise(col("gwy")))
       .withColumn("offw", when(col("grp") === "x", col("offx"))
@@ -1069,14 +1037,14 @@ object LocationTests {
       .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
     // r20 (verdict mandate #2): totals fused into the prefix pass —
     // the old cen.agg re-executed the fact-scale census build
-    val (cum, tot) = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+    val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
       Seq(col("c")), Seq((col("n"), "cumn")), Nil,
       Seq((col("n"), "nt"), (col("n1"), "n1t"),
         (col("n").cast(dec) * col("n").cast(dec) * col("n").cast(dec) -
           col("n").cast(dec), "tie")))
     // per tied run: positions i0..i0+n−1, each mapped to its ST rank,
     // summed exactly; the run's average rank is ONE quantized division
-    val run = cum.crossJoin(broadcast(tot))
+    val run = cum
       .withColumn("i0", col("cumn") - col("n") + 1L)
       .withColumn("k", explode(sequence(lit(0L), col("n") - 1L)))
       .withColumn("i", col("i0") + col("k"))
@@ -1086,14 +1054,14 @@ object LocationTests {
             .otherwise(col("i") * 2L))
         .otherwise(when(pmod(col("j"), lit(2L)) === 1L, col("j") * 2L)
           .otherwise(col("j") * 2L - 1L)))
+    val totals = Seq("nt", "n1t", "tie").map(t => max(col(t)).as(t))
     val runs = run.groupBy("c")
-      .agg(max(col("n")).as("n"), max(col("n1")).as("n1"),
-        sum(col("st")).as("sr"))
+      .agg(max(col("n")).as("n"), max(col("n1")).as("n1") +:
+        sum(col("st")).as("sr") +: totals: _*)
       .withColumn("aq", floor(col("sr").cast("double") * 1e6 /
         col("n").cast("double") + 0.5).cast("long"))
     val g = runs.agg(sum(col("n1").cast(dec) * col("aq").cast(dec))
-        .as("w1q6"))
-      .crossJoin(broadcast(tot))
+        .as("w1q6"), totals: _*)
     def d(c: Column) = c.cast("double")
     val n1t = d(col("n1t"))
     val n2t = d(col("nt")) - n1t

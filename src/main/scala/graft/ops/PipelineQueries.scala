@@ -852,10 +852,10 @@ object PipelineQueries {
         .as("w"))
     // r20 (verdict mandate #2): the 1-row grand total fused into the
     // prefix pass (Σw ≡ the max-of-cumulative it replaced)
-    val (cum, tot) = graft.ops.PrefixSum.withPrefixSumsAndTotals(o,
+    val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(o,
       Seq(col("l_suppkey")), Seq((col("w"), "cum")), Nil,
       Seq((col("w"), "t")))
-    val j = cum.crossJoin(broadcast(tot))
+    val j = cum
       .withColumn("f1", when(col("cum") * (2L * k) < col("t"), 0L)
         .otherwise(expr(s"(cum * ${2 * k} - t) div (2 * t)") + 1L))
       .withColumn("f0", when((col("cum") - col("w")) * (2L * k) <

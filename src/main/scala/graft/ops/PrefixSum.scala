@@ -1,167 +1,49 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, LongType, StructField, StructType}
+import graft.plans.{Carry, CarryKind, OrderedCarryOp}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 
-/** Exact global running totals without the single-reducer sort — the
-  * [[RangedNtile]] two-phase machinery generalized from ranks to SUMs:
-  * `SUM(x) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)` single-partitions
-  * the table (the q98 trap), while the equivalent parallel plan is
-  * (1) `repartitionByRange` on the order key; (2) per-partition local
-  * cumulative sums; (3) add each preceding partition's total — one
-  * (pid, totals) row per shuffle partition on the driver,
-  * partition-count-sized model state, never row data.
+/** Exact global running totals without the single-reducer sort that
+  * `SUM(x) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)` plans (the q98
+  * trap): a thin wrapper over [[graft.plans.OrderedCarryOp]]. The
+  * building block for exact distributed CDFs (q147's KS statistic),
+  * running balances and cumulative mixes at fact scale.
   *
-  * The range-partitioned frame is `localCheckpoint`ed for the same
-  * reason as RangedNtile: the per-partition totals branch and the local
-  * cumsum branch must observe identical AQE partition ids. Ties: pass a
-  * total order, or rows with equal keys land in an arbitrary (but
-  * consistent) partition — their cumulative values within the tie run
-  * depend on that placement, exactly like SQL's under-specified ORDER
-  * BY. Downstream uses that only read the value at the END of each tie
-  * run (CDFs over distinct keys, threshold crossings) are placement-
-  * independent.
-  *
-  * This is the building block for exact distributed CDFs (q147's KS
-  * statistic), running balances and cumulative mixes at fact scale.
+  * Ties: pass a total order, or the cumulative values within a run of
+  * equal keys depend on row placement, exactly like SQL's
+  * under-specified ORDER BY; uses that read only the value at the END
+  * of each tie run (CDFs over distinct keys) are placement-independent.
   */
 object PrefixSum {
 
   /** Returns `df` plus, for each (column, alias) in `sums`, a column
-    * `alias` holding the exact cumulative sum of that column over the
-    * global `order`, computed with no single-partition stage.
-    *
-    * Sum columns may be any integral, floating or decimal type; the
-    * per-partition offsets are accumulated in the matching driver type
-    * (Long / Double / BigDecimal). Integral and decimal results are
-    * exact; for floating sums the driver-side partial-total addition
-    * reassociates IEEE ops exactly as a distributed `SUM` window
-    * would, so the result matches Spark's own partial-agg semantics,
-    * not a sequential left fold. */
+    * `alias` holding the cumulative `SUM` of that column over the global
+    * `order` (Spark's `SUM` result type and null semantics). Integral and
+    * decimal sums are exact; floating sums add the preceding partitions'
+    * total to the in-partition running sum, as a distributed `SUM`
+    * reassociates. */
   def withPrefixSums(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String)]): DataFrame =
-    withPrefixSumsAndTotals(df, order, sums, Nil, Nil)._1
+    withPrefixSumsAndTotals(df, order, sums, Nil, Nil)
 
-  /** [[withPrefixSums]] fused with the census' grand/per-group totals
-    * (r20, verdict mandate #2): callers of the fact-cardinality census
-    * family used to run a SECOND full aggregation over the census —
-    * `cen.agg(…)` or `cen.groupBy(g).agg(…)` — which re-executed the
-    * whole fact-scale census build (the census is only materialized
-    * inside this operator's range-partitioned checkpoint). This variant
-    * computes those totals from the SAME single per-partition
-    * aggregation pass that produces the prefix offsets: the internal
-    * groupBy becomes (__pid, group…), the driver folds the collected
-    * partials into (a) per-partition exclusive offsets (summed across
-    * groups, as before) and (b) per-group grand totals, and the totals
-    * come back as a driver-local DataFrame with columns
-    * `group ++ totals.aliases` — broadcast/crossJoin it downstream.
-    *
-    * `group` may be empty (global totals — one row). Totals of
-    * integral/decimal columns are exact (addition is associative);
-    * totals of floating columns reassociate like any distributed SUM.
-    * Group cardinality must be small (driver holds |pids|·|groups|
-    * partial rows — the same partition-count-sized model state as the
-    * offsets, never row data). */
+  /** [[withPrefixSums]] fused with the census' totals: every row also
+    * carries, per (column, alias) in `totals`, the `SUM` of that column
+    * over its `group` (the grand total when `group` is empty) and, per
+    * (column, alias) in `offsets`, the sum over the groups whose key
+    * sorts before its own (0 for the first group). All come from the
+    * prefix pass's own partials, so the census is built once; the prefix
+    * sums stay global. Groups must be few (one driver partial per
+    * partition and group). Empty input gives an empty frame. */
   def withPrefixSumsAndTotals(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String)], group: Seq[String],
-      totals: Seq[(Column, String)]): (DataFrame, DataFrame) = {
+      totals: Seq[(Column, String)],
+      offsets: Seq[(Column, String)] = Nil): DataFrame = {
     require(sums.nonEmpty, "need at least one column to sum")
-    val part = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val nSums = sums.size
-    val aggs = sums.zipWithIndex.map { case ((c, _), i) =>
-      sum(c).as(s"__t$i")
-    } ++ totals.zipWithIndex.map { case ((c, _), i) =>
-      sum(c).as(s"__u$i")
-    }
-    val keys = ("__pid" +: group).map(col)
-    val agged = part.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-    val aggSchema = agged.schema
-    val nKeys = 1 + group.size
-    val sumTypes = aggSchema.fields.slice(nKeys, nKeys + nSums).map(_.dataType)
-    val totTypes = aggSchema.fields.drop(nKeys + nSums).map(_.dataType)
-    val rows = agged.collect().sortBy(_.getInt(0))
-
-    // (a) per-partition EXCLUSIVE offsets for each prefix-sum column,
-    // accumulated across every group row of each pid in pid order —
-    // the sum column's own result type so nothing truncates
-    val out = sums.zipWithIndex.foldLeft(part) { case (d, ((c, alias), i)) =>
-      val fi = nKeys + i
-      val offCol = sumTypes(i) match {
-        case LongType =>
-          var acc = 0L
-          var m = Map.empty[Int, Long]
-          rows.foreach { r =>
-            val p = r.getInt(0)
-            if (!m.contains(p)) m += p -> acc
-            if (!r.isNullAt(fi)) acc += r.getAs[Number](fi).longValue()
-          }
-          element_at(typedlit(m), col("__pid"))
-        case DoubleType | FloatType =>
-          var acc = 0.0
-          var m = Map.empty[Int, Double]
-          rows.foreach { r =>
-            val p = r.getInt(0)
-            if (!m.contains(p)) m += p -> acc
-            if (!r.isNullAt(fi)) acc += r.getAs[Number](fi).doubleValue()
-          }
-          element_at(typedlit(m), col("__pid"))
-        case _: DecimalType =>
-          var acc = BigDecimal(0)
-          var m = Map.empty[Int, BigDecimal]
-          rows.foreach { r =>
-            val p = r.getInt(0)
-            if (!m.contains(p)) m += p -> acc
-            if (!r.isNullAt(fi)) acc += BigDecimal(r.getDecimal(fi))
-          }
-          element_at(typedlit(m), col("__pid"))
-        case other => throw new IllegalArgumentException(
-          s"withPrefixSums: unsupported sum result type $other for column $alias")
-      }
-      val w = Window.partitionBy("__pid").orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.withColumn(alias, sum(c).over(w) + offCol)
-    }.drop("__pid")
-
-    // (b) per-group grand totals of the totals columns, folded from the
-    // same collected partials; SQL SUM null semantics (null iff every
-    // partial in the group is null)
-    val totalsDf = if (totals.isEmpty) null else {
-      val spark = df.sparkSession
-      val groupKeys = rows.map(r => (1 until nKeys).map(r.get)).distinct
-      val folded = groupKeys.map { gk =>
-        val grows = rows.filter(r => (1 until nKeys).map(r.get) == gk)
-        val vals = totals.indices.map { i =>
-          val fi = nKeys + nSums + i
-          val nonNull = grows.filter(r => !r.isNullAt(fi))
-          if (nonNull.isEmpty) null else totTypes(i) match {
-            case LongType =>
-              java.lang.Long.valueOf(
-                nonNull.map(_.getAs[Number](fi).longValue()).sum)
-            case DoubleType | FloatType =>
-              java.lang.Double.valueOf(
-                nonNull.map(_.getAs[Number](fi).doubleValue()).sum)
-            case _: DecimalType =>
-              nonNull.map(r => BigDecimal(r.getDecimal(fi)))
-                .sum.underlying()
-            case other => throw new IllegalArgumentException(
-              s"withPrefixSumsAndTotals: unsupported total type $other")
-          }
-        }
-        Row.fromSeq(gk ++ vals)
-      }
-      val schema = StructType(
-        aggSchema.fields.slice(1, nKeys) ++
-          totals.zipWithIndex.map { case ((_, alias), i) =>
-            StructField(alias, totTypes(i), nullable = true)
-          })
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](java.util.Arrays.asList(folded: _*)),
-        schema)
-    }
-    (out, totalsDf)
+    def carries(kind: CarryKind, cs: Seq[(Column, String)]) =
+      cs.map { case (c, alias) => Carry(kind, c, alias) }
+    OrderedCarryOp.carry(df, order, group.map(col),
+      carries(CarryKind.RunningSum, sums) ++ carries(CarryKind.GroupTotal, totals) ++
+        carries(CarryKind.GroupOffset, offsets))
   }
 }

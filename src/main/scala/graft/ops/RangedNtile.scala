@@ -1,35 +1,17 @@
 package graft.ops
 
+import graft.plans.{Carry, CarryKind, OrderedCarryOp}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact global `NTILE(k)` without the single-reducer sort — the q98
-  * machinery (CurationQueries) extracted so any query can quantile-bucket
-  * a fact-sized column with every stage parallel.
-  *
-  * `NTILE(k) OVER (ORDER BY …)` is the textbook scale trap: one
-  * partition sorts the whole table. The equivalent parallel plan is
-  * (1) `repartitionByRange` on the sort key — each partition holds a
-  * contiguous key range, sorted independently; (2) global rank =
-  * per-partition `row_number` + the preceding partitions' row counts;
-  * (3) the front-loaded NTILE bucket formula (first n mod k buckets get
-  * one extra row) evaluated per row with literal constants. The only
-  * driver-side state is one (pid, count) pair per shuffle partition —
-  * partition-count-sized model data, the AnnIvf-centroid class, never
-  * row data.
-  *
-  * The range-partitioned frame is `localCheckpoint`ed so the count
-  * branch and the rank branch cannot observe different AQE coalescing
-  * of the range exchange (partition ids must agree between the two
-  * consumers). Ties are the caller's problem: pass a total order
-  * (append a unique key column) or partition-boundary placement of
-  * equal keys is nondeterministic — same contract as SQL NTILE with an
-  * under-specified ORDER BY.
-  *
-  * When sketch-exact bucket populations suffice, [[AppxQcut]] does the
-  * same binning with ZERO shuffles; this op is the exact form whose
-  * output must hash-match `NTILE(k)`.
+/** Exact global `NTILE(k)` without the single-reducer sort that
+  * `NTILE(k) OVER (ORDER BY …)` plans: the global rank (a running row
+  * count) and n (the row count) come from one
+  * [[graft.plans.OrderedCarryOp]] pass, then the front-loaded NTILE
+  * bucket formula is evaluated per row. Ties are the caller's problem:
+  * pass a total order (append a unique key) — SQL NTILE's contract.
+  * [[AppxQcut]] bins with zero shuffles when sketch-exact populations
+  * suffice; this is the form that must hash-match `NTILE(k)`.
   */
 object RangedNtile {
 
@@ -38,31 +20,19 @@ object RangedNtile {
   def withNtile(df: DataFrame, k: Int, order: Seq[Column],
                 out: String): DataFrame = {
     require(k > 0, s"ntile k must be positive, got $k")
-    val part = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val cnts = part.groupBy("__pid").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = cnts.map(_._2).sum
-    var acc = 0L
-    val offMap: Map[Int, Long] =
-      cnts.map { case (pid, c) => val o0 = acc; acc += c; pid -> o0 }.toMap
     // NTILE(k): with q = n div k and rem = n mod k, buckets 1..rem hold
     // q+1 rows and the rest hold q — row r (1-based) lands in bucket
     // ceil(r/(q+1)) while r <= rem*(q+1), else rem + ceil((r-cut)/q)
-    val q = n / k
-    val rem = n % k
-    val cut = rem * (q + 1)
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    part
-      .withColumn("__r",
-        row_number().over(w).cast("long") +
-          element_at(typedlit(offMap), col("__pid")))
+    val q = s"(__n div $k)"
+    val rem = s"(__n % $k)"
+    val cut = s"($rem * ($q + 1))"
+    OrderedCarryOp.carry(df, order, Nil, Seq(
+        Carry(CarryKind.RunningSum, lit(1L), "__r"),
+        Carry(CarryKind.GroupTotal, lit(1L), "__n")))
       .withColumn(out,
-        when(col("__r") <= cut, expr(s"(__r - 1) div ${q + 1} + 1"))
-          .otherwise(
-            expr(s"$rem + (__r - $cut - 1) div ${math.max(q, 1L)} + 1"))
+        when(col("__r") <= expr(cut), expr(s"(__r - 1) div ($q + 1) + 1"))
+          .otherwise(expr(s"$rem + (__r - $cut - 1) div greatest($q, 1) + 1"))
           .cast("int"))
-      .drop("__pid", "__r")
+      .drop("__r", "__n")
   }
 }

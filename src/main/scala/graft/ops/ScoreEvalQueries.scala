@@ -1117,9 +1117,8 @@ object ScoreEvalQueries {
     * the highest score (pinned).
     *
     * Parity: the (score, label) census + ONE [[PrefixSum]] pass
-    * gives exact ≥-threshold counts; the 1-row global totals ride a
-    * broadcast (q211 tmax pattern, no fact-sized window); TPR/FPR/J
-    * are 6dp output divisions only.
+    * gives exact ≥-threshold counts and the global totals (no
+    * fact-sized window); TPR/FPR/J are 6dp output divisions only.
     *
     * Scale: census + PrefixSum (no single-reducer sort); the argmax
     * is one exact max + equality filter; 1-row output. */
@@ -1141,17 +1140,13 @@ object ScoreEvalQueries {
     val lab = base.crossJoin(broadcast(med))
       .select(col("score"),
         (col("cents").cast("double") > col("med")).cast("long").as("y"))
-    // r19 (guide §2.4): lazy checkpoint — cen feeds the PrefixSum pass
-    // AND the totals agg; unmaterialized, the whole base+median+label
-    // chain (two fact passes: the percentile agg and the census build)
-    // re-executed per consumer (profiled: 3× at sf0.1, ~0.9 s each)
+    // the census has one consumer — its totals ride the prefix pass —
+    // so it needs no checkpoint
     val cen = lab.groupBy("score")
       .agg(sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn"))
-      .localCheckpoint(eager = false)
-    val cum = graft.ops.PrefixSum.withPrefixSums(cen,
-      Seq(col("score")), Seq((col("np"), "cp"), (col("nn"), "cn")))
-    val tot = cen.agg(sum(col("np")).as("post"), sum(col("nn")).as("negt"))
-    val j = cum.crossJoin(broadcast(tot))
+    val j = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+        Seq(col("score")), Seq((col("np"), "cp"), (col("nn"), "cn")), Nil,
+        Seq((col("np"), "post"), (col("nn"), "negt")))
       .withColumn("gep", col("post") - col("cp") + col("np"))
       .withColumn("gen", col("negt") - col("cn") + col("nn"))
       .withColumn("num", col("gep").cast(dec) * col("negt").cast(dec) -
@@ -1260,20 +1255,17 @@ object ScoreEvalQueries {
     val lab = base.crossJoin(broadcast(med))
       .select(col("score"),
         (col("cents").cast("double") > col("med")).cast("long").as("y"))
-    // r19: same lazy-checkpoint + single-pass-argmax rewrite as q395
-    // (see there); the census chain otherwise re-executed 3× per run
+    // the q395 census, totals and single-pass argmax
     val cen = lab.groupBy("score")
       .agg(sum(col("y")).as("np"), sum(lit(1L) - col("y")).as("nn"))
-      .localCheckpoint(eager = false)
-    val cum = graft.ops.PrefixSum.withPrefixSums(cen,
-      Seq(col("score")), Seq((col("np"), "cp"), (col("nn"), "cn")))
-    val tot = cen.agg(sum(col("np")).as("post"), sum(col("nn")).as("negt"))
     // plogp(a, n) = -(a/n)·ln(a/n) with the 0·ln0 = 0 convention
     def plogp(a: Column, n: Column): Column =
       when(a === 0L || n === 0L, lit(0.0))
         .otherwise(lit(-1.0) * (a.cast("double") / n.cast("double")) *
           log(a.cast("double") / n.cast("double")))
-    val j = cum.crossJoin(broadcast(tot))
+    val j = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+        Seq(col("score")), Seq((col("np"), "cp"), (col("nn"), "cn")), Nil,
+        Seq((col("np"), "post"), (col("nn"), "negt")))
       .withColumn("gep", col("post") - col("cp") + col("np"))
       .withColumn("gen", col("negt") - col("cn") + col("nn"))
       .withColumn("ltp", col("post") - col("gep"))

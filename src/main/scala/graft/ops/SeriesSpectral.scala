@@ -425,20 +425,17 @@ object SeriesSpectral {
     *
     * Scale: day census + [[PrefixSum]] index; the three periods ride
     * ONE census pass (explode, not a 3-branch union — a union would
-    * re-plan the scan and the totals broadcast once per period),
+    * re-plan the scan and the totals pass once per period),
     * map-side summed. Guards: n < 2·period or zero variance → null
     * share for that period. */
   def q266Periodogram(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val d0 = graft.ops.PrefixSum.withPrefixSums(
+    val e = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       daily(s, dir).select(col("day"), col("rev")),
-      Seq(col("day")), Seq((lit(1L), "rn")))
-      .select((col("rn") - 1).as("tt"), col("rev"))
-      .localCheckpoint(eager = false)
-    val tot = d0.agg(count(lit(1)).as("n"), sum(col("rev")).as("s"),
-      sum(col("rev").cast(dec) * col("rev").cast(dec)).as("q"))
-    val e = d0.crossJoin(broadcast(tot))
-      .select(col("tt"), col("n"), col("s"), col("q"),
+      Seq(col("day")), Seq((lit(1L), "rn")), Nil,
+      Seq((lit(1L), "n"), (col("rev"), "s"),
+        (col("rev").cast(dec) * col("rev").cast(dec), "q")))
+      .select((col("rn") - 1).as("tt"), col("n"), col("s"), col("q"),
         (col("rev").cast(dec) * col("n").cast(dec) - col("s").cast(dec))
           .as("eps"))
     val ang = col("tt").cast("double") *
@@ -650,14 +647,11 @@ object SeriesSpectral {
     * or zero variance → null entropy. */
   def q290SpectralEntropy(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val d0 = graft.ops.PrefixSum.withPrefixSums(
+    val e = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       daily(s, dir).select(col("day"), col("rev")),
-      Seq(col("day")), Seq((lit(1L), "rn")))
-      .select((col("rn") - 1).as("tt"), col("rev"))
-      .localCheckpoint(eager = false)
-    val tot = d0.agg(count(lit(1)).as("n"), sum(col("rev")).as("s"))
-    val e = d0.crossJoin(broadcast(tot))
-      .select(col("tt"), col("n"),
+      Seq(col("day")), Seq((lit(1L), "rn")), Nil,
+      Seq((lit(1L), "n"), (col("rev"), "s")))
+      .select((col("rn") - 1).as("tt"), col("n"),
         (col("rev").cast(dec) * col("n").cast(dec) - col("s").cast(dec))
           .as("eps"))
     val ang = col("tt").cast("double") * col("k").cast("double") *

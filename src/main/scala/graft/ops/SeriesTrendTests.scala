@@ -286,14 +286,14 @@ object SeriesTrendTests {
   def q263CoxStuart(s: SparkSession, dir: String): DataFrame = {
     // r20 (verdict mandate #2): the census size fused into the prefix
     // pass (row count ≡ the max-of-rn it replaced; zero extra jobs)
-    val (d0p, n) = graft.ops.PrefixSum.withPrefixSumsAndTotals(
+    val d0 = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")), Nil,
       Seq((lit(1L), "n")))
-    val d0 = d0p.select(col("rn"), col("rev"))
+      .select(col("rn"), col("rev"), col("n"))
       .localCheckpoint(eager = false)
     val m = expr("(n + 1) div 2") // integer div — `/` on Columns is double
-    val a = d0.select(col("rn").as("i"), col("rev").as("x1"))
+    val a = d0.select(col("rn").as("i"), col("rev").as("x1"), col("n"))
     val b = d0.select(col("rn").as("j"), col("rev").as("x2"))
     // LEFT join + in-agg pair mask, not an inner-filtered pair set: on a
     // degenerate ≤1-pair-free corpus (n=1 ⇒ i ≤ n−m never holds) an agg
@@ -302,8 +302,7 @@ object SeriesTrendTests {
     // (r12 ADVICE). The left form keeps every census row in the agg, so
     // max(n)/max(m) always carry, and s_up/s_dn are pinned to the
     // mirror's SUM-over-empty NULL via the pair count.
-    val pairs = a.crossJoin(broadcast(n))
-      .withColumn("m", m)
+    val pairs = a.withColumn("m", m)
       .join(b, col("j") === col("i") + col("m") &&
         col("i") <= col("n") - col("m"), "left")
     val inPair = col("j").isNotNull

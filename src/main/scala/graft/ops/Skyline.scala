@@ -1,74 +1,26 @@
 package graft.ops
 
+import graft.plans.{Carry, CarryKind, OrderedCarryOp}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact 2-D skyline (Pareto frontier) — rows not dominated under
-  * (minimize x, maximize y): keep row r iff no other row has x ≤ r.x and
-  * y ≥ r.y with at least one strict. The classic multi-criteria shortlist
-  * (cheapest-vs-biggest, fastest-vs-freshest) — Börzsönyi et al., "The
-  * Skyline Operator", ICDE 2001.
-  *
-  * The naive form is an all-pairs NOT EXISTS (quadratic) or a global
-  * sorted sweep (single-reducer). This plan is exact with ONE fact-sized
-  * shuffle and every stage parallel:
-  *
-  *  1. `repartitionByRange(x)` — partitions hold contiguous disjoint
-  *     x-ranges; a RangePartitioner sends equal keys to one partition,
-  *     so x strictly increases across partition ids.
-  *  2. collapse to the distinct-x level: per (pid, x) best y (all the
-  *     remaining stages run on distinct-x-sized data).
-  *  3. per-partition sweep: running max of best-y over strictly-smaller
-  *     x within the partition (`rowsBetween(-∞, -1)` is safe because
-  *     the grouped set has one row per x).
-  *  4. cross-partition correction: each partition's overall best-y,
-  *     collected to the driver (one double per shuffle partition —
-  *     model-class state, the RangedNtile discipline) and folded into a
-  *     prior-partitions running max, broadcast back as a literal map.
-  *  5. an x survives iff its best y strictly beats both maxima; rows
-  *     survive iff their x survives and they attain its best y (equal
-  *     (x, y) ties all survive — neither dominates the other).
-  *
-  * Membership is invariant to the partition layout, so the output is
-  * deterministic even though the pid column is not. Skew note: a single
-  * hot x value confines that x to one partition (step 1's exactness
-  * requirement); for pathological single-value columns pre-aggregate
-  * first.
+/** Exact 2-D skyline (Pareto frontier, Börzsönyi et al., ICDE 2001):
+  * keep row r iff no other row has x ≤ r.x and y ≥ r.y with at least
+  * one strict (minimize x, maximize y). Instead of an all-pairs NOT
+  * EXISTS or a single-reducer sweep, one [[graft.plans.OrderedCarryOp]]
+  * pass over (x asc, y desc) carries the best y among the rows strictly
+  * before each row — every smaller x, plus larger y at the same x. A row
+  * survives iff its y beats that; equal (x, y) rows are peers, excluded
+  * from each other's maximum, so ties all survive. Null y never
+  * survives; null x sorts first. A single hot x stays in one partition.
   */
 object Skyline {
 
   /** Frontier rows of `df` under (minimize `x`, maximize `y`), with all
     * original columns preserved. */
-  def skyline2(df: DataFrame, x: Column, y: Column): DataFrame = {
-    val part = df
-      .withColumn("__x", x).withColumn("__y", y)
-      .repartitionByRange(col("__x"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val g = part.groupBy("__pid", "__x").agg(max(col("__y")).as("__ymax"))
-    // prior-partition best y: one row per partition to the driver
-    val pmax = g.groupBy("__pid")
-      .agg(max(col("__ymax")).cast("double").as("m"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getDouble(1))
-      .sortBy(_._1)
-    var acc = Double.NegativeInfinity
-    val prior: Map[Int, Double] =
-      pmax.map { case (pid, m) => val p0 = acc; acc = math.max(acc, m); pid -> p0 }.toMap
-    val sweep = Window.partitionBy("__pid").orderBy("__x")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val keepX = g
-      .withColumn("__pm",
-        coalesce(max(col("__ymax")).over(sweep).cast("double"),
-          lit(Double.NegativeInfinity)))
-      .withColumn("__prior",
-        coalesce(element_at(typedlit(prior), col("__pid")),
-          lit(Double.NegativeInfinity)))
-      .filter(col("__ymax").cast("double") > greatest(col("__pm"), col("__prior")))
-      .select(col("__pid"), col("__x"), col("__ymax"))
-    part.join(broadcast(keepX), Seq("__pid", "__x"))
-      .filter(col("__y") === col("__ymax"))
-      .drop("__pid", "__x", "__y", "__ymax")
-  }
+  def skyline2(df: DataFrame, x: Column, y: Column): DataFrame =
+    OrderedCarryOp.carry(df, Seq(x.asc, y.desc), Nil,
+        Seq(Carry(CarryKind.PriorMax, y, "__prior")))
+      .filter(y.isNotNull && (col("__prior").isNull || y > col("__prior")))
+      .drop("__prior")
 }

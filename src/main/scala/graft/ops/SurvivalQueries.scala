@@ -371,15 +371,14 @@ object SurvivalQueries {
     // r20 (verdict mandate #2): the (n, Σg·cnt) totals used to re-run
     // the whole census build — including the per-user lag window over
     // events — a second time; fused into PrefixSum's own pass
-    val (cum, tot) = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
+    val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
       Seq(col("g")), Seq((col("cnt"), "cum")), Nil,
       Seq((col("cnt"), "n"), (col("g") * col("cnt"), "sg")))
     val lam = col("n").cast("double") / col("sg")
     val fT = lit(1.0) - exp(-lam * col("g"))
     val fHi = col("cum").cast("double") / col("n")
     val fLo = (col("cum") - col("cnt")).cast("double") / col("n")
-    cum.crossJoin(broadcast(tot))
-      .select(col("n"), col("sg"),
+    cum.select(col("n"), col("sg"),
         floor(greatest(abs(fHi - fT), abs(fT - fLo)) * 1e9 + 0.5)
           .cast("long").as("dq"))
       .groupBy("n", "sg")

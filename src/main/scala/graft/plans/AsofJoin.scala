@@ -241,10 +241,12 @@ object AsofJoinOp {
     * for config-based wiring at session build time. */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
     val exp = GraftColumnBridge.experimental(spark)
-    if (!exp.extraStrategies.contains(GraftStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ GraftStrategy
-    if (!exp.extraOptimizations.contains(PushFilterThroughAsofJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughAsofJoin
+    exp.synchronized {
+      if (!exp.extraStrategies.contains(GraftStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ GraftStrategy
+      if (!exp.extraOptimizations.contains(PushFilterThroughAsofJoin))
+        exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughAsofJoin
+    }
   }
 
   /** Left outer as-of join: for each `left` row, the `right` row with

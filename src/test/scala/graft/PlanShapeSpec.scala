@@ -205,14 +205,14 @@ class PlanShapeSpec extends SparkSpec {
   test("q98: quantile binning ranks range-partitioned — no single-reducer fact sort") {
     // the old ntile(10) OVER (ORDER BY …) form pulled every order
     // through one partition; the replacement must keep NTILE's exact
-    // bucket assignment while every window in the plan stays keyed
+    // bucket assignment while every stage stays parallel
     val p = planOf("q98_qcut")
     assert(!p.contains("ntile("),
       s"global ntile window must not reappear:\n$p")
     assert(!p.contains("Exchange SinglePartition"),
       s"no stage may single-partition the fact table:\n$p")
-    assert(p.contains("hashpartitioning(__pid"),
-      s"rank window must be partitioned on the range-partition id:\n$p")
+    assert(p.contains("OrderedCarry") && p.contains("rangepartitioning(o_totalprice"),
+      s"ranks must come from the ordered carry over a range exchange:\n$p")
   }
 
   test("q62: native as-of join plans with sorted, hash-clustered children") {
@@ -395,14 +395,10 @@ class PlanShapeSpec extends SparkSpec {
       // over a scale-constant ≤365-day series — is under the
       // checkpoint and never re-plans)
       "q206_theil_sen",
-      // r11: four more deliberate tiny-side broadcasts — q227's 1-row
-      // tie-census (the in-plan replacement for its old driver-side
-      // .head()), q236's 5-row global priority census under the
-      // quasi-group grid, q238's 5-row query-language fleet (the
-      // q52/q53 broadcast-query pattern), and q240's 1-row λ̂
-      // aggregate joined onto the gap census
-      "q227_kruskal_wallis", "q236_t_closeness", "q238_rank_eval",
-      "q240_expfit_ks",
+      // r11: q236's 5-row global priority census under the
+      // quasi-group grid and q238's 5-row query-language fleet (the
+      // q52/q53 broadcast-query pattern)
+      "q236_t_closeness", "q238_rank_eval",
       // r11 batch 4: q242's 1-row bounds broadcast (replacing q175's
       // driver-side .head() pattern), q244's 1-row × 1-row aggregate
       // join, and q245's single 4-row degree-ladder range join over
@@ -412,27 +408,21 @@ class PlanShapeSpec extends SparkSpec {
       // the trailing-window cut both sit under lazy checkpoints)
       "q248_mann_kendall",
       // r11 batch 6: q253's 1-row day-count broadcast onto the moment
-      // aggregate (the demeaning broadcast hides under PrefixSum's
-      // internal checkpoint) and q255's 1-row fitted-moments broadcast
-      // onto the value census (the q240 shape)
-      "q253_kpss", "q255_normal_ks",
+      // aggregate (the demeaning broadcast sits under its cum checkpoint)
+      "q253_kpss",
       // r12: q242's in-plan 1-row bounds broadcast backported to its
       // siblings q175/q200/q224 (r11 verdict mandate; the REST of the
       // builder-path .head() fetches went in r13 — see below)
       "q175_kaplan_meier", "q200_nelson_aalen", "q224_log_rank",
       // r12 batch 2: q256's 1-row centered-mean broadcast onto the cent
-      // census (the q255 shape), q259's 1-row grand-median broadcast,
-      // and q263's 1-row day-count broadcast onto the indexed census
-      "q256_jarque_bera", "q259_mood_median", "q263_cox_stuart",
+      // census and q259's 1-row grand-median broadcast
+      "q256_jarque_bera", "q259_mood_median",
       // r12 batch 3: q261's 1-row MoM-prior broadcast onto the part
       // census, q262's 1-row tmax cut PLUS its ≤365-row Walsh pair
-      // build (two irreducible nested loops — see bnljMax), q266's
-      // 1-row totals broadcast onto the day census (the three periods
-      // share it via explode, not a per-period union), and q273's
+      // build (two irreducible nested loops — see bnljMax), and q273's
       // 1-row pooled-moment broadcast onto the 2-row arm table (the
       // corpus-end bounds each ride the q242 in-plan form)
-      "q261_eb_shrinkage", "q262_hodges_lehmann", "q266_periodogram",
-      "q273_cuped",
+      "q261_eb_shrinkage", "q262_hodges_lehmann", "q273_cuped",
       // r13: q275's 1-row Σε²/n denominator broadcast onto the ≤6-row
       // per-lag aggregate (its other totals broadcast sits under the
       // eps lazy checkpoint, q262-style)
@@ -440,36 +430,24 @@ class PlanShapeSpec extends SparkSpec {
       // r13: the FINAL .head() sweep — every remaining build-time
       // bounds/totals fetch in a query builder became the q242 in-plan
       // 1-row broadcast: q133's reach count onto the 5-row event-type
-      // table, q147/q182's side totals (max of PrefixSum's cumulative
-      // counts, read from the already-checkpointed frame), q184's
-      // point-estimate moments onto the 1-row CI aggregate, and q121's
-      // corpus bigram/unigram totals onto the filtered bigram table.
-      // (q146/q165 went window-over-census instead — no nested loop.)
-      "q133_wilson_reach", "q147_ks", "q182_emd", "q184_bootstrap",
-      "q121_pmi",
-      // r13: q270's 1-row checkpoint-count broadcast onto the doc
-      // census (the q242 form) and q272's 5-row query-language fleet
-      // (the q238 broadcast-query pattern)
-      "q270_heaps_law", "q272_err20",
+      // table, q184's point-estimate moments onto the 1-row CI
+      // aggregate, and q121's corpus bigram/unigram totals onto the
+      // filtered bigram table. (q146/q165 went window-over-census
+      // instead — no nested loop.)
+      "q133_wilson_reach", "q184_bootstrap", "q121_pmi",
+      // r13: q272's 5-row query-language fleet (the q238
+      // broadcast-query pattern)
+      "q272_err20",
       // r13: q279's 1-row straddle-audit broadcast onto the 5-row
       // fold census (the q242 form; the CC labels broadcast is a
       // plain BroadcastHashJoin)
       "q279_leakage_folds",
-      // r13: q280's 1-row side-totals broadcast onto the distinct-cents
-      // census (the q147 max-of-cumulative pattern)
-      "q280_ad_two_sample",
-      // r18: q400 completes the EDF triptych on q280's exact shape —
-      // the same 1-row (nn, nx) totals broadcast onto the census
-      "q400_cvm_two_sample",
       // r18: q404's 1-row exact-medians broadcast onto the ≤365-row
       // day census (the q242 form; the tmax cut sits under the
       // census checkpoint like q262's)
       "q404_blomqvist_beta",
-      // r19: q410's 1-row pooled tie-census broadcast onto the ≤5-row
-      // group fold (the q227 form), q411's 1-row (nn, nx) totals
-      // broadcast onto the ≤365-row day census (the q280 form; the
-      // tmax cut rides the same shape)
-      "q410_cuzick_trend", "q411_watson_u2",
+      // r19: q411's 1-row tmax cut onto the ≤365-row day census
+      "q411_watson_u2",
       // r13 batch 2: q283's 1-row n/T census broadcast onto the
       // per-customer frame (the q242 form), q284's 10-row depth grid
       // joined onto the ≤10-row overlap frame (both sides literal-
@@ -477,16 +455,11 @@ class PlanShapeSpec extends SparkSpec {
       // object aggregate, and q286's 1-row vocabulary-size broadcast
       // onto the bigram-model join
       "q283_inequality", "q284_rbo", "q285_kendall_w", "q286_lm_score",
-      // r13 batch 2: q288's 1-row pooled-N broadcast read back as the
-      // max of PrefixSum's cumulative counts (the q147 form)
-      "q288_ansari_bradley",
-      // r13 batch 3: q289 shares q288's 1-row N broadcast; q290/q291's
-      // 1-row totals/moment broadcasts onto their censuses (the
-      // q266/q256 shapes); q292's ≤364-row embedded-census pair build
+      // r13 batch 3: q291's 1-row moment broadcast onto its census
+      // (the q256 shape); q292's ≤364-row embedded-census pair build
       // (the q262 Walsh shape — recency cut + tolerance broadcasts sit
       // under the lazy checkpoint)
-      "q289_cucconi", "q290_spectral_entropy", "q291_dagostino_k2",
-      "q292_sample_entropy",
+      "q291_dagostino_k2", "q292_sample_entropy",
       // r13 batch 4: q296's 1-row global-moment broadcast onto the
       // ≤612-cell grid census (the q242 form — Gi* needs corpus mean/sd
       // at every cell)
@@ -498,11 +471,9 @@ class PlanShapeSpec extends SparkSpec {
       // r13 batch 7: q305's 1-row (N,S) binary-threshold broadcast onto
       // the grid census; q306's 1-row Gram-solution broadcast onto the
       // per-order census (the q242 form — residuals need the betas at
-      // every row); q307's 1-row total-mass broadcast onto the supplier
-      // prefix frame (the q147 form); q308's census-sized water-level
-      // broadcasts (see bnljMax)
-      "q305_join_counts", "q306_breusch_pagan", "q307_pps_systematic",
-      "q308_water_fill",
+      // every row); q308's census-sized water-level broadcasts (see
+      // bnljMax)
+      "q305_join_counts", "q306_breusch_pagan", "q308_water_fill",
       // r13 batch 8: q309's 1-row day-count broadcast onto the calendar
       // census; q311/q312's 1-row Gram-solution broadcast onto the
       // per-order census (the q306 shape — residuals/leverage need the
@@ -558,9 +529,6 @@ class PlanShapeSpec extends SparkSpec {
       // r15: q348's 1-row true-population-mean broadcast onto the
       // 1-row estimator aggregate (the q244 aggregate-pair shape)
       "q348_post_stratified",
-      // r15: q352's 1-row side-totals broadcast onto the distinct-
-      // cents census (the q280/q147 max-of-cumulative pattern)
-      "q352_kuiper",
       // r16: q357's 1-row global (mn, mx) bounds broadcast under the
       // fact scan that assigns histogram bins (the q88/q242 form; the
       // quarterly merge and interpolation run on the ≤8×32-bin census)
@@ -605,24 +573,18 @@ class PlanShapeSpec extends SparkSpec {
       // r17: q384's 1-row corpus-end bounds broadcast under the
       // per-user agg — the identical q224/q175 form
       "q384_weighted_logrank",
-      // r17: q385's 1-row (N, n1t, tie) totals broadcast appears under
-      // both the position explode and the final algebra (the q242
-      // form, census-side twice)
-      "q385_siegel_tukey",
       // r17: q388's 1-row (n, total) broadcast onto the checkpointless
       // day census (the q336 form)
       "q388_page_hinkley",
-      // r17: q395's four 1-row broadcasts — the exact median, the
-      // (N+, N-) totals (planned under both the J frame and the
-      // argmax filter), and the argmax num — all census-side (the
-      // q308 multi-broadcast precedent)
-      "q395_youden_j",
-      // r17: q396 rides the identical q395 machinery (median, totals,
-      // argmax — census-side 1-row broadcasts)
-      "q396_info_gain",
+      // r17: q395's 1-row exact-median broadcast onto the scored
+      // orders; q396 rides the identical q395 machinery
+      "q395_youden_j", "q396_info_gain",
       // r17: q397's 1-row (n, Σx²) totals broadcast onto the day
       // census (the q388/q336 form)
-      "q397_cusum_squares")
+      "q397_cusum_squares",
+      // q390's 1-row median broadcast onto the scored orders (the q242
+      // form)
+      "q390_lift_table")
     // Queries whose plan legitimately carries MORE than one allowlisted
     // nested loop. q262's tmax cut sits under its lazy checkpoint (only
     // the ≤365-row Walsh pair build surfaces), and q266's three periods
@@ -639,11 +601,7 @@ class PlanShapeSpec extends SparkSpec {
     // existing n_members broadcast)
     val bnljMax = Map("q308_water_fill" -> 3, "q316_conformal" -> 2,
       "q285_kendall_w" -> 2, "q369_rmst" -> 2, "q375_weighted_kappa" -> 2,
-      "q378_tau_ap" -> 3, "q368_bloom_fpr" -> 2,
-      // r17: q385 totals×2 (explode + algebra); q395 median/totals/
-      // argmax — see the allowlist entries above
-      "q385_siegel_tukey" -> 2, "q395_youden_j" -> 4,
-      "q396_info_gain" -> 4)
+      "q378_tau_ap" -> 3, "q368_bloom_fpr" -> 2)
       .withDefaultValue(1)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
@@ -712,9 +670,8 @@ class PlanShapeSpec extends SparkSpec {
     // ≤|segments|/≤|groups|/grid statistical censuses, (c) value-domain
     // censuses bounded by the survival horizon or a quantile/tail cut,
     // (d) ≤k rank attaches above a TakeOrderedAndProject/limit, and
-    // (e) PrefixSum's ≤|groups|-row exclusive-offset frames. The
-    // row-count spot checks in the test below make the heaviest
-    // members' bounds executable.
+    // (e) ≤|groups|-row offset frames. The row-count spot checks in
+    // the test below make the heaviest members' bounds executable.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
@@ -774,9 +731,8 @@ class PlanShapeSpec extends SparkSpec {
       "q99_bm25", "q101_pagerank", "q105_triangles", "q113_session_paths",
       "q145_vocab_coverage", "q179_keyness", "q209_hits",
       "q236_t_closeness", "q271_term_dispersion",
-      // (e) PrefixSum's per-group exclusive-offset frames: ≤|groups|
-      // rows (2 pairs for q367/q371; ≤5 for the k-sample family)
-      "q206_theil_sen", "q367_brunner_munzel", "q371_bws")
+      // (e) ≤|groups|-row offset frames
+      "q206_theil_sen")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val n = globalWindows(fn(spark, sf0001).queryExecution.executedPlan)
@@ -817,13 +773,6 @@ class PlanShapeSpec extends SparkSpec {
         globalWindowInputs(q).foreach { n =>
           assert(n <= dayCensus * 8,
             s"$q global-window input $n is not day-census-bounded ($dayCensus days)")
-        }
-      }
-      // PrefixSum offset frames: ≤|pairs| = 2 rows regardless of SF
-      Seq("q367_brunner_munzel", "q371_bws").foreach { q =>
-        globalWindowInputs(q).foreach { n =>
-          assert(n <= 4,
-            s"$q offset-frame window input $n exceeds the pair bound")
         }
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
