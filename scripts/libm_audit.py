@@ -6,7 +6,7 @@ anything NOT IEEE-correctly-rounded; sqrt and arithmetic are exempt).
 The seed-122 bug class (round 15, q175/q242): each libm term carries
 ~1-ulp cross-engine drift, and SUMMING raw terms walks the drift onto a
 rounding-grid boundary. The repo convention is to quantize every libm
-term to nano-int (floor(x*1e9+0.5) as long) BEFORE the sum.
+term to nano-int (Parity.quant: floor(x*1e9+0.5) as long) BEFORE the sum.
 
 This script extracts candidate sites for adjudication; the enforcement
 lint lives in LibmSumLintSpec.scala (same scan re-implemented in Scala
@@ -28,7 +28,7 @@ LIBM = re.compile(
 )
 ACC = re.compile(r"\b(sum|avg|mean)\s*\(", re.IGNORECASE)
 # quantize wrapper evidence inside the accumulated argument
-QUANT = re.compile(r"floor\s*\(", re.IGNORECASE)
+QUANT = re.compile(r"floor\s*\(|Parity\.(?:quant|fix)\s*\(", re.IGNORECASE)
 
 
 def balanced_arg(text: str, open_idx: int) -> str:

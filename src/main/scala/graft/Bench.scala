@@ -1,31 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // comma-separated query-name subset for local iteration; the driver
     // never sets it, so its rounds always time the full set
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
     def selected = if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => only(k) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warm-up at the smallest scale factor: compiles every
-    // query's generated code (Spark's codegen cache is keyed on source
-    // text, which doesn't embed file paths) and JITs the scan/shuffle
-    // internals, so the timed loop below measures the queries, not
-    // first-use JVM costs. Falls back to sfDir when no sibling exists.
-    val warmDir = {
-      val sib = new java.io.File(sfDir).getParentFile
-      val d = new java.io.File(sib, "sf0.001")
-      if (d.isDirectory) d.getPath else sfDir
-    }
+    val cpus = LocalSession.envCores
+    val spark = LocalSession(cpus)
+    // Untimed warm-up: compiles every query's generated code and JITs
+    // the scan/shuffle internals, so the timed loop below measures the
+    // queries, not first-use JVM costs.
+    val warmDir = LocalSession.warmDir(sfDir)
     selected.foreach { case (_, fn) =>
       try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
     }

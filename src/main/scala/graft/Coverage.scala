@@ -20,50 +20,42 @@ object Coverage {
 
   def main(args: Array[String]): Unit = {
     val repo = Paths.get(args.headOption.getOrElse("."))
-    val entrySrc = repo.resolve("src/main/scala/graft/SparkEntry.scala")
     val coverage = repo.resolve("COVERAGE.md")
 
-    // "qN_name" -> Object.method _  (the uniform queries-map syntax)
-    val entryRe = """"(q[^"]+)"\s*->\s*(\w+)\.(\w+) _""".r
-    val text = new String(Files.readAllBytes(entrySrc), StandardCharsets.UTF_8)
-    val impls = entryRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> (m.group(2), m.group(3))).toMap
-
-    // locate each `def <method>` across the main source tree
+    // locate each query's `def qN…` (and the object holding it) across
+    // the main source tree; a query's number is unique to its builder
     val srcRoot = repo.resolve("src/main/scala/graft")
     val walk = Files.walk(srcRoot)
     val files =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    val defSites: Seq[(String, String)] = files.flatMap { p =>
+    val objRe = """^\s*(?:private\[\w+\] )?object (\w+)""".r.unanchored
+    val defRe = """\bdef (q(\d+)[A-Z_]\w*)""".r.unanchored
+    val defSites: Seq[(Int, String)] = files.flatMap { p =>
       val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
       val rel = srcRoot.relativize(p).toString
-      lines.zipWithIndex.collect {
-        case (l, i) if l.matches(""".*\bdef (q\d+\w*)[(\[ :].*""") =>
-          val name = """\bdef (q\d+\w*)""".r.findFirstMatchIn(l).get.group(1)
-          name -> s"$rel:${i + 1}"
+      val objs = lines.scanLeft("")((cur, l) => l match {
+        case objRe(o) => o
+        case _ => cur
+      }).tail
+      lines.zip(objs).zipWithIndex.collect {
+        case ((defRe(method, num), obj), i) =>
+          num.toInt -> s"`$rel:${i + 1}` (`$obj.$method`)"
       }
     }
-    // a duplicate qNNN def in two files would silently mis-attribute the
+    // a duplicate qNNN def in two places would silently mis-attribute the
     // index (last-wins Map) — fail instead
     val dups = defSites.groupBy(_._1).filter(_._2.size > 1)
     require(dups.isEmpty,
-      s"duplicate query def names: ${dups.map { case (n, s) => s"$n at ${s.map(_._2).mkString(", ")}" }.mkString("; ")}")
-    val defIndex: Map[String, String] = defSites.toMap
+      s"duplicate query def numbers: ${dups.map { case (n, s) => s"q$n at ${s.map(_._2).mkString(", ")}" }.mkString("; ")}")
+    val defIndex: Map[Int, String] = defSites.toMap
 
-    val names = SparkEntry.queries.keySet.toSeq
-      .sortBy(n => (n.drop(1).takeWhile(_.isDigit).toInt, n))
-    val oracle = SparkEntry.oracleSql.keySet
+    def number(n: String): Int = n.drop(1).takeWhile(_.isDigit).toInt
+    val names = SparkEntry.queries.keySet.toSeq.sortBy(n => (number(n), n))
+    val missing = names.filterNot(n => defIndex.contains(number(n)))
+    require(missing.isEmpty, s"no def found for: $missing")
 
-    val missing = names.filterNot(impls.contains)
-    require(missing.isEmpty, s"unparsed SparkEntry entries: $missing")
-
-    val rows = names.map { n =>
-      val (obj, method) = impls(n)
-      val loc = defIndex.getOrElse(method, s"$obj (def not found)")
-      val gate = if (oracle.contains(n)) "oracle" else "rows-only"
-      s"| $n | `$loc` (`$obj.$method`) | $gate |"
-    }
+    val rows = names.map(n => s"| $n | ${defIndex(number(n))} |")
     // plain concatenation: stripMargin would eat the table rows' pipes
     val section = Seq(
       Begin,
@@ -71,11 +63,11 @@ object Coverage {
       "",
       "Derived from `SparkEntry.queries` by `graft.Coverage` — do not",
       "edit by hand; regenerate with `scripts/run.sh graft.Coverage .`.",
-      s"**${names.length} queries** (${names.count(oracle.contains)} " +
-        s"oracle-gated, ${names.count(n => !oracle.contains(n))} rows-only).",
+      s"**${names.length} queries**, each oracle-gated (the registry pairs",
+      "every builder with its DuckDB SQL).",
       "",
-      "| query | implementation | gate |",
-      "| --- | --- | --- |",
+      "| query | implementation |",
+      "| --- | --- |",
       rows.mkString("\n"),
       End).mkString("\n")
 

@@ -285,13 +285,7 @@ object Fuzz {
   def main(args: Array[String]): Unit = {
     val seed = args(0).toLong
     val dir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cores = 4)
     generate(spark, seed, dir)
     println(s"[fuzz] wrote adversarial fixture seed=$seed to $dir")
     spark.stop()

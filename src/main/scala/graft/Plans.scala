@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit artifact generator: compiles every `SparkEntry.queries`
   * entry and writes PLANS.md — per query, the physical-plan facts that
   * matter at 100 TB (exchange count, join strategies, codegen spans,
@@ -16,13 +14,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cores = 4, logLevel = "ERROR")
 
     def count(p: String, needle: String): Int = needle.r.findAllIn(p).size
 

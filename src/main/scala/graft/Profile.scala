@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
 import scala.collection.mutable
 
@@ -18,21 +17,11 @@ object Profile {
     val sfDir = args.drop(1).filterNot(_.startsWith("--"))
       .headOption.getOrElse("/root/testdata/sf0.1")
     val wantPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val fn = SparkEntry.queries(name)
     // warm-up at the smallest SF, exactly like Bench
-    val warmDir = {
-      val sib = new java.io.File(sfDir).getParentFile
-      val d = new java.io.File(sib, "sf0.001")
-      if (d.isDirectory) d.getPath else sfDir
-    }
-    try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    try fn(spark, LocalSession.warmDir(sfDir)).count()
+    catch { case _: Throwable => () }
 
     case class St(id: Int, name: String, tasks: Int, runMs: Long,
       cpuMs: Long, inBytes: Long, shRead: Long, shWrite: Long,

@@ -1,18 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry and
   * prints its row count (driver requires rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

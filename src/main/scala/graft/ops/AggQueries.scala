@@ -670,7 +670,7 @@ object AggQueries {
       sum(col("rev")).over(w).cast("double")
     perSup
       .select(col("n_name"),
-        floor(share * share * lit(1.0e9) + lit(0.5)).cast("long").as("tq"))
+        Parity.quant(share * share, 1e9).as("tq"))
       .groupBy("n_name")
       .agg(count(lit(1)).as("n_suppliers"),
         (sum("tq").cast("double") / lit(1.0e9)).as("hhi"))
@@ -924,7 +924,7 @@ object AggQueries {
       .orderBy(col("v").desc).limit(k + 1)
     val w = Window.orderBy(col("v").desc)
     def ln9(c: Column) =
-      floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
+      Parity.quant(log(c.cast("double")), 1e9)
     val ranked = top.withColumn("rn", row_number().over(w))
     val m = ranked.agg(count(lit(1)).as("n"),
       min(col("v")).as("xref"),
@@ -936,11 +936,9 @@ object AggQueries {
     m.select(lit(k.toLong).as("k"),
       col("xref").cast("long").as("x_kplus1"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(h * 1e6 + 0.5).cast("long")
-          .cast("double") / 1e6) + 0.0).as("mean_log_excess"),
+        .otherwise(Parity.fix(h, 6)).as("mean_log_excess"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(lit(1.0) / h * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("hill_alpha"))
+        .otherwise(Parity.fix(lit(1.0) / h, 4)).as("hill_alpha"))
   }
 
   val q350HillTailSql: String =

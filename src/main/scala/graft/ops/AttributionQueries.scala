@@ -340,7 +340,7 @@ object AttributionQueries {
     val e = Tables.events(s, dir)
     val p = e.filter(col("event_type") === "purchase" && col("value").isNotNull)
       .select(col("user_id"), col("event_id").as("pid"), col("ts").as("pts"),
-        floor(col("value") * 10000.0 + 0.5).cast("long").as("v4"))
+        Parity.quant(col("value"), 1e4).as("v4"))
     val c = e.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("cid"),
         col("ts").as("cts"),
@@ -426,7 +426,7 @@ object AttributionQueries {
     val e = Tables.events(s, dir)
     val p = e.filter(col("event_type") === "purchase" && col("value").isNotNull)
       .select(col("user_id"), col("event_id").as("pid"), col("ts").as("pts"),
-        floor(col("value") * 10000.0 + 0.5).cast("long").as("v4"))
+        Parity.quant(col("value"), 1e4).as("v4"))
     val c = e.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("cid"),
         col("ts").as("cts"),
@@ -436,9 +436,8 @@ object AttributionQueries {
         unix_micros(col("pts")) - unix_micros(col("cts")) <= 21600L * 1000000L,
       "left")
     val ageS = expr("(unix_micros(pts) - unix_micros(cts)) div 1000000")
-    val wq = floor(
-      exp(-ageS.cast("double") * (lit(0.6931471805599453) / lit(3600.0))) *
-        lit(1.0e6) + lit(0.5)).cast("long")
+    val wq = Parity.quant(exp(-ageS.cast("double") *
+      (lit(0.6931471805599453) / lit(3600.0))), 1e6)
     val wp = Window.partitionBy(col("pid"))
     val withW = pairs.withColumn("wq",
       when(col("cid").isNull, lit(0L)).otherwise(wq))
@@ -609,9 +608,9 @@ object AttributionQueries {
     val peru = e.crossJoin(broadcast(bounds))
       .select(col("user_id"),
         when(unix_micros(col("ts")) >= cut,
-          floor(col("value") * 100.0 + 0.5).cast("long")).as("yv"),
+          Parity.quant(col("value"), 100.0)).as("yv"),
         when(unix_micros(col("ts")) < cut,
-          floor(col("value") * 100.0 + 0.5).cast("long")).as("xv"))
+          Parity.quant(col("value"), 100.0)).as("xv"))
       .groupBy("user_id")
       .agg(coalesce(sum(col("yv")), lit(0L)).as("y"),
         coalesce(sum(col("xv")), lit(0L)).as("x"))
@@ -738,8 +737,7 @@ object AttributionQueries {
       .agg(sum(col("conv")).as("cd"), count(lit(1)).as("nd"))
     val cum = graft.ops.PrefixSum.withPrefixSums(daily,
       Seq(col("day")), Seq((col("cd"), "ct"), (col("nd"), "nt")))
-    def qln9(c: Column) = floor(log(c.cast("double")) * 1e9 + 0.5)
-      .cast("long")
+    def qln9(c: Column) = Parity.quant(log(c.cast("double")), 1e9)
     val j = cum.crossJoin(broadcast(ctrl))
       .withColumn("lp9", qln9(lit(11L)) - qln9(lit(10L)))
       .withColumn("lq9",
@@ -747,14 +745,13 @@ object AttributionQueries {
           qln9((col("n0") - col("c0")) * 10L))
       .withColumn("llr9", col("ct").cast(dec) * col("lp9") +
         (col("nt") - col("ct")).cast(dec) * col("lq9"))
-    val a9 = floor(log(lit(19.0)) * 1e9 + 0.5).cast("long").cast(dec)
+    val a9 = Parity.quant(log(lit(19.0)), 1e9).cast(dec)
     val bad = col("c0") === 0L || col("c0") * 11L >= col("n0") * 10L ||
       col("n0") === 0L
     j.select(col("day"), col("ct").as("cum_conv"),
         col("nt").as("cum_trials"),
         when(bad, lit(null).cast("double"))
-          .otherwise(floor(col("llr9").cast("double") / 1e9 * 1e6 + 0.5)
-            / 1e6).as("llr"),
+          .otherwise(Parity.fix(col("llr9").cast("double") / 1e9, 6)).as("llr"),
         when(bad, lit(null).cast("string"))
           .otherwise(when(col("llr9") >= a9, "reject_h0")
             .when(col("llr9") <= -a9, "accept_h0")
@@ -804,7 +801,7 @@ object AttributionQueries {
     val bad = col("n0") < 1L || col("n1") < 1L
     def out(c: Column, nm: String) =
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(c * 1e6 + 0.5) / 1e6).as(nm)
+        .otherwise(Parity.fix(c, 6)).as(nm)
     piv.select(col("n0").cast("long").as("n_ctrl"),
       col("c0").cast("long").as("conv_ctrl"),
       col("n1").cast("long").as("n_test"),
@@ -941,12 +938,10 @@ object AttributionQueries {
     val pa = d("x_a") / greatest(d("n_a"), lit(1e-300))
     val pb = d("x_b") / greatest(d("n_b"), lit(1e-300))
     val h = lit(2.0) * asin(sqrt(pa)) - lit(2.0) * asin(sqrt(pb))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
-    val habs = abs(rnd6(h))
+    val habs = abs(Parity.fix(h, 6))
     agg.select(col("n_a"), col("x_a"), col("n_b"), col("x_b"),
-      rnd6(pa).as("rate_a"), rnd6(pb).as("rate_b"),
-      rnd6(h).as("cohens_h"),
+      Parity.fix(pa, 6).as("rate_a"), Parity.fix(pb, 6).as("rate_b"),
+      Parity.fix(h, 6).as("cohens_h"),
       when(habs < 0.2, lit("negligible")).when(habs < 0.5, lit("small"))
         .when(habs < 0.8, lit("medium")).otherwise(lit("large"))
         .as("magnitude"))

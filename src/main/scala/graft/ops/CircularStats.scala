@@ -57,10 +57,10 @@ object CircularStats {
     val ang = lit(2.0) * lit(math.Pi) *
       (col("doy") - 1L).cast("double") / lit(365.0)
     // nano grid per distinct angle (the libm-sum convention, inlined
-    // so LibmSumLint sees the floor at the binding site)
+    // so the libm lint sees the quantizer at the binding site)
     val q = cen.select(col("yr"), col("cnt"),
-      floor(cos(ang) * 1e9 + 0.5).cast("long").as("cq"),
-      floor(sin(ang) * 1e9 + 0.5).cast("long").as("sq"))
+      Parity.quant(cos(ang), 1e9).as("cq"),
+      Parity.quant(sin(ang), 1e9).as("sq"))
     val g = q.groupBy("yr").agg(
       sum(col("cnt")).as("n"),
       sum(col("cnt").cast(dec) * col("cq").cast(dec)).as("cN"),
@@ -74,9 +74,9 @@ object CircularStats {
     val aDay = atan2(sD, cD) / (lit(2.0) * lit(math.Pi)) * lit(365.0)
     val mDay = when(aDay < 0.0, aDay + 365.0).otherwise(aDay) + 1.0
     g.select(col("yr").as("order_year"), col("n").as("n_orders"),
-        (floor(rbar * 1e6 + 0.5) / 1e6 + 0.0).as("rbar"),
-        (floor(z * 1e4 + 0.5) / 1e4 + 0.0).as("rayleigh_z"),
-        (floor(mDay * 1e4 + 0.5) / 1e4 + 0.0).as("mean_day"))
+        Parity.fix(rbar, 6).as("rbar"),
+        Parity.fix(z, 4).as("rayleigh_z"),
+        Parity.fix(mDay, 4).as("mean_day"))
       .orderBy("order_year")
   }
 
@@ -142,8 +142,8 @@ object CircularStats {
     val ang = lit(2.0) * lit(math.Pi) *
       col("dow").cast("double") / lit(7.0)
     val q = cen.select(col("pr"), col("cnt"),
-      floor(cos(ang) * 1e9 + 0.5).cast("long").as("cq"),
-      floor(sin(ang) * 1e9 + 0.5).cast("long").as("sq"))
+      Parity.quant(cos(ang), 1e9).as("cq"),
+      Parity.quant(sin(ang), 1e9).as("sq"))
     val g = q.groupBy("pr").agg(
       sum(col("cnt")).as("n"),
       sum(col("cnt").cast(dec) * col("cq").cast(dec)).as("cN"),
@@ -164,10 +164,10 @@ object CircularStats {
         greatest(r * r * r - lit(4.0) * r * r + lit(3.0) * r,
           lit(1e-300)))
     g.select(col("pr").as("o_orderpriority"), col("n").as("n_orders"),
-        (floor(r * 1e6 + 0.5) / 1e6 + 0.0).as("rbar"),
-        (floor((lit(1.0) - r) * 1e6 + 0.5) / 1e6 + 0.0).as("circ_var"),
+        Parity.fix(r, 6).as("rbar"),
+        Parity.fix(lit(1.0) - r, 6).as("circ_var"),
         when(r >= 1.0 - 1e-9, lit(null).cast("double"))
-          .otherwise(floor(kappa * 1e4 + 0.5) / 1e4 + 0.0).as("kappa"))
+          .otherwise(Parity.fix(kappa, 4)).as("kappa"))
       .orderBy("o_orderpriority")
   }
 

@@ -64,10 +64,8 @@ object CorpusQueries {
         "nck div cast(shiftleft(1, 10 - k) as bigint)))"))
       .filter(col("cum_n") > 0 && col("cum_v") > 0)
       .select(
-        floor(log(col("cum_n").cast("double")) * 1e9 + 0.5)
-          .cast("long").as("x"),
-        floor(log(col("cum_v").cast("double")) * 1e9 + 0.5)
-          .cast("long").as("y"),
+        Parity.quant(log(col("cum_n").cast("double")), 1e9).as("x"),
+        Parity.quant(log(col("cum_v").cast("double")), 1e9).as("y"),
         col("cum_n"), col("cum_v"))
     val g = ck.agg(count(lit(1)).as("m"),
       sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
@@ -166,15 +164,15 @@ object CorpusQueries {
     val wc = Window.partitionBy("ql").orderBy("rk")
     val t = ranked.withColumn("cumrel", sum("rel").over(wc))
     val errTerm = when(col("rel") === 1L && col("rk") <= 20,
-      floor(pow(lit(0.5), col("cumrel").cast("double")) /
-        col("rk").cast("double") * 1e12 + 0.5).cast("long")).otherwise(0L)
+      Parity.quant(pow(lit(0.5), col("cumrel").cast("double")) /
+        col("rk").cast("double"), 1e12)).otherwise(0L)
     t.groupBy("ql").agg(
         count(lit(1)).as("n_docs"),
         sum(when(col("rel") === 1L && col("rk") <= 20, 1L).otherwise(0L))
           .as("n_rel20"),
         sum(errTerm).as("errq"))
       .select(col("ql").as("query_lang"), col("n_docs"), col("n_rel20"),
-        (floor(col("errq").cast("double") / 1e12 * 1e6 + 0.5) / 1e6)
+        Parity.fix(col("errq").cast("double") / 1e12, 6)
           .as("err20"))
       .orderBy("query_lang")
   }
@@ -226,11 +224,11 @@ object CorpusQueries {
     val g = occ.groupBy("source").agg(
       sum(col("n")).as("nt"), count(lit(1)).as("st"),
       sum(col("n").cast(dec) * (col("n") - 1).cast(dec)).as("rep"),
-      sum(floor(col("n").cast("double") * log(col("n").cast("double")) *
-        1e9 + 0.5).cast("long").cast(dec)).as("snln"))
+      sum(Parity.quant(col("n").cast("double") * log(col("n").cast("double")),
+        1e9).cast(dec)).as("snln"))
     val nD = col("nt").cast("double")
     val qln = (c: org.apache.spark.sql.Column) =>
-      floor(log(c) * 1e9 + 0.5) / 1e9
+      Parity.fix(log(c), 9)
     val shannon = qln(nD) -
       (col("snln").cast("double") / 1e9) / nD
     val lnS = qln(col("st").cast("double"))
@@ -319,7 +317,7 @@ object CorpusQueries {
         .otherwise(round(q, 4) + 0.0).as("cochran_q"),
       lit(2L).as("df"),
       when(degenerate, lit(null).cast("double"))
-        .otherwise(floor(exp(-q / 2.0) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(exp(-q / 2.0), 8)).as("p"))
   }
 
   val q281CochranQSql: String =
@@ -497,7 +495,7 @@ object CorpusQueries {
       .select(explode(tokens(col("text"))).as("w"))
       .agg(count_distinct(col("w")).as("v"))
     def qln9(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
+      Parity.quant(log(c.cast("double")), 1e9)
     val scored = srcbg.join(glob.select("bg", "c12", "w1"), "bg")
       .join(ctx, "w1")
       .crossJoin(broadcast(vocab))
@@ -509,11 +507,11 @@ object CorpusQueries {
         count(lit(1)).as("bigram_types"),
         max(col("v")).as("vocab"),
         sum(col("k").cast(dec) * col("nll9").cast(dec)).as("snll"))
-    val avg = floor(col("snll").cast("double") / 1e9 /
-      col("n_bigrams").cast("double") * 1e6 + 0.5) / 1e6
+    val avg = Parity.fix(col("snll").cast("double") / 1e9 /
+      col("n_bigrams").cast("double"), 6)
     g.select(col("source"), col("n_bigrams"), col("bigram_types"),
         col("vocab"), avg.as("avg_nll"),
-        (floor(exp(avg) * 1e4 + 0.5) / 1e4).as("ppl"))
+        Parity.fix(exp(avg), 4).as("ppl"))
       .orderBy("source")
   }
 
@@ -610,17 +608,17 @@ object CorpusQueries {
       .join(bw, Seq("lang", "w2"))
       .join(broadcast(gl.withColumn("d", dD)), "lang")
       .select(col("lang"), col("c12"), col("nn"), col("tt"), col("d"),
-        floor(log2(p) * 1e9 + 0.5).cast("long").as("t9"))
+        Parity.quant(log2(p), 1e9).as("t9"))
     val g = scored.groupBy("lang").agg(
       max(col("nn")).as("n_bigrams"), count(lit(1)).as("bigram_types"),
       max(col("d")).as("d0"),
       sum(col("c12").cast(dec) * col("t9").cast(dec)).as("st"))
-    val h = floor(-col("st").cast("double") / 1e9 /
-      col("n_bigrams").cast("double") * 1e6 + 0.5) / 1e6
+    val h = Parity.fix(-col("st").cast("double") / 1e9 /
+      col("n_bigrams").cast("double"), 6)
     g.select(col("lang"), col("n_bigrams"), col("bigram_types"),
-        (floor(col("d0") * 1e6 + 0.5) / 1e6).as("discount"),
+        Parity.fix(col("d0"), 6).as("discount"),
         h.as("h_bits"),
-        (floor(pow(lit(2.0), h) * 1e4 + 0.5) / 1e4).as("ppl"))
+        Parity.fix(pow(lit(2.0), h), 4).as("ppl"))
       .orderBy("lang")
   }
 
@@ -736,14 +734,14 @@ object CorpusQueries {
       .join(broadcast(stats.select("w", "vw", "sigma")), "w")
       .select(col("src_a"), col("src_b"),
         when(col("vw") > lit(0L).cast(dec),
-          floor(abs(col("fa") - col("fb")).cast("double") /
-            col("sigma") * 1e9 + 0.5).cast("long"))
+          Parity.quant(abs(col("fa") - col("fb")).cast("double") / col("sigma"),
+            1e9))
           .otherwise(lit(0L)).as("t9"),
         when(col("vw") > lit(0L).cast(dec), 1L).otherwise(0L).as("k1"))
     pairs.groupBy("src_a", "src_b")
       .agg(sum(col("k1")).as("n_words"),
-        (floor(sum(col("t9")).cast("double") / 1e9 /
-          sum(col("k1")).cast("double") * 1e6 + 0.5) / 1e6).as("delta"))
+        Parity.fix(sum(col("t9")).cast("double") / 1e9 /
+          sum(col("k1")).cast("double"), 6).as("delta"))
       .orderBy("src_a", "src_b")
   }
 
@@ -898,8 +896,7 @@ object CorpusQueries {
       count(lit(1)).as("cr"))
     val tot = ws.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"),
       count(lit(1)).as("v"))
-    def qln9(c: Column) = floor(log(c.cast("double")) * 1e9 + 0.5)
-      .cast("long")
+    def qln9(c: Column) = Parity.quant(log(c.cast("double")), 1e9)
     val lnq = ws.crossJoin(broadcast(tot))
       .select(col("w"),
         (qln9(col("ct") + 1L) - qln9(col("tt") + col("v")) -
@@ -910,7 +907,7 @@ object CorpusQueries {
         sum(col("c").cast(dec) * col("d9").cast(dec)).as("w9"))
     perDoc.select(col("doc_id"), col("lang"),
         col("n_tokens").cast("long").as("n_tokens"),
-        (floor(col("w9").cast("double") / 1e9 * 1e6 + 0.5) / 1e6)
+        Parity.fix(col("w9").cast("double") / 1e9, 6)
           .as("dsir_logw"),
         when(col("w9") > lit(0L).cast(dec), 1L).otherwise(0L)
           .as("target_like"))
@@ -1124,8 +1121,7 @@ object CorpusQueries {
     g.select(col("lang"), col("n").cast("long").as("n_chars"),
         col("n_distinct").cast("long").as("n_alphabet"),
         when(col("n") < 2L, lit(null).cast("double"))
-          .otherwise((floor(ic * 1e6 + 0.5).cast("long")
-            .cast("double") / 1e6) + 0.0).as("ic"))
+          .otherwise(Parity.fix(ic, 6)).as("ic"))
       .orderBy("lang")
   }
 
@@ -1187,16 +1183,15 @@ object CorpusQueries {
       .otherwise(aggregate(sequence(lit(0), lit(41)), lit(1.0),
         (acc, i) => acc *
           ((nD - nwD - i.cast("double")) / (nD - i.cast("double")))))
-    val contrib9 = floor((lit(1.0) - pAbsent) * 1e9 + 0.5).cast("long")
+    val contrib9 = Parity.quant(lit(1.0) - pAbsent, 1e9)
     val perDocHdd = perType.join(perDoc, Seq("doc_id", "lang"))
       .withColumn("c9", contrib9)
       .groupBy("doc_id", "lang").agg(sum(col("c9")).as("h9"))
     perDocHdd.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("h9")).as("sh9"))
       .select(col("lang"), col("n_docs").cast("long").as("n_docs"),
-        (floor(col("sh9").cast("double") /
-          (col("n_docs").cast("double") * 42.0e9) * 1e6 + 0.5)
-          .cast("long").cast("double") / 1e6 + 0.0).as("mean_hdd"))
+        Parity.fix(col("sh9").cast("double") /
+          (col("n_docs").cast("double") * 42.0e9), 6).as("mean_hdd"))
       .orderBy("lang")
   }
 
@@ -1277,15 +1272,14 @@ object CorpusQueries {
           "(a, x) -> a + IF(abs(x) > 30000, cast(1 as bigint), " +
           "cast(0 as bigint)))").as("ncl"))
       .withColumn("rms6",
-        floor(sqrt(col("ssq").cast("double") / 8.0) * 1e6 + 0.5)
-          .cast("long"))
+        Parity.quant(sqrt(col("ssq").cast("double") / 8.0), 1e6))
     perFrame.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         (count(lit(1)) * lit(8L)).as("n_samples"),
-        (floor(sum(col("rms6")).cast("double") / count(lit(1)) / 1e6
-          * 1e4 + 0.5) / 1e4 + 0.0).as("mean_rms"),
-        (floor(sum(col("ssum")).cast("double") /
-          (count(lit(1)) * lit(8L)) * 1e4 + 0.5) / 1e4 + 0.0)
+        Parity.fix(sum(col("rms6")).cast("double") / count(lit(1)) / 1e6,
+          4).as("mean_rms"),
+        Parity.fix(sum(col("ssum")).cast("double") / (count(lit(1)) * lit(8L)),
+          4)
           .as("mean_dc"),
         max(col("pk")).as("peak_abs"),
         sum(col("ncl")).as("n_clipped"))
@@ -1350,18 +1344,16 @@ object CorpusQueries {
     val stats = tf.groupBy("term")
       .agg(sum(col("tf")).as("cf"), count(lit(1)).as("df"))
       .orderBy(col("cf").desc, col("term")).limit(20)
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val nd = col("n_docs").cast("double")
     val dfHat = nd * (lit(1.0) -
       exp(lit(0.0) - col("cf").cast("double") / nd))
     stats.crossJoin(broadcast(n))
       .select(col("term"), col("cf"), col("df"),
-        rnd4(col("cf").cast("double") / col("df").cast("double"))
+        Parity.fix(col("cf").cast("double") / col("df").cast("double"), 4)
           .as("burstiness"),
-        rnd4(dfHat).as("df_poisson"),
-        rnd4(col("df").cast("double") /
-          greatest(rnd4(dfHat), lit(1e-300))).as("adaptation"))
+        Parity.fix(dfHat, 4).as("df_poisson"),
+        Parity.fix(col("df").cast("double") /
+          greatest(Parity.fix(dfHat, 4), lit(1e-300)), 4).as("adaptation"))
       .orderBy(col("cf").desc, col("term"))
   }
 
@@ -1601,9 +1593,8 @@ object CorpusQueries {
         sum(col("payload_bytes")).as("payload_bytes"),
         sum(col("byte_checksum")).as("byte_checksum"))
       .withColumn("avg_frame_bytes",
-        floor(col("payload_bytes").cast("double") /
-          col("total_frames").cast("double") * 1e4 + 0.5)
-          .cast("long").cast("double") / 1e4 + 0.0)
+        Parity.fix(col("payload_bytes").cast("double") /
+          col("total_frames").cast("double"), 4))
       .orderBy("n_frames")
   }
 
@@ -1692,9 +1683,8 @@ object CorpusQueries {
         sum(col("payload_bytes")).as("payload_bytes"),
         sum(col("byte_checksum")).as("byte_checksum"))
       .withColumn("avg_frame_bytes",
-        floor(col("payload_bytes").cast("double") /
-          col("total_frames").cast("double") * 1e4 + 0.5)
-          .cast("long").cast("double") / 1e4 + 0.0)
+        Parity.fix(col("payload_bytes").cast("double") /
+          col("total_frames").cast("double"), 4))
       .orderBy("n_frames")
   }
 

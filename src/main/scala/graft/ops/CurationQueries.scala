@@ -345,9 +345,8 @@ object CurationQueries {
       // shortest DECIMAL repr half-up while DuckDB rounds the BINARY
       // value, so an interpolated .xxxx5 boundary flips between them
       // (r12 fuzz find); the floor grid is identical on both
-      .withColumn("rev_interp", floor(
-        (when(col("rev").isNotNull, col("rev")).otherwise(lerp)) * 1e4
-          + 0.5) / 1e4)
+      .withColumn("rev_interp",
+        Parity.fix(when(col("rev").isNotNull, col("rev")).otherwise(lerp), 4))
       .select("day", "o_orderpriority", "rev_interp")
       .orderBy("day", "o_orderpriority")
   }
@@ -597,10 +596,10 @@ object CurationQueries {
       // floor-quantized at 4dp (q96 rationale — the smoothing recursion
       // lands on .xxxx5 decimal boundaries under hostile inputs)
       .select(col("z.s.day").as("day"), col("o_orderpriority"),
-        (floor(col("z.s.rev") * 1e4 + 0.5) / 1e4).as("rev"),
-        (floor(col("z.hs.l") * 1e4 + 0.5) / 1e4).as("level"),
-        (floor(col("z.hs.b") * 1e4 + 0.5) / 1e4).as("trend"),
-        (floor((col("z.hs.l") + col("z.hs.b")) * 1e4 + 0.5) / 1e4)
+        Parity.fix(col("z.s.rev"), 4).as("rev"),
+        Parity.fix(col("z.hs.l"), 4).as("level"),
+        Parity.fix(col("z.hs.b"), 4).as("trend"),
+        Parity.fix(col("z.hs.l") + col("z.hs.b"), 4)
           .as("forecast"))
       .orderBy("day", "o_orderpriority")
   }
@@ -1169,9 +1168,9 @@ object CurationQueries {
     val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .select(col("l_suppkey").as("sk"),
-        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"),
-        floor(col("l_extendedprice") * col("l_discount") * 100 + 0.5)
-          .cast("long").as("disc_cents"))
+        Parity.quant(col("l_extendedprice"), 100.0).as("cents"),
+        Parity.quant(col("l_extendedprice") * col("l_discount"),
+          100.0).as("disc_cents"))
     val g = li.groupBy("sk")
       .agg(sum(col("cents")).as("c1"), count(lit(1)).as("c2"),
         sum(col("disc_cents")).as("c3"))
@@ -1280,11 +1279,11 @@ object CurationQueries {
         lag(col("forecast"), 1).over(w).as("f"),
         lag(col("rev"), 1).over(w).as("prev"))
       .filter(col("f").isNotNull)
-    val errq = floor(abs(col("rev") - col("f")) * 1e4 + 0.5).cast("long")
-    val naiq = floor(abs(col("rev") - col("prev")) * 1e4 + 0.5).cast("long")
+    val errq = Parity.quant(abs(col("rev") - col("f")), 1e4)
+    val naiq = Parity.quant(abs(col("rev") - col("prev")), 1e4)
     val smq = when(abs(col("f")) + abs(col("rev")) > 0.0,
-      floor(lit(2.0) * abs(col("rev") - col("f")) /
-        (abs(col("f")) + abs(col("rev"))) * 1e9 + 0.5).cast("long"))
+      Parity.quant(lit(2.0) * abs(col("rev") - col("f")) /
+        (abs(col("f")) + abs(col("rev"))), 1e9))
       .otherwise(0L)
     e.select(col("o_orderpriority"), errq.as("eq"), naiq.as("nq"),
         smq.as("sq"))
@@ -1292,13 +1291,13 @@ object CurationQueries {
       .agg(count(lit(1)).as("n_days"), sum("eq").as("se"),
         sum("nq").as("sn"), sum("sq").as("ss"))
       .select(col("o_orderpriority"), col("n_days"),
-        (floor(col("se").cast("double") / 1e4 /
-          col("n_days").cast("double") * 1e4 + 0.5) / 1e4).as("mae"),
+        Parity.fix(col("se").cast("double") / 1e4 /
+          col("n_days").cast("double"), 4).as("mae"),
         when(col("sn") === 0, lit(null).cast("double"))
-          .otherwise(floor(col("se").cast("double") /
-            col("sn").cast("double") * 1e4 + 0.5) / 1e4).as("mase"),
-        (floor(col("ss").cast("double") / 1e9 /
-          col("n_days").cast("double") * 1e4 + 0.5) / 1e4).as("smape"))
+          .otherwise(Parity.fix(col("se").cast("double") /
+            col("sn").cast("double"), 4)).as("mase"),
+        Parity.fix(col("ss").cast("double") / 1e9 /
+          col("n_days").cast("double"), 4).as("smape"))
       .orderBy("o_orderpriority")
   }
 
@@ -1506,12 +1505,12 @@ object CurationQueries {
         |  acc -> acc.out)""".stripMargin))
     folded.select(explode(col("out")).as("z"))
       .select(col("z.day").as("day"),
-        (floor(col("z.rev") * 1e4 + 0.5) / 1e4).as("rev"),
-        (floor(col("z.lvl") * 1e4 + 0.5) / 1e4).as("level"),
-        (floor(col("z.tr") * 1e4 + 0.5) / 1e4).as("trend"),
-        (floor(col("z.se") * 1e4 + 0.5) / 1e4).as("seasonal"),
-        (floor(col("z.fit") * 1e4 + 0.5) / 1e4).as("fitted"),
-        (floor((col("z.rev") - col("z.fit")) * 1e4 + 0.5) / 1e4)
+        Parity.fix(col("z.rev"), 4).as("rev"),
+        Parity.fix(col("z.lvl"), 4).as("level"),
+        Parity.fix(col("z.tr"), 4).as("trend"),
+        Parity.fix(col("z.se"), 4).as("seasonal"),
+        Parity.fix(col("z.fit"), 4).as("fitted"),
+        Parity.fix(col("z.rev") - col("z.fit"), 4)
           .as("resid"))
       .orderBy("day")
   }

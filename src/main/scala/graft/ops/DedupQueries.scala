@@ -843,9 +843,10 @@ object DedupQueries {
       .groupBy("a", "b").agg(count(lit(1)).as("ninter"))
     val per = est.join(inter, Seq("a", "b"), "left")
       .withColumn("ninter", coalesce(col("ninter"), lit(0L)))
-      .withColumn("jq", floor(col("ninter").cast("double") /
-        greatest((col("na") + col("nb") - col("ninter")).cast("double"),
-          lit(1.0)) * 1e6 + 0.5).cast("long"))
+      .withColumn("jq",
+        Parity.quant(col("ninter").cast("double") / greatest(
+          (col("na") + col("nb") - col("ninter")).cast("double"), lit(1.0)),
+          1e6))
       .withColumn("eq", col("match16") * 62500L)
       // binomial 2σ band on a 16-hash estimate, half-grid slack
       .withColumn("band", floor(lit(2e6) *
@@ -854,22 +855,20 @@ object DedupQueries {
         lit(31250.0) + 0.5).cast("long"))
       .withColumn("inband",
         (abs(col("eq") - col("jq")) <= col("band")).cast("long"))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     per.groupBy("lang")
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("eq")).as("se"), sum(col("jq")).as("sj"),
         sum(abs(col("eq") - col("jq"))).as("sae"),
         sum(col("inband")).as("nin"))
       .select(col("lang"), col("n_pairs"),
-        rnd6(col("se").cast("double") / 1e6 /
-          col("n_pairs").cast("double")).as("mean_est"),
-        rnd6(col("sj").cast("double") / 1e6 /
-          col("n_pairs").cast("double")).as("mean_exact"),
-        rnd6(col("sae").cast("double") / 1e6 /
-          col("n_pairs").cast("double")).as("mae"),
-        rnd6(col("nin").cast("double") /
-          col("n_pairs").cast("double")).as("within_2sigma"))
+        Parity.fix(col("se").cast("double") / 1e6 /
+          col("n_pairs").cast("double"), 6).as("mean_est"),
+        Parity.fix(col("sj").cast("double") / 1e6 /
+          col("n_pairs").cast("double"), 6).as("mean_exact"),
+        Parity.fix(col("sae").cast("double") / 1e6 /
+          col("n_pairs").cast("double"), 6).as("mae"),
+        Parity.fix(col("nin").cast("double") /
+          col("n_pairs").cast("double"), 6).as("within_2sigma"))
       .orderBy("lang")
   }
 

@@ -48,8 +48,8 @@ object DriftQueries {
     // engine); quantize every term to nano BEFORE the cross-row sum so
     // both engines round the identical accumulated argument (the
     // seed-122 q175 convention).
-    val plnp9 = floor((col("n") / col("tot")) * log(col("n") / col("tot"))
-      * 1e9 + 0.5).cast("long")
+    val plnp9 = Parity.quant((col("n") / col("tot")) *
+      log(col("n") / col("tot")), 1e9)
     t.groupBy("col_name")
       .agg(max(col("tot")).as("n_rows"),
         count(lit(1)).as("n_distinct"),
@@ -368,7 +368,7 @@ object DriftQueries {
     val xr = col("x").cast("double") / col("mug")
     val perGroup = o.withColumn("mug", mug)
       .select(col("priority"), col("mug"),
-        floor(xr * log(xr) * lit(1.0e9) + lit(0.5)).cast("long").as("tq"),
+        Parity.quant(xr * log(xr), 1e9).as("tq"),
         col("x"))
       .groupBy("priority")
       .agg(count(lit(1)).as("n"), max(col("mug")).as("mu_g"),
@@ -386,9 +386,8 @@ object DriftQueries {
           (col("mu_g") / col("mu"))).as("weight"),
         // nano-quantized: the weight·ln(mu_g/mu) chain was the one
         // unquantized cross-libm double here (r12 fuzz find, 1 ulp)
-        (floor((((col("n").cast("double") / col("big_n").cast("double")) *
-          (col("mu_g") / col("mu"))) *
-          log(col("mu_g") / col("mu"))) * 1e9 + 0.5) / 1e9)
+        Parity.fix(((col("n").cast("double") / col("big_n").cast("double")) *
+          (col("mu_g") / col("mu"))) * log(col("mu_g") / col("mu")), 9)
           .as("between_term"))
       .orderBy("priority")
   }
@@ -455,7 +454,7 @@ object DriftQueries {
         .select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("c"))
     val q = o.groupBy("seg")
       .agg(percentile(col("c"), lit(0.25)).as("q1"),
@@ -535,7 +534,7 @@ object DriftQueries {
         .select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("c"))
     val med = o.groupBy("seg")
       .agg(percentile(col("c") * 2, lit(0.5)).cast("long").as("m2"))
@@ -687,11 +686,11 @@ object DriftQueries {
         .select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("c"))
     val g = cust.groupBy("seg")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-        sum(floor(log(col("c").cast("double")) * 1e9 + 0.5).cast("long"))
+        sum(Parity.quant(log(col("c").cast("double")), 1e9))
           .as("lnq"))
     val mean = col("sc").cast("double") / col("n")
     val geo = exp(col("lnq").cast("double") / 1e9 / col("n"))
@@ -848,9 +847,9 @@ object DriftQueries {
     val hyTerm = -(col("ny").cast("double") / nD) *
       log(col("ny").cast("double") / nD) / count(lit(1)).over(wY)
     val q = t0.select(col("nt"),
-      floor(miTerm * 1e9 + 0.5).cast("long").as("miq"),
-      floor(hxTerm * 1e9 + 0.5).cast("long").as("hxq"),
-      floor(hyTerm * 1e9 + 0.5).cast("long").as("hyq"))
+      Parity.quant(miTerm, 1e9).as("miq"),
+      Parity.quant(hxTerm, 1e9).as("hxq"),
+      Parity.quant(hyTerm, 1e9).as("hyq"))
       .groupBy("nt")
       .agg(sum(col("miq")).as("miq"), sum(col("hxq")).as("hxq"),
         sum(col("hyq")).as("hyq"))
@@ -957,9 +956,9 @@ object DriftQueries {
     // so greatest() is value-identity whenever the row survives the
     // final nx∈{0,nn} null guard. den > 0 on every kept row
     // (1 ≤ cum_all < nn).
-    val termq = floor(col("l").cast("double") *
+    val termq = Parity.quant(col("l").cast("double") *
       (num.cast("double") * num.cast("double") /
-        (den * greatest(nxD * nyD, lit(1e-300)))) * 1e9 + 0.5).cast("long")
+        (den * greatest(nxD * nyD, lit(1e-300)))), 1e9)
     val g = c
       .filter(col("cum_all") < col("nn"))
       .agg(max(col("nn")).as("nn"), max(col("nx")).as("nx"),
@@ -968,7 +967,7 @@ object DriftQueries {
       (col("nn") - col("nx")).as("n_new"),
       when(col("nx") === 0 || col("nx") === col("nn"),
         lit(null).cast("double"))
-        .otherwise(floor(col("tq").cast("double") / 1e9 * 1e6 + 0.5) / 1e6)
+        .otherwise(Parity.fix(col("tq").cast("double") / 1e9, 6))
         .as("a2"))
   }
 
@@ -1053,15 +1052,15 @@ object DriftQueries {
     val scale = f(col("nx")) * (f(col("nn")) - f(col("nx")))
     val dPlus = greatest(f(col("gmax")), lit(0.0)) / scale
     val dMinus = greatest(-f(col("gmin")), lit(0.0)) / scale
-    def r6(c: Column) = (floor(c * 1e6 + 0.5).cast("long")
-      .cast("double") / 1e6) + 0.0
     val bad = col("nx") === 0L || col("nx") === col("nn")
     g.select(col("nx").cast("long").as("n_base"),
       (col("nn") - col("nx")).cast("long").as("n_new"),
-      when(bad, lit(null).cast("double")).otherwise(r6(dPlus)).as("d_plus"),
-      when(bad, lit(null).cast("double")).otherwise(r6(dMinus)).as("d_minus"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(dPlus,
+        6)).as("d_plus"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(dMinus,
+        6)).as("d_minus"),
       when(bad, lit(null).cast("double"))
-        .otherwise(r6(dPlus + dMinus)).as("kuiper_v"))
+        .otherwise(Parity.fix(dPlus + dMinus, 6)).as("kuiper_v"))
   }
 
   val q352KuiperSql: String =
@@ -1134,9 +1133,9 @@ object DriftQueries {
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("seg"), col("o_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("x"))
-    val t9 = floor(log(col("x").cast("double")) * 1e9 + 0.5).cast("long")
+    val t9 = Parity.quant(log(col("x").cast("double")), 1e9)
     val g = perc
       .withColumn("t9", t9)
       .groupBy("seg")
@@ -1152,12 +1151,10 @@ object DriftQueries {
     val ge0 = lnMu - d(col("st9")) / 1e9 / n
     val ge1 = d(col("sxt9")) / 1e9 / d(col("sx")) - lnMu
     val ge2 = (n * d(col("sxx")) / (d(col("sx")) * d(col("sx"))) - 1.0) / 2.0
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     g.select(col("seg"), col("n").as("n_customers"),
         (floor(mu + 0.5).cast("long")).as("mean_cents"),
-        rnd6(ge0).as("ge0_mld"), rnd6(ge1).as("ge1_theil"),
-        rnd6(ge2).as("ge2_half_cv2"))
+        Parity.fix(ge0, 6).as("ge0_mld"), Parity.fix(ge1, 6).as("ge1_theil"),
+        Parity.fix(ge2, 6).as("ge2_half_cv2"))
       .orderBy("seg")
   }
 
@@ -1241,9 +1238,8 @@ object DriftQueries {
     // cross-multiplied difference vanishes), so the clamp is exact.
     val nd = greatest(
       col("nx").cast("double") * nyC.cast("double"), lit(1e-300))
-    val termq = floor(col("l").cast("double") *
-      (num.cast("double") / nd) * (num.cast("double") / nd) *
-      1e9 + 0.5).cast("long")
+    val termq = Parity.quant(col("l").cast("double") *
+      (num.cast("double") / nd) * (num.cast("double") / nd), 1e9)
     val g = c
       .withColumn("termq", termq)
       .agg(max(col("nn")).as("nn"), max(col("nx")).as("nx"),
@@ -1255,10 +1251,10 @@ object DriftQueries {
       (col("nn") - col("nx")).as("n_new"),
       when(col("nx") === 0 || col("nx") === col("nn"),
         lit(null).cast("double"))
-        .otherwise(floor(t * 1e6 + 0.5) / 1e6 + 0.0).as("t_cvm"),
+        .otherwise(Parity.fix(t, 6)).as("t_cvm"),
       when(col("nx") === 0 || col("nx") === col("nn"),
         lit(null).cast("long"))
-        .otherwise(((floor(t * 1e6 + 0.5) / 1e6 + 0.0) > 0.461)
+        .otherwise((Parity.fix(t, 6) > 0.461)
           .cast("long")).as("reject_5pct"))
   }
 
@@ -1366,7 +1362,7 @@ object DriftQueries {
         (col("nn") - col("nx")).as("n_weekend"),
         when(col("nx") === 0 || col("nx") === col("nn"),
           lit(null).cast("double"))
-          .otherwise(floor(u2 * 1e6 + 0.5) / 1e6 + 0.0).as("watson_u2"))
+          .otherwise(Parity.fix(u2, 6)).as("watson_u2"))
   }
 
   val q411WatsonU2Sql: String =

@@ -292,10 +292,10 @@ object EvalQueries {
     a.select(col("n").cast("long").as("n_docs"),
       lit(4L).as("k_items"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(ratio * 1e6 + 0.5) / 1e6).as("var_share"),
+        .otherwise(Parity.fix(ratio, 6)).as("var_share"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(lit(4.0) / 3.0 * (lit(1.0) - ratio) * 1e6 + 0.5)
-          / 1e6).as("cronbach_alpha"))
+        .otherwise(Parity.fix(lit(4.0) / 3.0 * (lit(1.0) - ratio),
+          6)).as("cronbach_alpha"))
   }
 
 
@@ -407,7 +407,7 @@ object EvalQueries {
     val bad = col("n") < 2L || msr <= 0.0
     def out(c: Column, nm: String) =
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(c * 1e6 + 0.5) / 1e6).as(nm)
+        .otherwise(Parity.fix(c, 6)).as(nm)
     a.select(col("n").cast("long").as("n_docs"),
       out(msr, "ms_rows"), out(msc, "ms_cols"), out(mse, "ms_err"),
       out(icc21, "icc_2_1"), out(icc2k, "icc_2_k"),
@@ -572,11 +572,11 @@ object EvalQueries {
   def q374BlandAltman(s: SparkSession, dir: String): DataFrame = {
     val a = Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("va"))
     val b = Tables.lineitem(s, dir)
       .groupBy(to_date(col("l_shipdate")).as("day"))
-      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("l_extendedprice"), 100.0))
         .as("vb"))
     val dec = "decimal(38,0)"
     val diffs = a.join(b, Seq("day"))
@@ -589,12 +589,10 @@ object EvalQueries {
     val bias = dd("sd1") / greatest(n, lit(1e-300))
     val sdev = sqrt(greatest((n * dd("sd2") - dd("sd1") * dd("sd1")) /
       greatest(n * (n - 1.0), lit(1e-300)), lit(0.0)))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val stats = m.select(col("n").as("n_days"),
-      rnd4(bias).as("bias_cents"), rnd4(sdev).as("sd_cents"),
-      rnd4(bias - lit(1.96) * sdev).as("loa_lo"),
-      rnd4(bias + lit(1.96) * sdev).as("loa_hi"))
+      Parity.fix(bias, 4).as("bias_cents"), Parity.fix(sdev, 4).as("sd_cents"),
+      Parity.fix(bias - lit(1.96) * sdev, 4).as("loa_lo"),
+      Parity.fix(bias + lit(1.96) * sdev, 4).as("loa_hi"))
     val out = diffs.crossJoin(broadcast(stats))
       .groupBy("n_days", "bias_cents", "sd_cents", "loa_lo", "loa_hi")
       .agg(sum(when(col("d").cast("double") < col("loa_lo") ||
@@ -613,9 +611,8 @@ object EvalQueries {
       when(bad, lit(null).cast("long")).otherwise(col("n_outside"))
         .as("n_outside"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(col("n_outside").cast("double") /
-          col("n_days").cast("double") * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("pct_outside"))
+        .otherwise(Parity.fix(col("n_outside").cast("double") /
+          col("n_days").cast("double"), 4)).as("pct_outside"))
   }
 
 
@@ -727,8 +724,6 @@ object EvalQueries {
         sum(col("r") * col("cc") * (lit(4L) -
           (col("ra") - col("rb")) * (col("ra") - col("rb")))).as("eq"))
     def dd(c: Column) = c.cast("double")
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     val j = m.crossJoin(broadcast(cross))
     val n = col("n")
     val bad = n < 10L || (n * n - col("e0")) === 0L ||
@@ -737,15 +732,15 @@ object EvalQueries {
     def guard(c: Column) = when(bad, lit(null).cast("double"))
       .otherwise(c)
     j.select(col("n").as("n_docs"),
-      guard(rnd6(dd(col("p0")) / greatest(dd(n), lit(1e-300))))
+      guard(Parity.fix(dd(col("p0")) / greatest(dd(n), lit(1e-300)), 6))
         .as("po"),
-      guard(rnd6(dd(n * col("p0") - col("e0")) /
-        greatest(dd(n * n - col("e0")), lit(1e-300)))).as("kappa"),
-      guard(rnd6(dd(n * col("pl") - col("el")) /
-        greatest(dd(lit(2L) * n * n - col("el")), lit(1e-300))))
+      guard(Parity.fix(dd(n * col("p0") - col("e0")) /
+        greatest(dd(n * n - col("e0")), lit(1e-300)), 6)).as("kappa"),
+      guard(Parity.fix(dd(n * col("pl") - col("el")) /
+        greatest(dd(lit(2L) * n * n - col("el")), lit(1e-300)), 6))
         .as("kappa_lin"),
-      guard(rnd6(dd(n * col("pq") - col("eq")) /
-        greatest(dd(lit(4L) * n * n - col("eq")), lit(1e-300))))
+      guard(Parity.fix(dd(n * col("pq") - col("eq")) /
+        greatest(dd(lit(4L) * n * n - col("eq")), lit(1e-300)), 6))
         .as("kappa_quad"))
   }
 
@@ -841,16 +836,14 @@ object EvalQueries {
     val peC = p1 * p2 + (lit(1.0) - p1) * (lit(1.0) - p2)
     val pBar = (p1 + p2) / 2.0
     val peS = pBar * pBar + (lit(1.0) - pBar) * (lit(1.0) - pBar)
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     pairs.select(col("pair"), col("nt").as("n_docs"),
-        rnd6(po).as("p_obs"),
-        rnd6((po - peC) / greatest(lit(1.0) - peC, lit(1e-300)))
+        Parity.fix(po, 6).as("p_obs"),
+        Parity.fix((po - peC) / greatest(lit(1.0) - peC, lit(1e-300)), 6)
           .as("kappa"),
-        rnd6((po - peS) / greatest(lit(1.0) - peS, lit(1e-300)))
+        Parity.fix((po - peS) / greatest(lit(1.0) - peS, lit(1e-300)), 6)
           .as("scott_pi"),
-        rnd6((po - peC) / greatest(lit(1.0) - peC, lit(1e-300)) -
-          (po - peS) / greatest(lit(1.0) - peS, lit(1e-300)))
+        Parity.fix((po - peC) / greatest(lit(1.0) - peC, lit(1e-300)) -
+          (po - peS) / greatest(lit(1.0) - peS, lit(1e-300)), 6)
           .as("kappa_minus_pi"))
       .orderBy("pair")
   }
@@ -924,13 +917,13 @@ object EvalQueries {
   def q394LinCcc(s: SparkSession, dir: String): DataFrame = {
     val a = Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("va"))
     val b = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         col("o_orderdate")), col("l_orderkey") === col("o_orderkey"))
       .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("l_extendedprice"), 100.0))
         .as("vb"))
     val m = a.join(b, Seq("day")).agg(count(lit(1)).as("n"),
       sum(col("va").cast(dec)).as("sx"),
@@ -948,12 +941,10 @@ object EvalQueries {
       greatest(vx + vy + (mx - my) * (mx - my), lit(1e-300))
     val r = cxy / greatest(sqrt(greatest(vx, lit(0.0))) *
       sqrt(greatest(vy, lit(0.0))), lit(1e-300))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
-    m.select(col("n").as("n_days"), rnd6(r).as("pearson_r"),
+    m.select(col("n").as("n_days"), Parity.fix(r, 6).as("pearson_r"),
       when(abs(r) < 1e-12, lit(null).cast("double"))
-        .otherwise(rnd6(ccc / r)).as("c_b"),
-      rnd6(ccc).as("ccc"))
+        .otherwise(Parity.fix(ccc / r, 6)).as("c_b"),
+      Parity.fix(ccc, 6).as("ccc"))
   }
 
   val q394LinCccSql: String =

@@ -976,9 +976,8 @@ object EventQueries {
       .agg(count(lit(1)).as("n_paths"), sum(col("covered")).as("n_covered"))
       .select(col("depth").cast("long").as("depth"), col("n_paths"),
         col("n_covered"),
-        (floor(col("n_covered").cast("double") /
-          col("n_paths").cast("double") * 1e4 + 0.5)
-          .cast("long").cast("double") / 1e4 + 0.0).as("coverage"))
+        Parity.fix(col("n_covered").cast("double") /
+          col("n_paths").cast("double"), 4).as("coverage"))
       .orderBy("depth")
   }
 

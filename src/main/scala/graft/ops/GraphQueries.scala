@@ -894,9 +894,9 @@ object GraphQueries {
       .select(col("a"), col("b"), col("cn"),
         col("deg_a").cast("long").as("deg_a"),
         col("deg_b").cast("long").as("deg_b"),
-        (floor(col("cn").cast("double") /
-          (col("deg_a") + col("deg_b") - col("cn")).cast("double") * 1e6
-          + 0.5).cast("long").cast("double") / 1e6 + 0.0).as("jaccard"),
+        Parity.fix(col("cn").cast("double") /
+          (col("deg_a") + col("deg_b") - col("cn")).cast("double"), 6)
+          .as("jaccard"),
         (col("deg_a") * col("deg_b")).cast("long").as("pref_attach"),
         (round(col("raqs") / 1.0e6, 6) + 0.0).as("res_alloc"))
       .orderBy(col("cn").desc, col("a"), col("b"))

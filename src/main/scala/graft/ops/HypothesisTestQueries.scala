@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import StatFns.{asTwoSidedP, asTwoSidedPSql}
 
 /** Hypothesis-test operators, split out of CurationQueries in round 12
   * (the file had grown past 3,900 lines — review and merge locality).
@@ -60,7 +61,7 @@ object HypothesisTestQueries {
     val dev = col("o").cast("double") - e
     grid
       .select(col("lang"), col("source"), col("n"),
-        floor(dev * dev / e * lit(1.0e6) + lit(0.5)).cast("long").as("cq"))
+        Parity.quant(dev * dev / e, 1e6).as("cq"))
       .agg(max(col("n")).as("n_docs"),
         countDistinct(col("lang")).as("r"),
         countDistinct(col("source")).as("c"),
@@ -151,7 +152,7 @@ object HypothesisTestQueries {
       - lit(1.821255978) * pow(tInv, 4)
       + lit(1.330274429) * pow(tInv, 5))
     val p = g.withColumn("zv", zv)
-      .withColumn("pq", floor(lit(2.0) * pTail * 1e8 + 0.5).cast("long"))
+      .withColumn("pq", Parity.quant(lit(2.0) * pTail, 1e8))
     val wRank = Window.orderBy(col("pq"), col("source"))
     val r = p.withColumn("rk", row_number().over(wRank))
       .withColumn("m", count(lit(1)).over(wAll))
@@ -252,14 +253,15 @@ object HypothesisTestQueries {
       lit(1.0) / (f(col("a")) + f(col("b"))) +
       lit(1.0) / col("c") - lit(1.0) / (f(col("c")) + f(col("d"))))
     val bad = col("a") === 0L || col("c") === 0L
-    def r4(c: Column) = (round(c, 4) + 0.0)
     t.select(col("brand"), col("a"), col("b"), col("c"), col("d"),
-        when(bad, lit(null).cast("double")).otherwise(r4(rr))
-          .as("risk_ratio"),
         when(bad, lit(null).cast("double"))
-          .otherwise(r4(exp(log(rr) - lit(1.96) * se))).as("ci_lo"),
+          .otherwise(Parity.rnd(rr, 4) + 0.0).as("risk_ratio"),
         when(bad, lit(null).cast("double"))
-          .otherwise(r4(exp(log(rr) + lit(1.96) * se))).as("ci_hi"))
+          .otherwise(Parity.rnd(exp(log(rr) - lit(1.96) * se), 4) + 0.0)
+          .as("ci_lo"),
+        when(bad, lit(null).cast("double"))
+          .otherwise(Parity.rnd(exp(log(rr) + lit(1.96) * se), 4) + 0.0)
+          .as("ci_hi"))
       .orderBy("brand")
   }
 
@@ -453,11 +455,9 @@ object HypothesisTestQueries {
       Window.unboundedFollowing)
     val t = g
       .withColumn("adq",
-        floor(col("a").cast("double") * col("d") / n * 1e6 + 0.5)
-          .cast("long"))
+        Parity.quant(col("a").cast("double") * col("d") / n, 1e6))
       .withColumn("bcq",
-        floor(col("b").cast("double") * col("c") / n * 1e6 + 0.5)
-          .cast("long"))
+        Parity.quant(col("b").cast("double") * col("c") / n, 1e6))
       .withColumn("sad", sum(col("adq")).over(wAll))
       .withColumn("sbc", sum(col("bcq")).over(wAll))
     // fuzz hardening (r12): a zero off-diagonal leaves the stratum OR
@@ -511,12 +511,6 @@ object HypothesisTestQueries {
       |    END AS or_mh
       |FROM t2 ORDER BY seg""".stripMargin
 
-  // A-S 26.2.17 two-sided p — shared kernel, see [[StatFns]]
-
-  private def asTwoSidedP(z: Column): Column = StatFns.asTwoSidedP(z)
-
-  private def asTwoSidedPSql(z: String): String = StatFns.asTwoSidedPSql(z)
-
   /** L167 McNemar's paired test (McNemar 1947 [PK], continuity-
     * corrected): per customer, the paired binary traits "ever placed an
     * URGENT order" vs "ever placed a 5-LOW order" — marginal
@@ -547,7 +541,7 @@ object HypothesisTestQueries {
       (col("b") + col("c")).cast("double")
     cen.select(col("a"), col("b"), col("c"), col("d"),
       (round(chi, 4) + 0.0).as("chi2_cc"),
-      (floor(asTwoSidedP(sqrt(chi)) * 1e8 + 0.5) / 1e8).as("p"))
+      Parity.fix(asTwoSidedP(sqrt(chi)), 8).as("p"))
   }
 
   val q233McNemarSql: String = {
@@ -615,7 +609,7 @@ object HypothesisTestQueries {
     t.select(col("priority"), col("sc").as("score"), col("n_i"), col("x_i"),
         (round(col("x_i").cast("double") / col("n_i"), 4) + 0.0).as("rate"),
         (round(z, 4) + 0.0).as("z_trend"),
-        (floor(asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        Parity.fix(asTwoSidedP(z), 8).as("p"))
       .orderBy("score")
   }
 
@@ -668,7 +662,7 @@ object HypothesisTestQueries {
   def q255NormalFitKs(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("cnt"))
     // r20 (verdict mandate #2): the moment totals used to re-execute
     // the census build; fused into PrefixSum's per-partition pass
@@ -687,15 +681,14 @@ object HypothesisTestQueries {
     val fHi = col("cum").cast("double") / col("n")
     val fLo = (col("cum") - col("cnt")).cast("double") / col("n")
     cum.select(col("n"), mu.as("muv"), sd.as("sdv"),
-        floor(greatest(abs(fHi - phi), abs(phi - fLo)) * 1e9 + 0.5)
-          .cast("long").as("dq"))
+        Parity.quant(greatest(abs(fHi - phi), abs(phi - fLo)), 1e9).as("dq"))
       .groupBy("n")
       .agg(max(col("muv")).as("muv"), max(col("sdv")).as("sdv"),
         max(col("dq")).as("dmax"))
       .select(col("n").as("n_orders"),
         (round(col("muv") / 100.0, 4) + 0.0).as("mean_price"),
         (round(col("sdv") / 100.0, 4) + 0.0).as("sd_price"),
-        (floor(col("dmax").cast("double") / 1e9 * 1e6 + 0.5) / 1e6)
+        Parity.fix(col("dmax").cast("double") / 1e9, 6)
         .as("ks_d"))
   }
 
@@ -762,7 +755,7 @@ object HypothesisTestQueries {
         col("o_custkey") === col("c_custkey"))
       .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
       .select((col("c_mktsegment") === "BUILDING").as("gx"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+        Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(
       count(lit(1)).as("n_all"),
       sum(when(col("gx"), 1L).otherwise(0L)).as("nx"),
@@ -858,7 +851,7 @@ object HypothesisTestQueries {
   def q256JarqueBera(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("cnt"))
     val s1 = cen.agg(sum(col("cnt")).as("n"),
       sum(col("c").cast(dec) * col("cnt").cast(dec)).as("sv"))
@@ -890,7 +883,7 @@ object HypothesisTestQueries {
       when(bad, lit(null).cast("double"))
         .otherwise(round(jb, 4) + 0.0).as("jb_stat"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(exp(-jb / 2.0) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(exp(-jb / 2.0), 8)).as("p"))
   }
 
   val q256JarqueBeraSql: String =
@@ -965,7 +958,7 @@ object HypothesisTestQueries {
       .join(broadcast(seg), col("o_custkey") === col("c_custkey"))
       .groupBy((year(col("o_orderdate")) * 10 +
         quarter(col("o_orderdate"))).cast("long").as("qtr"), col("seg"))
-      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("rev"))
     val x = c.select(col("qtr"), col("seg").as("seg_a"),
       col("rev").as("rev_a"))

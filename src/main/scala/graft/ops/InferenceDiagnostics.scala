@@ -45,7 +45,7 @@ object InferenceDiagnostics {
   def q287RatioCi(s: SparkSession, dir: String): DataFrame = {
     val peru = Tables.events(s, dir).filter(col("user_id").isNotNull)
       .groupBy("user_id")
-      .agg(coalesce(sum(floor(col("value") * 100.0 + 0.5).cast("long")),
+      .agg(coalesce(sum(Parity.quant(col("value"), 100.0)),
         lit(0L)).as("y"),
         count(lit(1)).as("m"))
       .withColumn("arm", pmod(col("user_id"), lit(2L)))
@@ -277,7 +277,7 @@ object InferenceDiagnostics {
       when(bad, lit(null).cast("double"))
         .otherwise(round(cStat, 4) + 0.0).as("c"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(exp(-cStat) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(exp(-cStat), 8)).as("p"))
   }
 
 
@@ -357,7 +357,7 @@ object InferenceDiagnostics {
     * W ≤ 1, or A ≤ 4 → null. */
   def q291DagostinoK2(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("cnt"))
     val s1 = cen.agg(sum(col("cnt")).as("n"),
       sum(col("c").cast(dec) * col("cnt").cast(dec)).as("sv"))
@@ -375,7 +375,7 @@ object InferenceDiagnostics {
       .groupBy("n")
       .agg(sum(col("d2")).as("s2"), sum(col("d3")).as("s3"),
         sum(col("d4")).as("s4"))
-    def qln(x: Column) = floor(log(x) * 1e9 + 0.5) / 1e9
+    def qln(x: Column) = Parity.fix(log(x), 9)
     val nD = col("n").cast("double")
     val m2 = col("s2").cast("double") / nD
     val g1 = (col("s3").cast("double") / nD) / (m2 * sqrt(m2))
@@ -399,8 +399,8 @@ object InferenceDiagnostics {
         (nD * (nD - 2.0) * (nD - 3.0)))
     val aA = lit(6.0) + lit(8.0) / sb *
       (lit(2.0) / sb + sqrt(lit(1.0) + lit(4.0) / (sb * sb)))
-    val qc = floor(cbrt((lit(1.0) - lit(2.0) / aA) /
-      (lit(1.0) + xx * sqrt(lit(2.0) / (aA - 4.0)))) * 1e12 + 0.5) / 1e12
+    val qc = Parity.fix(cbrt((lit(1.0) - lit(2.0) / aA) /
+      (lit(1.0) + xx * sqrt(lit(2.0) / (aA - 4.0)))), 12)
     val z2 = (lit(1.0) - lit(2.0) / (lit(9.0) * aA) - qc) *
       sqrt(lit(9.0) * aA / 2.0)
     val k2 = z1 * z1 + z2 * z2
@@ -413,7 +413,7 @@ object InferenceDiagnostics {
       when(bad, lit(null).cast("double"))
         .otherwise(round(k2, 4) + 0.0).as("k2"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(exp(-k2 / 2.0) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(exp(-k2 / 2.0), 8)).as("p"))
   }
 
 
@@ -790,9 +790,9 @@ object InferenceDiagnostics {
       .groupBy("kb").agg(max("bmin").as("iso"))
     census.join(iso, col("bin") === col("kb"))
       .select(col("bin"), col("nb").as("n_docs"),
-        (floor(col("sb").cast("double") / col("nb").cast("double") *
-          1e6 + 0.5) / 1e6).as("raw_rate"),
-        (floor(col("iso") * 1e6 + 0.5) / 1e6).as("iso_rate"))
+        Parity.fix(col("sb").cast("double") / col("nb").cast("double"),
+          6).as("raw_rate"),
+        Parity.fix(col("iso"), 6).as("iso_rate"))
       .orderBy("bin")
   }
 

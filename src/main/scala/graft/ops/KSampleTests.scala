@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import StatFns.{asTwoSidedP, asTwoSidedPSql}
 
 /** k-sample and blocked-design group-comparison tests, split out of
   * LocationTests in round 17 (the file was at 1,731 lines after the
@@ -19,10 +20,6 @@ import org.apache.spark.sql.functions._
   * global cumulatives) before any window or join.
   */
 object KSampleTests {
-
-  private def asTwoSidedP(z: Column): Column = StatFns.asTwoSidedP(z)
-
-  private def asTwoSidedPSql(z: String): String = StatFns.asTwoSidedPSql(z)
 
   /** L161 Kruskal–Wallis H (Kruskal & Wallis 1952 [PK]): the k-group
     * generalization of q210's two-sample rank test — do the five
@@ -52,7 +49,7 @@ object KSampleTests {
         .select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+        Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("n"))
     // r20 (verdict mandate #2): the tie correction Σ(n³−n) used to be a
     // second full aggregation over `cen`, re-executing the fact-scale
@@ -448,7 +445,7 @@ object KSampleTests {
           .as("mean_rank"),
         (col("l2").cast("double") / 2.0).as("l_stat"),
         (round(z, 4) + 0.0).as("z_trend"),
-        (floor(asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        Parity.fix(asTwoSidedP(z), 8).as("p"))
       .orderBy("score")
   }
 
@@ -504,7 +501,7 @@ object KSampleTests {
   def q254JonckheereTerpstra(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"),
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
         substring(col("o_orderpriority"), 1, 1).cast("int").as("g"))
     val nAggs = (1 to 5).map(g =>
       sum(when(col("g") === g, 1L).otherwise(0L)).as(s"n$g"))
@@ -535,7 +532,7 @@ object KSampleTests {
     agg.select(nTot.cast("long").as("n_orders"),
       (col("j2") / 2).cast("double").as("j_stat"),
       (round(z, 4) + 0.0).as("z_jt"),
-      (floor(asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+      Parity.fix(asTwoSidedP(z), 8).as("p"))
   }
 
 
@@ -604,7 +601,7 @@ object KSampleTests {
   def q259MoodMedian(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("priority"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+        Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val med = o.agg(expr("percentile(c, 0.5)").as("med"))
     val g = o.crossJoin(broadcast(med))
       .groupBy("priority")
@@ -618,10 +615,10 @@ object KSampleTests {
     val ea = col("n_i").cast("double") * col("at") / col("nt")
     val eb = col("n_i").cast("double") * (col("nt") - col("at")) / col("nt")
     val termQ = when(ea <= 0 || eb <= 0, lit(null).cast("long"))
-      .otherwise((floor(
-        (col("a_i") - ea) * (col("a_i") - ea) / ea * 1e8 + 0.5) +
-        floor((col("n_i") - col("a_i") - eb) *
-          (col("n_i") - col("a_i") - eb) / eb * 1e8 + 0.5)).cast("long"))
+      .otherwise((Parity.quant((col("a_i") - ea) * (col("a_i") - ea) / ea,
+        1e8) +
+        Parity.quant((col("n_i") - col("a_i") - eb) *
+          (col("n_i") - col("a_i") - eb) / eb, 1e8)).cast("long"))
     val t2 = tbl.withColumn("tq", termQ)
       .withColumn("chiq", sum(col("tq")).over(wAll))
       .withColumn("anybad",
@@ -633,8 +630,8 @@ object KSampleTests {
         when(col("anybad") === 1, lit(null).cast("double"))
           .otherwise(round(chi, 4) + 0.0).as("chi2"),
         when(col("anybad") === 1, lit(null).cast("double"))
-          .otherwise(floor(exp(-chi / 2.0) * (lit(1.0) + chi / 2.0) * 1e8
-            + 0.5) / 1e8).as("p"))
+          .otherwise(Parity.fix(exp(-chi / 2.0) * (lit(1.0) + chi / 2.0),
+            8)).as("p"))
       .orderBy("priority")
   }
 
@@ -718,7 +715,7 @@ object KSampleTests {
       .withColumn("ek", (col("ak") - pmod(col("ak"),
         col("nk").cast(dec))) / col("nk").cast(dec))
     def ln9(c: Column) =
-      floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
+      Parity.quant(log(c.cast("double")), 1e9)
     val lnk9 = ln9(col("ak")) - ln9(col("bk"))
     val m = g.select(col("nk"), col("ek"),
         ((col("nk") - 1L) * lnk9).as("termk"),
@@ -738,12 +735,10 @@ object KSampleTests {
     m.select(col("n").cast("long").as("n_total"),
       col("k").cast("long").as("k_groups"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(chi2 * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("bartlett_chi2"),
+        .otherwise(Parity.fix(chi2, 4)).as("bartlett_chi2"),
       (col("k") - 1L).cast("long").as("df"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(cFac * 1e6 + 0.5).cast("long")
-          .cast("double") / 1e6) + 0.0).as("c_factor"),
+        .otherwise(Parity.fix(cFac, 6)).as("c_factor"),
       when(bad || col("k") =!= 5L, lit(null).cast("long"))
         .otherwise((chi2 > 9.4877).cast("long")).as("reject_5pct"))
   }
@@ -1053,7 +1048,7 @@ object KSampleTests {
     val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("l"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+        Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("n"))
     // r20 (verdict mandate #2): tie totals fused into the prefix pass —
     // the q227 note applies verbatim

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.TextFns._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -228,12 +228,11 @@ object LexicalRichnessQueries {
     val b = p.select(col("source").as("src_b"), col("w"), col("p").as("pb"))
     a.join(b, Seq("w")).filter(col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"),
-        floor(sqrt(col("pa") * col("pb")) * lit(1.0e9) + lit(0.5))
-          .cast("long").as("tq"))
+        Parity.quant(sqrt(col("pa") * col("pb")), 1e9).as("tq"))
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_shared"), sum("tq").as("sq"))
       .select(col("src_a"), col("src_b"), col("n_shared"),
-        (floor(col("sq").cast("double") / lit(1.0e9) * 1e6 + 0.5) / 1e6)
+        Parity.fix(col("sq").cast("double") / lit(1.0e9), 6)
           .as("bc"),
         (round(sqrt(greatest(lit(1.0) -
           col("sq").cast("double") / lit(1.0e9), lit(0.0))), 6) + 0.0)
@@ -366,13 +365,12 @@ object LexicalRichnessQueries {
       .withColumn("nw", sum(col("nws")).over(wTerm))
     val vi = col("nws").cast("double") / col("nw").cast("double")
     val si = col("ns").cast("double") / col("nt").cast("double")
-    val termQ = floor((abs(vi - si) - si) * 1e9 + 0.5).cast("long")
+    val termQ = Parity.quant(abs(vi - si) - si, 1e9)
     t0.select(col("w"), col("nw"), termQ.as("tq"))
       .groupBy("w", "nw").agg(sum(col("tq")).as("sq"))
       .filter(col("nw") >= 50)
       .select(col("w").as("term"), col("nw").as("n_occurrences"),
-        (floor((col("sq").cast("double") / 1e9 + 1.0) / 2.0 * 1e6 + 0.5)
-          / 1e6)
+        Parity.fix((col("sq").cast("double") / 1e9 + 1.0) / 2.0, 6)
           .as("dp"))
       .orderBy(col("n_occurrences").desc, col("term"))
       .limit(20)
@@ -447,12 +445,11 @@ object LexicalRichnessQueries {
       col("nr").cast("long").as("n_rare"),
       col("f1").cast("long").as("singletons"),
       when(bad, lit(null).cast("double"))
-        .otherwise(rnd6c(cov)).as("coverage"),
+        .otherwise(Parity.fix(cov, 6)).as("coverage"),
       when(bad, lit(null).cast("double"))
-        .otherwise(rnd6c(g2)).as("gamma2"),
+        .otherwise(Parity.fix(g2, 6)).as("gamma2"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(ace * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("ace"))
+        .otherwise(Parity.fix(ace, 4)).as("ace"))
   }
 
   val q339AceRichnessSql: String =
@@ -494,6 +491,4 @@ object LexicalRichnessQueries {
       |    AS ace
       |FROM fin""".stripMargin
 
-  private def rnd6c(c: Column): Column =
-    (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
 }

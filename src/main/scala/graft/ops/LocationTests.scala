@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import StatFns.{asTwoSidedP, asTwoSidedPSql}
 
 /** TWO-sample and paired location/rank tests, split out of
   * HypothesisTestQueries in round 15 and trimmed again in round 17
@@ -22,12 +23,6 @@ import org.apache.spark.sql.functions._
   * sorts fact-sized data on one partition.
   */
 object LocationTests {
-
-  private def asTwoSidedP(z: Column): Column = StatFns.asTwoSidedP(z)
-
-
-  private def asTwoSidedPSql(z: String): String = StatFns.asTwoSidedPSql(z)
-
 
   /** L147 Mann–Whitney U rank-sum test (Mann & Whitney 1947 [PK]):
     * does the URGENT order population spend differently from the LOW
@@ -52,7 +47,7 @@ object LocationTests {
     val dec = "decimal(38,0)"
     val f = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"),
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
         when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
     val cen = f.groupBy("c")
       .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
@@ -311,7 +306,7 @@ object LocationTests {
     val dec = "decimal(38,0)"
     val f = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"),
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
         when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
     val cen = f.groupBy("c")
       .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
@@ -325,7 +320,7 @@ object LocationTests {
     val u2 = col("r2s") - col("n1t").cast(dec) * (col("n1t") + 1).cast(dec)
     val delta = u2.cast("double") /
       (col("n1t").cast("double") * col("n2t")) - lit(1.0)
-    val adq = floor(abs(delta) * 1e6 + 0.5)
+    val adq = Parity.quant(abs(delta), 1e6)
     g.select(col("n1t").as("n_urgent"), col("n2t").as("n_low"),
       (round(delta, 6) + 0.0).as("cliffs_delta"),
       when(adq < 147000L, "negligible")
@@ -390,7 +385,7 @@ object LocationTests {
       .select(col("o_custkey"),
         (col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
           .as("late"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"))
+        Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val peru = o.groupBy("o_custkey")
       .agg(sum(when(!col("late"), col("c"))).as("se"),
         count(when(!col("late"), 1)).as("ne"),
@@ -422,7 +417,7 @@ object LocationTests {
       when(bad, lit(null).cast("double"))
         .otherwise(round(z, 4) + 0.0).as("z"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(asTwoSidedP(z), 8)).as("p"))
   }
 
 
@@ -525,15 +520,13 @@ object LocationTests {
         seb * seb / (col("n_b") - lit(1.0)))
     val margin = (col("s_a") + col("s_b")).cast("double") /
       (col("n_a") + col("n_b")) * 0.05
-    def fq6(c: org.apache.spark.sql.Column) =
-      (floor(c * 1e6 + 0.5) / 1e6) + 0.0
-    val tLo = fq6((diff + margin) / se)
-    val tHi = fq6((margin - diff) / se)
+    val tLo = Parity.fix((diff + margin) / se, 6)
+    val tHi = Parity.fix((margin - diff) / se, 6)
     piv.select(col("n_a"), col("n_b"),
-      fq6(ma).as("mean_a"), fq6(mb).as("mean_b"),
-      fq6(diff).as("diff"), fq6(se).as("se"),
-      (floor(df * 1e4 + 0.5) / 1e4 + 0.0).as("df"),
-      fq6(margin).as("margin"),
+      Parity.fix(ma, 6).as("mean_a"), Parity.fix(mb, 6).as("mean_b"),
+      Parity.fix(diff, 6).as("diff"), Parity.fix(se, 6).as("se"),
+      Parity.fix(df, 4).as("df"),
+      Parity.fix(margin, 6).as("margin"),
       tLo.as("t_lower"), tHi.as("t_upper"),
       when(tLo > 1.645 && tHi > 1.645, 1L).otherwise(0L)
         .as("equivalent"))
@@ -630,15 +623,15 @@ object LocationTests {
       .select(lit("priority").as("pair"),
         when(col("o_orderpriority") === "1-URGENT", lit("x"))
           .otherwise(lit("y")).as("grp"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("v"))
+        Parity.quant(col("o_totalprice"), 100.0).as("v"))
     val li = Tables.lineitem(s, dir)
     val disc = li.select(lit("discount").as("pair"), lit("x").as("grp"),
-        floor(col("l_extendedprice") * 1000000 + 0.5).cast("long")
+        Parity.quant(col("l_extendedprice"), 1e6)
           .as("v"))
       .unionByName(li.select(lit("discount").as("pair"),
         lit("y").as("grp"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) *
-          1000000 + 0.5).cast("long").as("v")))
+        Parity.quant(col("l_extendedprice") * (lit(1) - col("l_discount")),
+          1e6).as("v")))
     val base = pri.unionByName(disc)
     val dec = "decimal(38,0)"
     // (pair, v) census, per-group counts pivoted into columns (q254
@@ -710,21 +703,12 @@ object LocationTests {
       col("n1") < 2L || col("n2") < 2L || (vs1 + vs2) <= 0.0
     def guard(c: Column): Column =
       when(bad, lit(null).cast("double")).otherwise(c)
-    def rnd6(c: Column): Column =
-      guard((floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6)
-        + 0.0)
-    def rnd4(c: Column): Column =
-      guard((floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4)
-        + 0.0)
-    def rnd2(c: Column): Column =
-      guard((floor(c * 1e2 + 0.5).cast("long").cast("double") / 1e2)
-        + 0.0)
     g.select(col("pair"), col("n1"), col("n2"),
-        rnd6(pHat).as("p_hat"), rnd4(wStat).as("w_stat"),
-        rnd2(df).as("df"),
+        guard(Parity.fix(pHat, 6)).as("p_hat"),
+        guard(Parity.fix(wStat, 4)).as("w_stat"),
+        guard(Parity.fix(df, 2)).as("df"),
         when(bad, lit(null).cast("long"))
-          .otherwise((abs((floor(wStat * 1e4 + 0.5).cast("long")
-            .cast("double") / 1e4) + 0.0) > 1.96).cast("long"))
+          .otherwise((abs(Parity.fix(wStat, 4)) > 1.96).cast("long"))
           .as("reject_5pct"))
       .orderBy("pair")
   }
@@ -851,15 +835,15 @@ object LocationTests {
       .select(lit("priority").as("pair"),
         when(col("o_orderpriority") === "1-URGENT", lit("x"))
           .otherwise(lit("y")).as("grp"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("v"))
+        Parity.quant(col("o_totalprice"), 100.0).as("v"))
     val li = Tables.lineitem(s, dir)
     val disc = li.select(lit("discount").as("pair"), lit("x").as("grp"),
-        floor(col("l_extendedprice") * 1000000 + 0.5).cast("long")
+        Parity.quant(col("l_extendedprice"), 1e6)
           .as("v"))
       .unionByName(li.select(lit("discount").as("pair"),
         lit("y").as("grp"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) *
-          1000000 + 0.5).cast("long").as("v")))
+        Parity.quant(col("l_extendedprice") * (lit(1) - col("l_discount")),
+          1e6).as("v")))
     val base = pri.unionByName(disc)
     // tie-robust census construction (fuzz seed 133: per-row tiebreak
     // keys can collide on adversarial data, making row_number pairing
@@ -912,8 +896,7 @@ object LocationTests {
     val den = col("n").cast(dec) * col("i").cast(dec) *
       (col("n") + 1L - col("i")).cast(dec) * col("m").cast(dec) *
       (col("m") + col("n")).cast(dec)
-    val micro = floor(num.cast("double") / den.cast("double") * 1e6 + 0.5)
-      .cast("long")
+    val micro = Parity.quant(num.cast("double") / den.cast("double"), 1e6)
     // fuzz hardening: a pair whose other group is EMPTY (m = 0) has no
     // two-sample question — drop its rows (the den factor m would be
     // an exact-zero ANSI divisor); the group pivot then yields nulls
@@ -927,10 +910,8 @@ object LocationTests {
         max(when(col("grp") === "y", col("s"))).as("s2"))
     def d(c: String) = col(c).cast("double")
     val b = (d("s1") / 1e6 / d("n1") + d("s2") / 1e6 / d("n2")) / 2.0
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
-    g.select(col("pair"), col("n1"), col("n2"), rnd4(b).as("b_stat"),
-        (rnd4(b) > 2.493).cast("long").as("reject_5pct"))
+    g.select(col("pair"), col("n1"), col("n2"), Parity.fix(b, 4).as("b_stat"),
+        (Parity.fix(b, 4) > 2.493).cast("long").as("reject_5pct"))
       .orderBy("pair")
   }
 
@@ -1031,7 +1012,7 @@ object LocationTests {
     val dec = "decimal(38,0)"
     val f = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("c"),
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
         when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
     val cen = f.groupBy("c")
       .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
@@ -1073,9 +1054,9 @@ object LocationTests {
     val z = (w1 - mean) / sqrt(greatest(varW, lit(1e-300)))
     g.select(col("n1t").as("n_urgent"),
         (col("nt") - col("n1t")).as("n_low"),
-        (floor(w1 * 1e4 + 0.5) / 1e4 + 0.0).as("w1_st"),
-        (floor(z * 1e4 + 0.5) / 1e4 + 0.0).as("z"),
-        ((abs(floor(z * 1e4 + 0.5) / 1e4 + 0.0) > 1.96).cast("long"))
+        Parity.fix(w1, 4).as("w1_st"),
+        Parity.fix(z, 4).as("z"),
+        ((abs(Parity.fix(z, 4)) > 1.96).cast("long"))
           .as("reject_5pct"))
   }
 

@@ -51,6 +51,22 @@ object Parity {
     * is the residual risk; 4+ places on random data make it negligible. */
   def rnd(c: Column, s: Int = 4): Column = round(c, s)
 
+  /** Fixed-point quantization: `floor(c * scale + 0.5)` as a BIGINT.
+    * Half-ties go toward +∞ (−0.25 → −2 at scale 10, where HALF_UP
+    * gives −3); NaN maps to 0 (Spark's double→long floor), null stays
+    * null. DuckDB twin: `FLOOR(x * scale + 0.5)`. */
+  def quant(c: Column, scale: Double): Column = floor(c * scale + 0.5)
+
+  /** A double output rounded to `places` decimals by [[quant]]:
+    * `quant(c, 10^places) / 10^places`. Same tie rule and NaN → 0;
+    * never −0.0. DuckDB twin: `FLOOR(x * 1eN + 0.5) / 1eN`. Unlike
+    * [[rnd]] (HALF_UP, DuckDB `ROUND`), both engines run the same IEEE
+    * multiply, add, floor and divide, so they agree to the bit. */
+  def fix(c: Column, places: Int): Column = {
+    val s = math.pow(10, places)
+    quant(c, s) / s
+  }
+
   /** DuckDB SQL fragment mirrors. */
   val DM = "DECIMAL(13,4)"
   val DF = "DECIMAL(6,4)"

@@ -806,7 +806,7 @@ object PipelineQueries {
     * sequential window. */
   def q204PrefixSum(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir).select(col("o_orderkey"),
-      floor(col("o_totalprice") * 10000.0 + 0.5).cast("long").as("v4"))
+      Parity.quant(col("o_totalprice"), 1e4).as("v4"))
     graft.ops.PrefixSum.withPrefixSums(o,
         Seq(col("o_orderkey")), Seq((col("v4"), "cum4")))
       .select(col("o_orderkey"), col("v4"), col("cum4"))
@@ -1010,7 +1010,7 @@ object PipelineQueries {
     val dec = "decimal(38,0)"
     val inS = graft.ops.Kmv.hashCol(col("o_orderkey")) <
       graft.ops.Kmv.HashSpace / 16L
-    val cents = floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+    val cents = Parity.quant(col("o_totalprice"), 100.0)
     val strat = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("h"), cents.as("v"),
         inS.cast("long").as("m"))
@@ -1034,15 +1034,14 @@ object PipelineQueries {
       // 0 to its variance — a NaN here would cast divergently across
       // engines, and the bias is visible in the error columns anyway
       .withColumn("post9", when(col("mh") >= 1L,
-        floor(f(col("nh")) / f(col("nn")) *
-          (f(col("sh")) / f(col("mh"))) * 1e9 + 0.5).cast("long"))
+        Parity.quant(f(col("nh")) / f(col("nn")) *
+          (f(col("sh")) / f(col("mh"))), 1e9))
         .otherwise(0L))
       // variance legs are cents-squared scale (~1e11): a nano quantum
       // overflows int64 (measured at sf0.01), so they carry 1e4
       .withColumn("pvar4", when(col("mh") >= 2L,
-        floor(f(col("nh")) / f(col("nn")) *
-          (f(col("nh")) / f(col("nn"))) * sVar / f(col("mh")) * 1e4 + 0.5)
-          .cast("long"))
+        Parity.quant(f(col("nh")) / f(col("nn")) *
+          (f(col("nh")) / f(col("nn"))) * sVar / f(col("mh")), 1e4))
         .otherwise(0L))
     val popMean = Tables.orders(s, dir)
       .agg((sum(cents.cast(dec)).cast("double") /
@@ -1055,10 +1054,8 @@ object PipelineQueries {
     val srsVar = (f(col("ns")) * f(col("qt")) - f(col("st")) *
       f(col("st"))) / f(col("ns")) / (f(col("ns")) - 1.0)
     val fpc = lit(1.0) - f(col("ns")) / f(col("npop"))
-    def d2(c: Column) = (floor(c / 100.0 * 1e2 + 0.5).cast("long")
-      .cast("double") / 1e2) + 0.0
-    def d4(c: Column) = (floor(c / 100.0 * 1e4 + 0.5).cast("long")
-      .cast("double") / 1e4) + 0.0
+    def d2(c: Column) = Parity.fix(c / 100.0, 2)
+    def d4(c: Column) = Parity.fix(c / 100.0, 4)
     val thin = col("ns") < 2L
     m.select(col("npop").cast("long").as("n_pop"),
       col("ns").cast("long").as("n_sample"),
@@ -1167,7 +1164,7 @@ object PipelineQueries {
     val m = Tables.orders(s, dir)
       .join(broadcast(seg), col("o_custkey") === col("c_custkey"))
       .select(col("segment"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("w"))
+        Parity.quant(col("o_totalprice"), 100.0).as("w"))
       .groupBy("segment")
       .agg(count(lit(1)).as("n"),
         sum(col("w").cast(dec)).as("sw"),
@@ -1179,11 +1176,9 @@ object PipelineQueries {
       greatest(dd("sw") * dd("sw"), lit(1e-300))
     val cv2 = n * dd("sw2") /
       greatest(dd("sw") * dd("sw"), lit(1e-300)) - 1.0
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val bad = col("n") < 10L || col("sw2") <= 0L
     def guard(c: Column) = when(bad, lit(null).cast("double"))
-      .otherwise(rnd4(c))
+      .otherwise(Parity.fix(c, 4))
     m.select(col("segment"), col("n"),
         guard(neff).as("n_eff"), guard(deff).as("deff"),
         guard(cv2).as("cv2_weights"))

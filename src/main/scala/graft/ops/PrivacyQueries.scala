@@ -108,7 +108,7 @@ object PrivacyQueries {
       log(col("cs").cast("double") / col("n").cast("double"))
     cell.withColumn("n", n)
       .select(col("nation"), col("priority"), col("n"),
-        floor(term * lit(1.0e9) + lit(0.5)).cast("long").as("tq"))
+        Parity.quant(term, 1e9).as("tq"))
       .groupBy("nation", "priority", "n")
       .agg(count(lit(1)).as("l_distinct"), sum("tq").as("sq"))
       .select(col("nation"), col("priority"), col("n").as("n_rows"),
@@ -196,7 +196,7 @@ object PrivacyQueries {
       col("ngl").cast("double") / col("nt"))
     grid
       .select(col("n_name"), col("seg"), col("ng"),
-        floor(cell * 1e6 + 0.5).cast("long").as("cq"))
+        Parity.quant(cell, 1e6).as("cq"))
       .groupBy("n_name", "seg", "ng")
       .agg(sum(col("cq")).as("tvq"))
       .orderBy(col("tvq").desc, col("n_name"), col("seg"))

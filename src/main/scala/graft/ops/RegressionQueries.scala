@@ -293,8 +293,8 @@ object RegressionQueries {
       .limit(20)
       .select(col("l_orderkey"), col("x2").as("n_lines"),
         col("x1").as("units"), col("e").as("resid_cents"),
-        (floor(col("lev") * 1e6 + 0.5) / 1e6).as("leverage"),
-        (floor(col("cook") * 1e6 + 0.5) / 1e6).as("cooks_d"))
+        Parity.fix(col("lev"), 6).as("leverage"),
+        Parity.fix(col("cook"), 6).as("cooks_d"))
       .orderBy(col("cooks_d").desc, col("l_orderkey"))
   }
 
@@ -386,7 +386,7 @@ object RegressionQueries {
       .limit(20)
       .select(col("l_orderkey"), col("y").as("rev_cents"),
         col("x1").as("units"), col("x2").as("n_lines"),
-        (floor(col("d2") * 1e4 + 0.5) / 1e4).as("mahal_d2"))
+        Parity.fix(col("d2"), 4).as("mahal_d2"))
       .orderBy(col("mahal_d2").desc, col("l_orderkey"))
   }
 
@@ -612,19 +612,15 @@ object RegressionQueries {
     val bad = col("n") < 10L || v("s11", "s1") <= 0.0 ||
       v("s22", "s2") <= 0.0 || v("s33", "s3") <= 0.0 ||
       abs(det0) < 1e-9
-    def rnd4(c: Column): Column = when(bad, lit(null).cast("double"))
-      .otherwise((floor(c * 1e4 + 0.5).cast("long").cast("double") /
-        1e4) + 0.0)
-    def rnd6(c: Column): Column = when(bad, lit(null).cast("double"))
-      .otherwise((floor(c * 1e6 + 0.5).cast("long").cast("double") /
-        1e6) + 0.0)
+    def guard(c: Column): Column =
+      when(bad, lit(null).cast("double")).otherwise(c)
     val wide = m.select(col("n").as("n_days"),
-      rnd4((lit(1.0) - r23 * r23) / det).as("vif_cnt"),
-      rnd4((lit(1.0) - r13 * r13) / det).as("vif_rev"),
-      rnd4((lit(1.0) - r12 * r12) / det).as("vif_ma7"),
-      rnd6(lit(1.0) - r23 * r23).as("num_cnt"),
-      rnd6(lit(1.0) - r13 * r13).as("num_rev"),
-      rnd6(lit(1.0) - r12 * r12).as("num_ma7"))
+      guard(Parity.fix((lit(1.0) - r23 * r23) / det, 4)).as("vif_cnt"),
+      guard(Parity.fix((lit(1.0) - r13 * r13) / det, 4)).as("vif_rev"),
+      guard(Parity.fix((lit(1.0) - r12 * r12) / det, 4)).as("vif_ma7"),
+      guard(Parity.fix(lit(1.0) - r23 * r23, 6)).as("num_cnt"),
+      guard(Parity.fix(lit(1.0) - r13 * r13, 6)).as("num_rev"),
+      guard(Parity.fix(lit(1.0) - r12 * r12, 6)).as("num_ma7"))
     wide.select(col("n_days"),
         expr("stack(3, 'cnt', vif_cnt, num_cnt," +
           " 'ma7', vif_ma7, num_ma7," +
@@ -736,9 +732,9 @@ object RegressionQueries {
       .select(lit("count_rev").as("pair"), col("x"), col("y"))
     val li = Tables.lineitem(s, dir)
       .groupBy(to_date(col("l_shipdate")).as("day"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * 100 + 0.5).cast("long")).cast(dec).as("x"),
-        sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
+      .agg(sum(Parity.quant(col("l_extendedprice") *
+        (lit(1) - col("l_discount")), 100.0)).cast(dec).as("x"),
+        sum(Parity.quant(col("l_extendedprice"), 100.0))
           .cast(dec).as("y"))
       .select(lit("net_gross").as("pair"), col("x"), col("y"))
     val m = pair1.unionByName(li).groupBy("pair").agg(
@@ -765,12 +761,14 @@ object RegressionQueries {
     // fuzz hardening (q251 convention): degenerate day census —
     // constant x or y, or zero covariance — nulls the slopes
     val bad = col("n") < 3L || cxx <= 0.0 || cyy <= 0.0 || cxy === 0.0
-    def rnd6(c: Column): Column = when(bad, lit(null).cast("double"))
-      .otherwise((floor(c * 1e6 + 0.5).cast("long").cast("double") /
-        1e6) + 0.0)
-    m.select(col("pair"), col("n").as("n_days"), rnd6(r).as("r"),
-        rnd6(bOls).as("b_ols"), rnd6(bDem).as("b_deming"),
-        rnd6(bRma).as("b_rma"), rnd6(bInv).as("b_inv"))
+    def guard(c: Column): Column =
+      when(bad, lit(null).cast("double")).otherwise(c)
+    m.select(col("pair"), col("n").as("n_days"),
+        guard(Parity.fix(r, 6)).as("r"),
+        guard(Parity.fix(bOls, 6)).as("b_ols"),
+        guard(Parity.fix(bDem, 6)).as("b_deming"),
+        guard(Parity.fix(bRma, 6)).as("b_rma"),
+        guard(Parity.fix(bInv, 6)).as("b_inv"))
       .orderBy("pair")
   }
 

@@ -91,7 +91,7 @@ object RetrievalQueries {
         lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / col("avgdl")))
     val scored = tf.join(broadcast(df), "word")
       .crossJoin(broadcast(stats))
-      .withColumn("c", floor(idf * tfn * 1000000.0 + 0.5))
+      .withColumn("c", Parity.quant(idf * tfn, 1e6))
       .groupBy("doc_id").agg(sum(col("c")).as("sc"))
     scored.orderBy(col("sc").desc, col("doc_id")).limit(20)
       .withColumn("rnk", row_number().over(
@@ -206,10 +206,9 @@ object RetrievalQueries {
       .withColumn("w", split(col("bigram"), " ").getItem(0))
       .join(cw, "w")
       .crossJoin(broadcast(v))
-      .withColumn("mlp", floor(
-        log((col("cb").cast("double") + 1.0) /
-            (col("cw") + col("v")).cast("double")) * 1000000.0 + 0.5)
-        .cast("long"))
+      .withColumn("mlp",
+        Parity.quant(log((col("cb").cast("double") + 1.0) /
+          (col("cw") + col("v")).cast("double")), 1e6))
       .select("bigram", "mlp")
     bi.join(model, "bigram")
       .groupBy("doc_id")
@@ -451,11 +450,10 @@ object RetrievalQueries {
     val wc = Window.partitionBy("ql").orderBy("rk")
     val t = ranked.withColumn("cumrel", sum("rel").over(wc))
     val apTerm = when(col("rel") === 1L,
-      floor(col("cumrel").cast("double") / col("rk") * 1e9 + 0.5)
-        .cast("long")).otherwise(0L)
+      Parity.quant(col("cumrel").cast("double") / col("rk"), 1e9)).otherwise(0L)
     val dcgTerm = when(col("rel") === 1L && col("rk") <= 10,
-      floor(lit(0.6931471805599453) / log(col("rk") + 1.0) * 1e9 + 0.5)
-        .cast("long")).otherwise(0L)
+      Parity.quant(lit(0.6931471805599453) / log(col("rk") + 1.0),
+        1e9)).otherwise(0L)
     val g = t.groupBy("ql").agg(
       count(lit(1)).as("n_docs"),
       sum("rel").as("n_rel"),
@@ -468,12 +466,11 @@ object RetrievalQueries {
         |    / ln(cast(k as double) + 1.0) * 1e9 + 0.5) as long))
         |""".stripMargin)
     g.select(col("ql").as("query_lang"), col("n_docs"), col("n_rel"),
-        (floor(lit(1.0) / col("first_rel") * 1e6 + 0.5) / 1e6).as("mrr"),
-        (floor(col("apq").cast("double") / 1e9 / col("n_rel") * 1e6 + 0.5)
-          / 1e6)
+        Parity.fix(lit(1.0) / col("first_rel"), 6).as("mrr"),
+        Parity.fix(col("apq").cast("double") / 1e9 / col("n_rel"), 6)
           .as("map"),
-        (floor(col("dcgq").cast("double") / idcgq.cast("double") * 1e6 +
-          0.5) / 1e6).as("ndcg10"))
+        Parity.fix(col("dcgq").cast("double") / idcgq.cast("double"),
+          6).as("ndcg10"))
       .orderBy("query_lang")
   }
 
@@ -704,23 +701,22 @@ object RetrievalQueries {
       .agg(sum(when(col("rta") < col("rtb"), 1L).otherwise(0L))
         .as("conc"))
       .select(col("rsb"),
-        floor(col("conc").cast("double") /
-          (col("rsb") - 1L).cast("double") * 1e9 + 0.5).cast("long")
+        Parity.quant(col("conc").cast("double") /
+          (col("rsb") - 1L).cast("double"), 1e9)
           .as("p9"))
     val tot = pairs.agg(
       count(lit(1)).as("npairs"),
       sum(when(col("rta") < col("rtb"), 1L).otherwise(0L)).as("nc"))
     val apSum = perI.agg(sum(col("p9")).as("s9"),
       (max(col("rsb"))).as("nmax"))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     tot.crossJoin(broadcast(apSum))
       .select(col("nmax").as("n_items"),
-        rnd6((lit(2.0) * (col("nc") * 2L - col("npairs")).cast("double")) /
-          (col("nmax") * (col("nmax") - 1L)).cast("double"))
+        Parity.fix((lit(2.0) *
+          (col("nc") * 2L - col("npairs")).cast("double")) /
+          (col("nmax") * (col("nmax") - 1L)).cast("double"), 6)
           .as("kendall_tau"),
-        rnd6(lit(2.0) / (col("nmax") - 1L).cast("double") *
-          (col("s9").cast("double") / 1e9) - 1.0).as("tau_ap"))
+        Parity.fix(lit(2.0) / (col("nmax") - 1L).cast("double") *
+          (col("s9").cast("double") / 1e9) - 1.0, 6).as("tau_ap"))
   }
 
   val q378TauApSql: String =

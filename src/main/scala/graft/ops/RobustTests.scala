@@ -166,9 +166,9 @@ object RobustTests {
     g.select(col("o_orderpriority"), col("n").cast("long").as("n_days"),
         col("sc").cast("long").as("n_orders"),
         when(bad, lit(null).cast("double"))
-          .otherwise(floor(disp * 1e4 + 0.5) / 1e4).as("dispersion"),
+          .otherwise(Parity.fix(disp, 4)).as("dispersion"),
         when(bad, lit(null).cast("double"))
-          .otherwise(floor(z * 1e4 + 0.5) / 1e4).as("z"),
+          .otherwise(Parity.fix(z, 4)).as("z"),
         when(bad, lit(null).cast("string"))
           .otherwise(when(z > 1.6449, "overdispersed")
             .when(z < -1.6449, "underdispersed").otherwise("poisson"))

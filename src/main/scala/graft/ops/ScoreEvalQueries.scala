@@ -235,7 +235,7 @@ object ScoreEvalQueries {
       .otherwise(lit(0.0))
     withB
       .select(bin.as("bin"), col("n"), col("pos"),
-        (col("n") * floor(phat * lit(1.0e9) + lit(0.5)).cast("long"))
+        (col("n") * Parity.quant(phat, 1e9))
           .as("pq"))
       .groupBy("bin")
       .agg(sum("n").as("n_docs"), sum("pos").as("n_pos"),
@@ -308,8 +308,7 @@ object ScoreEvalQueries {
       .groupBy("l_partkey")
       .agg(count(lit(1)).as("n"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("k"))
-    val rq = floor(col("k").cast("double") / col("n") * 1e9 + 0.5)
-      .cast("long")
+    val rq = Parity.quant(col("k").cast("double") / col("n"), 1e9)
     val withR = li.withColumn("rq", rq)
     val mom = withR.filter(col("n") >= 5)
       .agg(count(lit(1)).as("g"), sum(col("rq").cast(dec)).as("sr"),
@@ -337,9 +336,9 @@ object ScoreEvalQueries {
         // sr/g/1e9 is a rational whose denominator can be 2·5-smooth
         // (g is the part census), so it can land EXACTLY on .xxxx5
         when(bad, lit(null).cast("double"))
-          .otherwise(floor(m1 * 1e4 + 0.5) / 1e4 + 0.0).as("prior_rate"),
+          .otherwise(Parity.fix(m1, 4)).as("prior_rate"),
         when(bad, lit(null).cast("double"))
-          .otherwise(floor(abs(post - raw) * 1e9 + 0.5) / 1e9)
+          .otherwise(Parity.fix(abs(post - raw), 9))
           .as("shrinkage"))
       .orderBy(col("shrinkage").desc_nulls_last, col("l_partkey"))
       .limit(15)
@@ -419,7 +418,7 @@ object ScoreEvalQueries {
     val q = withB.select(
       expr("(sc - mn) * 10 div (mx - mn + 1)").as("bin"),
       col("n"), col("pos"),
-      floor(phat * lit(1.0e9) + lit(0.5)).cast("long").as("pq"))
+      Parity.quant(phat, 1e9).as("pq"))
     // raw Brier in 1e-18 units: Σ pos·(pq−1e9)² + (n−pos)·pq²
     val bnum = (col("pos").cast(dec) *
         ((col("pq") - lit(1000000000L)).cast(dec) *
@@ -439,10 +438,10 @@ object ScoreEvalQueries {
     val terms = bins
       .withColumn("nn", wholeN).withColumn("np", wholeP)
       .select(col("nn"), col("np"), col("bnk"),
-        floor(col("nk").cast("double") * (pbar - obar) * (pbar - obar) *
-          1e12 + 0.5).cast("long").as("relq"),
-        floor(col("nk").cast("double") * (obar - obarAll) *
-          (obar - obarAll) * 1e12 + 0.5).cast("long").as("resq"))
+        Parity.quant(col("nk").cast("double") * (pbar - obar) * (pbar - obar),
+          1e12).as("relq"),
+        Parity.quant(col("nk").cast("double") * (obar - obarAll) *
+          (obar - obarAll), 1e12).as("resq"))
     val g = terms.groupBy("nn", "np")
       .agg(sum(col("bnk")).as("bsum"),
         sum(col("relq")).as("rels"), sum(col("resq")).as("ress"))
@@ -550,8 +549,7 @@ object ScoreEvalQueries {
     val phat = when(span > 0L,
       (col("sc") - col("mn")).cast("double") / span.cast("double"))
       .otherwise(lit(0.0))
-    val p = floor(phat * lit(1.0e9) + lit(0.5)).cast("long")
-      .cast("double") / 1.0e9
+    val p = Parity.fix(phat, 9)
     val oneM2p = lit(1.0) - lit(2.0) * p
     val num = oneM2p * (col("pos").cast("double") -
       col("n").cast("double") * p)
@@ -559,8 +557,8 @@ object ScoreEvalQueries {
       (lit(1.0) - p)
     val m = withB
       .select(col("n"),
-        floor(num * lit(1.0e9) + lit(0.5)).cast("long").as("t9"),
-        floor(den * lit(1.0e9) + lit(0.5)).cast("long").as("d9"))
+        Parity.quant(num, 1e9).as("t9"),
+        Parity.quant(den, 1e9).as("d9"))
       .agg(sum(col("n")).as("nd"), count(lit(1)).as("nl"),
         sum(col("t9")).as("st9"), sum(col("d9")).as("sd9"))
     def f(c: String) = col(c).cast("double")
@@ -569,8 +567,7 @@ object ScoreEvalQueries {
     m.select(col("nd").cast("long").as("n_docs"),
       col("nl").cast("long").as("n_lengths"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(z * 1e6 + 0.5).cast("long")
-          .cast("double") / 1e6) + 0.0).as("z"),
+        .otherwise(Parity.fix(z, 6)).as("z"),
       when(bad, lit(null).cast("long"))
         .otherwise((abs(z) > 1.96).cast("long")).as("reject_5pct"))
   }
@@ -654,7 +651,7 @@ object ScoreEvalQueries {
       .otherwise(lit(0.0))
     val g = withB
       .select(expr("(cumb * 10) div nt").as("dec"), col("n"), col("pos"),
-        (col("n") * floor(phat * 1e9 + 0.5).cast("long")).as("pq"),
+        (col("n") * Parity.quant(phat, 1e9)).as("pq"),
         col("nt"))
       .groupBy("dec")
       .agg(sum(col("n")).as("ng"), sum(col("pos")).as("og"),
@@ -663,23 +660,21 @@ object ScoreEvalQueries {
     val pbar = eg / col("ng").cast("double")
     val termOk = col("eg9") > 0L && col("eg9") < col("ng") * 1000000000L
     val term12 = when(termOk,
-      floor((col("og").cast("double") - eg) *
+      Parity.quant((col("og").cast("double") - eg) *
         (col("og").cast("double") - eg) /
-        (col("ng").cast("double") * pbar * (lit(1.0) - pbar)) *
-        1e12 + 0.5).cast("long")).otherwise(lit(0L))
+        (col("ng").cast("double") * pbar * (lit(1.0) - pbar)), 1e12))
+      .otherwise(lit(0L))
     val m = g.withColumn("t12", term12)
       .agg(max(col("nt")).as("n_docs"), count(lit(1)).as("n_groups"),
         sum(col("t12")).as("s12"))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val hl = col("s12").cast("double") / 1e12
     val bad = col("n_groups") < 5L
     m.select(col("n_docs"), col("n_groups"),
-      when(bad, lit(null).cast("double")).otherwise(rnd4(hl))
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(hl, 4))
         .as("hl_stat"),
       (col("n_groups") - 2L).as("df"),
       when(bad, lit(null).cast("long"))
-        .otherwise((rnd4(hl) > 15.507).cast("long")).as("reject_5pct"))
+        .otherwise((Parity.fix(hl, 4) > 15.507).cast("long")).as("reject_5pct"))
   }
 
   val q381HosmerLemeshowSql: String =
@@ -780,13 +775,11 @@ object ScoreEvalQueries {
         pin(col("u_emp")).as("t_emp"), pin(col("u_per")).as("t_per"))
     val m = terms.groupBy("k").agg(count(lit(1)).as("n_days"),
       sum(col("t_emp")).as("se"), sum(col("t_per")).as("sp"))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val den = greatest(lit(100.0) * col("n_days").cast("double"),
       lit(1e-300))
     m.select((col("k").cast("double") / 10.0).as("tau"), col("n_days"),
-        rnd4(col("se").cast("double") / den).as("pinball_quantile"),
-        rnd4(col("sp").cast("double") / den).as("pinball_persist"))
+        Parity.fix(col("se").cast("double") / den, 4).as("pinball_quantile"),
+        Parity.fix(col("sp").cast("double") / den, 4).as("pinball_persist"))
       .orderBy("tau")
   }
 
@@ -858,7 +851,7 @@ object ScoreEvalQueries {
   def q390LiftTable(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+        Parity.quant(col("o_totalprice"), 100.0).as("cents"))
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_acctbal"))),
         col("o_custkey") === col("c_custkey"))
@@ -880,13 +873,11 @@ object ScoreEvalQueries {
       .withColumn("nt", sum(col("n")).over(wAll))
       .withColumn("pt", sum(col("npos")).over(wAll))
       .withColumn("cpos", sum(col("npos")).over(wCum))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     f.select(col("decile"), col("n"), col("npos"),
-        rnd6(d(col("npos")) / d(col("n"))).as("response_rate"),
-        rnd6((d(col("npos")) / d(col("n"))) /
-          greatest(d(col("pt")) / d(col("nt")), lit(1e-300))).as("lift"),
-        rnd6(d(col("cpos")) / greatest(d(col("pt")), lit(1e-300)))
+        Parity.fix(d(col("npos")) / d(col("n")), 6).as("response_rate"),
+        Parity.fix((d(col("npos")) / d(col("n"))) /
+          greatest(d(col("pt")) / d(col("nt")), lit(1e-300)), 6).as("lift"),
+        Parity.fix(d(col("cpos")) / greatest(d(col("pt")), lit(1e-300)), 6)
           .as("cum_capture"))
       .orderBy("decile")
   }
@@ -980,12 +971,10 @@ object ScoreEvalQueries {
       when(col("x") === 0L, lit(0.0)).otherwise(x * log(rate)) -
       when(col("x") === col("n"), lit(0.0))
         .otherwise((n - x) * log(lit(1.0) - rate)))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     g.select(col("n").as("n_days"), col("x").as("n_breach"),
-      (floor(rate * 1e6 + 0.5) / 1e6 + 0.0).as("breach_rate"),
-      rnd4(lr).as("lr_pof"),
-      (rnd4(lr) > 3.8415).cast("long").as("reject_5pct"))
+      Parity.fix(rate, 6).as("breach_rate"),
+      Parity.fix(lr, 4).as("lr_pof"),
+      (Parity.fix(lr, 4) > 3.8415).cast("long").as("reject_5pct"))
   }
 
   val q392KupiecPofSql: String =
@@ -1051,12 +1040,10 @@ object ScoreEvalQueries {
     val l1 = term(d("n00"), lit(1.0) - pi0) + term(d("n01"), pi0) +
       term(d("n10"), lit(1.0) - pi1) + term(d("n11"), pi1)
     val lr = lit(-2.0) * (l0 - l1)
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     g.select(col("n00"), col("n01"), col("n10"), col("n11"),
-      (floor(pi1 * 1e6 + 0.5) / 1e6 + 0.0).as("p_breach_after_breach"),
-      rnd4(lr).as("lr_ind"),
-      (rnd4(lr) > 3.8415).cast("long").as("reject_5pct"))
+      Parity.fix(pi1, 6).as("p_breach_after_breach"),
+      Parity.fix(lr, 4).as("lr_ind"),
+      (Parity.fix(lr, 4) > 3.8415).cast("long").as("reject_5pct"))
   }
 
   val q393ChristoffersenSql: String =
@@ -1130,11 +1117,11 @@ object ScoreEvalQueries {
     val base = Tables.orders(s, dir)
       .filter(col("o_totalprice").isNotNull)
       .select(col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+        Parity.quant(col("o_totalprice"), 100.0).as("cents"))
       .join(broadcast(Tables.customer(s, dir)
         .filter(col("c_acctbal").isNotNull)
         .select(col("c_custkey"),
-          floor(col("c_acctbal") * 100 + 0.5).cast("long").as("score"))),
+          Parity.quant(col("c_acctbal"), 100.0).as("score"))),
         col("o_custkey") === col("c_custkey"))
     val med = base.agg(expr("percentile(cents, 0.5)").as("med"))
     val lab = base.crossJoin(broadcast(med))
@@ -1161,14 +1148,12 @@ object ScoreEvalQueries {
       .select(col("post"), col("negt"), col("num").as("mxnum"),
         col("score").as("thr"), col("gep"), col("gen"))
     def d(c: String) = col(c).cast("double")
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     best.select(col("post").as("n_pos"), col("negt").as("n_neg"),
       (d("thr") / 100.0).as("threshold_dollars"),
-      rnd6(d("gep") / greatest(d("post"), lit(1e-300))).as("tpr"),
-      rnd6(d("gen") / greatest(d("negt"), lit(1e-300))).as("fpr"),
-      rnd6(col("mxnum").cast("double") /
-        greatest(d("post") * d("negt"), lit(1e-300))).as("youden_j"))
+      Parity.fix(d("gep") / greatest(d("post"), lit(1e-300)), 6).as("tpr"),
+      Parity.fix(d("gen") / greatest(d("negt"), lit(1e-300)), 6).as("fpr"),
+      Parity.fix(col("mxnum").cast("double") /
+        greatest(d("post") * d("negt"), lit(1e-300)), 6).as("youden_j"))
   }
 
   val q395YoudenJSql: String =
@@ -1245,11 +1230,11 @@ object ScoreEvalQueries {
     val base = Tables.orders(s, dir)
       .filter(col("o_totalprice").isNotNull)
       .select(col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+        Parity.quant(col("o_totalprice"), 100.0).as("cents"))
       .join(broadcast(Tables.customer(s, dir)
         .filter(col("c_acctbal").isNotNull)
         .select(col("c_custkey"),
-          floor(col("c_acctbal") * 100 + 0.5).cast("long").as("score"))),
+          Parity.quant(col("c_acctbal"), 100.0).as("score"))),
         col("o_custkey") === col("c_custkey"))
     val med = base.agg(expr("percentile(cents, 0.5)").as("med"))
     val lab = base.crossJoin(broadcast(med))
@@ -1279,7 +1264,7 @@ object ScoreEvalQueries {
     val ig = hPar -
       (nGe.cast("double") / bigN.cast("double")) * hGe -
       (nLt.cast("double") / bigN.cast("double")) * hLt
-    val scored = j.withColumn("igq", floor(ig * 1e12 + 0.5).cast("long"))
+    val scored = j.withColumn("igq", Parity.quant(ig, 1e12))
     // one ordered-limit pass = the max-igq row with max score (igq
     // ties), identical to the previous max-agg + join + groupBy
     val best = scored
@@ -1287,14 +1272,12 @@ object ScoreEvalQueries {
       .select(col("post"), col("negt"), col("igq").as("mxig"),
         col("score").as("thr"))
     def d(c: String) = col(c).cast("double")
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     val hParBest = plogp(col("post"), col("post") + col("negt")) +
       plogp(col("negt"), col("post") + col("negt"))
     best.select(col("post").as("n_pos"), col("negt").as("n_neg"),
       (d("thr") / 100.0).as("threshold_dollars"),
-      rnd6(hParBest).as("parent_entropy"),
-      rnd6(col("mxig").cast("double") / 1e12).as("info_gain"))
+      Parity.fix(hParBest, 6).as("parent_entropy"),
+      Parity.fix(col("mxig").cast("double") / 1e12, 6).as("info_gain"))
   }
 
   val q396InfoGainSplitSql: String = {

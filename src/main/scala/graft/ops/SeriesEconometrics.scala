@@ -24,10 +24,6 @@ import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql}
 object SeriesEconometrics {
 
   private val dec = "decimal(38,0)"
-  private def rnd6(c: Column): Column =
-    (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
-  private def rnd4(c: Column): Column =
-    (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
 
   /** L255 Granger-causality screen, lag 1, both directions ([PK]
     * Granger 1969): does yesterday's ORDER COUNT improve today's
@@ -101,13 +97,15 @@ object SeriesEconometrics {
     val bad2 = col("n") < 5L || det === 0.0 || u2 <= 0.0
     m.select(col("n").cast("long").as("n_eff"),
       when(bad1, lit(null).cast("double"))
-        .otherwise(rnd6((r1 - u1) / (u1 / (n - 3.0)))).as("f_cnt_to_rev"),
+        .otherwise(Parity.fix((r1 - u1) / (u1 / (n - 3.0)),
+          6)).as("f_cnt_to_rev"),
       when(bad1, lit(null).cast("double"))
-        .otherwise(rnd6(beta1)).as("beta_lag_cnt"),
+        .otherwise(Parity.fix(beta1, 6)).as("beta_lag_cnt"),
       when(bad2, lit(null).cast("double"))
-        .otherwise(rnd6((r2 - u2) / (u2 / (n - 3.0)))).as("f_rev_to_cnt"),
+        .otherwise(Parity.fix((r2 - u2) / (u2 / (n - 3.0)),
+          6)).as("f_rev_to_cnt"),
       when(bad2, lit(null).cast("double"))
-        .otherwise(rnd6(beta2 * 1e6)).as("beta_lag_rev_ppm"))
+        .otherwise(Parity.fix(beta2 * 1e6, 6)).as("beta_lag_rev_ppm"))
   }
 
   val q321GrangerSql: String =
@@ -258,7 +256,7 @@ object SeriesEconometrics {
     // raw covariance scale — γ_l/γ₀ is O(1) at every SF, so the
     // 7-term tail is an exact integer sum in both engines)
     val g0j = (f("q") - f("s") * f("s") / f("n")) / f("n")
-    val term9 = floor(gamma / g0j * wl * 2.0 * 1e9 + 0.5).cast("long")
+    val term9 = Parity.quant(gamma / g0j * wl * 2.0, 1e9)
     val g = j.agg(max(col("n")).as("n"), max(col("s")).as("s"),
       max(col("q")).as("q"),
       (sum(term9).cast("double") / 1e9).as("relTail"))
@@ -268,14 +266,15 @@ object SeriesEconometrics {
     val lrv = g0 * (lit(1.0) + col("relTail"))
     val seIid = sqrt(g0 / n)
     val seHac = sqrt(lrv / n)
-    g.select(col("n").cast("long").as("n_days"), rnd4(mu).as("mean_rev"),
-      rnd6(g0).as("gamma0"),
+    g.select(col("n").cast("long").as("n_days"),
+      Parity.fix(mu, 4).as("mean_rev"),
+      Parity.fix(g0, 6).as("gamma0"),
       when(lrv <= 0.0, lit(null).cast("double"))
-        .otherwise(rnd6(lrv)).as("long_run_var"),
+        .otherwise(Parity.fix(lrv, 6)).as("long_run_var"),
       when(g0 <= 0.0, lit(null).cast("double"))
-        .otherwise(rnd6(mu / seIid)).as("t_iid"),
+        .otherwise(Parity.fix(mu / seIid, 6)).as("t_iid"),
       when(lrv <= 0.0, lit(null).cast("double"))
-        .otherwise(rnd6(mu / seHac)).as("t_hac"))
+        .otherwise(Parity.fix(mu / seHac, 6)).as("t_hac"))
   }
 
   val q322NeweyWestSql: String =
@@ -377,18 +376,18 @@ object SeriesEconometrics {
     // 7 dows in a second window pass
     val withRel = dow
       .withColumn("sst", sst).withColumn("n", n).withColumn("sd", sd)
-      .withColumn("rel9", floor((f(col("sdd7")) -
-        f(col("sd7")) * f(col("sd7")) / f(col("m"))) / col("sst") *
-        1e9 + 0.5).cast("long"))
+      .withColumn("rel9",
+        Parity.quant((f(col("sdd7")) - f(col("sd7")) * f(col("sd7")) /
+          f(col("m"))) / col("sst"), 1e9))
       .withColumn("sswRel",
         sum(col("rel9")).over(whole).cast("double") / 1e9)
     val strength = greatest(lit(0.0), lit(1.0) - col("sswRel"))
     withRel.select(col("isodow").cast("long").as("isodow"),
         col("m").cast("long").as("n_days"),
-        rnd4(f(col("sd7")) / f(col("m")) / 7.0).as("seasonal"),
-        rnd4(col("sd") / col("n") / 7.0).as("grand_detrended_mean"),
+        Parity.fix(f(col("sd7")) / f(col("m")) / 7.0, 4).as("seasonal"),
+        Parity.fix(col("sd") / col("n") / 7.0, 4).as("grand_detrended_mean"),
         when(col("sst") <= 0.0, lit(null).cast("double"))
-          .otherwise(rnd6(strength)).as("seasonal_strength"))
+          .otherwise(Parity.fix(strength, 6)).as("seasonal_strength"))
       .orderBy("isodow")
   }
 
@@ -484,7 +483,7 @@ object SeriesEconometrics {
     val wl = lit(1.0) - f("lag") / 8.0
     // per-lag terms quantized RELATIVE to γ₀ (q322 form — see there)
     val g0j = (f("q") - f("s") * f("s") / f("n")) / f("n")
-    val term9 = floor(gamma / g0j * wl * 2.0 * 1e9 + 0.5).cast("long")
+    val term9 = Parity.quant(gamma / g0j * wl * 2.0, 1e9)
     val g = j.agg(max(col("n")).as("n"), max(col("s")).as("s"),
       max(col("q")).as("q"),
       (sum(term9).cast("double") / 1e9).as("relTail"))
@@ -493,9 +492,9 @@ object SeriesEconometrics {
     val g0 = (f("q") - f("s") * f("s") / n) / n
     val lrv = g0 * (lit(1.0) + col("relTail"))
     g.select(col("n").cast("long").as("n_days"),
-      rnd4(mu).as("mean_loss_diff"),
+      Parity.fix(mu, 4).as("mean_loss_diff"),
       when(lrv <= 0.0, lit(null).cast("double"))
-        .otherwise(rnd6(mu / sqrt(lrv / n))).as("dm_stat"),
+        .otherwise(Parity.fix(mu / sqrt(lrv / n), 6)).as("dm_stat"),
       when(lrv <= 0.0, lit(null).cast("long"))
         .otherwise(signum(mu).cast("long")).as("naive_worse"))
   }
@@ -626,9 +625,10 @@ object SeriesEconometrics {
     val r2 = lit(1.0) - rss / tss
     val bad = col("n") < 5L || det === 0.0 || tss <= 0.0
     m.select(col("n").cast("long").as("n_eff"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(r2)).as("aux_r2"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(r2,
+        6)).as("aux_r2"),
       when(bad, lit(null).cast("double"))
-        .otherwise(rnd6(n * r2)).as("arch_lm"),
+        .otherwise(Parity.fix(n * r2, 6)).as("arch_lm"),
       when(bad, lit(null).cast("long"))
         .otherwise((n * r2 > 5.991).cast("long")).as("reject_5pct"))
   }
@@ -759,8 +759,9 @@ object SeriesEconometrics {
       col("n1").cast("long").as("n_above"),
       col("n2").cast("long").as("n_below"),
       col("runs").cast("long").as("n_runs"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(er)).as("e_runs"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(z)).as("z"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(er,
+        6)).as("e_runs"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(z, 6)).as("z"),
       when(bad, lit(null).cast("long"))
         .otherwise((abs(z) > 1.96).cast("long")).as("reject_5pct"))
   }
@@ -860,12 +861,13 @@ object SeriesEconometrics {
     // var_1 is O(rev²) ≈ 1e13 at sf0.1 — a 6dp quantization would
     // saturate the ×1e6 long cast (measured), so it reports WHOLE
     // units; vr/z are O(1) and keep 6dp
-    val s1w = floor(s1 + 0.5).cast("long").cast("double") + 0.0
+    val s1w = Parity.fix(s1, 0)
     m.select(col("n").cast("long").as("n_diffs"),
       lit(q.toLong).as("q"),
       when(bad, lit(null).cast("double")).otherwise(s1w).as("var_1"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(vrat)).as("vr"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(z)).as("z"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(vrat,
+        6)).as("vr"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(z, 6)).as("z"),
       when(bad, lit(null).cast("long"))
         .otherwise((abs(z) > 1.96).cast("long")).as("reject_5pct"))
   }
@@ -964,19 +966,17 @@ object SeriesEconometrics {
     val rs = (f(col("mx")) - f(col("mn"))) /
       sqrt(f(col("m")) * f(col("sxx")) - f(col("sb")) * f(col("sb")))
     val perScale = blocks
-      .withColumn("rs9", floor(rs * 1e9 + 0.5).cast("long"))
+      .withColumn("rs9", Parity.quant(rs, 1e9))
       .groupBy("m")
       .agg(count(lit(1)).as("b"), sum(col("rs9")).as("s9"),
         max(col("mrn")).as("mrn"))
       .withColumn("lx9",
-        floor(log(col("m").cast("double")) * 1e9 + 0.5).cast("long"))
+        Parity.quant(log(col("m").cast("double")), 1e9))
       .withColumn("ly9",
-        floor(log(col("s9").cast("double")) * 1e9 + 0.5).cast("long") -
-          floor(log(col("b").cast("double") * 1e9) * 1e9 + 0.5)
-            .cast("long"))
+        Parity.quant(log(col("s9").cast("double")), 1e9) -
+          Parity.quant(log(col("b").cast("double") * 1e9), 1e9))
     def g(c: String) = col(c).cast("double")
-    val mean6 = (floor(g("s9") / (g("b") * 1e9) * 1e6 + 0.5)
-      .cast("long").cast("double") / 1e6) + 0.0
+    val mean6 = Parity.fix(g("s9") / (g("b") * 1e9), 6)
     // nano-scaled ln legs reach ~5e9, so their cross-products exceed
     // int64 — cast to DECIMAL BEFORE the multiply (a long×long product
     // would wrap silently). n_covered = the largest census index any
@@ -997,7 +997,7 @@ object SeriesEconometrics {
     fin.select(col("n_covered"), col("rs_50"), col("rs_100"),
       col("rs_200"),
       when(col("k") < 3L, lit(null).cast("double"))
-        .otherwise(rnd6(slope)).as("hurst"))
+        .otherwise(Parity.fix(slope, 6)).as("hurst"))
   }
 
   val q338HurstRsSql: String =
@@ -1094,8 +1094,9 @@ object SeriesEconometrics {
     val bad = col("ni") < 20L
     m.select((col("ni") + 2L).cast("long").as("n_days"),
       col("tp").cast("long").as("n_turning"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(et)).as("e_turning"),
-      when(bad, lit(null).cast("double")).otherwise(rnd6(z)).as("z"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(et,
+        6)).as("e_turning"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(z, 6)).as("z"),
       when(bad, lit(null).cast("long"))
         .otherwise((abs(z) > 1.96).cast("long")).as("reject_5pct"))
   }
@@ -1184,11 +1185,10 @@ object SeriesEconometrics {
     val us = (sdf - sda) * (sdf - sda) / greatest(mse, lit(1e-300))
     val uc = lit(2.0) * (lit(1.0) - cov / greatest(sdf * sda, lit(1e-300))) *
       sdf * sda / greatest(mse, lit(1e-300))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
-    g.select(col("n").as("n_days"), rnd6(u1).as("u1"), rnd6(u2).as("u2"),
-      rnd6(um).as("um_bias"), rnd6(us).as("us_variance"),
-      rnd6(uc).as("uc_covariance"),
+    g.select(col("n").as("n_days"), Parity.fix(u1, 6).as("u1"),
+      Parity.fix(u2, 6).as("u2"),
+      Parity.fix(um, 6).as("um_bias"), Parity.fix(us, 6).as("us_variance"),
+      Parity.fix(uc, 6).as("uc_covariance"),
       (u2 < 1.0).cast("long").as("beats_persistence"))
   }
 

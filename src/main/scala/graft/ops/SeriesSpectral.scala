@@ -137,7 +137,7 @@ object SeriesSpectral {
             sqrt((lit(w.toLong) * col("qb").cast("double") -
               col("sb").cast("double") * col("sb")))).as("rs"))
         .agg(count(lit(1)).as("n_blocks"),
-          sum(floor(col("rs") * 1e9 + 0.5).cast("long")).as("rsq"))
+          sum(Parity.quant(col("rs"), 1e9)).as("rsq"))
       rs.select(lit(w).as("w"), col("n_blocks"),
         (col("rsq").cast("double") / 1e9 / col("n_blocks")).as("rs_mean"))
     }
@@ -150,9 +150,8 @@ object SeriesSpectral {
     // first; moments are then exact integers (DECIMAL for the ~1e19
     // products) and the slope is ONE double division of identical
     // exact operands — the 1e9 scales cancel in the ratio.
-    val lx9 = floor(log(col("w").cast("double")) * 1e9 + 0.5)
-      .cast("long").cast(dec)
-    val ly9 = floor(log(col("rs_mean")) * 1e9 + 0.5).cast("long").cast(dec)
+    val lx9 = Parity.quant(log(col("w").cast("double")), 1e9).cast(dec)
+    val ly9 = Parity.quant(log(col("rs_mean")), 1e9).cast(dec)
     val t = lvls
       .withColumn("k", count(lit(1)).over(wAll).cast(dec))
       .withColumn("sx", sum(lx9).over(wAll))
@@ -558,10 +557,10 @@ object SeriesSpectral {
     // so ≤ 2.5e14 fits long) so the sum is exact on both engines.
     val qSum = perLag.crossJoin(broadcast(den))
       .select(col("nn"), col("see"),
-        floor((col("sxy").cast("double") / col("see").cast("double")) *
+        Parity.quant((col("sxy").cast("double") / col("see").cast("double")) *
           (col("sxy").cast("double") / col("see").cast("double")) /
-          (col("nn").cast("double") - col("lag").cast("double"))
-          * 1e15 + 0.5).cast("long").as("term15"))
+          (col("nn").cast("double") - col("lag").cast("double")), 1e15)
+          .as("term15"))
       .groupBy("nn").agg(
         (sum(col("term15")).cast("double") / 1e15).as("tsum"),
         max(col("see")).as("see"))
@@ -574,7 +573,7 @@ object SeriesSpectral {
           .otherwise(round(q, 4) + 0.0).as("lb_q"),
         lit(6L).as("df"),
         when(col("see") <= 0 || col("nn") < 10, lit(null).cast("double"))
-          .otherwise(floor(p * 1e8 + 0.5) / 1e8).as("p"))
+          .otherwise(Parity.fix(p, 8)).as("p"))
   }
 
   val q275LjungBoxSql: String =
@@ -680,13 +679,13 @@ object SeriesSpectral {
     val g = shared
       .select(col("n"), col("nf"), col("tp"),
         when(col("pw") > 0L,
-          floor(-p * log(p) * 1e9 + 0.5).cast("long")).otherwise(0L)
+          Parity.quant(-p * log(p), 1e9)).otherwise(0L)
           .as("tq"),
         when(col("pw") === col("pmax"), col("k")).as("pk"))
       .groupBy("n", "nf", "tp")
       .agg(sum(col("tq")).as("hq"), min(col("pk")).as("peak_k"))
     val h = col("hq").cast("double") / 1e9
-    val lnf = floor(log(col("nf").cast("double")) * 1e9 + 0.5) / 1e9
+    val lnf = Parity.fix(log(col("nf").cast("double")), 9)
     val bad = col("tp") <= 0L || col("nf") < 2L
     g.select(col("n").as("n_days"), col("nf").as("n_freqs"),
       when(bad, lit(null).cast("double"))
@@ -822,7 +821,7 @@ object SeriesSpectral {
         sum(when(bm, 1L).otherwise(0L)).as("b_pairs"),
         sum(when(am, 1L).otherwise(0L)).as("a_pairs"))
     def qln9(c: Column) =
-      floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
+      Parity.quant(log(c.cast("double")), 1e9)
     g.select(col("n_days"), col("r_dollars"), col("b_pairs"),
       col("a_pairs"),
       when(col("a_pairs") === 0L || col("b_pairs") === 0L,

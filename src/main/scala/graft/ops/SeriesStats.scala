@@ -515,9 +515,8 @@ object SeriesStats {
       .agg(sum(col("rev")).as("sr"), count(lit(1)).as("nd"))
     val e = d.join(broadcast(seas), "dw")
       .select(col("day"),
-        floor((col("rev").cast("double") -
-          col("sr").cast("double") / col("nd")) * 1e6 + 0.5)
-          .cast("long").as("eq"))
+        Parity.quant(col("rev").cast("double") - col("sr").cast("double") /
+          col("nd"), 1e6).as("eq"))
     val w = Window.orderBy("day")
     val lagd = e.withColumn("ep", lag(col("eq"), 1).over(w))
     lagd.agg(
@@ -657,7 +656,7 @@ object SeriesStats {
       col("d1").cast("long").as("d1"), col("d2").cast("long").as("d2"),
       col("d3").cast("long").as("d3"),
       when(col("n") < 5L, lit(null).cast("double"))
-        .otherwise(floor(dStat * 1e6 + 0.5) / 1e6 + 0.0)
+        .otherwise(Parity.fix(dStat, 6))
         .as("hoeffding_d"))
   }
 
@@ -743,13 +742,12 @@ object SeriesStats {
     agg.select(col("n_days"), col("n_pp"), col("n_mm"), col("n_pm"),
       col("n_mp"), (col("n_days") - kept).as("n_on_median"),
       when(kept === 0L, lit(null).cast("double"))
-        .otherwise(floor(
+        .otherwise(Parity.fix(
           (col("n_pp") + col("n_mm") - col("n_pm") - col("n_mp"))
             .cast("double") /
             // r19: clamp (q403 note) — kept == 0 division must not be
             // reachable even if hoisting defeats the CASE's laziness.
-            greatest(kept.cast("double"), lit(1e-300)) * 1e6 + 0.5)
-          / 1e6 + 0.0)
+            greatest(kept.cast("double"), lit(1e-300)), 6))
         .as("blomqvist_beta"))
   }
 

@@ -38,9 +38,8 @@ object SeriesTrendTests {
       .agg(sum(col("rev")).as("sr"), count(lit(1)).as("nd"))
     val e = d.join(broadcast(seas), "dw")
       .select(col("day"),
-        when(floor((col("rev").cast("double") -
-          col("sr").cast("double") / col("nd")) * 1e6 + 0.5)
-          .cast("long") >= 0L, 1).otherwise(0).as("sgn"))
+        when(Parity.quant(col("rev").cast("double") - col("sr").cast("double") /
+          col("nd"), 1e6) >= 0L, 1).otherwise(0).as("sgn"))
     val w = Window.orderBy("day")
     val lagd = e.withColumn("sp", lag(col("sgn"), 1).over(w))
     val agg = lagd.agg(
@@ -60,7 +59,7 @@ object SeriesTrendTests {
       (col("n_days") - col("n_pos")).as("n_neg"),
       (col("switches") + 1).as("runs"),
       (round(z, 4) + 0.0).as("z_runs"),
-      (floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+      Parity.fix(StatFns.asTwoSidedP(z), 8).as("p"))
   }
 
   /** L185 Goodman–Kruskal γ and Somers' D (Goodman & Kruskal 1954,
@@ -194,7 +193,7 @@ object SeriesTrendTests {
     sAgg.crossJoin(broadcast(ties))
       .select(col("n").as("n_days"), col("s_stat"),
         (round(z, 4) + 0.0).as("z_mk"),
-        (floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"),
+        Parity.fix(StatFns.asTwoSidedP(z), 8).as("p"),
         when(col("s_stat") > 0, lit("increasing"))
           .when(col("s_stat") < 0, lit("decreasing"))
           .otherwise(lit("none")).as("trend"))
@@ -321,7 +320,7 @@ object SeriesTrendTests {
       when(tot === 0, lit(null).cast("double"))
         .otherwise(round(z, 4) + 0.0).as("z"),
       when(tot === 0, lit(null).cast("double"))
-        .otherwise(floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(StatFns.asTwoSidedP(z), 8)).as("p"))
   }
 
   val q263CoxStuartSql: String = {
@@ -383,7 +382,7 @@ object SeriesTrendTests {
       when(col("n_days") < 3, lit(null).cast("double"))
         .otherwise(round(z, 4) + 0.0).as("z"),
       when(col("n_days") < 3, lit(null).cast("double"))
-        .otherwise(floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(StatFns.asTwoSidedP(z), 8)).as("p"))
   }
 
   val q264TurningPointsSql: String = {
@@ -433,7 +432,7 @@ object SeriesTrendTests {
     val w = Window.orderBy("day")
     val d0 = daily(s, dir)
       .withColumn("lx",
-        floor(log(col("rev").cast("double")) * 1e9 + 0.5).cast("long"))
+        Parity.quant(log(col("rev").cast("double")), 1e9))
       .withColumn("r1", col("lx") - lag(col("lx"), 1).over(w))
       .withColumn("rq", col("lx") - lag(col("lx"), q).over(w))
     val g = d0.agg(
@@ -459,7 +458,7 @@ object SeriesTrendTests {
       when(bad, lit(null).cast("double"))
         .otherwise(round(z, 4) + 0.0).as("z"),
       when(bad, lit(null).cast("double"))
-        .otherwise(floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"))
+        .otherwise(Parity.fix(StatFns.asTwoSidedP(z), 8)).as("p"))
   }
 
   val q265VarianceRatioSql: String = {
@@ -598,7 +597,7 @@ object SeriesTrendTests {
     val varK = (nkD * (nkD - 1.0) * (lit(2.0) * nkD + 5.0) -
       col("tie_k").cast("double")) / 18.0
     val vAgg = ties.select(col("nk"),
-        floor(varK * 1e6 + 0.5).cast("long").as("v6"))
+        Parity.quant(varK, 1e6).as("v6"))
       .agg(sum(col("nk")).as("n"), count(lit(1)).as("k"),
         sum(col("v6")).as("sv6"))
     val varS = col("sv6").cast("double") / 1e6
@@ -612,7 +611,7 @@ object SeriesTrendTests {
         col("k").cast("long").as("n_seasons"),
         col("s_stat"),
         (round(z, 4) + 0.0).as("z_smk"),
-        (floor(StatFns.asTwoSidedP(z) * 1e8 + 0.5) / 1e8).as("p"),
+        Parity.fix(StatFns.asTwoSidedP(z), 8).as("p"),
         when(col("s_stat") > 0, lit("increasing"))
           .when(col("s_stat") < 0, lit("decreasing"))
           .otherwise(lit("none")).as("trend"))
@@ -705,11 +704,10 @@ object SeriesTrendTests {
       expr("n * (n - 1) div 2").cast("long").as("n_pairs"),
       col("k").cast("long").as("k_rank"),
       col("ad").cast("long").as("qn_raw"),
-      (floor(qn * 1e4 + 0.5).cast("long").cast("double") / 1e4 + 0.0)
+      Parity.fix(qn, 4)
         .as("qn"),
       col("sd").cast("long").as("sd"),
-      (floor(qn / f(col("sd")) * 1e6 + 0.5).cast("long")
-        .cast("double") / 1e6 + 0.0).as("qn_over_sd"))
+      Parity.fix(qn / f(col("sd")), 6).as("qn_over_sd"))
   }
 
   val q347QnScaleSql: String =
@@ -802,17 +800,15 @@ object SeriesTrendTests {
     val z = (rvn - 2.0) / safe(sqrt(lit(4.0) * (n - 2.0) *
       (lit(5.0) * n * n - n * 2.0 - 9.0) /
       safe(lit(5.0) * n * (n + 1.0) * (n - 1.0) * (n - 1.0))))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val bad = col("n") < 10L
     m.select(col("series"), col("yr").cast("long").as("yr"),
         col("n").as("n_days"),
-        when(bad, lit(null).cast("double")).otherwise(rnd6(rvn)).as("rvn"),
-        when(bad, lit(null).cast("double")).otherwise(rnd4(z)).as("z"),
+        when(bad, lit(null).cast("double")).otherwise(Parity.fix(rvn,
+          6)).as("rvn"),
+        when(bad, lit(null).cast("double")).otherwise(Parity.fix(z, 4)).as("z"),
         when(bad, lit(null).cast("long"))
-          .otherwise((abs(rnd4(z)) > 1.96).cast("long")).as("reject_5pct"))
+          .otherwise((abs(Parity.fix(z,
+            4)) > 1.96).cast("long")).as("reject_5pct"))
       .orderBy("series", "yr")
   }
 
@@ -865,17 +861,16 @@ object SeriesTrendTests {
     val h2n = col("h2").cast("double") / 1e12
     val z = (col("rec_up").cast("double") - hn) /
       greatest(sqrt(hn - h2n), lit(1e-300))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val bad = col("n") < 10L
     m.select(col("series"), col("n").as("n_days"),
         col("rec_up"), col("rec_dn"),
-        when(bad, lit(null).cast("double")).otherwise(rnd4(hn))
+        when(bad, lit(null).cast("double")).otherwise(Parity.fix(hn, 4))
           .as("e_records"),
-        when(bad, lit(null).cast("double")).otherwise(rnd4(z))
+        when(bad, lit(null).cast("double")).otherwise(Parity.fix(z, 4))
           .as("z_up"),
         when(bad, lit(null).cast("long"))
-          .otherwise((abs(rnd4(z)) > 1.96).cast("long")).as("reject_5pct"))
+          .otherwise((abs(Parity.fix(z,
+            4)) > 1.96).cast("long")).as("reject_5pct"))
       .orderBy("series")
   }
 
@@ -1028,7 +1023,7 @@ object SeriesTrendTests {
     // normalized peak in mean-units: PH′/(N·x̄) = PH′/T
     val phMean = dd(col("mx")) / dd(col("tt"))
     peak.select(col("nn").as("n_days"), col("change_day"),
-        (floor(phMean * 1e6 + 0.5) / 1e6 + 0.0).as("ph_max_mean_units"),
+        Parity.fix(phMean, 6).as("ph_max_mean_units"),
         (phMean > 1.0).cast("long").as("detected"))
   }
 
@@ -1111,9 +1106,9 @@ object SeriesTrendTests {
       (dd(col("nn")) * greatest(dd(col("qq")), lit(1e-300)))
     val stat = sqrt(dd(col("nn")) / 2.0) * sup
     peak.select(col("nn").as("n_days"), col("break_day"),
-      (floor(sup * 1e6 + 0.5) / 1e6 + 0.0).as("sup_deviation"),
-      (floor(stat * 1e4 + 0.5) / 1e4 + 0.0).as("bde_stat"),
-      ((floor(stat * 1e4 + 0.5) / 1e4 + 0.0) > 1.358).cast("long")
+      Parity.fix(sup, 6).as("sup_deviation"),
+      Parity.fix(stat, 4).as("bde_stat"),
+      (Parity.fix(stat, 4) > 1.358).cast("long")
         .as("reject_5pct"))
   }
 

@@ -54,11 +54,9 @@ object SketchQueries {
         col("m").cast("long").as("k_used"),
         col("uk").cast("long").as("kth_hash"),
         when(col("uk") <= 0L || col("m") < 2L, lit(null).cast("double"))
-          .otherwise((floor(est * 1e4 + 0.5).cast("long")
-            .cast("double") / 1e4) + 0.0).as("kmv_estimate"),
+          .otherwise(Parity.fix(est, 4)).as("kmv_estimate"),
         when(col("uk") <= 0L || col("m") < 2L, lit(null).cast("double"))
-          .otherwise((floor((est / f("n_exact") - 1.0) * 1e6 + 0.5)
-            .cast("long").cast("double") / 1e6) + 0.0).as("rel_err"))
+          .otherwise(Parity.fix(est / f("n_exact") - 1.0, 6)).as("rel_err"))
   }
 
   val q326KmvDistinctSql: String =
@@ -103,12 +101,10 @@ object SketchQueries {
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("in_sample"), 1L).otherwise(0L)).as("n_sampled"))
       .select(col("o_orderpriority"), col("n_rows"), col("n_sampled"),
-        (floor(col("n_sampled").cast("double") /
-          col("n_rows").cast("double") * 1e6 + 0.5)
-          .cast("long").cast("double") / 1e6 + 0.0).as("rate"),
-        (floor((col("n_sampled").cast("double") /
-          col("n_rows").cast("double") - 0.0625) * 1e6 + 0.5)
-          .cast("long").cast("double") / 1e6 + 0.0).as("rate_dev"))
+        Parity.fix(col("n_sampled").cast("double") /
+          col("n_rows").cast("double"), 6).as("rate"),
+        Parity.fix(col("n_sampled").cast("double") /
+          col("n_rows").cast("double") - 0.0625, 6).as("rate_dev"))
       .orderBy("o_orderpriority")
   }
 
@@ -170,12 +166,10 @@ object SketchQueries {
         col("both").cast("long").as("k_overlap"),
         col("n_exact_overlap").cast("long").as("n_exact_overlap"),
         when(col("uk") <= 0L || col("m") < 2L, lit(null).cast("double"))
-          .otherwise((floor(est * 1e4 + 0.5).cast("long")
-            .cast("double") / 1e4) + 0.0).as("kmv_overlap_est"),
+          .otherwise(Parity.fix(est, 4)).as("kmv_overlap_est"),
         when(col("uk") <= 0L || col("m") < 2L ||
             col("n_exact_overlap") === 0L, lit(null).cast("double"))
-          .otherwise((floor((est / f("n_exact_overlap") - 1.0) * 1e6
-            + 0.5).cast("long").cast("double") / 1e6) + 0.0)
+          .otherwise(Parity.fix(est / f("n_exact_overlap") - 1.0, 6))
           .as("rel_err"))
   }
 
@@ -253,14 +247,11 @@ object SketchQueries {
       col("n2").cast("long").as("n_year2"),
       col("mm").cast("long").as("n_both"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(nHat * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("chapman_est"),
+        .otherwise(Parity.fix(nHat, 4)).as("chapman_est"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor(sqrt(varN) * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4) + 0.0).as("se"),
+        .otherwise(Parity.fix(sqrt(varN), 4)).as("se"),
       when(bad, lit(null).cast("double"))
-        .otherwise((floor((nHat / f("n_pop") - 1.0) * 1e6 + 0.5)
-          .cast("long").cast("double") / 1e6) + 0.0).as("rel_err"))
+        .otherwise(Parity.fix(nHat / f("n_pop") - 1.0, 6)).as("rel_err"))
   }
 
   val q346CaptureRecaptureSql: String =
@@ -348,11 +339,10 @@ object SketchQueries {
       .select(col("qtr").cast("long").as("qtr"),
         col("n_exact").cast("long").as("n_exact"),
         col("mu").cast("long").as("k_used"),
-        (floor(est * 1e4 + 0.5).cast("long").cast("double") / 1e4 + 0.0)
+        Parity.fix(est, 4)
           .as("rollup_est"),
         when(col("n_exact") === 0L, lit(null).cast("double"))
-          .otherwise((floor((est / f("n_exact") - 1.0) * 1e6 + 0.5)
-            .cast("long").cast("double") / 1e6) + 0.0).as("rel_err"))
+          .otherwise(Parity.fix(est / f("n_exact") - 1.0, 6)).as("rel_err"))
       .orderBy("qtr")
   }
 
@@ -432,7 +422,7 @@ object SketchQueries {
         month(col("o_orderdate"))).as("m"),
         (year(col("o_orderdate")) * 10 +
           quarter(col("o_orderdate"))).as("qtr"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+        Parity.quant(col("o_totalprice"), 100.0).as("cents"))
       .localCheckpoint(eager = false)
     val b = o.agg(min(col("cents")).as("mn"), max(col("cents")).as("mx"))
     val monthly = o.crossJoin(broadcast(b))
@@ -460,9 +450,9 @@ object SketchQueries {
         (col("t") - col("cb").cast("double")) / col("c").cast("double")) * w
     val ests = withCum
       .select(col("qtr"), col("n"), col("p"),
-        (floor(est * 1e4 + 0.5).cast("long").cast("double") / 1e4 + 0.0)
+        Parity.fix(est, 4)
           .as("e"),
-        (floor(w * 1e4 + 0.5).cast("long").cast("double") / 1e4 + 0.0)
+        Parity.fix(w, 4)
           .as("bw"))
       .groupBy("qtr")
       .agg(max(col("n")).as("n_orders"), max(col("bw")).as("bin_w"),
@@ -471,13 +461,10 @@ object SketchQueries {
     val exact = o.groupBy("qtr")
       .agg(percentile(col("cents"), array(lit(0.5), lit(0.9))).as("q"))
       .select(col("qtr"),
-        (floor(element_at(col("q"), 1) * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4 + 0.0).as("exact_p50"),
-        (floor(element_at(col("q"), 2) * 1e4 + 0.5).cast("long")
-          .cast("double") / 1e4 + 0.0).as("exact_p90"))
+        Parity.fix(element_at(col("q"), 1), 4).as("exact_p50"),
+        Parity.fix(element_at(col("q"), 2), 4).as("exact_p90"))
     def err(e: String, x: String) =
-      (floor((col(e) / col(x) - 1.0) * 1e6 + 0.5).cast("long")
-        .cast("double") / 1e6) + 0.0
+      Parity.fix(col(e) / col(x) - 1.0, 6)
     ests.join(broadcast(exact), "qtr")
       .select(col("qtr").cast("long").as("qtr"),
         col("n_orders").cast("long").as("n_orders"), col("bin_w"),
@@ -707,14 +694,12 @@ object SketchQueries {
       sInt.cast("double")
     val est = when(eRaw <= 640.0 && v > 0L,
       lit(256.0) * log(lit(256.0) / v.cast("double"))).otherwise(eRaw)
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     agg.join(broadcast(ex), Seq("priority"))
       .select(col("priority"), col("n_exact"),
         col("nreg").as("n_registers"), v.as("v_empty"),
-        rnd4(est).as("hll_est"),
-        rnd4((est - col("n_exact").cast("double")) /
-          col("n_exact").cast("double")).as("rel_err"))
+        Parity.fix(est, 4).as("hll_est"),
+        Parity.fix((est - col("n_exact").cast("double")) /
+          col("n_exact").cast("double"), 4).as("rel_err"))
       .orderBy("priority")
   }
 
@@ -802,13 +787,11 @@ object SketchQueries {
       sInt.cast("double")
     val est = when(eRaw <= 640.0 && v > 0L,
       lit(256.0) * log(lit(256.0) / v.cast("double"))).otherwise(eRaw)
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     agg.join(broadcast(ex), Seq("qtr"))
       .select(col("qtr").as("quarter"), col("n_exact"),
-        v.as("v_empty"), rnd4(est).as("hll_est"),
-        rnd4((est - col("n_exact").cast("double")) /
-          col("n_exact").cast("double")).as("rel_err"))
+        v.as("v_empty"), Parity.fix(est, 4).as("hll_est"),
+        Parity.fix((est - col("n_exact").cast("double")) /
+          col("n_exact").cast("double"), 4).as("rel_err"))
       .orderBy("quarter")
   }
 
@@ -909,13 +892,11 @@ object SketchQueries {
       .groupBy("qtr")
       .agg(sum(col("n") * col("n")).as("f2_exact"),
         sum(col("n")).as("n_orders"))
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     est.join(broadcast(ex), Seq("qtr"))
       .select(col("qtr").as("quarter"), col("n_orders"),
         col("f2_exact"), col("ams_est"),
-        rnd4((col("ams_est") - col("f2_exact").cast("double")) /
-          col("f2_exact").cast("double")).as("rel_err"))
+        Parity.fix((col("ams_est") - col("f2_exact").cast("double")) /
+          col("f2_exact").cast("double"), 4).as("rel_err"))
       .orderBy("quarter")
   }
 
@@ -1017,8 +998,6 @@ object SketchQueries {
       .agg(count(lit(1)).as("n_probes"),
         sum(when(col("nhit") === k.toLong, 1L).otherwise(0L))
           .as("n_false_pos"))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     val md = col("m").cast("double")
     val nd = col("n_members").cast("double")
     val fprExp = pow(lit(1.0) - pow(lit(1.0) - lit(1.0) / md,
@@ -1028,9 +1007,9 @@ object SketchQueries {
       .select(col("m").as("m_bits"), lit(k.toLong).as("k_hashes"),
         col("n_members"), col("bits_set"), col("n_probes"),
         col("n_false_pos"),
-        rnd6(col("n_false_pos").cast("double") /
-          col("n_probes").cast("double")).as("fpr_obs"),
-        rnd6(fprExp).as("fpr_exp"))
+        Parity.fix(col("n_false_pos").cast("double") /
+          col("n_probes").cast("double"), 6).as("fpr_obs"),
+        Parity.fix(fprExp, 6).as("fpr_exp"))
       .orderBy("m_bits")
   }
 

@@ -34,8 +34,6 @@ object SpatialStats {
 
   private val dec = "decimal(38,0)"
 
-  private def q6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def q4(c: Column): Column = floor(c * 1e4 + 0.5) / 1e4
 
   /** The q149 synthetic geo-grid: customers hashed to (lat, lon) with
     * the q149 multiplicative hashes, bucketed to 10° cells, counted.
@@ -141,11 +139,12 @@ object SpatialStats {
       varPart <= lit(0L).cast(dec)
     a.select(col("n").cast("long").as("n_cells"),
       col("w").cast("long").as("w_pairs"),
-      when(bad, lit(null).cast("double")).otherwise(q6(i)).as("morans_i"),
-      when(col("n") < 2L, lit(null).cast("double")).otherwise(q6(e))
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(i,
+        6)).as("morans_i"),
+      when(col("n") < 2L, lit(null).cast("double")).otherwise(Parity.fix(e, 6))
         .as("e_i"),
       when(bad || varI <= 0.0, lit(null).cast("double"))
-        .otherwise(q4((i - e) / sqrt(varI))).as("z"))
+        .otherwise(Parity.fix((i - e) / sqrt(varI), 4)).as("z"))
   }
 
   /** Global Geary's C over the same grid/weights, E[C] = 1,
@@ -176,10 +175,10 @@ object SpatialStats {
       varPart <= lit(0L).cast(dec)
     a.select(col("n").cast("long").as("n_cells"),
       col("w").cast("long").as("w_pairs"),
-      when(bad, lit(null).cast("double")).otherwise(q6(cStat))
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(cStat, 6))
         .as("gearys_c"),
       when(bad || varC <= 0.0, lit(null).cast("double"))
-        .otherwise(q4((cStat - 1.0) / sqrt(varC))).as("z"))
+        .otherwise(Parity.fix((cStat - 1.0) / sqrt(varC), 4)).as("z"))
   }
 
   /** Per-cell Getis–Ord Gi* (self-inclusive 9-cell window,
@@ -205,7 +204,7 @@ object SpatialStats {
       .select(col("cx"), col("cy"), col("x").as("n"),
         (col("ns") + col("x")).as("nbhd"),
         when(bad, lit(null).cast("double"))
-          .otherwise(q4((ns9 - mean * w9) / denom)).as("gi_z"))
+          .otherwise(Parity.fix((ns9 - mean * w9) / denom, 4)).as("gi_z"))
       .orderBy("cx", "cy")
   }
 
@@ -271,16 +270,18 @@ object SpatialStats {
       col("n1") === col("n")
     def outZ(obs: Column, e: Column, v: Column, nm: String) =
       when(bad || v <= 0.0, lit(null).cast("double"))
-        .otherwise(q4((obs - e) / sqrt(v))).as(nm)
+        .otherwise(Parity.fix((obs - e) / sqrt(v), 4)).as(nm)
     a.select(col("n").cast("long").as("n_cells"),
       col("n1").cast("long").as("n_black"),
       (col("w") / 2L).cast("long").as("j_links"),
       (bb2 / 2L).cast("long").as("bb"),
       (bw2 / 2L).cast("long").as("bw"),
       ((col("w") - bb2 - bw2) / 2L).cast("long").as("ww"),
-      when(bad, lit(null).cast("double")).otherwise(q4(eBb)).as("e_bb"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(eBb,
+        4)).as("e_bb"),
       outZ(bb, eBb, varBb, "z_bb"),
-      when(bad, lit(null).cast("double")).otherwise(q4(eBw)).as("e_bw"),
+      when(bad, lit(null).cast("double")).otherwise(Parity.fix(eBw,
+        4)).as("e_bw"),
       outZ(bw, eBw, varBw, "z_bw"))
   }
 
@@ -531,8 +532,6 @@ object SpatialStats {
     val tot = pts.agg(count(lit(1)).as("n"))
     val area = 360.0 * 170.0
     def f(c: String) = col(c).cast("double")
-    def rnd4(c: Column): Column =
-      (floor(c * 1e4 + 0.5).cast("long").cast("double") / 1e4) + 0.0
     val rows = cnts.crossJoin(broadcast(tot))
       .select(col("n"), explode(typedlit(Seq(5, 10, 20))).as("r"),
         col("p5"), col("p10"), col("p20"))
@@ -551,8 +550,9 @@ object SpatialStats {
     rows.select(col("r").cast("long").as("r"),
         col("n").cast("long").as("n_points"),
         col("p").as("pairs_le_r"),
-        rnd4(kHat).as("k_hat"),
-        rnd4(sqrt(kHat / math.Pi) - col("r").cast("double")).as("l_hat"))
+        Parity.fix(kHat, 4).as("k_hat"),
+        Parity.fix(sqrt(kHat / math.Pi) - col("r").cast("double"),
+          4).as("l_hat"))
       .orderBy("r")
   }
 
@@ -633,7 +633,7 @@ object SpatialStats {
       .agg(sum(when(col("km") <= 1000.0, 1L).otherwise(0L)).as("n_1000"),
         sum(when(col("km") <= 2000.0, 1L).otherwise(0L)).as("n_2000"),
         sum(when(col("km") <= 5000.0, 1L).otherwise(0L)).as("n_5000"),
-        (floor(min(col("km")) * 1e4 + 0.5) / 1e4 + 0.0).as("min_km"))
+        Parity.fix(min(col("km")), 4).as("min_km"))
       .orderBy("hub")
   }
 
@@ -717,8 +717,8 @@ object SpatialStats {
       .select(col("b.hub").as("hub"), col("b.km").as("km"))
       .groupBy("hub")
       .agg(count(lit(1)).as("n_assigned"),
-        (floor(min(col("km")) * 1e4 + 0.5) / 1e4 + 0.0).as("min_km"),
-        (floor(max(col("km")) * 1e4 + 0.5) / 1e4 + 0.0).as("max_km"))
+        Parity.fix(min(col("km")), 4).as("min_km"),
+        Parity.fix(max(col("km")), 4).as("max_km"))
       .orderBy("hub")
   }
 

@@ -79,8 +79,8 @@ object SurvivalQueries {
     // rounding boundary. Quantize every ln term to nano-units BEFORE
     // the cumulative sum, so both engines exp the IDENTICAL argument.
     val lnTerm9 = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
-      .otherwise(floor(log((col("n_risk") - col("d")).cast("double") /
-        col("n_risk").cast("double")) * 1e9 + 0.5).cast("long"))
+      .otherwise(Parity.quant(log((col("n_risk") - col("d")).cast("double") /
+        col("n_risk").cast("double")), 1e9))
     withRisk
       .withColumn("dead", dead)
       .withColumn("ln_s", sum(lnTerm9).over(wCum).cast("double") / 1e9)
@@ -170,8 +170,8 @@ object SurvivalQueries {
     val withRisk = day.withColumn("n_risk",
       col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
     val incQ = when(col("d") === 0L || col("n_risk") <= 0L, lit(0L))
-      .otherwise(floor(col("d").cast("double") / col("n_risk").cast("double") *
-        lit(1.0e9) + lit(0.5)).cast("long"))
+      .otherwise(Parity.quant(col("d").cast("double") /
+        col("n_risk").cast("double"), 1e9))
     withRisk
       .withColumn("hq", sum(incQ).over(wCum))
       .select(col("t").as("t_hours"), col("n_risk"), col("d").as("n_churn"),
@@ -275,15 +275,15 @@ object SurvivalQueries {
     val vTerm = when(col("n1r") + col("n2r") > 1,
       d * p1 * (lit(1.0) - p1) * (n - d) / (n - 1.0)).otherwise(lit(0.0))
     val g = risk
-      .withColumn("eq", floor(eTerm * 1e6 + 0.5).cast("long"))
-      .withColumn("vq", floor(vTerm * 1e6 + 0.5).cast("long"))
+      .withColumn("eq", Parity.quant(eTerm, 1e6))
+      .withColumn("vq", Parity.quant(vTerm, 1e6))
       .agg(max(col("nu1")).as("n_users_g0"), max(col("nu2")).as("n_users_g1"),
         sum(col("d1")).as("o1"), sum(col("eq")).as("e1q"),
         sum(col("vq")).as("v1q"))
     g.select(col("n_users_g0"), col("n_users_g1"), col("o1"),
-      (floor(col("e1q").cast("double") / 1e6 * 1e4 + 0.5) / 1e4).as("e1"),
-      (floor((col("o1").cast("double") - col("e1q").cast("double") / 1e6) /
-        sqrt(col("v1q").cast("double") / 1e6) * 1e4 + 0.5) / 1e4).as("z"))
+      Parity.fix(col("e1q").cast("double") / 1e6, 4).as("e1"),
+      Parity.fix((col("o1").cast("double") - col("e1q").cast("double") / 1e6) /
+        sqrt(col("v1q").cast("double") / 1e6), 4).as("z"))
   }
 
   val q224LogRankSql: String =
@@ -379,14 +379,13 @@ object SurvivalQueries {
     val fHi = col("cum").cast("double") / col("n")
     val fLo = (col("cum") - col("cnt")).cast("double") / col("n")
     cum.select(col("n"), col("sg"),
-        floor(greatest(abs(fHi - fT), abs(fT - fLo)) * 1e9 + 0.5)
-          .cast("long").as("dq"))
+        Parity.quant(greatest(abs(fHi - fT), abs(fT - fLo)), 1e9).as("dq"))
       .groupBy("n", "sg")
       .agg(max(col("dq")).as("dmax"))
       .select(col("n").as("n_gaps"),
         (round(col("sg").cast("double") / col("n"), 4) + 0.0)
           .as("mean_gap_s"),
-        (floor(col("dmax").cast("double") / 1e9 * 1e6 + 0.5) / 1e6)
+        Parity.fix(col("dmax").cast("double") / 1e9, 6)
         .as("ks_d"))
   }
 
@@ -434,12 +433,11 @@ object SurvivalQueries {
     // rounding boundary. Quantize every ln term to nano-units BEFORE
     // the cumulative sum, so both engines exp the IDENTICAL argument.
     val lnTerm9 = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
-      .otherwise(floor(log((col("n_risk") - col("d")).cast("double") /
-        col("n_risk").cast("double")) * 1e9 + 0.5).cast("long"))
+      .otherwise(Parity.quant(log((col("n_risk") - col("d")).cast("double") /
+        col("n_risk").cast("double")), 1e9))
     val gwTerm = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
-      .otherwise(floor(col("d").cast("double") /
-        (col("n_risk").cast("double") * (col("n_risk") - col("d"))) * 1e9
-        + 0.5).cast("long"))
+      .otherwise(Parity.quant(col("d").cast("double") /
+        (col("n_risk").cast("double") * (col("n_risk") - col("d"))), 1e9))
     val surv = exp(col("ln_s"))
     val se = surv * sqrt(col("gw").cast("double") / 1e9)
     withRisk
@@ -588,8 +586,8 @@ object SurvivalQueries {
     val dead = max(when(col("d") >= col("n_risk"), 1L).otherwise(0L))
       .over(wCum)
     val lnTerm9 = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
-      .otherwise(floor(log((col("n_risk") - col("d")).cast("double") /
-        col("n_risk").cast("double")) * 1e9 + 0.5).cast("long"))
+      .otherwise(Parity.quant(log((col("n_risk") - col("d")).cast("double") /
+        col("n_risk").cast("double")), 1e9))
     val km = withRisk
       .withColumn("dead", dead)
       .withColumn("ln_s", sum(lnTerm9).over(wCum).cast("double") / 1e9)
@@ -741,8 +739,8 @@ object SurvivalQueries {
       col("nu") - coalesce(sum(d + col("c")).over(wPrev), lit(0L)))
     val dead = max(when(d >= col("n_risk"), 1L).otherwise(0L)).over(wCum)
     val lnTerm9 = when(d === 0L || d >= col("n_risk"), lit(0L))
-      .otherwise(floor(log((col("n_risk") - d).cast("double") /
-        col("n_risk").cast("double")) * 1e9 + 0.5).cast("long"))
+      .otherwise(Parity.quant(log((col("n_risk") - d).cast("double") /
+        col("n_risk").cast("double")), 1e9))
     val base = withRisk
       .withColumn("dead", dead)
       .withColumn("ln_prev",
@@ -756,18 +754,16 @@ object SurvivalQueries {
       .withColumn("s_prev", when(col("dead_prev") === 1L, lit(0.0))
         .otherwise(round(exp(col("ln_prev")), 4)))
     def cifTerm(dk: Column): Column =
-      floor(col("s_prev") * dk.cast("double") /
-        col("n_risk").cast("double") * 1e9 + 0.5).cast("long")
+      Parity.quant(col("s_prev") * dk.cast("double") /
+        col("n_risk").cast("double"), 1e9)
     val cum = base
       .withColumn("cifp9", sum(cifTerm(col("dp"))).over(wCum))
       .withColumn("cifq9", sum(cifTerm(col("dq"))).over(wCum))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     cum.select(col("t").as("t_hours"), col("n_risk"),
         col("dp").as("d_purchase"), col("dq").as("d_other"),
         col("c").as("n_censored"),
-        rnd6(col("cifp9").cast("double") / 1e9).as("cif_purchase"),
-        rnd6(col("cifq9").cast("double") / 1e9).as("cif_other"),
+        Parity.fix(col("cifp9").cast("double") / 1e9, 6).as("cif_purchase"),
+        Parity.fix(col("cifq9").cast("double") / 1e9, 6).as("cif_other"),
         when(col("dead") === 1L, lit(0.0))
           .otherwise(round(exp(col("ln_s")), 4)).as("survival"))
       .orderBy("t_hours")
@@ -914,8 +910,8 @@ object SurvivalQueries {
       w * w * d * p1 * (lit(1.0) - p1) * (n - d) / (n - 1.0))
       .otherwise(lit(0.0))
     val g = risk
-      .withColumn("nq", floor(numT * 1e6 + 0.5).cast("long"))
-      .withColumn("vq", floor(varT * 1e6 + 0.5).cast("long"))
+      .withColumn("nq", Parity.quant(numT, 1e6))
+      .withColumn("vq", Parity.quant(varT, 1e6))
       .groupBy("method")
       .agg(max(col("nu1")).as("n_users_g0"),
         max(col("nu2")).as("n_users_g1"),
@@ -925,8 +921,8 @@ object SurvivalQueries {
       sqrt(greatest(col("varq").cast("double") / 1e6, lit(1e-300)))
     g.select(col("method"), col("n_users_g0"), col("n_users_g1"),
         col("o1"),
-        (floor(z * 1e4 + 0.5) / 1e4 + 0.0).as("z"),
-        ((abs(floor(z * 1e4 + 0.5) / 1e4 + 0.0) > 1.96).cast("long"))
+        Parity.fix(z, 4).as("z"),
+        ((abs(Parity.fix(z, 4)) > 1.96).cast("long"))
           .as("reject_5pct"))
       .orderBy("method")
   }

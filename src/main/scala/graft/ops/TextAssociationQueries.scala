@@ -115,7 +115,7 @@ object TextAssociationQueries {
         .otherwise(lit(0))).cast("long").as("nb"))
     val scored = c.filter(col("a") + col("b") >= 5)
       .crossJoin(broadcast(tot))
-      .withColumn("k", floor((
+      .withColumn("k", Parity.quant(
         when(col("a") > 0, col("a").cast("double") *
           log((col("a") * (col("na") + col("nb"))).cast("double") /
               (col("na") * (col("a") + col("b"))).cast("double")))
@@ -123,7 +123,7 @@ object TextAssociationQueries {
         when(col("b") > 0, col("b").cast("double") *
           log((col("b") * (col("na") + col("nb"))).cast("double") /
               (col("nb") * (col("a") + col("b"))).cast("double")))
-          .otherwise(lit(0.0))) * lit(2000000.0) + lit(0.5)).cast("long"))
+          .otherwise(lit(0.0)), 2e6))
       .withColumn("direction",
         when(col("a") * col("nb") > col("b") * col("na"), lit(1))
           .when(col("a") * col("nb") < col("b") * col("na"), lit(-1))
@@ -265,37 +265,35 @@ object TextAssociationQueries {
       .withColumn("nn", sum(col("c")).over(w))
       .withColumn("cl", sum(col("c")).over(wl))
       .withColumn("cs", sum(col("c")).over(ws))
-    def q9(c: Column) = floor(c * lit(1.0e9) + lit(0.5)).cast("long")
     // H(lang) / H(source) from cell terms weighted into margins would
     // double-count; instead fold the margin entropies from the SAME
     // cell rows by dividing each cell's share across its margin: the
     // term −(c/N)·ln(margin/N) sums per margin to −(margin/N)ln(…)
-    val hl9 = q9(-(f(col("c")) / f(col("nn"))) *
-      log(f(col("cl")) / f(col("nn"))))
-    val hs9 = q9(-(f(col("c")) / f(col("nn"))) *
-      log(f(col("cs")) / f(col("nn"))))
-    val hlGs9 = q9(-(f(col("c")) / f(col("nn"))) *
-      log(f(col("c")) / f(col("cs"))))
-    val hsGl9 = q9(-(f(col("c")) / f(col("nn"))) *
-      log(f(col("c")) / f(col("cl"))))
+    val hl9 = Parity.quant(-(f(col("c")) / f(col("nn"))) *
+      log(f(col("cl")) / f(col("nn"))), 1e9)
+    val hs9 = Parity.quant(-(f(col("c")) / f(col("nn"))) *
+      log(f(col("cs")) / f(col("nn"))), 1e9)
+    val hlGs9 = Parity.quant(-(f(col("c")) / f(col("nn"))) *
+      log(f(col("c")) / f(col("cs"))), 1e9)
+    val hsGl9 = Parity.quant(-(f(col("c")) / f(col("nn"))) *
+      log(f(col("c")) / f(col("cl"))), 1e9)
     val m = aug.select(col("nn"), hl9.as("hl"), hs9.as("hs"),
         hlGs9.as("hlgs"), hsGl9.as("hsgl"))
       .agg(max(col("nn")).as("nd"), count(lit(1)).as("k"),
         sum(col("hl")).as("shl"), sum(col("hs")).as("shs"),
         sum(col("hlgs")).as("shlgs"), sum(col("hsgl")).as("shsgl"))
     def g(c: String) = col(c).cast("double") / 1.0e9
-    def r6(c: Column) = (floor(c * 1e6 + 0.5).cast("long")
-      .cast("double") / 1e6) + 0.0
     val uLS = (g("shl") - g("shlgs")) / g("shl")
     val uSL = (g("shs") - g("shsgl")) / g("shs")
     m.select(col("nd").cast("long").as("n_docs"),
       col("k").cast("long").as("n_cells"),
-      r6(g("shl")).as("h_lang"), r6(g("shs")).as("h_source"),
-      r6(g("shlgs")).as("h_lang_given_source"),
+      Parity.fix(g("shl"), 6).as("h_lang"),
+      Parity.fix(g("shs"), 6).as("h_source"),
+      Parity.fix(g("shlgs"), 6).as("h_lang_given_source"),
       when(col("shl") <= 0L, lit(null).cast("double"))
-        .otherwise(r6(uLS)).as("u_lang_source"),
+        .otherwise(Parity.fix(uLS, 6)).as("u_lang_source"),
       when(col("shs") <= 0L, lit(null).cast("double"))
-        .otherwise(r6(uSL)).as("u_source_lang"))
+        .otherwise(Parity.fix(uSL, 6)).as("u_source_lang"))
   }
 
   val q343TheilsUSql: String =
@@ -390,8 +388,7 @@ object TextAssociationQueries {
         max(col("cl")).as("maxl"), max(col("cs")).as("maxs"))
     def q6r(num: Column, den: Column): Column =
       when(den <= 0L, lit(null).cast("double"))
-        .otherwise((floor(num.cast("double") / den.cast("double") * 1e6
-          + 0.5).cast("long").cast("double") / 1e6) + 0.0)
+        .otherwise(Parity.fix(num.cast("double") / den.cast("double"), 6))
     m.select(col("nd").cast("long").as("n_docs"),
       col("sms").cast("long").as("sum_modal_by_source"),
       col("sml").cast("long").as("sum_modal_by_lang"),

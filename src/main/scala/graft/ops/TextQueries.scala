@@ -731,7 +731,7 @@ object TextQueries {
       f(col("pa") / two) - f(col("pb") / two)
     a.join(b, Seq("w")).filter(col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"),
-        floor(term * lit(1.0e9) + lit(0.5)).cast("long").as("tq"))
+        Parity.quant(term, 1e9).as("tq"))
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_shared"), sum("tq").as("sq"))
       .select(col("src_a"), col("src_b"), col("n_shared"),
@@ -789,7 +789,7 @@ object TextQueries {
       log(col("cnt").cast("double") / col("n_tokens").cast("double"))
     wc.join(nt, "doc_id")
       .select(col("doc_id"), col("n_tokens"), col("n_unique"),
-        floor(term * lit(1.0e9) + lit(0.5)).cast("long").as("tq"))
+        Parity.quant(term, 1e9).as("tq"))
       .groupBy("doc_id", "n_tokens", "n_unique")
       .agg(sum("tq").as("sq"))
       .select(col("doc_id"), col("n_tokens"), col("n_unique"),
@@ -798,8 +798,8 @@ object TextQueries {
           // nano-quantize: the ln(n_unique) division is the one
           // cross-libm double in the chain (r12 fuzz find: a 300-token
           // adversarial doc diverged in the 16th digit)
-          floor((col("sq").cast("double") / lit(1.0e9)) /
-            log(col("n_unique").cast("double")) * 1e9 + 0.5) / 1e9)
+          Parity.fix((col("sq").cast("double") / lit(1.0e9)) /
+            log(col("n_unique").cast("double")), 9))
           .otherwise(lit(0.0)).as("norm_entropy"))
       .orderBy("doc_id")
   }
@@ -857,7 +857,7 @@ object TextQueries {
       log(col("c12").cast("double") / col("c1").cast("double"))
     c12.join(c1, Seq("lang", "w1")).join(broadcast(nb), "lang")
       .select(col("lang"), col("nb"),
-        floor(term * lit(1.0e9) + lit(0.5)).cast("long").as("tq"))
+        Parity.quant(term, 1e9).as("tq"))
       .groupBy("lang")
       .agg(max(col("nb")).as("n_bigrams"),
         count(lit(1)).as("n_bigram_types"),
@@ -937,8 +937,6 @@ object TextQueries {
         coalesce(max(when(col("rn") === 2, col("ov"))), lit(0L))
           .as("ov2"))
       .withColumn("margin", col("ov1") - col("ov2"))
-    def rnd6(c: Column): Column =
-      (floor(c * 1e6 + 0.5).cast("long").cast("double") / 1e6) + 0.0
     d.select(col("doc_id"), col("lang")).join(top2, "doc_id")
       .groupBy(col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -950,15 +948,15 @@ object TextQueries {
           1L).otherwise(0L)).as("n_correct_conf"),
         sum(when(col("margin") > 1L, 1L).otherwise(0L)).as("n_conf"))
       .select(col("pred_lang"), col("n_docs"),
-        rnd6(col("sum_margin").cast("double") /
-          col("n_docs").cast("double")).as("mean_margin"),
-        rnd6(col("n_low_conf").cast("double") /
-          col("n_docs").cast("double")).as("low_conf_share"),
-        rnd6(col("n_correct").cast("double") /
-          col("n_docs").cast("double")).as("accuracy"),
+        Parity.fix(col("sum_margin").cast("double") /
+          col("n_docs").cast("double"), 6).as("mean_margin"),
+        Parity.fix(col("n_low_conf").cast("double") /
+          col("n_docs").cast("double"), 6).as("low_conf_share"),
+        Parity.fix(col("n_correct").cast("double") /
+          col("n_docs").cast("double"), 6).as("accuracy"),
         when(col("n_conf") === 0L, lit(null).cast("double"))
-          .otherwise(rnd6(col("n_correct_conf").cast("double") /
-            col("n_conf").cast("double"))).as("accuracy_confident"))
+          .otherwise(Parity.fix(col("n_correct_conf").cast("double") /
+            col("n_conf").cast("double"), 6)).as("accuracy_confident"))
       .orderBy("pred_lang")
   }
 

@@ -12,6 +12,13 @@ class PlanShapeSpec extends SparkSpec {
   private def planOf(q: String): String =
     SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan.toString
 
+  /** Every query's executed plan, built once for the all-query lints. */
+  private lazy val allPlans
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, sf0001).queryExecution.executedPlan
+    }
+
   test("q1: shipdate filter is pushed into the parquet scan") {
     val p = planOf("q1_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"),
@@ -603,9 +610,9 @@ class PlanShapeSpec extends SparkSpec {
       "q285_kendall_w" -> 2, "q369_rmst" -> 2, "q375_weighted_kappa" -> 2,
       "q378_tau_ap" -> 3, "q368_bloom_fpr" -> 2)
       .withDefaultValue(1)
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val p = fn(spark, sf0001).queryExecution.executedPlan.toString
+    val offenders = allPlans.flatMap {
+      case (name, plan) =>
+        val p = plan.toString
         val cart = "CartesianProduct".r.findAllIn(p).size
         val bnlj = "BroadcastNestedLoop".r.findAllIn(p).size
         if (cart > 0) Some(s"$name: CartesianProduct x$cart")
@@ -733,9 +740,9 @@ class PlanShapeSpec extends SparkSpec {
       "q236_t_closeness", "q271_term_dispersion",
       // (e) ≤|groups|-row offset frames
       "q206_theil_sen")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = globalWindows(fn(spark, sf0001).queryExecution.executedPlan)
+    val offenders = allPlans.flatMap {
+      case (name, plan) =>
+        val n = globalWindows(plan)
         if (n > 0 && !allowed(name)) Some(s"$name: $n global WindowExec")
         else None
     }
@@ -999,20 +1006,20 @@ class PlanShapeSpec extends SparkSpec {
   // IEEE-correctly-rounded) carries ~1-ulp cross-engine drift, and
   // SUMMING raw terms across rows walks the accumulated drift onto
   // rounding-grid boundaries. The repo convention quantizes every libm
-  // term to an integer grid (floor(x·1eN + 0.5) as long) BEFORE the
-  // accumulation, so both engines accumulate identical exact integers.
-  // The lint: every sum/avg whose argument (directly, or via a
-  // column/val bound in a libm-carrying STATEMENT — r16's line-based
+  // term to an integer grid (Parity.quant, floor(x·1eN + 0.5)) BEFORE
+  // the accumulation, so both engines accumulate identical exact
+  // integers. The lint: every sum/avg whose argument (directly, or via
+  // a column/val bound in a libm-carrying STATEMENT — r16's line-based
   // taint missed bindings whose libm call sat on a continuation line)
-  // must either show the floor( quantizer inside the accumulated
-  // argument or be adjudicated in the allowlist. sqrt and IEEE +−×÷
+  // must either show a floor( or Parity.quant/fix quantizer inside the
+  // accumulated argument or be adjudicated in the allowlist. sqrt and IEEE +−×÷
   // are correctly rounded and exempt; a single TERMINAL libm call on
   // an identical argument (q354's documented rule) is exempt because
   // it is not accumulated. Offline twin: scripts/libm_audit.py;
   // adjudication table in COVERAGE.md.
   private val libmRe = ("""\b(ln|log|log10|log2|log1p|exp|expm1|sin|cos|""" +
     """tan|asin|acos|atan|atan2|sinh|cosh|tanh|pow|power|cbrt)\s*\(""").r
-  private val quantRe = """(?i)floor\s*\(""".r
+  private val quantRe = """(?i)floor\s*\(|Parity\.(?:quant|fix)\s*\(""".r
 
   /** Joins physical lines into logical statements: a line continues
     * while its parens/brackets are unbalanced, the NEXT line starts
@@ -1176,7 +1183,7 @@ class PlanShapeSpec extends SparkSpec {
     } finally walk.close()
     assert(offenders.isEmpty,
       "un-quantized libm term inside a cross-row accumulation " +
-        "(quantize with floor(x*1eN+0.5) before the sum, or adjudicate " +
+        "(quantize with Parity.quant before the sum, or adjudicate " +
         s"in the allowlist): ${offenders.mkString("; ")}")
   }
 
@@ -1195,10 +1202,12 @@ class PlanShapeSpec extends SparkSpec {
     val hits = libmOffenders("ops/Planted.scala", planted)
     assert(hits.nonEmpty && hits.head._2.contains("term"),
       s"continuation-line libm binding must be flagged, got: $hits")
-    // and the quantized form of the same statement must pass
-    val quantized = planted.replace("log(col(\"score\") + 1.0)",
-      "floor(log(col(\"score\") + 1.0) * 1e9 + 0.5).cast(\"long\")")
-    assert(libmOffenders("ops/Planted.scala", quantized).isEmpty,
-      "the floor-quantized continuation form must be clean")
+    // and the quantized forms of the same statement must pass
+    Seq("floor(log(col(\"score\") + 1.0) * 1e9 + 0.5).cast(\"long\")",
+      "Parity.quant(log(col(\"score\") + 1.0), 1e9)").foreach { q =>
+      val quantized = planted.replace("log(col(\"score\") + 1.0)", q)
+      assert(libmOffenders("ops/Planted.scala", quantized).isEmpty,
+        s"the quantized continuation form $q must be clean")
+    }
   }
 }
