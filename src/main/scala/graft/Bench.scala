@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -12,7 +15,10 @@ object Bench {
     val spark = LocalSession(cpus)
     // Untimed warm-up: compiles every query's generated code and JITs
     // the scan/shuffle internals, so the timed loop below measures the
-    // queries, not first-use JVM costs.
+    // queries, not first-use JVM costs. The compiled code stays cached
+    // only because Spark's codegen cache holds all the queries' classes
+    // (`CodegenCache.Entries`); `codegen_compiles` in the window shows
+    // what each timed pass still compiled.
     val warmDir = LocalSession.warmDir(sfDir)
     selected.foreach { case (_, fn) =>
       try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
@@ -21,7 +27,9 @@ object Bench {
     // of whatever else the host is doing (observed 1.7x run-to-run drift
     // on the same build); the per-query minimum is the standard
     // steady-state estimator.
-    def timedPass(pass: Int): (Map[String, Double], Set[String]) = {
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def timedPass(pass: Int): (Map[String, Double], Set[String], Long) = {
+      val c0 = compiles
       val failed = scala.collection.mutable.Set.empty[String]
       val times = selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -38,7 +46,7 @@ object Bench {
         System.err.println(f"[bench] pass$pass $name%-28s $t%8.3f s")
         name -> t
       }
-      (times, failed.toSet)
+      (times, failed.toSet, compiles - c0)
     }
     // Self-documenting measurement window (r18 verdict #4): a contended
     // host shows up as uniform per-query inflation that is otherwise
@@ -53,8 +61,8 @@ object Bench {
     def nowIso: String = java.time.OffsetDateTime.now(
       java.time.ZoneOffset.UTC).toString
     val (tStart, loadStart) = (nowIso, loadavg)
-    val (p1, f1) = timedPass(1)
-    val (p2, f2) = timedPass(2)
+    val (p1, f1, c1) = timedPass(1)
+    val (p2, f2, c2) = timedPass(2)
     val (tEnd, loadEnd) = (nowIso, loadavg)
     val failed = f1 ++ f2
     val results = p1.map { case (name, t) => name -> math.min(t, p2(name)) }
@@ -67,7 +75,8 @@ object Bench {
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val window = s""""window":{"t_start":"$tStart","t_end":"$tEnd",""" +
       s""""loadavg_start":"$loadStart","loadavg_end":"$loadEnd",""" +
-      s""""cpus":$cpus,"pass_totals":[${tot(p1)},${tot(p2)}]}"""
+      s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""pass_totals":[${tot(p1)},${tot(p2)}],"codegen_compiles":[$c1,$c2]}"""
     // "queries" leads and the scalar fields TRAIL: the driver's artifact
     // keeps only the LAST bytes of this line, so putting the total/failed
     // after the (long) queries map is what makes them tail-survivable.

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,4 +26,7 @@ object SparkSpec {
     .config("spark.sql.warehouse.dir",
       s"${sys.props("java.io.tmpdir")}/graft-warehouse")
     .getOrCreate()
+    // one codegen cache for the whole suite, so later suites reuse
+    // compiled code
+    .tap(CodegenCache.ensure)
 }
