@@ -20,8 +20,10 @@ object CodegenCache {
 
   /** Builds Spark's codegen cache with `Entries` entries, or with the
     * value of `spark.sql.codegen.cache.maxEntries` when the session's
-    * SparkConf sets it: the caller's own setting always wins. Idempotent,
-    * and synchronized because concurrent clients share one context.
+    * SparkConf sets it, and sets `spark.sql.codegen.useIdInClassName`
+    * to false on `spark` unless its conf sets that: the caller's own
+    * setting always wins. Idempotent, and synchronized because
+    * concurrent clients share one context.
     *
     * Precondition: it takes effect only if it runs before the JVM's first
     * codegen, since the cache is built once and never resized. That holds
@@ -29,6 +31,10 @@ object CodegenCache {
     * (through `LocalSession`, a `SparkEntry.queries` builder or
     * `SparkSpec`) before it runs any query. */
   def ensure(spark: SparkSession): Unit = synchronized {
+    // adaptive execution numbers codegen stages in creation order, which
+    // varies by run; with it in the class name, same code compiles anew
+    val useId = SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key
+    if (!spark.conf.getAll.contains(useId)) spark.conf.set(useId, false)
     if (!sized) {
       val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
       val conf = new SQLConf

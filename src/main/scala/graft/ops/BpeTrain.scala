@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * All lambdas are Column-built (no string interpolation, so symbols
   * containing quotes cannot break the expression; no UDFs, stays in
   * codegen). The vocab frame is localCheckpoint-ed per round to keep
-  * lineage flat across iterations (the ConnectedComponents discipline).
+  * lineage flat across iterations (as [[Fixpoint]] does for graphs).
   */
 object BpeTrain {
 

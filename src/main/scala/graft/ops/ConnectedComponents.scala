@@ -10,14 +10,10 @@ import org.apache.spark.sql.functions._
   * "hash-to-min", e.g. Rastogi et al., "Finding Connected Components
   * in Map-Reduce in Logarithmic Rounds", ICDE 2013.)
   *
-  * Each iteration is one hash-partitioned join + partial-aggregated
-  * min — no driver-side graph, no GraphX/RDDs. Converges in
-  * O(component diameter) rounds; dedup/linkage clusters are shallow
-  * (near-cliques), so 3–5 rounds in practice. The driver loop only
-  * moves a changed-row COUNT per round, and `localCheckpoint`
-  * truncates the growing lineage each round (the standard guard for
-  * iterative DataFrame algorithms — without it analysis cost doubles
-  * every iteration).
+  * Each round is one hash-partitioned join + partial-aggregated min on
+  * the [[Fixpoint]] driver — no driver-side graph, no GraphX/RDDs.
+  * Converges in O(component diameter) rounds; dedup/linkage clusters
+  * are shallow (near-cliques), so 3–5 rounds in practice.
   */
 object ConnectedComponents {
 
@@ -26,6 +22,15 @@ object ConnectedComponents {
     * component = the smallest vertex id reachable. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 25): DataFrame = {
+    val r = run(edges, srcCol, dstCol, maxIters)
+    require(r.converged,
+      s"label propagation did not converge in $maxIters rounds")
+    r.state.select(col("id"), col("component"))
+  }
+
+  /** The label fixpoint itself: state (id, component, changed). */
+  private[graft] def run(edges: DataFrame, srcCol: String, dstCol: String,
+      maxIters: Int): Fixpoint.Result = {
     // ONE pass over the (possibly expensive) caller edge build and ONE
     // distinct shuffle (r20, guide §2.4): each input edge explodes to
     // both directed orientations PLUS both endpoints' self-edges —
@@ -47,39 +52,20 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint()
 
-    // round 1 needs no label join: labels start as identity, so each
-    // neighbor's component IS its id and min(dst) is the round-1 update
-    // (prev = the self row's id). This also removes the initial
-    // vertex-distinct + checkpoint the identity frame used to cost.
-    var labels: DataFrame = null
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val updated = (if (it == 0)
-        symPlus.groupBy(col("src"))
-          .agg(min(col("dst")).as("next"),
-            min(when(col("dst") === col("src"), col("dst"))).as("prev"))
-      else
-        symPlus
-          .join(labels.withColumnRenamed("id", "nid"), col("dst") === col("nid"))
-          .groupBy(col("src"))
-          .agg(min(col("component")).as("next"),
-            // exactly one self row per src carries the previous label
-            min(when(col("dst") === col("src"), col("component"))).as("prev")))
-        // LAZY cut + count as the materializing action: the filter-count
-        // below stores the round's blocks AND moves the changed count in
-        // ONE job, where the previous eager checkpoint + count pair paid
-        // two (r20, verdict mandate #4 — the CC consumers q84/q90/q279
-        // spend ~30 jobs/query on round scheduling). No consumer races
-        // the lazy materialization: the count is synchronous and the
-        // next round's join only starts after it returns.
-        .localCheckpoint(eager = false)
-      changed = updated.filter(col("next") =!= col("prev")).count()
-      labels = updated.select(col("src").as("id"), col("next").as("component"))
-      it += 1
+    // round 1 skips the label join: identity labels make min(dst) the
+    // update and the self row's dst the previous label
+    val identity = symPlus.select(col("src").as("id"), col("src").as("component"))
+    Fixpoint.iterate(identity, maxIters) { (labels, round) =>
+      val (neighbors, label) =
+        if (round == 1) (symPlus, col("dst"))
+        else (symPlus.join(labels.select(col("id").as("nid"), col("component")),
+          col("dst") === col("nid")), col("component"))
+      neighbors.groupBy(col("src"))
+        .agg(min(label).as("next"),
+          // exactly one self row per src carries the previous label
+          min(when(col("dst") === col("src"), label)).as("prev"))
+        .select(col("src").as("id"), col("next").as("component"),
+          (col("next") =!= col("prev")).as("changed"))
     }
-    require(changed == 0,
-      s"label propagation did not converge in $maxIters rounds")
-    labels
   }
 }

@@ -454,9 +454,9 @@ object GraphQueries {
     * bounded per-basket pair expansion, then a map-side-combinable
     * support count); each of the ≤ 6 iterations is frontier ⋈ edges
     * (equi-join on the edge key) plus an anti-join against visited —
-    * the Pregel step shape, frontier-sized, never all-pairs.
-    * localCheckpoint per round cuts the iterative lineage (q84/q101
-    * discipline); all counts/sums exact int64. */
+    * the Pregel step shape, frontier-sized, never all-pairs. Rounds run
+    * on the [[Fixpoint]] driver over the visited (id, hop) set, whose
+    * changed rows are the new frontier; all counts/sums exact int64. */
   def q178BfsHops(s: SparkSession, dir: String): DataFrame = {
     val baskets = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -483,38 +483,20 @@ object GraphQueries {
     val seeds = Tables.part(s, dir)
       .filter(col("p_brand") === "Brand#11")
       .select(col("p_partkey").as("id"))
-    // ONE eager checkpoint per level (the frontier); the visited set is
-    // a shallow union of already-checkpointed levels, so the anti-join
-    // lineage never deepens and no per-round visited re-materialization
-    // is paid. Early exit once a frontier is empty — the count is free
-    // on the just-materialized checkpoint.
-    val level0 = seeds.withColumn("hop", lit(0)).localCheckpoint()
-    var levels = Vector(level0)
-    var frontierIds = level0.select("id")
-    var visitedIds = frontierIds
-    var h = 1
-    var exhausted = false
-    while (h <= 6 && !exhausted) {
-      // LAZY cut + count as the materializing action (r20, the CC
-      // pattern): one job stores the frontier blocks AND moves the
-      // emptiness check, where the eager checkpoint + isEmpty pair
-      // paid two. count() computes EVERY partition, so the truncated
-      // lineage never has unmaterialized blocks (the take(1)/isEmpty
-      // form would be unsafe on a lazy checkpoint).
-      val frontier = frontierIds.select(col("id").as("fid"))
+    // round r reaches hop r from the frontier, hop r − 1; the early
+    // exit is the first round that reaches no new vertex. One full outer
+    // join on id keeps the visited set and adds the unvisited reached
+    // vertices, so the state's partition count does not grow by round.
+    val level0 = seeds.select(col("id"), lit(0).as("hop"), lit(false).as("changed"))
+    Fixpoint.iterate(level0, 6) { (visited, r) =>
+      visited.filter(col("hop") === r - 1)
+        .select(col("id").as("fid"))
         .join(edges, col("fid") === col("u"))
         .select(col("v").as("id")).distinct()
-        .join(visitedIds, Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
-      if (frontier.count() == 0) exhausted = true
-      else {
-        levels :+= frontier.withColumn("hop", lit(h))
-        visitedIds = visitedIds.union(frontier)
-        frontierIds = frontier
-      }
-      h += 1
-    }
-    levels.reduce(_.unionByName(_)).groupBy("hop")
+        .join(visited.select("id", "hop"), Seq("id"), "full_outer")
+        .select(col("id"), coalesce(col("hop"), lit(r)).as("hop"),
+          col("hop").isNull.as("changed"))
+    }.state.groupBy("hop")
       .agg(count(lit(1)).as("n_nodes"), sum("id").as("sum_id"))
       .orderBy("hop")
   }

@@ -9,19 +9,16 @@ import org.apache.spark.sql.functions._
   * of low-degree hangers-on can fake. Complements the L23/L32/graph
   * family (components, PageRank, triangles).
   *
-  * Algorithm: iterative peeling to a fixpoint — drop every vertex whose
-  * CURRENT degree is below k, remove its edges, recompute. Each round is
-  * one map-side-combinable degree agg plus two anti-join filters on
-  * the sub-k vertex set. That set is UNHINTED deliberately: in round
-  * one it can be most of the graph (billions of IDs at 100 TB — a
-  * forced broadcast would OOM the driver), while near the fixpoint it
-  * is tiny — exactly the size flip AQE's runtime join selection
-  * handles, and the materialized per-round frame gives it accurate
-  * sizes. The only driver state is the per-round continue/stop count —
-  * the PageRank one-scalar-per-round discipline. Round count is bounded
-  * by the peeling depth (≤ the degeneracy ordering length; in practice a
-  * handful), and `localCheckpoint` flattens lineage per round (the
-  * ConnectedComponents guard against iterative-plan blowup).
+  * Algorithm: iterative peeling to a fixpoint on the [[Fixpoint]]
+  * driver — drop every vertex whose CURRENT degree is below k, remove
+  * its edges, recompute. Each round is one map-side-combinable degree
+  * agg plus two outer-join lookups into the sub-k vertex set that mark
+  * the edges to drop. That set is UNHINTED deliberately: in round one it
+  * can be most of the graph (billions of IDs at 100 TB — a forced
+  * broadcast would OOM the driver), while near the fixpoint it is tiny —
+  * exactly the size flip AQE's runtime join selection handles. Round
+  * count is bounded by the peeling depth (≤ the degeneracy ordering
+  * length; in practice a handful).
   *
   * Input edges are treated as UNDIRECTED and must not contain
   * self-loops; duplicates are collapsed so degree = distinct neighbors.
@@ -30,25 +27,26 @@ object KCore {
 
   /** Vertices of the k-core of `edges` (columns `src`, `dst`), as a
     * single-column `vertex` frame. */
-  def kcore(edges: DataFrame, k: Int): DataFrame = {
+  def kcore(edges: DataFrame, k: Int): DataFrame =
+    peel(edges, k).state.select(col("src").as("vertex")).distinct().orderBy("vertex")
+
+  /** The peeling fixpoint itself: state (src, dst, changed), where
+    * `changed` marks an edge dropped in the last round. */
+  private[graft] def peel(edges: DataFrame, k: Int): Fixpoint.Result = {
     require(k >= 1, s"k must be >= 1, got $k")
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    var cur = sym.localCheckpoint()
-    var done = false
-    while (!done) {
-      val deg = cur.groupBy("src").agg(count(lit(1)).as("deg"))
-      val bad = deg.filter(col("deg") < k).select(col("src").as("v"))
-        .localCheckpoint()
-      if (bad.isEmpty) done = true
-      else {
-        cur = cur
-          .join(bad, cur("src") === bad("v"), "left_anti")
-          .join(bad, cur("dst") === bad("v"), "left_anti")
-          .localCheckpoint()
-      }
+      .localCheckpoint()
+    Fixpoint.iterate(sym.withColumn("changed", lit(false)), Int.MaxValue) { (prev, _) =>
+      val cur = prev.filter(!col("changed")).select(col("src"), col("dst"))
+      val bad = cur.groupBy("src").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") < k).select(col("src").as("v"))
+      cur
+        .join(bad.select(col("v").as("bs")), col("src") === col("bs"), "left")
+        .join(bad.select(col("v").as("bd")), col("dst") === col("bd"), "left")
+        .select(col("src"), col("dst"),
+          (col("bs").isNotNull || col("bd").isNotNull).as("changed"))
     }
-    cur.select(col("src").as("vertex")).distinct().orderBy("vertex")
   }
 }

@@ -26,12 +26,9 @@ import org.apache.spark.sql.functions._
   * array intersect, Θ(Σ outdeg²) bounded by degree orientation at
   * O(m^1.5) total) plus one left join against the support census —
   * nothing pairwise beyond the wedge work the triangle count itself
-  * requires. Driver state per round: ONE scalar (the dropped-edge
-  * count, the PageRank convergence-probe discipline).
-  * `localCheckpoint` flattens lineage per round (lazy is wrong here —
-  * each round's frame feeds the next round's Triangles subtree
-  * multiple times, and the per-round count action materializes it
-  * anyway).
+  * requires. Rounds run on the [[Fixpoint]] driver, which materializes
+  * each round's edge set before the next round's Triangles subtree
+  * reads it several times.
   */
 object KTruss {
 
@@ -41,7 +38,7 @@ object KTruss {
   def ktruss(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k = 2 is every edge), got $k")
-    var cur = edges
+    val undirected = edges
       .select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("t"))
       .filter(col("s").isNotNull && col("t").isNotNull &&
@@ -50,8 +47,9 @@ object KTruss {
         greatest(col("s"), col("t")).as("v"))
       .distinct()
       .localCheckpoint()
-    var done = false
-    while (!done) {
+    // each round marks the edges below support k − 2; the next drops them
+    Fixpoint.iterate(undirected.withColumn("changed", lit(false)), Int.MaxValue) { (prev, _) =>
+      val cur = prev.filter(!col("changed")).select(col("u"), col("v"))
       val sup = Triangles.triples(cur, "u", "v")
         .select(explode(array(
           struct(col("x").as("u"), col("y").as("v")),
@@ -59,14 +57,9 @@ object KTruss {
           struct(col("y").as("u"), col("z").as("v")))).as("e"))
         .groupBy(col("e.u").as("u"), col("e.v").as("v"))
         .agg(count(lit(1)).as("support"))
-      val next = cur.join(sup, Seq("u", "v"), "left")
-        .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
-        .select(col("u"), col("v"))
-        .localCheckpoint()
-      // one scalar per round — the PageRank convergence discipline
-      if (next.count() == cur.count()) done = true
-      cur = next
-    }
-    cur.orderBy("u", "v")
+      cur.join(sup, Seq("u", "v"), "left")
+        .select(col("u"), col("v"),
+          (coalesce(col("support"), lit(0L)) < (k - 2).toLong).as("changed"))
+    }.state.select(col("u"), col("v")).orderBy("u", "v")
   }
 }

@@ -23,11 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each round is ONE hash join (neighbor labels flow along
   * edges) + ONE partial-aggregated count + ONE struct-min argmax — all
-  * map-side combinable, no driver-side graph, no windows. The driver
-  * moves a single changed-row count per round and `localCheckpoint`
-  * truncates lineage (the L23/L32 iterative-DataFrame guard). Rounds
-  * needed ≈ community diameter, small for the near-clique structures
-  * dedup/linkage produce.
+  * map-side combinable, no driver-side graph, no windows — on the
+  * [[Fixpoint]] driver. Rounds needed ≈ community diameter, small for
+  * the near-clique structures dedup/linkage produce.
   */
 object LabelProp {
 
@@ -46,30 +44,25 @@ object LabelProp {
       .distinct()
       .localCheckpoint()
 
-    var labels = sym.select(col("src").as("id")).distinct()
+    val identity = sym.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      // neighbor votes (one per distinct edge) + one self-vote per vertex
+    Fixpoint.iterate(identity, maxIters) { (labels, _) =>
+      // neighbor votes (one per distinct edge) + one self-vote per
+      // vertex; only the self-vote carries the vertex's previous label
       val votes = sym
         .join(labels.select(col("id").as("nid"), col("lbl")),
           col("dst") === col("nid"))
-        .select(col("src"), col("lbl"))
-        .union(labels.select(col("id").as("src"), col("lbl")))
-        .groupBy("src", "lbl").agg(count(lit(1)).as("cnt"))
+        .select(col("src"), col("lbl"), lit(null).cast("long").as("prev"))
+        .union(labels.select(col("id").as("src"), col("lbl"), col("lbl").as("prev")))
+        .groupBy("src", "lbl")
+        .agg(count(lit(1)).as("cnt"), max(col("prev")).as("prev"))
       // argmax by (count desc, label asc): lexicographic struct min
-      val next = votes
+      votes
         .groupBy("src")
-        .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("m"))
-        .select(col("src").as("id"), col("m.lbl").as("lbl"))
-        .localCheckpoint()
-      changed = next.join(labels.withColumnRenamed("lbl", "prev"), "id")
-        .filter(col("lbl") =!= col("prev")).count()
-      labels = next
-      it += 1
-    }
-    labels.select(col("id"), col("lbl").as("community"))
+        .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("m"),
+          max(col("prev")).as("prev"))
+        .select(col("src").as("id"), col("m.lbl").as("lbl"),
+          (col("m.lbl") =!= col("prev")).as("changed"))
+    }.state.select(col("id"), col("lbl").as("community"))
   }
 }

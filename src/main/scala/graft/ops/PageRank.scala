@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
   * Scale shape, mirroring ConnectedComponents: each iteration is ONE
   * hash equi-join (ranks ⋈ edges on src, both hash-partitioned on the
   * key, so the partitioning is reused across iterations) plus one
-  * map-side-combinable sum per destination; the driver moves only two
-  * scalars per iteration (the dangling-mass sum; N once up front) —
-  * never vertex data. `localCheckpoint` truncates lineage each round so
-  * plans stay O(1) deep regardless of iteration count. O(iters) rounds,
-  * driver-synchronized — the standard Pregel-without-Pregel trade.
+  * map-side-combinable sum per destination; the dangling mass is a
+  * one-row aggregate joined in as a column, so vertex data never
+  * reaches the driver (N is counted once up front). Rounds run on the
+  * [[Fixpoint]] driver with every row marked changed, so exactly
+  * `iters` run — the standard Pregel-without-Pregel trade.
   */
 object PageRank {
 
@@ -32,38 +32,34 @@ object PageRank {
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e = edges
+    val merged = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .groupBy("src", "dst").agg(sum("w").as("w"))
+    // each edge carries its source's total out-weight `tw`
+    val e = merged.join(merged.groupBy("src").agg(sum("w").as("tw")), "src")
       .localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint()
-    val outW = e.groupBy("src").agg(sum("w").as("tw"))
+    // dangling vertices (no out-edge) teleport their mass each round
+    val nodes = e.select(col("src").as("id"), lit(false).as("dangling"))
+      .union(e.select(col("dst").as("id"), lit(true).as("dangling")))
+      .groupBy("id").agg(min("dangling").as("dangling"))
+      .localCheckpoint()
     val n = nodes.count()
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint()
-    var it = 0
-    while (it < iters) {
-      val withOut = ranks.join(outW,
-        ranks("id") === outW("src"), "left")
-      // dangling vertices have no outW row; their mass teleports
-      val dangling = withOut.filter(col("tw").isNull)
-        .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-      val received = e.join(outW, "src")
-        .join(ranks.withColumnRenamed("id", "src"), "src")
+    if (n == 0) nodes.select(col("id"), lit(0.0).as("rank"))
+    else Fixpoint.iterate(nodes.withColumn("rank", lit(1.0 / n)), iters) { (ranks, _) =>
+      val dangling = ranks.filter(col("dangling"))
+        .agg((coalesce(sum("rank"), lit(0.0)) / n.toDouble).as("dm"))
+      val received = e.join(ranks.select(col("id").as("src"), col("rank")), "src")
         .select(col("dst").as("id"),
           (col("rank") * col("w") / col("tw")).as("m"))
         .groupBy("id").agg(sum("m").as("m"))
-      ranks = nodes.join(received, Seq("id"), "left")
-        .select(col("id"),
+      nodes.join(received, Seq("id"), "left").crossJoin(dangling)
+        .select(col("id"), col("dangling"),
           (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("m"), lit(0.0)) + lit(dangling / n)))
-            .as("rank"))
-        .localCheckpoint()
-      it += 1
-    }
-    ranks
+            lit(damping) * (coalesce(col("m"), lit(0.0)) + col("dm")))
+            .as("rank"),
+          lit(true).as("changed"))
+    }.state.select(col("id"), col("rank"))
   }
 }

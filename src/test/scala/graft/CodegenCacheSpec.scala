@@ -18,4 +18,16 @@ class CodegenCacheSpec extends SparkSpec {
     (1 to 10).foreach(run)
     assert(compiles == c1, s"rerunning 10 cached queries compiled ${compiles - c1} classes")
   }
+
+  test("a stage compiled under one codegen stage id is reused under another") {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val x = spark.range(10).selectExpr("id * 9001 + 17")
+    val y = spark.range(10).selectExpr("id * 9002 + 19")
+    x.collect()
+    y.collect()
+    val c = compiles
+    // y is codegen stage 1 of the union, and x, stage 1 on its own, is stage 2
+    y.union(x).collect()
+    assert(compiles == c, s"x's code under a new stage id compiled ${compiles - c} classes")
+  }
 }

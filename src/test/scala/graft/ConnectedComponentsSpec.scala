@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{ConnectedComponents, RecordLinkage}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Min-label propagation: exact components on a known graph, and the
   * linkage→entities composition over fixture match pairs. */
@@ -56,5 +57,12 @@ class ConnectedComponentsSpec extends SparkSpec {
       .union(pairs.select(col("b_id").as("v"))).distinct().count()
     assert(entities.count() == vertices)
     assert(entities.select("component").distinct().count() <= vertices)
+  }
+
+  test("an empty edge frame yields an empty (id, component) frame") {
+    import spark.implicits._
+    val got = ConnectedComponents.components(Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq("id" -> LongType, "component" -> LongType))
+    assert(got.collect().isEmpty)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.KCore
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** KCore vs sequential peeling on the co-purchase graph, plus the
   * degree invariant and shrinking-core monotonicity. */
@@ -61,5 +62,11 @@ class KCoreSpec extends SparkSpec {
   test("a graph below threshold peels to empty") {
     val tiny = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst") // path: max core 1
     assert(KCore.kcore(tiny, 2).count() == 0)
+  }
+
+  test("an empty edge frame yields an empty vertex frame") {
+    val got = KCore.kcore(Seq.empty[(Long, Long)].toDF("src", "dst"), 2)
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq("vertex" -> LongType))
+    assert(got.collect().isEmpty)
   }
 }

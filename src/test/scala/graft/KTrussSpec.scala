@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.KTruss
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** KTruss vs sequential support peeling on the co-purchase graph, plus
   * the per-edge support invariant and truss⊆core containment. */
@@ -96,5 +97,12 @@ class KTrussSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(truss.subsetOf(core),
       "a 3-truss vertex has two triangle edges, hence core degree >= 2")
+  }
+
+  test("an empty edge frame yields an empty (u, v) frame") {
+    import spark.implicits._
+    val got = KTruss.ktruss(Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst", 3)
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq("u" -> LongType, "v" -> LongType))
+    assert(got.collect().isEmpty)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.LabelProp
+import org.apache.spark.sql.types.LongType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -9,30 +10,10 @@ import org.scalacheck.rng.Seed
   * and determinism pins. */
 class LabelPropSpec extends SparkSpec {
   import spark.implicits._
+  import LabelPropSpec.seqLpa
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(1042L + i)))
-
-  /** The same synchronous self-voting rule, sequentially. */
-  private def seqLpa(es: Seq[(Long, Long)], maxIters: Int): Map[Long, Long] = {
-    val sym = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      .filter { case (a, b) => a != b }.distinct
-    val adj = sym.groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2) }
-    var labels = adj.keys.map(v => v -> v).toMap
-    var it = 0
-    var changed = true
-    while (changed && it < maxIters) {
-      val next = adj.map { case (v, ns) =>
-        val votes = (ns.map(labels) :+ labels(v))
-          .groupBy(identity).map { case (l, vs) => (l, vs.size) }
-        v -> votes.minBy { case (l, c) => (-c, l) }._1
-      }
-      changed = next != labels
-      labels = next
-      it += 1
-    }
-    labels
-  }
 
   private def run(es: Seq[(Long, Long)], maxIters: Int = 10): Map[Long, Long] =
     LabelProp.communities(es.toDF("src", "dst"), "src", "dst", maxIters)
@@ -61,5 +42,35 @@ class LabelPropSpec extends SparkSpec {
     val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L),
       (6L, 4L), (3L, 4L), (7L, 1L), (8L, 5L))
     assert(run(es) == run(es))
+  }
+
+  test("an empty edge frame yields an empty (id, community) frame") {
+    val got = LabelProp.communities(Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst")
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq("id" -> LongType, "community" -> LongType))
+    assert(got.collect().isEmpty)
+  }
+}
+
+object LabelPropSpec {
+
+  /** The same synchronous self-voting rule, sequentially. */
+  def seqLpa(es: Seq[(Long, Long)], maxIters: Int): Map[Long, Long] = {
+    val sym = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .filter { case (a, b) => a != b }.distinct
+    val adj = sym.groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2) }
+    var labels = adj.keys.map(v => v -> v).toMap
+    var it = 0
+    var changed = true
+    while (changed && it < maxIters) {
+      val next = adj.map { case (v, ns) =>
+        val votes = (ns.map(labels) :+ labels(v))
+          .groupBy(identity).map { case (l, vs) => (l, vs.size) }
+        v -> votes.minBy { case (l, c) => (-c, l) }._1
+      }
+      changed = next != labels
+      labels = next
+      it += 1
+    }
+    labels
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.PageRank
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** ops.PageRank against a local reference implementation (plain Scala
   * maps) on hand-built graphs — exercising damping, weights, dangling
@@ -76,5 +77,12 @@ class PageRankSpec extends SparkSpec {
     val edges = Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0))
     val got = run(edges, weighted = false, 0.85, 5)
     got.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12))
+  }
+
+  test("an empty edge frame yields an empty (id, rank) frame") {
+    import spark.implicits._
+    val got = PageRank.ranks(Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst")
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq("id" -> LongType, "rank" -> DoubleType))
+    assert(got.collect().isEmpty)
   }
 }
