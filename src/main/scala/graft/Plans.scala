@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Plan-audit artifact generator: compiles every `SparkEntry.queries`
   * entry and writes PLANS.md — per query, the physical-plan facts that
   * matter at 100 TB (exchange count, join strategies, codegen spans,
@@ -11,6 +15,17 @@ import java.nio.file.{Files, Paths}
   * file is the full inventory for review.
   */
 object Plans {
+  /** Nodes of the final physical tree matching `hit`, descending into
+    * adaptive plans and query stages. */
+  private def countNodes(n: SparkPlan)(hit: SparkPlan => Boolean): Int = {
+    val kids = n match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case qs: QueryStageExec => Seq(qs.plan)
+      case other => other.children
+    }
+    (if (hit(n)) 1 else 0) + kids.map(countNodes(_)(hit)).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
@@ -45,22 +60,9 @@ object Plans {
       // fact-sized input here is a serial stage at 100 TB. Counted from
       // the plan TREE (partitionSpec.isEmpty), not the string, and
       // pinned per query by PlanShapeSpec's global-window allowlist.
-      val gwin = {
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-        import org.apache.spark.sql.execution.window.WindowExec
-        def walk(n: org.apache.spark.sql.execution.SparkPlan): Int = {
-          val self = n match {
-            case w: WindowExec if w.partitionSpec.isEmpty => 1
-            case _ => 0
-          }
-          val kids = n match {
-            case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-            case qs: QueryStageExec => Seq(qs.plan)
-            case other => other.children
-          }
-          self + kids.map(walk).sum
-        }
-        walk(df.queryExecution.executedPlan)
+      val gwin = countNodes(df.queryExecution.executedPlan) {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _ => false
       }
       val flags = Seq(
         if (p.contains("TakeOrderedAndProject")) "topK" else "",
@@ -74,8 +76,13 @@ object Plans {
       val exch = count(p, "Exchange hashpartitioning") +
         count(p, "Exchange rangepartitioning") +
         count(p, "Exchange SinglePartition")
-      // codegen stages print as "*(n) Operator" — count distinct ids
-      val wsc = "\\*\\((\\d+)\\)".r.findAllMatchIn(p).map(_.group(1)).toSet.size
+      // whole-stage codegen spans in the final tree; the "*(n)" ids in
+      // the plan string follow adaptive stage-creation order, so their
+      // count moved between runs of one build
+      val wsc = countNodes(df.queryExecution.executedPlan) {
+        case _: WholeStageCodegenExec => true
+        case _ => false
+      }
       f"| $name | $exch | ${if (joins.isEmpty) "—" else joins} | $wsc | ${if (flags.isEmpty) "—" else flags} |"
     }
 

@@ -64,31 +64,39 @@ object AnnIvf {
     * matter how its leading ids are arranged (a fixed seed window would
     * false-fail a corpus whose lowest ids are padding duplicates). */
   def train(emb: DataFrame, vecCol: String, idCol: String, k: Int,
-      iters: Int): IvfModel = {
-    var centroids = emb
-      .select(col(vecCol).as("v"), col(idCol).cast("long").as("i"))
+      iters: Int): IvfModel =
+    IvfModel(lloyd(emb, col(vecCol), col(idCol), k, iters,
+      n => s"only $n distinct seed vectors in the corpus " +
+        s"(< k=$k) — too degenerate to seed a full coarse quantizer")(
+      nearestCid(col(vecCol), _)))
+
+  /** Lloyd's k-means over the vector column `vec`, shared by [[train]]
+    * and AnnPq.train. Seeds are the k distinct vectors with the
+    * smallest first-appearance `id`; fewer than k fails with
+    * `tooFew(found)`. Each iteration assigns every row with
+    * `assign(centroids)` (an int id in 0 until k), then updates each
+    * centroid to its members' per-position mean in one
+    * map-side-combinable groupBy; only the k centroids reach the
+    * driver. Empty clusters keep their previous centroid. */
+  private[ops] def lloyd(emb: DataFrame, vec: Column, id: Column, k: Int,
+      iters: Int, tooFew: Int => String)(
+      assign: Array[Array[Float]] => Column): Array[Array[Float]] = {
+    val seeds = emb.select(vec.as("v"), id.cast("long").as("i"))
       .groupBy("v").agg(min(col("i")).as("first_id"))
       .orderBy("first_id").limit(k)
       .select("v").collect().map(_.getSeq[Float](0).toArray)
-    require(centroids.length == k,
-      s"only ${centroids.length} distinct seed vectors in the corpus " +
-        s"(< k=$k) — too degenerate to seed a full coarse quantizer")
-    var it = 0
-    while (it < iters) {
-      val assigned = emb.withColumn("cid", nearestCid(col(vecCol), centroids))
-      val means = assigned
-        .select(col("cid"), posexplode(col(vecCol)).as(Seq("pos", "x")))
+    require(seeds.length == k, tooFew(seeds.length))
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      val means = emb
+        .select(assign(cents).as("cid"), posexplode(vec).as(Seq("pos", "x")))
         .groupBy("cid", "pos").agg(avg(col("x").cast("double")).as("m"))
         .groupBy("cid").agg(array_sort(collect_list(struct(col("pos"), col("m"))))
           .as("pm"))
         .select(col("cid"), transform(col("pm"), _.getField("m").cast("float"))
           .as("centroid"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-      // empty clusters keep their previous centroid
-      centroids = centroids.zipWithIndex.map { case (c, i) => means.getOrElse(i, c) }
-      it += 1
+      cents.zipWithIndex.map { case (c, i) => means.getOrElse(i, c) }
     }
-    IvfModel(centroids)
   }
 
   /** Corpus with its bucket assignment under `model`. */

@@ -75,34 +75,14 @@ object AnnPq {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val dsub = dim / m
     val codebooks = (0 until m).toArray.map { s =>
-      var cents = emb
-        .select(slice(col(vecCol), s * dsub + 1, dsub).as("sv"),
-          col(idCol).cast("long").as("i"))
-        .groupBy("sv").agg(min(col("i")).as("first_id"))
-        .orderBy("first_id").limit(ksub)
-        .select("sv").collect().map(_.getSeq[Float](0).toArray)
-      require(cents.length == ksub,
-        s"subspace $s: only ${cents.length} distinct seed sub-vectors in " +
+      val sv = slice(col(vecCol), s * dsub + 1, dsub)
+      AnnIvf.lloyd(emb, sv, col(idCol), ksub, iters,
+        n => s"subspace $s: only $n distinct seed sub-vectors in " +
           s"the corpus (< ksub=$ksub) — too degenerate to train a full " +
-          "codebook")
-      val model0 = PqModel(dim, m, ksub, Array.fill(m)(cents)) // slice helper only
-      var it = 0
-      while (it < iters) {
-        val dists = array(cents.map(c => l2sq(subVec(col(vecCol), model0, s), c)): _*)
-        val code = (array_position(dists, array_min(dists)) - 1).cast("int")
-        val means = emb.select(code.as("code"),
-            posexplode(subVec(col(vecCol), model0, s)).as(Seq("pos", "x")))
-          .groupBy("code", "pos").agg(avg(col("x").cast("double")).as("mu"))
-          .groupBy("code").agg(array_sort(collect_list(struct(col("pos"), col("mu"))))
-            .as("pm"))
-          .select(col("code"), transform(col("pm"), _.getField("mu").cast("float"))
-            .as("centroid"))
-          .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-        // empty codes keep their previous centroid
-        cents = cents.zipWithIndex.map { case (c, i) => means.getOrElse(i, c) }
-        it += 1
+          "codebook") { cents =>
+        val dists = array(cents.map(c => l2sq(sv, c)): _*)
+        (array_position(dists, array_min(dists)) - 1).cast("int")
       }
-      cents
     }
     PqModel(dim, m, ksub, codebooks)
   }

@@ -1330,9 +1330,7 @@ object DriftQueries {
     val d = SeriesStats.daily2(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
+    val recent = SeriesStats.trailingYear(d)
       .select(col("rev"),
         // Sunday-epoch dow: 1995-01-01 was a Sunday; weekend = {0,6}
         (pmod(col("t"), lit(7L)).isin(0L, 6L)).as("is_we"))
@@ -1373,7 +1371,7 @@ object DriftQueries {
       |  FROM daily),
       |recent AS (
       |  SELECT rev, ((t % 7) + 7) % 7 IN (0, 6) AS is_we
-      |  FROM d, (SELECT MAX(t) AS tmax FROM d) WHERE t > tmax - 365),
+      |  ${SeriesStats.trailingYearSql("d")}),
       |h AS (
       |  SELECT rev, COUNT(*) AS l,
       |    COUNT(*) FILTER (WHERE NOT is_we) AS lx

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Parity.rnd
@@ -107,6 +107,35 @@ object GraphQueries {
        |ORDER BY rnk""".stripMargin
   }
 
+  /** Per-order part baskets (l_orderkey, ps = the sorted distinct
+    * l_partkey set) in ONE order-keyed shuffle — collect_set dedupes
+    * line items of the same part, with partial aggregation map-side —
+    * so [[basketPairs]] can emit the ≤ C(7,2) co-purchase pairs of each
+    * basket map-side. This replaced a distinct + self-join build that
+    * paid three fact-sized exchanges for the same bounded pair set.
+    * [[partBasketsSql]] (the `lp` rows, one per distinct (order, part))
+    * is its oracle twin; the two change together. */
+  private[ops] def partBaskets(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_partkey"))
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+
+  /** The oracle twin of [[partBaskets]]; the two change together. */
+  private[ops] val partBasketsSql: String =
+    "SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem"
+
+  /** Every pair (x, y), x before y, of the sorted distinct array column
+    * `arr` as an exploded struct with fields `a` and `b` — one row per
+    * unordered pair, C(k, 2) per array of k, generated map-side. The
+    * oracle mirrors it with a self-join on the basket key and
+    * `a < b`. */
+  private[ops] def basketPairs(arr: String, a: String, b: String): Column =
+    explode(expr(
+      s"""flatten(transform($arr, (x, i) ->
+         |  transform(slice($arr, i + 2, size($arr) - i - 1),
+         |    y -> struct(x AS $a, y AS $b))))""".stripMargin))
+
   /** Exact triangle counting on the part co-purchase graph (parts are
     * adjacent when some order contains both) via [[Triangles]] —
     * degree-ordered orientation, each triangle found exactly once.
@@ -125,20 +154,8 @@ object GraphQueries {
     * ~24 MB here and still executor-sized at SF 1000 since the part
     * dimension grows far slower than lineitem. */
   def q105Triangles(s: SparkSession, dir: String): DataFrame = {
-    // per-order baskets in ONE shuffle (collect_set dedupes line items of
-    // the same part), then the ≤ C(7,2) ordered pairs per basket are
-    // generated map-side from the sorted array — replacing the previous
-    // distinct + self-join build, which paid three fact-sized exchanges
-    // (distinct, then a re-shuffle of each join side onto the order key)
-    // for the same bounded pair set
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-    val edges = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+    val edges = partBaskets(s, dir)
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
     val tri = Triangles.perVertex(edges, "u", "v", broadcastAdj = true)
     tri.orderBy(col("n_tri").desc, col("id")).limit(15)
@@ -150,7 +167,7 @@ object GraphQueries {
   }
 
   val q105TrianglesSql: String =
-    """WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+    s"""WITH lp AS ($partBasketsSql),
       |canon AS (SELECT DISTINCT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p),
       |deg AS (SELECT id, COUNT(*) AS d FROM
@@ -214,10 +231,7 @@ object GraphQueries {
     val pairs = items.groupBy("ok")
       .agg(sort_array(collect_set(col("brand"))).as("bs"))
       .repartition(s.sparkContext.defaultParallelism, xxhash64(col("ok")))
-      .select(explode(expr(
-        """flatten(transform(bs, (x, i) ->
-          |  transform(slice(bs, i + 2, size(bs) - i - 1),
-          |    y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
+      .select(basketPairs("bs", "a", "b").as("p"))
       .groupBy(col("p.a").as("brand_a"), col("p.b").as("brand_b"))
       .agg(count(lit(1)).as("c_ab"))
     pairs
@@ -275,18 +289,12 @@ object GraphQueries {
     * one-row cross join — is needed). Everything is bounded by
     * |edges|, never corpus². */
   def q174Assortativity(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+    val canon = partBaskets(s, dir)
       // r19: re-spread the CPU-bound pair explode (see q207) — AQE's
       // byte-based coalescing ran it 4-way on this byte-tiny frame
       .repartition(s.sparkContext.defaultParallelism,
         xxhash64(col("l_orderkey")))
-    val canon = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
       // one materialization of the bounded edge set: the degree census
@@ -319,8 +327,8 @@ object GraphQueries {
   }
 
   val q174AssortativitySql: String =
-    """WITH lp AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+    s"""WITH lp AS (
+      |  $partBasketsSql),
       |canon AS (
       |  SELECT DISTINCT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p),
@@ -351,18 +359,12 @@ object GraphQueries {
     * dimension join; both censuses are ≤|brands|-group map-side
     * combinable aggs; m rides as a driver scalar (q121 discipline). */
   def q176Modularity(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
     // one materialization: the distinct edge set feeds the scalar m,
     // both census joins AND the node census — without the checkpoint
     // the fact-sized pair build re-executes three times (q101/q178
     // lineage discipline; measured 3.9 s -> ~1.5 s at sf0.1)
-    val canon = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+    val canon = partBaskets(s, dir)
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
       .localCheckpoint()
@@ -403,8 +405,8 @@ object GraphQueries {
   }
 
   val q176ModularitySql: String =
-    """WITH lp AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+    s"""WITH lp AS (
+      |  $partBasketsSql),
       |canon AS (
       |  SELECT DISTINCT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p),
@@ -458,17 +460,11 @@ object GraphQueries {
     * on the [[Fixpoint]] driver over the visited (id, hop) set, whose
     * changed rows are the new frontier; all counts/sums exact int64. */
   def q178BfsHops(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+    val canon = partBaskets(s, dir)
       // r19: re-spread the CPU-bound pair explode (see q207/q174)
       .repartition(s.sparkContext.defaultParallelism,
         xxhash64(col("l_orderkey")))
-    val canon = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).drop("c")
@@ -502,8 +498,8 @@ object GraphQueries {
   }
 
   val q178BfsHopsSql: String =
-    """WITH RECURSIVE lp AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+    s"""WITH RECURSIVE lp AS (
+      |  $partBasketsSql),
       |canon AS (
       |  SELECT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p
@@ -536,23 +532,17 @@ object GraphQueries {
     * triangle machinery (degree-ordered wedge join), and two keyed
     * aggs. Nothing beyond what q105 already pays. */
   def q194ClusteringCoef(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      // r19: re-spread the CPU-bound pair explode (see q207/q174)
-      .repartition(s.sparkContext.defaultParallelism,
-        xxhash64(col("l_orderkey")))
     // pairs off a sorted distinct basket are already canonical per
     // order (u < v, non-null); ONE distinct collapses cross-order
     // duplicates, then the fused operator checkpoints once and shares
     // its degree census between orientation and the cc denominator —
     // r19: the previous perVertex composition re-canonicalized (an
     // extra 3M-edge exchange + 100 MB checkpoint) and re-derived deg
-    val edges = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+    val edges = partBaskets(s, dir)
+      // r19: re-spread the CPU-bound pair explode (see q207/q174)
+      .repartition(s.sparkContext.defaultParallelism,
+        xxhash64(col("l_orderkey")))
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v")).distinct()
     val dt = Triangles.perVertexWithDeg(edges, "u", "v",
       broadcastAdj = true)
@@ -565,7 +555,7 @@ object GraphQueries {
   }
 
   val q194ClusteringCoefSql: String =
-    """WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+    s"""WITH lp AS ($partBasketsSql),
       |canon AS (SELECT DISTINCT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p),
       |deg AS (SELECT id, COUNT(*) AS deg FROM
@@ -635,10 +625,7 @@ object GraphQueries {
     val wq = floor(lit(1.0e6) / log(size(col("bs")).cast("double")) +
       lit(0.5)).cast("long")
     baskets.withColumn("wq", wq)
-      .select(explode(expr(
-        """flatten(transform(bs, (x, i) ->
-          |  transform(slice(bs, i + 2, size(bs) - i - 1),
-          |    y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"),
+      .select(basketPairs("bs", "a", "b").as("p"),
         col("wq"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("cn"), sum(col("wq")).as("aaq"))
@@ -746,17 +733,11 @@ object GraphQueries {
     * census broadcast onto edges (the q174 pattern); the 4-row ladder
     * broadcasts over two small censuses — fact data is scanned once. */
   def q245RichClub(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+    val edges = partBaskets(s, dir)
       // r19: re-spread the CPU-bound pair explode (see q207/q174)
       .repartition(s.sparkContext.defaultParallelism,
         xxhash64(col("l_orderkey")))
-    val edges = baskets.select(explode(expr(
-      """flatten(transform(ps, (x, i) ->
-        |  transform(slice(ps, i + 2, size(ps) - i - 1),
-        |    y -> struct(x AS u, y AS v))))""".stripMargin)).as("e"))
+      .select(basketPairs("ps", "u", "v").as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v")).distinct()
       .localCheckpoint(eager = false)
     val deg = edges.select(col("u").as("id"))
@@ -791,8 +772,7 @@ object GraphQueries {
   }
 
   val q245RichClubSql: String =
-    """WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-      |  FROM lineitem),
+    s"""WITH lp AS ($partBasketsSql),
       |canon AS (SELECT DISTINCT a.p AS u, b.p AS v
       |  FROM lp a JOIN lp b ON a.ok = b.ok AND a.p < b.p),
       |deg AS (SELECT id, COUNT(*) AS deg FROM
@@ -860,10 +840,7 @@ object GraphQueries {
     val raq = floor(lit(1.0e6) / size(col("bs")).cast("double") +
       lit(0.5)).cast("long")
     val pairs = baskets.withColumn("raq", raq)
-      .select(explode(expr(
-        """flatten(transform(bs, (x, i) ->
-          |  transform(slice(bs, i + 2, size(bs) - i - 1),
-          |    y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"),
+      .select(basketPairs("bs", "a", "b").as("p"),
         col("raq"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("cn"), sum(col("raq")).as("raqs"))

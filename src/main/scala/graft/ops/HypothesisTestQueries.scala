@@ -358,9 +358,7 @@ object HypothesisTestQueries {
     * prefix windows run over it (at fact scale the same ranks come
     * from [[RangedNtile]]/[[PrefixSum]]). */
   def q226Pettitt(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
+    val d = SeriesStats.daily(s, dir)
     // doubled average ranks via the census trick: rows with equal rev
     // share rank (2·cum − n + 1) in doubled units
     val cen = d.groupBy("rev").agg(count(lit(1)).as("n"))
@@ -392,11 +390,8 @@ object HypothesisTestQueries {
   }
 
   val q226PettittSql: String =
-    """WITH d AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1),
+    s"""WITH d AS (
+      |  ${SeriesStats.dailySql}),
       |cen AS (SELECT rev, COUNT(*) AS n FROM d GROUP BY rev),
       |r2 AS (
       |  SELECT rev,
@@ -749,11 +744,7 @@ object HypothesisTestQueries {
     * sort of fact data beyond the census ranks. */
   def q244CramerVonMises(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+    val o = LocationTests.buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("gx"),
         Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(
@@ -792,11 +783,10 @@ object HypothesisTestQueries {
   }
 
   val q244CramerVonMisesSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment = 'BUILDING' AS gx,
       |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')),
+      |  ${LocationTests.buildingFurnitureSql}),
       |cen AS (
       |  SELECT c, COUNT(*) AS n_all,
       |    CAST(SUM(CASE WHEN gx THEN 1 ELSE 0 END) AS BIGINT) AS nx,

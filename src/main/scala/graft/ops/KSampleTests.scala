@@ -318,6 +318,33 @@ object KSampleTests {
       |FROM t2 ORDER BY seg""".stripMargin
 
 
+  /** The complete blocks of the (month, priority) revenue census:
+    * (mon, pr, rev int64 whole dollars, npr), kept only for months in
+    * which all five priorities transact (npr = 5) — the blocked design
+    * of q241, q243 and q409. [[completeBlocksSql]] is its oracle twin;
+    * the two change together. */
+  private[ops] def completeBlocks(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(trunc(col("o_orderdate"), "month").as("mon"),
+        col("o_orderpriority").as("pr"))
+      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
+      .withColumn("npr", count(lit(1)).over(Window.partitionBy("mon")))
+      .filter(col("npr") === 5)
+
+  /** The `d` and `complete` CTEs, the oracle twin of
+    * [[completeBlocks]]; the two change together. */
+  private[ops] val completeBlocksSql: String =
+    """d AS (
+      |  SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS mon,
+      |    o_orderpriority AS pr,
+      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
+      |      AS rev
+      |  FROM orders GROUP BY 1, 2),
+      |complete AS (
+      |  SELECT * FROM (
+      |    SELECT *, COUNT(*) OVER (PARTITION BY mon) AS npr FROM d)
+      |  WHERE npr = 5)""".stripMargin
+
   /** L175 Friedman test (Friedman 1937 [PK]): the rank-based
     * repeated-measures design — blocks = MONTHS (kept only when all 5
     * priorities transact in the month; days are too sparse — at
@@ -341,13 +368,7 @@ object KSampleTests {
     * per-month ranks run on month-partitioned 5-row windows; ≤5-row
     * algebra after. */
   def q241Friedman(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(trunc(col("o_orderdate"), "month").as("mon"),
-        col("o_orderpriority").as("pr"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
-    val wDay = Window.partitionBy("mon")
-    val complete = d.withColumn("npr", count(lit(1)).over(wDay))
-      .filter(col("npr") === 5)
+    val complete = completeBlocks(s, dir)
     // doubled average rank: 2*RANK + (#ties at this rev) - 1
     val wRank = Window.partitionBy("mon").orderBy("rev")
     val wTies = Window.partitionBy("mon", "rev")
@@ -374,16 +395,7 @@ object KSampleTests {
 
 
   val q241FriedmanSql: String =
-    """WITH d AS (
-      |  SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS mon,
-      |    o_orderpriority AS pr,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1, 2),
-      |complete AS (
-      |  SELECT * FROM (
-      |    SELECT *, COUNT(*) OVER (PARTITION BY mon) AS npr FROM d)
-      |  WHERE npr = 5),
+    s"""WITH $completeBlocksSql,
       |ranked AS (
       |  SELECT pr,
       |    2 * RANK() OVER (PARTITION BY mon ORDER BY rev)
@@ -417,13 +429,7 @@ object KSampleTests {
     *
     * Scale: identical to q241 — census windows and ≤5-row algebra. */
   def q243PageTrend(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(trunc(col("o_orderdate"), "month").as("mon"),
-        col("o_orderpriority").as("pr"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
-    val wMon = Window.partitionBy("mon")
-    val complete = d.withColumn("npr", count(lit(1)).over(wMon))
-      .filter(col("npr") === 5)
+    val complete = completeBlocks(s, dir)
     val wRank = Window.partitionBy("mon").orderBy("rev")
     val wTies = Window.partitionBy("mon", "rev")
     val ranked = complete
@@ -452,16 +458,7 @@ object KSampleTests {
 
   val q243PageTrendSql: String = {
     val z = "((CAST(l2 AS DOUBLE) - 90.0 * b) / (10.0 * SQRT(CAST(b AS DOUBLE))))"
-    s"""WITH d AS (
-       |  SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS mon,
-       |    o_orderpriority AS pr,
-       |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-       |      AS rev
-       |  FROM orders GROUP BY 1, 2),
-       |complete AS (
-       |  SELECT * FROM (
-       |    SELECT *, COUNT(*) OVER (PARTITION BY mon) AS npr FROM d)
-       |  WHERE npr = 5),
+    s"""WITH $completeBlocksSql,
        |ranked AS (
        |  SELECT pr, CAST(SUBSTRING(pr, 1, 1) AS BIGINT) AS sc,
        |    2 * RANK() OVER (PARTITION BY mon ORDER BY rev)
@@ -936,13 +933,7 @@ object KSampleTests {
     * b-row block-rank window), b-row broadcast join back, ≤5-row
     * algebra. */
   def q409Quade(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(trunc(col("o_orderdate"), "month").as("mon"),
-        col("o_orderpriority").as("pr"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
-    val wMon = Window.partitionBy("mon")
-    val complete = d.withColumn("npr", count(lit(1)).over(wMon))
-      .filter(col("npr") === 5)
+    val complete = completeBlocks(s, dir)
     val wRank = Window.partitionBy("mon").orderBy("rev")
     val wTies = Window.partitionBy("mon", "rev")
     val ranked = complete
@@ -981,16 +972,7 @@ object KSampleTests {
   }
 
   val q409QuadeSql: String =
-    """WITH d AS (
-      |  SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS mon,
-      |    o_orderpriority AS pr,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1, 2),
-      |complete AS (
-      |  SELECT * FROM (
-      |    SELECT *, COUNT(*) OVER (PARTITION BY mon) AS npr FROM d)
-      |  WHERE npr = 5),
+    s"""WITH $completeBlocksSql,
       |ranked AS (
       |  SELECT mon, pr,
       |    2 * RANK() OVER (PARTITION BY mon ORDER BY rev)

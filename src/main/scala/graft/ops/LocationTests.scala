@@ -24,6 +24,49 @@ import StatFns.{asTwoSidedP, asTwoSidedPSql}
   */
 object LocationTests {
 
+  /** The URGENT-vs-LOW two-group sample as its value census: per
+    * int64-cents order price `c`, the order count `n` and the 1-URGENT
+    * count `n1` over orders of priority 1-URGENT or 5-LOW (q210, q250,
+    * q385). [[urgentLowCensusSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] def urgentLowCensus(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
+      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
+        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
+      .groupBy("c")
+      .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
+
+  /** The `f` and `cen` CTEs, the oracle twin of [[urgentLowCensus]];
+    * the two change together. */
+  private[ops] val urgentLowCensusSql: String =
+    """f AS (
+      |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c,
+      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g1
+      |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
+      |cen AS (
+      |  SELECT c, COUNT(*) AS n, CAST(SUM(g1) AS BIGINT) AS n1
+      |  FROM f GROUP BY c)""".stripMargin
+
+  /** The BUILDING-vs-FURNITURE two-group sample: orders joined to
+    * their customer's market segment (a broadcast dimension join),
+    * kept for those two segments. Callers project their own segment
+    * flag and price (q231, q244, q247, q303, q361).
+    * [[buildingFurnitureSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] def buildingFurniture(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(broadcast(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment"))),
+        col("o_custkey") === col("c_custkey"))
+      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+
+  /** The `FROM … WHERE` clause, the oracle twin of
+    * [[buildingFurniture]]; the two change together. */
+  private[ops] val buildingFurnitureSql: String =
+    """FROM orders JOIN customer ON o_custkey = c_custkey
+      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')""".stripMargin
+
   /** L147 Mann–Whitney U rank-sum test (Mann & Whitney 1947 [PK]):
     * does the URGENT order population spend differently from the LOW
     * one? The NONPARAMETRIC two-sample location test — q172's z-test
@@ -45,12 +88,7 @@ object LocationTests {
     * window is the semantic mirror only. */
   def q210MannWhitney(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val f = Tables.orders(s, dir)
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
-    val cen = f.groupBy("c")
-      .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
+    val cen = urgentLowCensus(s, dir)
     val cum = graft.ops.PrefixSum.withPrefixSums(cen,
       Seq(col("c")), Seq((col("n"), "cumn")))
     val g = cum.agg(
@@ -74,13 +112,7 @@ object LocationTests {
 
 
   val q210MannWhitneySql: String =
-    """WITH f AS (
-      |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c,
-      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g1
-      |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-      |cen AS (
-      |  SELECT c, COUNT(*) AS n, CAST(SUM(g1) AS BIGINT) AS n1
-      |  FROM f GROUP BY c),
+    s"""WITH $urgentLowCensusSql,
       |cum AS (
       |  SELECT c, n, n1,
       |    SUM(n) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING) AS cumn
@@ -119,11 +151,7 @@ object LocationTests {
     * after is 1-row algebra. */
   def q231WelchTtest(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+    val o = buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("ga"),
         floor(col("o_totalprice") + 0.5).cast("long").as("v"))
     val g = o.groupBy("ga")
@@ -157,11 +185,10 @@ object LocationTests {
 
 
   val q231WelchTtestSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment = 'BUILDING' AS ga,
       |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')),
+      |  $buildingFurnitureSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -208,11 +235,7 @@ object LocationTests {
     * Scale: the q231 shape — one 2-group moment agg, 1-row algebra. */
   def q247EffectSize(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+    val o = buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("ga"),
         floor(col("o_totalprice") + 0.5).cast("long").as("v"))
     val g = o.groupBy("ga")
@@ -246,11 +269,10 @@ object LocationTests {
 
 
   val q247EffectSizeSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment = 'BUILDING' AS ga,
       |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')),
+      |  $buildingFurnitureSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -304,12 +326,7 @@ object LocationTests {
     * fact-data sort. */
   def q250CliffsDelta(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val f = Tables.orders(s, dir)
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
-    val cen = f.groupBy("c")
-      .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
+    val cen = urgentLowCensus(s, dir)
     val cum = graft.ops.PrefixSum.withPrefixSums(cen,
       Seq(col("c")), Seq((col("n"), "cumn")))
     val g = cum.agg(
@@ -331,13 +348,7 @@ object LocationTests {
 
 
   val q250CliffsDeltaSql: String =
-    """WITH f AS (
-      |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c,
-      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g1
-      |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-      |cen AS (
-      |  SELECT c, COUNT(*) AS n, CAST(SUM(g1) AS BIGINT) AS n1
-      |  FROM f GROUP BY c),
+    s"""WITH $urgentLowCensusSql,
       |cum AS (
       |  SELECT *, CAST(SUM(n) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING)
       |    AS BIGINT) AS cumn
@@ -488,11 +499,7 @@ object LocationTests {
     * plan exactly. */
   def q361Tost(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+    val o = buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("ga"),
         floor(col("o_totalprice") + 0.5).cast("long").as("v"))
     val g = o.groupBy("ga")
@@ -534,11 +541,10 @@ object LocationTests {
 
 
   val q361TostSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment = 'BUILDING' AS ga,
       |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')),
+      |  $buildingFurnitureSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -1010,12 +1016,7 @@ object LocationTests {
     * is 1-row algebra. */
   def q385SiegelTukey(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val f = Tables.orders(s, dir)
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("g1"))
-    val cen = f.groupBy("c")
-      .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1"))
+    val cen = urgentLowCensus(s, dir)
     // r20 (verdict mandate #2): totals fused into the prefix pass —
     // the old cen.agg re-executed the fact-scale census build
     val cum = graft.ops.PrefixSum.withPrefixSumsAndTotals(cen,
@@ -1061,13 +1062,7 @@ object LocationTests {
   }
 
   val q385SiegelTukeySql: String =
-    """WITH f AS (
-      |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c,
-      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g1
-      |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-      |cen AS (
-      |  SELECT c, COUNT(*) AS n, CAST(SUM(g1) AS BIGINT) AS n1
-      |  FROM f GROUP BY c),
+    s"""WITH $urgentLowCensusSql,
       |tot AS (
       |  SELECT CAST(SUM(n) AS BIGINT) AS nt,
       |    CAST(SUM(n1) AS BIGINT) AS n1t,

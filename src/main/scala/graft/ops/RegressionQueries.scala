@@ -565,10 +565,7 @@ object RegressionQueries {
     * scale-constant census, ONE 9-moment aggregate, 3-row output. */
   def q370VifPanel(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
+    val d = SeriesStats.daily2(s, dir)
     val w = Window.orderBy("day").rowsBetween(-6, 0)
     val base = d
       .withColumn("ma7", sum(col("rev")).over(w))
@@ -632,11 +629,7 @@ object RegressionQueries {
   }
 
   val q370VifPanelSql: String =
-    """WITH d AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS cnt,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1),
+    s"""WITH d AS (${SeriesStats.daily2Sql}),
       |b AS (
       |  SELECT CAST(cnt AS HUGEINT) AS x1, CAST(rev AS HUGEINT) AS x2,
       |    CAST(SUM(rev) OVER (ORDER BY day

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import SeriesStats.{daily, dailySql}
 
 /** Robustness finishers (round 13, batch 6): the two checks that
   * guard the conclusions the existing families already draw.
@@ -21,18 +22,6 @@ import org.apache.spark.sql.functions._
 object RobustTests {
 
   private val dec = "decimal(38,0)"
-
-  /** Whole-dollar daily revenue census (the q253/q290 series). */
-  private def daily(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
-
-  private val dailySql: String =
-    """SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1""".stripMargin
 
   /** L236 Dickey–Fuller unit-root test ([PK] Dickey & Fuller 1979;
     * MacKinnon 1994 critical values): Δy_t = α + ρ·y_{t−1} + ε over
@@ -370,11 +359,7 @@ object RobustTests {
     * the first groupBy is census-sized. Guards: h < 2 on either side
     * → null. */
   def q303YuenTrimmed(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
+    val o = LocationTests.buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("ga"),
         floor(col("o_totalprice") + 0.5).cast("long").as("v"))
     val census = o.groupBy("ga", "v").agg(count(lit(1)).as("c"))
@@ -431,11 +416,10 @@ object RobustTests {
   }
 
   val q303YuenTrimmedSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment = 'BUILDING' AS ga,
       |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')),
+      |  ${LocationTests.buildingFurnitureSql}),
       |census AS (SELECT ga, v, COUNT(*) AS c FROM o GROUP BY ga, v),
       |cum0 AS (
       |  SELECT ga, v, c,

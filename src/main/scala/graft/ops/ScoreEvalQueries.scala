@@ -749,9 +749,7 @@ object ScoreEvalQueries {
     * is O(k log k) per row over the scale-constant census (the q205
     * convention); ≤6-row output. */
   def q382PinballLoss(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
+    val d = SeriesStats.daily(s, dir)
     val wPrev = Window.orderBy("day").rowsBetween(-28, -1)
     val base = d
       .withColumn("arr", sort_array(collect_list(col("rev")).over(wPrev)))
@@ -784,11 +782,8 @@ object ScoreEvalQueries {
   }
 
   val q382PinballLossSql: String =
-    """WITH d AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS rev
-      |  FROM orders GROUP BY 1),
+    s"""WITH d AS (
+      |  ${SeriesStats.dailySql}),
       |b AS (
       |  SELECT day, rev,
       |    list_sort(array_agg(rev) OVER (ORDER BY day
@@ -921,9 +916,7 @@ object ScoreEvalQueries {
     * from day 101. Rolling exact order statistics ride the q205
     * collect+sort idiom over the scale-constant day census. */
   private def varBreaches(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") + 0.5).cast("long")).as("rev"))
+    val d = SeriesStats.daily(s, dir)
     val w = Window.orderBy("day").rowsBetween(-100, -1)
     d.withColumn("ws", sort_array(collect_list(col("rev")).over(w)))
       .withColumn("k", size(col("ws")))
@@ -934,16 +927,13 @@ object ScoreEvalQueries {
   }
 
   private val varBreachesSql: String =
-    """SELECT day, rev, ws[5] AS var95,
+    s"""SELECT day, rev, ws[5] AS var95,
       |  CASE WHEN rev < ws[5] THEN 1 ELSE 0 END AS breach
       |FROM (
       |  SELECT day, rev,
       |    list_sort(list(rev) OVER (ORDER BY day
       |      ROWS BETWEEN 100 PRECEDING AND 1 PRECEDING)) AS ws
-      |  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-      |      CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
-      |        AS BIGINT) AS rev
-      |    FROM orders GROUP BY 1))
+      |  FROM (${SeriesStats.dailySql}))
       |WHERE len(ws) = 100""".stripMargin
 
   /** L327 Kupiec proportion-of-failures VaR backtest *(added r17;

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql}
+import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql,
+  trailingYear, trailingYearSql}
 
 /** Spectral / entropy / long-range-dependence statistics on the daily
   * order-revenue series — the SeriesStats split (r14, the
@@ -787,10 +788,7 @@ object SeriesSpectral {
       Seq(col("day")), Seq((lit(1L), "rn")))
       .select(col("rn"), col("rev"))
       .localCheckpoint(eager = false)
-    val nmax = d0.agg(max(col("rn")).as("nmax"))
-    val rc = d0.crossJoin(broadcast(nmax))
-      .filter(col("rn") > col("nmax") - 365L)
-      .select(col("rn"), col("rev"))
+    val rc = trailingYear(d0, "rn").select(col("rn"), col("rev"))
     val st = rc.agg(count(lit(1)).as("nw"), sum(col("rev")).as("s"),
       sum(col("rev").cast(dec) * col("rev").cast(dec)).as("q"))
     val nD = col("nw").cast("double")
@@ -833,8 +831,7 @@ object SeriesSpectral {
   val q292SampleEntropySql: String =
     s"""WITH d AS ($dailySql),
        |r0 AS (SELECT ROW_NUMBER() OVER (ORDER BY day) AS rn, rev FROM d),
-       |rc AS (SELECT rn, rev FROM r0
-       |  WHERE rn > (SELECT MAX(rn) FROM r0) - 365),
+       |rc AS (SELECT rn, rev ${trailingYearSql("r0", "rn")}),
        |st AS (SELECT COUNT(*) AS nw, CAST(SUM(rev) AS BIGINT) AS s,
        |  SUM(CAST(rev AS HUGEINT) * rev) AS q FROM rc),
        |rc2 AS (

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   */
 object SeriesStats {
 
-  /** (day date, rev int64 whole dollars) — the shared series. */
+  /** (day date, rev int64 whole dollars) — the shared series.
+    * [[dailySql]] is its oracle twin; the two change together. */
   private[ops] def daily(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -39,6 +40,20 @@ object SeriesStats {
       |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
       |      AS rev
       |  FROM orders GROUP BY 1""".stripMargin
+
+  /** The trailing 365 days of a day-indexed frame: the rows whose `t`
+    * lies within 365 of the frame's maximum `t`, kept with that `tmax`.
+    * The maximum is a one-row aggregate broadcast back in-plan, so no
+    * driver action runs at DataFrame-build time. [[trailingYearSql]]
+    * is its oracle twin; the two change together. */
+  private[ops] def trailingYear(d: DataFrame, t: String = "t"): DataFrame =
+    d.crossJoin(broadcast(d.agg(max(col(t)).as("tmax"))))
+      .filter(col(t) > col("tmax") - 365)
+
+  /** `FROM rel WHERE t > MAX(t) - 365` — the oracle twin of
+    * [[trailingYear]]; the two change together. */
+  private[ops] def trailingYearSql(rel: String, t: String = "t"): String =
+    s"FROM $rel WHERE $t > (SELECT MAX($t) FROM $rel) - 365"
 
   /** L139 exact rolling median: 7-day (6 preceding + current) median of
     * daily revenue. Implemented as collect_list over the row frame +
@@ -88,10 +103,7 @@ object SeriesStats {
     val d = daily(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"))
+    val recent = trailingYear(d).select(col("t"), col("rev"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
       .select((col("b.rev") - col("a.rev")).as("dy"),
@@ -118,8 +130,7 @@ object SeriesStats {
     s"""WITH d AS ($dailySql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev FROM d),
-       |rc AS (SELECT t, rev FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dy, b.t - a.t AS dx,
        |    CAST(b.rev - a.rev AS DOUBLE) / CAST(b.t - a.t AS DOUBLE)
@@ -188,7 +199,8 @@ object SeriesStats {
   }
 
   /** (day, rev int64, cnt int64) — the two-series daily base for the
-    * dependence diagnostics (q211/q213). */
+    * dependence diagnostics (q211/q213). [[daily2Sql]] is its oracle
+    * twin; the two change together. */
   private[ops] def daily2(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -224,10 +236,7 @@ object SeriesStats {
     val d = daily2(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"), col("cnt"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"), col("cnt"))
+    val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
       .select((col("b.rev") - col("a.rev")).as("dx"),
@@ -255,8 +264,7 @@ object SeriesStats {
     s"""WITH d AS ($daily2Sql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev, cnt FROM d),
-       |rc AS (SELECT t, rev, cnt FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev, cnt ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dx, b.cnt - a.cnt AS dy
        |  FROM rc a JOIN rc b ON a.t < b.t),
@@ -613,10 +621,7 @@ object SeriesStats {
     val d = daily2(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"), col("cnt"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"), col("cnt"))
+    val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val ranked = recent
       .withColumn("r", row_number().over(
         Window.orderBy(col("rev"), col("t"))).cast("long"))
@@ -667,8 +672,7 @@ object SeriesStats {
       |      AS t, rev, cnt
       |  FROM daily),
       |recent AS (
-      |  SELECT t, rev, cnt FROM d, (SELECT MAX(t) AS tmax FROM d)
-      |  WHERE t > tmax - 365),
+      |  SELECT t, rev, cnt ${trailingYearSql("d")}),
       |ranked AS (
       |  SELECT t,
       |    CAST(ROW_NUMBER() OVER (ORDER BY rev, t) AS BIGINT) AS r,
@@ -720,10 +724,7 @@ object SeriesStats {
     val d = daily2(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"), col("cnt"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("rev"), col("cnt"))
+    val recent = trailingYear(d).select(col("rev"), col("cnt"))
       .localCheckpoint(eager = false)
     val med = recent.agg(expr("percentile(rev, 0.5)").as("mx"),
       expr("percentile(cnt, 0.5)").as("my"))
@@ -758,8 +759,7 @@ object SeriesStats {
       |      AS t, rev, cnt
       |  FROM daily),
       |recent AS (
-      |  SELECT rev, cnt FROM d, (SELECT MAX(t) AS tmax FROM d)
-      |  WHERE t > tmax - 365),
+      |  SELECT rev, cnt ${trailingYearSql("d")}),
       |med AS (
       |  SELECT quantile_cont(rev, 0.5) AS mx,
       |    quantile_cont(cnt, 0.5) AS my

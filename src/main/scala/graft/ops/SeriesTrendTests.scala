@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql}
+import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql,
+  trailingYear, trailingYearSql}
 
 /** Trend / randomness / location tests on the daily order-revenue
   * series — the SeriesStats split (r14, the EventQueries discipline:
@@ -84,10 +85,7 @@ object SeriesTrendTests {
     val d = daily2(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"), col("cnt"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"), col("cnt"))
+    val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
       .select((col("b.rev") - col("a.rev")).as("dx"),
@@ -119,8 +117,7 @@ object SeriesTrendTests {
     s"""WITH d AS ($daily2Sql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev, cnt FROM d),
-       |rc AS (SELECT t, rev, cnt FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev, cnt ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dx, b.cnt - a.cnt AS dy
        |  FROM rc a JOIN rc b ON a.t < b.t),
@@ -166,10 +163,7 @@ object SeriesTrendTests {
     // lazy checkpoint: BOTH consumers (pair build and tie census) read
     // the cut, so the scale-constant window materializes once and the
     // plan's nested-loop budget stays at the single final 1-row join
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"))
+    val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
@@ -210,8 +204,7 @@ object SeriesTrendTests {
     s"""WITH d AS ($dailySql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev FROM d),
-       |rc AS (SELECT t, rev FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |sa AS (
        |  SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
        |    WHEN b.rev < a.rev THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
@@ -520,10 +513,7 @@ object SeriesTrendTests {
     val d = daily(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"))
+    val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") <= col("b.t"))
@@ -541,8 +531,7 @@ object SeriesTrendTests {
     s"""WITH d AS ($dailySql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev FROM d),
-       |rc AS (SELECT t, rev FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT a.rev + b.rev AS walsh, a.t = b.t AS diag
        |  FROM rc a JOIN rc b ON a.t <= b.t),
@@ -576,10 +565,7 @@ object SeriesTrendTests {
     val d = daily(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         dayofweek(col("day")).cast("long").as("dow"), col("rev"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("dow"), col("rev"))
+    val recent = trailingYear(d).select(col("t"), col("dow"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")),
@@ -627,8 +613,7 @@ object SeriesTrendTests {
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t,
        |    CAST(dayofweek(day) + 1 AS BIGINT) AS dow, rev FROM d),
-       |rc AS (SELECT t, dow, rev FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, dow, rev ${trailingYearSql("dd")}),
        |sa AS (
        |  SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
        |    WHEN b.rev < a.rev THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
@@ -676,10 +661,7 @@ object SeriesTrendTests {
     val d = daily(s, dir)
       .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
         col("rev"))
-    val recent = d
-      .crossJoin(broadcast(d.agg(max(col("t")).as("tmax"))))
-      .filter(col("t") > col("tmax") - 365)
-      .select(col("t"), col("rev"))
+    val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
@@ -714,8 +696,7 @@ object SeriesTrendTests {
     s"""WITH d AS ($dailySql),
        |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
        |    AS BIGINT) AS t, rev FROM d),
-       |rc AS (SELECT t, rev FROM dd
-       |  WHERE t > (SELECT MAX(t) FROM dd) - 365),
+       |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |meta AS (
        |  SELECT COUNT(*) AS n,
        |    ((COUNT(*) // 2) + 1) * (COUNT(*) // 2) // 2 AS k,

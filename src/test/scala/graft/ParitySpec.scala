@@ -1,7 +1,7 @@
 package graft
 
 import java.math.BigDecimal
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -76,14 +76,17 @@ class ParitySpec extends SparkSpec {
     assert(eval(Parity.quant(_, 1e4), Double.NaN, null)._1 == Seq(0L, null))
   }
 
+  private def mainSources: List[Path] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("no source file outside Parity defines its own floor-rounding helper") {
     val helper = """\bdef (?:rnd\d+\w*|f?[rq]\d+)\(""".r
     def indent(l: String) = l.takeWhile(_ == ' ').length
-    val walk = Files.walk(Paths.get("src/main/scala"))
     val files =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filterNot(_.getFileName.toString == "Parity.scala").toList
-      finally walk.close()
+      mainSources.filterNot(_.getFileName.toString == "Parity.scala")
     val offenders = files.flatMap { p =>
       val lines = Files.readAllLines(p).asScala.toIndexedSeq
       lines.indices.filter { i =>
@@ -97,5 +100,33 @@ class ParitySpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"use Parity.fix / Parity.quant instead of: ${offenders.mkString(", ")}")
+  }
+
+  test("each shared sample is spelled only inside its owning builder") {
+    // needle -> the (file, object member) pairs allowed to spell it
+    val owners = Map(
+      """collect_set(col("l_partkey"))""" ->
+        Set("GraphQueries.scala" -> "partBaskets"),
+      "transform(slice(" -> Set("GraphQueries.scala" -> "basketPairs",
+        // a triple expansion, not the pair expansion
+        "AggQueries.scala" -> "q199Itemsets3"),
+      """col("tmax") - 365""" -> Set("SeriesStats.scala" -> "trailingYear"),
+      """floor(col("o_totalprice") + 0.5).cast("long")).as("rev")""" -> Set(
+        "SeriesStats.scala" -> "daily", "SeriesStats.scala" -> "daily2",
+        "KSampleTests.scala" -> "completeBlocks"))
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r.unanchored
+    val offenders = for {
+      p <- mainSources
+      lines = Files.readAllLines(p).asScala.toIndexedSeq
+      i <- lines.indices
+      (needle, allowed) <- owners
+      if lines(i).contains(needle)
+      owner = lines.take(i + 1).reverseIterator.collectFirst {
+        case member(m) => m
+      }
+      if !owner.exists(m => allowed(p.getFileName.toString -> m))
+    } yield s"$p:${i + 1} spells $needle"
+    assert(offenders.isEmpty,
+      s"use the family's builder instead of: ${offenders.mkString(", ")}")
   }
 }
