@@ -28,7 +28,8 @@ LIBM = re.compile(
 )
 ACC = re.compile(r"\b(sum|avg|mean)\s*\(", re.IGNORECASE)
 # quantize wrapper evidence inside the accumulated argument
-QUANT = re.compile(r"floor\s*\(|Parity\.(?:quant|fix)\s*\(", re.IGNORECASE)
+QUANT = re.compile(r"floor\s*\(|Parity\.(?:quant|fix)(?:Sql)?\s*\(",
+                   re.IGNORECASE)
 
 
 def balanced_arg(text: str, open_idx: int) -> str:
@@ -59,6 +60,25 @@ BIND_WITHCOL = re.compile(r'withColumn\("([A-Za-z_][A-Za-z0-9_]*)"')
 CONT_HEAD = re.compile(r"^\s*[.+\-*/&|:]")
 
 
+def splice_depth(line: str, depth: int) -> int:
+    """Brace depth of an open `${` splice after scanning `line` from
+    `depth` (`$$` is a literal dollar)."""
+    i = 0
+    while i < len(line):
+        c = line[i]
+        if depth == 0:
+            if c == "$" and i + 1 < len(line):
+                if line[i + 1] == "{":
+                    depth = 1
+                i += 1
+        elif c == "{":
+            depth += 1
+        elif c == "}":
+            depth -= 1
+        i += 1
+    return depth
+
+
 def logical_statements(text: str):
     """Join physical lines into logical statements: a statement
     continues while its parens/brackets are unbalanced or the next
@@ -69,12 +89,31 @@ def logical_statements(text: str):
     stay PER-LINE: SQL parens are unbalanced across lines, so merging
     would glue whole mirrors into one blob — a FLOOR anywhere would
     then mask every taint in it, and unrelated AS-names would absorb
-    taints from distant expressions (both observed in development)."""
-    lines = [
+    taints from distant expressions (both observed in development).
+    A `${...}` splice that a SQL line leaves open is glued back onto
+    that line with its continuation lines, so the SQL after the closing
+    brace (an `AS name`) is read as SQL of the line it sits in, not as
+    a Scala statement."""
+    raw = [
         l.split("//")[0]
         for l in text.split("\n")
         if not l.lstrip().startswith(("//", "*", "/*"))
     ]
+    lines, open_sql, d = [], None, 0
+    for l in raw:
+        if open_sql is not None:
+            open_sql += " " + l.strip()
+            d = splice_depth(l, d)
+        elif l.lstrip().startswith("|") or '"""' in l:
+            open_sql, d = l, splice_depth(l, 0)
+        else:
+            lines.append(l)
+        if d <= 0:
+            if open_sql is not None:
+                lines.append(open_sql)
+            open_sql, d = None, 0
+    if open_sql is not None:
+        lines.append(open_sql)
     out, buf, depth = [], [], 0
     for i, l in enumerate(lines):
         sql_line = l.lstrip().startswith("|") or '"""' in l
@@ -166,7 +205,25 @@ def tainted_names(text: str) -> set:
     return out
 
 
+def self_test() -> None:
+    """Planted layouts, checked before every audit: a quantSql twin
+    whose argument is split over Scala lines binds `tq` on its SQL line
+    and is clean; the same layout without the twin taints `tq`."""
+    q3 = '"' * 3
+    split_twin = (
+        f"  val qSql = s{q3}SELECT SUM(tq) AS t FROM (\n"
+        '    |  SELECT ${Parity.quantSql("CAST(w AS DOUBLE) * " +\n'
+        '        "ln(CAST(x AS DOUBLE))", 9)} AS tq\n'
+        f"    |  FROM t){q3}.stripMargin\n"
+    )
+    split_raw = split_twin.replace("Parity.quantSql(", "(").replace(
+        ", 9)}", ")}")
+    assert "tq" not in tainted_names(split_twin), split_twin
+    assert "tq" in tainted_names(split_raw), split_raw
+
+
 def main() -> int:
+    self_test()
     sites = []
     for f in sorted(SRC.rglob("*.scala")):
         text = f.read_text()

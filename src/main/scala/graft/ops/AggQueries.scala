@@ -688,12 +688,11 @@ object AggQueries {
        |  GROUP BY n_name, s_suppkey),
        |sh AS (
        |  SELECT n_name,
-       |    CAST(FLOOR(
-       |      (CAST(rev AS DOUBLE)
-       |        / CAST(SUM(rev) OVER (PARTITION BY n_name) AS DOUBLE))
-       |      * (CAST(rev AS DOUBLE)
-       |        / CAST(SUM(rev) OVER (PARTITION BY n_name) AS DOUBLE))
-       |      * 1e9 + 0.5) AS BIGINT) AS tq
+       |    ${Parity.quantSql("(CAST(rev AS DOUBLE)" +
+                              " / CAST(SUM(rev) OVER (PARTITION BY n_name) AS DOUBLE))" +
+                              " * (CAST(rev AS DOUBLE)" +
+                              " / CAST(SUM(rev) OVER (PARTITION BY n_name) AS DOUBLE))", 9)}
+       |      AS tq
        |  FROM r)
        |SELECT n_name, COUNT(*) AS n_suppliers,
        |  CAST(SUM(tq) AS DOUBLE) / 1e9 AS hhi
@@ -942,7 +941,7 @@ object AggQueries {
   }
 
   val q350HillTailSql: String =
-    """WITH top AS (
+    s"""WITH top AS (
       |  SELECT CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
       |  FROM orders ORDER BY v DESC LIMIT 201),
       |r AS (
@@ -950,19 +949,19 @@ object AggQueries {
       |m AS (
       |  SELECT COUNT(*) AS n, CAST(MIN(v) AS BIGINT) AS xref,
       |    CAST(SUM(CASE WHEN rn <= 200 THEN
-      |      CAST(FLOOR(LN(CAST(v AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
+      |      ${Parity.quantSql("LN(CAST(v AS DOUBLE))", 9)}
       |      ELSE 0 END) AS BIGINT) AS sl9
       |  FROM r),
       |fin AS (
       |  SELECT *,
       |    (CAST(sl9 AS DOUBLE) / 1e9 - 200.0
-      |      * (CAST(CAST(FLOOR(LN(CAST(xref AS DOUBLE)) * 1e9 + 0.5)
-      |          AS BIGINT) AS DOUBLE) / 1e9)) / 200.0 AS h
+      |      * (CAST(${Parity.quantSql("LN(CAST(xref AS DOUBLE))", 9)}
+      |          AS DOUBLE) / 1e9)) / 200.0 AS h
       |  FROM m)
       |SELECT CAST(200 AS BIGINT) AS k, xref AS x_kplus1,
       |  CASE WHEN n < 201 OR xref <= 0 THEN NULL
-      |    ELSE FLOOR(h * 1e6 + 0.5) / 1e6 + 0 END AS mean_log_excess,
+      |    ELSE ${Parity.fixSql("h", 6)} + 0 END AS mean_log_excess,
       |  CASE WHEN n < 201 OR xref <= 0 THEN NULL
-      |    ELSE FLOOR(1.0 / h * 1e4 + 0.5) / 1e4 + 0 END AS hill_alpha
+      |    ELSE ${Parity.fixSql("1.0 / h", 4)} + 0 END AS hill_alpha
       |FROM fin""".stripMargin
 }

@@ -469,21 +469,21 @@ object AttributionQueries {
   }
 
   val q196TimeDecayAttributionSql: String =
-    """WITH p AS (
+    s"""WITH p AS (
       |  SELECT user_id, event_id AS pid, ts AS pts,
       |    CAST(FLOOR(value * 10000.0 + 0.5) AS BIGINT) AS v4
       |  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
       |c AS (
       |  SELECT user_id, event_id AS cid, ts AS cts,
-      |    CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
+      |    CAST(json_extract_string(props, '$$.k') AS INTEGER) AS k
       |  FROM events WHERE event_type = 'click'),
       |pairs AS (
       |  SELECT p.pid, p.v4, c.cid, c.k,
       |    CASE WHEN c.cid IS NULL THEN 0 ELSE
-      |      CAST(FLOOR(
-      |        exp(-CAST((epoch_us(p.pts) - epoch_us(c.cts)) // 1000000 AS DOUBLE)
-      |            * (0.6931471805599453 / 3600.0))
-      |        * 1e6 + 0.5) AS BIGINT) END AS wq
+      |      ${Parity.quantSql("exp(-CAST((epoch_us(p.pts) - epoch_us(c.cts)) // 1000000" +
+                               " AS DOUBLE)" +
+                               " * (0.6931471805599453 / 3600.0))", 6)}
+      |        END AS wq
       |  FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.cts <= p.pts
       |    AND epoch_us(p.pts) - epoch_us(c.cts) <= 21600000000),
       |win AS (
@@ -813,7 +813,7 @@ object AttributionQueries {
   }
 
   val q318NewcombeCiSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT ((user_id % 2) + 2) % 2 AS arm,
       |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
       |  FROM events WHERE user_id IS NOT NULL),
@@ -854,17 +854,17 @@ object AttributionQueries {
       |  FROM b)
       |SELECT n0 AS n_ctrl, c0 AS conv_ctrl, n1 AS n_test, c1 AS conv_test,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(d * 1e6 + 0.5) / 1e6 END AS rate_diff,
+      |    ELSE ${Parity.fixSql("d", 6)} END AS rate_diff,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(lo * 1e6 + 0.5) / 1e6 END AS ci_lo,
+      |    ELSE ${Parity.fixSql("lo", 6)} END AS ci_lo,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(hi * 1e6 + 0.5) / 1e6 END AS ci_hi,
+      |    ELSE ${Parity.fixSql("hi", 6)} END AS ci_hi,
       |  CASE WHEN bad THEN NULL
       |    WHEN lo > 0 OR hi < 0 THEN 1 ELSE 0 END AS excludes_zero
       |FROM f""".stripMargin
 
   val q314SprtMonitorSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT ((user_id % 2) + 2) % 2 AS arm, CAST(ts AS DATE) AS day,
       |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
       |  FROM events WHERE user_id IS NOT NULL),
@@ -883,23 +883,21 @@ object AttributionQueries {
       |  FROM daily),
       |j AS (
       |  SELECT day, ct, nt, c0, n0,
-      |    CAST(FLOOR(LN(11.0) * 1e9 + 0.5) AS BIGINT)
-      |      - CAST(FLOOR(LN(10.0) * 1e9 + 0.5) AS BIGINT) AS lp9,
-      |    CAST(FLOOR(LN(CAST(n0 * 10 - c0 * 11 AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT)
-      |      - CAST(FLOOR(LN(CAST((n0 - c0) * 10 AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT) AS lq9
+      |    ${Parity.quantSql("LN(11.0)", 9)}
+      |      - ${Parity.quantSql("LN(10.0)", 9)} AS lp9,
+      |    ${Parity.quantSql("LN(CAST(n0 * 10 - c0 * 11 AS DOUBLE))", 9)}
+      |      - ${Parity.quantSql("LN(CAST((n0 - c0) * 10 AS DOUBLE))", 9)} AS lq9
       |  FROM cum CROSS JOIN ctrl),
       |w AS (
       |  SELECT day, ct, nt, c0, n0,
       |    CAST(ct AS HUGEINT) * lp9 + CAST(nt - ct AS HUGEINT) * lq9
       |      AS llr9,
-      |    CAST(FLOOR(LN(19.0) * 1e9 + 0.5) AS BIGINT) AS a9,
+      |    ${Parity.quantSql("LN(19.0)", 9)} AS a9,
       |    (c0 = 0 OR c0 * 11 >= n0 * 10 OR n0 = 0) AS bad
       |  FROM j)
       |SELECT day, ct AS cum_conv, nt AS cum_trials,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(CAST(llr9 AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 END
+      |    ELSE ${Parity.fixSql("CAST(llr9 AS DOUBLE) / 1e9", 6)} END
       |    AS llr,
       |  CASE WHEN bad THEN NULL
       |    WHEN llr9 >= a9 THEN 'reject_h0'
@@ -948,7 +946,7 @@ object AttributionQueries {
   }
 
   val q399CohensHSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id,
       |    MAX(CASE WHEN event_type = 'purchase' AND value >= 150.0
       |      THEN 1 ELSE 0 END) AS conv,
@@ -975,12 +973,11 @@ object AttributionQueries {
       |  FROM g),
       |z AS (
       |  SELECT n_a, x_a, n_b, x_b, pa, pb,
-      |    FLOOR((2.0 * asin(sqrt(pa)) - 2.0 * asin(sqrt(pb)))
-      |      * 1e6 + 0.5) / 1e6 + 0 AS h
+      |    ${Parity.fixSql("(2.0 * asin(sqrt(pa)) - 2.0 * asin(sqrt(pb)))", 6)} + 0 AS h
       |  FROM f)
       |SELECT n_a, x_a, n_b, x_b,
-      |  FLOOR(pa * 1e6 + 0.5) / 1e6 + 0 AS rate_a,
-      |  FLOOR(pb * 1e6 + 0.5) / 1e6 + 0 AS rate_b,
+      |  ${Parity.fixSql("pa", 6)} + 0 AS rate_a,
+      |  ${Parity.fixSql("pb", 6)} + 0 AS rate_b,
       |  h AS cohens_h,
       |  CASE WHEN ABS(h) < 0.2 THEN 'negligible'
       |    WHEN ABS(h) < 0.5 THEN 'small'

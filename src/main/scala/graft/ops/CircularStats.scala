@@ -81,7 +81,7 @@ object CircularStats {
   }
 
   val q407RayleighSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE))
       |      AS BIGINT) AS yr,
       |    CAST(dayofyear(CAST(o_orderdate AS DATE)) AS BIGINT) AS doy
@@ -89,10 +89,10 @@ object CircularStats {
       |cen AS (SELECT yr, doy, COUNT(*) AS cnt FROM o GROUP BY yr, doy),
       |q AS (
       |  SELECT yr, cnt,
-      |    CAST(FLOOR(COS(2.0 * PI() * CAST(doy - 1 AS DOUBLE) / 365.0)
-      |      * 1e9 + 0.5) AS BIGINT) AS cq,
-      |    CAST(FLOOR(SIN(2.0 * PI() * CAST(doy - 1 AS DOUBLE) / 365.0)
-      |      * 1e9 + 0.5) AS BIGINT) AS sq
+      |    ${Parity.quantSql("COS(2.0 * PI() * CAST(doy - 1 AS DOUBLE) / 365.0)", 9)}
+      |      AS cq,
+      |    ${Parity.quantSql("SIN(2.0 * PI() * CAST(doy - 1 AS DOUBLE) / 365.0)", 9)}
+      |      AS sq
       |  FROM cen),
       |g AS (
       |  SELECT yr, CAST(SUM(cnt) AS BIGINT) AS n,
@@ -108,11 +108,12 @@ object CircularStats {
       |      / (2.0 * PI()) * 365.0 AS aday
       |  FROM g)
       |SELECT yr AS order_year, n AS n_orders,
-      |  FLOOR(rbar * 1e6 + 0.5) / 1e6 + 0 AS rbar,
-      |  FLOOR(CAST(n AS DOUBLE) * rbar * rbar * 1e4 + 0.5) / 1e4 + 0
+      |  ${Parity.fixSql("rbar", 6)} + 0 AS rbar,
+      |  ${Parity.fixSql("CAST(n AS DOUBLE) * rbar * rbar", 4)} + 0
       |    AS rayleigh_z,
-      |  FLOOR((CASE WHEN aday < 0.0 THEN aday + 365.0 ELSE aday END
-      |    + 1.0) * 1e4 + 0.5) / 1e4 + 0 AS mean_day
+      |  ${Parity.fixSql("(CASE WHEN aday < 0.0 THEN aday + 365.0 ELSE aday END" +
+                         " + 1.0)", 4)}
+      |    + 0 AS mean_day
       |FROM t ORDER BY order_year""".stripMargin
 
   /** L343 von Mises concentration κ̂ on the weekly circle ([PK] Fisher
@@ -172,7 +173,7 @@ object CircularStats {
   }
 
   val q408VonMisesKappaSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderpriority AS pr,
       |    ((date_diff('day', DATE '1995-01-01',
       |        CAST(o_orderdate AS DATE)) % 7) + 7) % 7 AS dow
@@ -180,10 +181,8 @@ object CircularStats {
       |cen AS (SELECT pr, dow, COUNT(*) AS cnt FROM o GROUP BY pr, dow),
       |q AS (
       |  SELECT pr, cnt,
-      |    CAST(FLOOR(COS(2.0 * PI() * CAST(dow AS DOUBLE) / 7.0)
-      |      * 1e9 + 0.5) AS BIGINT) AS cq,
-      |    CAST(FLOOR(SIN(2.0 * PI() * CAST(dow AS DOUBLE) / 7.0)
-      |      * 1e9 + 0.5) AS BIGINT) AS sq
+      |    ${Parity.quantSql("COS(2.0 * PI() * CAST(dow AS DOUBLE) / 7.0)", 9)} AS cq,
+      |    ${Parity.quantSql("SIN(2.0 * PI() * CAST(dow AS DOUBLE) / 7.0)", 9)} AS sq
       |  FROM cen),
       |g AS (
       |  SELECT pr, CAST(SUM(cnt) AS BIGINT) AS n,
@@ -197,15 +196,16 @@ object CircularStats {
       |      / (CAST(n AS DOUBLE) * 1e9) AS r
       |  FROM g)
       |SELECT pr AS o_orderpriority, n AS n_orders,
-      |  FLOOR(r * 1e6 + 0.5) / 1e6 + 0 AS rbar,
-      |  FLOOR((1.0 - r) * 1e6 + 0.5) / 1e6 + 0 AS circ_var,
+      |  ${Parity.fixSql("r", 6)} + 0 AS rbar,
+      |  ${Parity.fixSql("(1.0 - r)", 6)} + 0 AS circ_var,
       |  CASE WHEN r >= 1.0 - 1e-9 THEN NULL
-      |    ELSE FLOOR((CASE
-      |      WHEN r < 0.53 THEN 2.0 * r + r * r * r
-      |        + 5.0 * r * r * r * r * r / 6.0
-      |      WHEN r < 0.85 THEN -0.4 + 1.39 * r
-      |        + 0.43 / GREATEST(1.0 - r, 1e-300)
-      |      ELSE 1.0 / GREATEST(r * r * r - 4.0 * r * r + 3.0 * r,
-      |        1e-300) END) * 1e4 + 0.5) / 1e4 + 0 END AS kappa
+      |    ELSE ${Parity.fixSql("(CASE" +
+                                " WHEN r < 0.53 THEN 2.0 * r + r * r * r" +
+                                " + 5.0 * r * r * r * r * r / 6.0" +
+                                " WHEN r < 0.85 THEN -0.4 + 1.39 * r" +
+                                " + 0.43 / GREATEST(1.0 - r, 1e-300)" +
+                                " ELSE 1.0 / GREATEST(r * r * r - 4.0 * r * r + 3.0 * r," +
+                                " 1e-300) END)", 4)}
+      |        + 0 END AS kappa
       |FROM t ORDER BY pr""".stripMargin
 }

@@ -178,7 +178,7 @@ object CorpusQueries {
   }
 
   val q272Err20Sql: String =
-    """WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
+    s"""WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
       |ranked AS (
       |  SELECT ql, doc_id, lang, n_chars,
       |    ROW_NUMBER() OVER (PARTITION BY ql
@@ -192,9 +192,10 @@ object CorpusQueries {
       |SELECT ql AS query_lang, COUNT(*) AS n_docs,
       |  CAST(SUM(CASE WHEN rel = 1 AND rk <= 20 THEN 1 ELSE 0 END)
       |    AS BIGINT) AS n_rel20,
-      |  FLOOR(CAST(SUM(CASE WHEN rel = 1 AND rk <= 20 THEN
-      |      CAST(FLOOR(POWER(0.5, cumrel) / rk * 1e12 + 0.5) AS BIGINT)
-      |    ELSE 0 END) AS DOUBLE) / 1e12 * 1e6 + 0.5) / 1e6 AS err20
+      |  ${Parity.fixSql("CAST(SUM(CASE WHEN rel = 1 AND rk <= 20 THEN" +
+                         s" ${Parity.quantSql("POWER(0.5, cumrel) / rk", 12)}" +
+                         " ELSE 0 END) AS DOUBLE) / 1e12", 6)}
+      |    AS err20
       |FROM t GROUP BY ql ORDER BY query_lang""".stripMargin
 
   /** L209 lexical diversity profile per source ([PK] Simpson 1949;
@@ -244,7 +245,7 @@ object CorpusQueries {
   }
 
   val q277DiversitySql: String =
-    """WITH occ AS (
+    s"""WITH occ AS (
       |  SELECT source, w, COUNT(*) AS n
       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
       |        FROM documents)
@@ -253,21 +254,21 @@ object CorpusQueries {
       |  SELECT source, CAST(SUM(n) AS BIGINT) AS nt,
       |    COUNT(*) AS st,
       |    SUM(CAST(n AS HUGEINT) * (n - 1)) AS rep,
-      |    SUM(CAST(CAST(FLOOR(CAST(n AS DOUBLE) * LN(CAST(n AS DOUBLE))
-      |      * 1e9 + 0.5) AS BIGINT) AS HUGEINT)) AS snln
+      |    SUM(CAST(${Parity.quantSql("CAST(n AS DOUBLE) * LN(CAST(n AS DOUBLE))", 9)}
+      |      AS HUGEINT)) AS snln
       |  FROM occ GROUP BY source)
       |SELECT source, nt AS n_tokens, CAST(st AS BIGINT) AS n_types,
       |  CASE WHEN nt < 2 THEN NULL ELSE
       |    ROUND(CAST(rep AS DOUBLE)
       |      / (CAST(nt AS DOUBLE) * (CAST(nt AS DOUBLE) - 1.0)), 6) + 0
       |    END AS simpson,
-      |  ROUND(FLOOR(LN(CAST(nt AS DOUBLE)) * 1e9 + 0.5) / 1e9
+      |  ROUND(${Parity.fixSql("LN(CAST(nt AS DOUBLE))", 9)}
       |    - (CAST(snln AS DOUBLE) / 1e9) / CAST(nt AS DOUBLE), 6) + 0
       |    AS shannon,
       |  CASE WHEN st < 2 THEN NULL ELSE
-      |    ROUND((FLOOR(LN(CAST(nt AS DOUBLE)) * 1e9 + 0.5) / 1e9
+      |    ROUND((${Parity.fixSql("LN(CAST(nt AS DOUBLE))", 9)}
       |      - (CAST(snln AS DOUBLE) / 1e9) / CAST(nt AS DOUBLE))
-      |      / (FLOOR(LN(CAST(st AS DOUBLE)) * 1e9 + 0.5) / 1e9), 6) + 0
+      |      / (${Parity.fixSql("LN(CAST(st AS DOUBLE))", 9)}), 6) + 0
       |    END AS evenness
       |FROM g ORDER BY source""".stripMargin
 
@@ -321,7 +322,7 @@ object CorpusQueries {
   }
 
   val q281CochranQSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT
       |    CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS r1,
       |    CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
@@ -345,10 +346,10 @@ object CorpusQueries {
       |      / CAST(3 * t - sr2 AS DOUBLE), 4) + 0 END AS cochran_q,
       |  CAST(2 AS BIGINT) AS df,
       |  CASE WHEN 3 * t - sr2 = 0 THEN NULL
-      |    ELSE FLOOR(EXP(-(CAST(2 * (3 * (CAST(c1 AS HUGEINT) * c1
-      |        + CAST(c2 AS HUGEINT) * c2 + CAST(c3 AS HUGEINT) * c3)
-      |        - CAST(t AS HUGEINT) * t) AS DOUBLE)
-      |      / CAST(3 * t - sr2 AS DOUBLE)) / 2.0) * 1e8 + 0.5) / 1e8
+      |    ELSE ${Parity.fixSql("EXP(-(CAST(2 * (3 * (CAST(c1 AS HUGEINT) * c1" +
+                                " + CAST(c2 AS HUGEINT) * c2 + CAST(c3 AS HUGEINT) * c3)" +
+                                " - CAST(t AS HUGEINT) * t) AS DOUBLE)" +
+                                " / CAST(3 * t - sr2 AS DOUBLE)) / 2.0)", 8)}
       |    END AS p
       |FROM a""".stripMargin
 
@@ -516,7 +517,7 @@ object CorpusQueries {
   }
 
   val q286LmScoreSql: String =
-    """WITH bgx AS (
+    s"""WITH bgx AS (
       |  SELECT source,
       |    unnest(CASE WHEN len(string_split(text, ' ')) < 2 THEN []
       |      ELSE list_transform(
@@ -537,9 +538,8 @@ object CorpusQueries {
       |    (SELECT unnest(string_split(text, ' ')) AS w FROM documents)),
       |sc AS (
       |  SELECT source, k, v,
-      |    CAST(FLOOR(LN(CAST(c1 + v AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
-      |      - CAST(FLOOR(LN(CAST(c12 + 1 AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT) AS nll9
+      |    ${Parity.quantSql("LN(CAST(c1 + v AS DOUBLE))", 9)}
+      |      - ${Parity.quantSql("LN(CAST(c12 + 1 AS DOUBLE))", 9)} AS nll9
       |  FROM sb JOIN gl USING (bg) JOIN cx USING (w1) CROSS JOIN vv),
       |g AS (
       |  SELECT source, CAST(SUM(k) AS BIGINT) AS n_bigrams,
@@ -547,11 +547,10 @@ object CorpusQueries {
       |    CAST(SUM(CAST(k AS HUGEINT) * nll9) AS HUGEINT) AS snll
       |  FROM sc GROUP BY source)
       |SELECT source, n_bigrams, bigram_types, vocab,
-      |  FLOOR(CAST(snll AS DOUBLE) / 1e9 / n_bigrams * 1e6 + 0.5) / 1e6
+      |  ${Parity.fixSql("CAST(snll AS DOUBLE) / 1e9 / n_bigrams", 6)}
       |    AS avg_nll,
-      |  FLOOR(EXP(FLOOR(CAST(snll AS DOUBLE) / 1e9 / n_bigrams * 1e6
-      |      + 0.5) / 1e6)
-      |    * 1e4 + 0.5) / 1e4 AS ppl
+      |  ${Parity.fixSql(s"EXP(${Parity.fixSql("CAST(snll AS DOUBLE) / 1e9 / n_bigrams", 6)})", 4)}
+      |    AS ppl
       |FROM g ORDER BY source""".stripMargin
 
   /** L235 interpolated Kneser–Ney bigram LM ([PK] Kneser & Ney 1995;
@@ -623,7 +622,7 @@ object CorpusQueries {
   }
 
   val q300KneserNeySql: String =
-    """WITH bgx AS (
+    s"""WITH bgx AS (
       |  SELECT lang,
       |    unnest(CASE WHEN len(string_split(text, ' ')) < 2 THEN []
       |      ELSE list_transform(
@@ -654,12 +653,12 @@ object CorpusQueries {
       |  FROM gl),
       |sc AS (
       |  SELECT c12.lang, c12.c12, nn, tt, d,
-      |    CAST(FLOOR(LOG2(
-      |      GREATEST(CAST(c12.c12 AS DOUBLE) - d, 0.0)
-      |        / CAST(c1 AS DOUBLE)
-      |      + d * CAST(n1fw AS DOUBLE) / CAST(c1 AS DOUBLE)
-      |        * (CAST(n1bw AS DOUBLE) / CAST(tt AS DOUBLE)))
-      |      * 1e9 + 0.5) AS BIGINT) AS t9
+      |    ${Parity.quantSql("LOG2(" +
+                             " GREATEST(CAST(c12.c12 AS DOUBLE) - d, 0.0)" +
+                             " / CAST(c1 AS DOUBLE)" +
+                             " + d * CAST(n1fw AS DOUBLE) / CAST(c1 AS DOUBLE)" +
+                             " * (CAST(n1bw AS DOUBLE) / CAST(tt AS DOUBLE)))", 9)}
+      |      AS t9
       |  FROM c12
       |  JOIN fw ON c12.lang = fw.lang AND c12.w1 = fw.w1
       |  JOIN bw ON c12.lang = bw.lang AND c12.w2 = bw.w2
@@ -670,12 +669,12 @@ object CorpusQueries {
       |    CAST(SUM(CAST(c12 AS HUGEINT) * t9) AS HUGEINT) AS st
       |  FROM sc GROUP BY lang)
       |SELECT lang, n_bigrams, bigram_types,
-      |  FLOOR(d0 * 1e6 + 0.5) / 1e6 AS discount,
-      |  FLOOR(-CAST(st AS DOUBLE) / 1e9 / n_bigrams * 1e6 + 0.5) / 1e6
+      |  ${Parity.fixSql("d0", 6)} AS discount,
+      |  ${Parity.fixSql("-CAST(st AS DOUBLE) / 1e9 / n_bigrams", 6)}
       |    AS h_bits,
-      |  FLOOR(POWER(2.0,
-      |    FLOOR(-CAST(st AS DOUBLE) / 1e9 / n_bigrams * 1e6 + 0.5) / 1e6)
-      |    * 1e4 + 0.5) / 1e4 AS ppl
+      |  ${Parity.fixSql("POWER(2.0," +
+                         s" ${Parity.fixSql("-CAST(st AS DOUBLE) / 1e9 / n_bigrams", 6)})", 4)}
+      |    AS ppl
       |FROM g ORDER BY lang""".stripMargin
 
   /** L238 Burrows' Delta stylometry ([PK] Burrows 2002; Argamon 2008):
@@ -746,7 +745,7 @@ object CorpusQueries {
   }
 
   val q304BurrowsDeltaSql: String =
-    """WITH cnt AS (
+    s"""WITH cnt AS (
       |  SELECT source, unnest(string_split(text, ' ')) AS w
       |  FROM documents),
       |cc AS (SELECT source, w, COUNT(*) AS c FROM cnt GROUP BY 1, 2),
@@ -774,8 +773,7 @@ object CorpusQueries {
       |pr AS (
       |  SELECT a.src_a, b.src_b,
       |    CASE WHEN vw > 0
-      |      THEN CAST(FLOOR(CAST(ABS(a.fa - b.fb) AS DOUBLE) / sigma
-      |        * 1e9 + 0.5) AS BIGINT)
+      |      THEN ${Parity.quantSql("CAST(ABS(a.fa - b.fb) AS DOUBLE) / sigma", 9)}
       |      ELSE 0 END AS t9,
       |    CASE WHEN vw > 0 THEN 1 ELSE 0 END AS k1
       |  FROM (SELECT w, source AS src_a, fq AS fa FROM grid) a
@@ -783,8 +781,8 @@ object CorpusQueries {
       |    ON a.w = b.w AND a.src_a < b.src_b
       |  JOIN st2 ON st2.w = a.w)
       |SELECT src_a, src_b, CAST(SUM(k1) AS BIGINT) AS n_words,
-      |  FLOOR(CAST(SUM(t9) AS DOUBLE) / 1e9 / CAST(SUM(k1) AS DOUBLE)
-      |    * 1e6 + 0.5) / 1e6 AS delta
+      |  ${Parity.fixSql("CAST(SUM(t9) AS DOUBLE) / 1e9 / CAST(SUM(k1) AS DOUBLE)", 6)}
+      |    AS delta
       |FROM pr GROUP BY src_a, src_b ORDER BY src_a, src_b""".stripMargin
 
   /** L253 tokenizer fertility panel ([PK] the chars/bytes-per-token
@@ -915,7 +913,7 @@ object CorpusQueries {
   }
 
   val q313DsirWeightsSql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
       |  FROM documents),
       |db AS (
@@ -931,12 +929,10 @@ object CorpusQueries {
       |    CAST(SUM(cr) AS BIGINT) AS tr, COUNT(*) AS v FROM ws),
       |lnq AS (
       |  SELECT w,
-      |    CAST(FLOOR(LN(CAST(ct + 1 AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
-      |    - CAST(FLOOR(LN(CAST(tt + v AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT)
-      |    - CAST(FLOOR(LN(CAST(cr + 1 AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
-      |    + CAST(FLOOR(LN(CAST(tr + v AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT) AS d9
+      |    ${Parity.quantSql("LN(CAST(ct + 1 AS DOUBLE))", 9)}
+      |    - ${Parity.quantSql("LN(CAST(tt + v AS DOUBLE))", 9)}
+      |    - ${Parity.quantSql("LN(CAST(cr + 1 AS DOUBLE))", 9)}
+      |    + ${Parity.quantSql("LN(CAST(tr + v AS DOUBLE))", 9)} AS d9
       |  FROM ws CROSS JOIN tot),
       |pd AS (
       |  SELECT doc_id, lang, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -944,7 +940,7 @@ object CorpusQueries {
       |  FROM db JOIN lnq USING (w)
       |  GROUP BY doc_id, lang)
       |SELECT doc_id, lang, n_tokens,
-      |  FLOOR(CAST(w9 AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 AS dsir_logw,
+      |  ${Parity.fixSql("CAST(w9 AS DOUBLE) / 1e9", 6)} AS dsir_logw,
       |  CASE WHEN w9 > 0 THEN 1 ELSE 0 END AS target_like
       |FROM pd ORDER BY doc_id""".stripMargin
 
@@ -1143,9 +1139,9 @@ object CorpusQueries {
       |SELECT lang, n AS n_chars,
       |  CAST(n_distinct AS BIGINT) AS n_alphabet,
       |  CASE WHEN n < 2 THEN NULL
-      |    ELSE FLOOR(CAST(coll AS DOUBLE)
-      |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS ic
+      |    ELSE ${Parity.fixSql("CAST(coll AS DOUBLE)" +
+                                " / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))", 6)}
+      |      + 0 END AS ic
       |FROM g ORDER BY lang""".stripMargin
 
   /** L263 HD-D lexical diversity ([PK] McCarthy & Jarvis 2010 — the
@@ -1196,7 +1192,7 @@ object CorpusQueries {
   }
 
   val q329HddDiversitySql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
       |  FROM documents),
       |pt AS (
@@ -1208,18 +1204,19 @@ object CorpusQueries {
       |  HAVING SUM(nw) >= 42),
       |ct AS (
       |  SELECT pt.doc_id, pt.lang,
-      |    CAST(FLOOR((1.0 - CASE WHEN pd.nn - pt.nw < 42 THEN 0.0
-      |      ELSE list_reduce(list_prepend(1.0, list_transform(range(42),
-      |        i -> (CAST(pd.nn AS DOUBLE) - pt.nw - i)
-      |          / (CAST(pd.nn AS DOUBLE) - i))), (a, b) -> a * b)
-      |      END) * 1e9 + 0.5) AS BIGINT) AS c9
+      |    ${Parity.quantSql("(1.0 - CASE WHEN pd.nn - pt.nw < 42 THEN 0.0" +
+                             " ELSE list_reduce(list_prepend(1.0, list_transform(range(42)," +
+                             " i -> (CAST(pd.nn AS DOUBLE) - pt.nw - i)" +
+                             " / (CAST(pd.nn AS DOUBLE) - i))), (a, b) -> a * b)" +
+                             " END)", 9)}
+      |      AS c9
       |  FROM pt JOIN pd USING (doc_id, lang)),
       |ph AS (
       |  SELECT doc_id, lang, CAST(SUM(c9) AS BIGINT) AS h9
       |  FROM ct GROUP BY doc_id, lang)
       |SELECT lang, COUNT(*) AS n_docs,
-      |  FLOOR(CAST(SUM(h9) AS DOUBLE)
-      |    / (COUNT(*) * 42.0e9) * 1e6 + 0.5) / 1e6 + 0 AS mean_hdd
+      |  ${Parity.fixSql("CAST(SUM(h9) AS DOUBLE) / (COUNT(*) * 42.0e9)", 6)}
+      |    + 0 AS mean_hdd
       |FROM ph GROUP BY lang
       |ORDER BY lang""".stripMargin
 
@@ -1307,11 +1304,10 @@ object CorpusQueries {
       |    SUM(CASE WHEN ABS(s) > 30000 THEN 1 ELSE 0 END) AS ncl
       |  FROM sm GROUP BY lang, doc_id)
       |SELECT lang, COUNT(*) AS n_docs, COUNT(*) * 8 AS n_samples,
-      |  FLOOR(CAST(SUM(CAST(FLOOR(SQRT(CAST(ssq AS DOUBLE) / 8.0)
-      |      * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1e6
-      |    * 1e4 + 0.5) / 1e4 + 0 AS mean_rms,
-      |  FLOOR(CAST(SUM(ssum) AS DOUBLE) / (COUNT(*) * 8)
-      |    * 1e4 + 0.5) / 1e4 + 0 AS mean_dc,
+      |  ${Parity.fixSql(s"CAST(SUM(${Parity.quantSql("SQRT(CAST(ssq AS DOUBLE) / 8.0)", 6)})" +
+                         " AS DOUBLE) / COUNT(*) / 1e6", 4)}
+      |    + 0 AS mean_rms,
+      |  ${Parity.fixSql("CAST(SUM(ssum) AS DOUBLE) / (COUNT(*) * 8)", 4)} + 0 AS mean_dc,
       |  MAX(pk) AS peak_abs,
       |  CAST(SUM(ncl) AS BIGINT) AS n_clipped
       |FROM pf GROUP BY lang
@@ -1358,7 +1354,7 @@ object CorpusQueries {
   }
 
   val q377BurstinessSql: String =
-    """WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
+    s"""WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
       |tf AS (
       |  SELECT doc_id, term, COUNT(*) AS tf
       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -1371,16 +1367,15 @@ object CorpusQueries {
       |  ORDER BY cf DESC, term LIMIT 20),
       |f AS (
       |  SELECT term, cf, df, CAST(n_docs AS BIGINT) AS n_docs,
-      |    FLOOR(CAST(n_docs AS DOUBLE) * (1.0
-      |      - exp(0.0 - CAST(cf AS DOUBLE) / CAST(n_docs AS DOUBLE)))
-      |      * 1e4 + 0.5) / 1e4 + 0 AS df_poisson
+      |    ${Parity.fixSql("CAST(n_docs AS DOUBLE) * (1.0" +
+                           " - exp(0.0 - CAST(cf AS DOUBLE) / CAST(n_docs AS DOUBLE)))", 4)}
+      |      + 0 AS df_poisson
       |  FROM stats CROSS JOIN n)
       |SELECT term, cf, df,
-      |  FLOOR(CAST(cf AS DOUBLE) / CAST(df AS DOUBLE) * 1e4 + 0.5)
-      |    / 1e4 + 0 AS burstiness,
+      |  ${Parity.fixSql("CAST(cf AS DOUBLE) / CAST(df AS DOUBLE)", 4)} + 0 AS burstiness,
       |  df_poisson,
-      |  FLOOR(CAST(df AS DOUBLE) / GREATEST(df_poisson, 1e-300)
-      |    * 1e4 + 0.5) / 1e4 + 0 AS adaptation
+      |  ${Parity.fixSql("CAST(df AS DOUBLE) / GREATEST(df_poisson, 1e-300)", 4)}
+      |    + 0 AS adaptation
       |FROM f ORDER BY cf DESC, term""".stripMargin
 
   /** L318 WAV/RIFF header parse census *(added r17)* — the second
@@ -1603,7 +1598,7 @@ object CorpusQueries {
     * any walk defect (padding, idx1 recursion, size off-by-one) on the
     * Spark side hash-diverges. */
   val q402AviDemuxCensusSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id AS did, doc_id % 8 + 3 AS nf FROM documents),
       |f AS (
       |  SELECT nf,
@@ -1618,8 +1613,8 @@ object CorpusQueries {
       |  CAST(SUM(nf) AS BIGINT) AS total_frames,
       |  CAST(SUM(pb) AS BIGINT) AS payload_bytes,
       |  CAST(SUM(cs) AS BIGINT) AS byte_checksum,
-      |  FLOOR(CAST(SUM(pb) AS DOUBLE) / CAST(SUM(nf) AS DOUBLE)
-      |    * 1e4 + 0.5) / 1e4 + 0 AS avg_frame_bytes
+      |  ${Parity.fixSql("CAST(SUM(pb) AS DOUBLE) / CAST(SUM(nf) AS DOUBLE)", 4)}
+      |    + 0 AS avg_frame_bytes
       |FROM f GROUP BY nf ORDER BY n_frames""".stripMargin
 
   /** L341 bare-MJPEG demux census *(added r19; [PK] ITU-T T.81 JPEG
@@ -1693,7 +1688,7 @@ object CorpusQueries {
     * any stuffing/restart/resync/truncation defect in the Spark-side
     * scan hash-diverges. */
   val q406MjpegDemuxCensusSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id AS did, doc_id % 6 + 2 AS nf FROM documents),
       |f AS (
       |  SELECT nf,
@@ -1710,7 +1705,7 @@ object CorpusQueries {
       |  CAST(SUM(nf) AS BIGINT) AS total_frames,
       |  CAST(SUM(pb) AS BIGINT) AS payload_bytes,
       |  CAST(SUM(cs) AS BIGINT) AS byte_checksum,
-      |  FLOOR(CAST(SUM(pb) AS DOUBLE) / CAST(SUM(nf) AS DOUBLE)
-      |    * 1e4 + 0.5) / 1e4 + 0 AS avg_frame_bytes
+      |  ${Parity.fixSql("CAST(SUM(pb) AS DOUBLE) / CAST(SUM(nf) AS DOUBLE)", 4)}
+      |    + 0 AS avg_frame_bytes
       |FROM f GROUP BY nf ORDER BY n_frames""".stripMargin
 }

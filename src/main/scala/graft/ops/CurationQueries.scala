@@ -352,7 +352,7 @@ object CurationQueries {
   }
 
   val q96InterpolateSql: String =
-    """WITH span AS (
+    s"""WITH span AS (
       |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
       |         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM orders),
       |days AS (
@@ -382,11 +382,11 @@ object CurationQueries {
       |    fw AS (PARTITION BY o_orderpriority ORDER BY day
       |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
       |SELECT day, o_orderpriority,
-      |  FLOOR((CASE WHEN rev IS NOT NULL THEN rev
-      |    ELSE prev_rev + (next_rev - prev_rev) *
-      |      (CAST(date_diff('day', prev_day, day) AS DOUBLE) /
-      |       CAST(date_diff('day', prev_day, next_day) AS DOUBLE)) END)
-      |    * 1e4 + 0.5) / 1e4 AS rev_interp
+      |  ${Parity.fixSql("(CASE WHEN rev IS NOT NULL THEN rev" +
+                         " ELSE prev_rev + (next_rev - prev_rev) *" +
+                         " (CAST(date_diff('day', prev_day, day) AS DOUBLE) /" +
+                         " CAST(date_diff('day', prev_day, next_day) AS DOUBLE)) END)", 4)}
+      |    AS rev_interp
       |FROM ctx
       |ORDER BY day, o_orderpriority""".stripMargin
 
@@ -605,7 +605,7 @@ object CurationQueries {
   }
 
   val q143HoltSql: String =
-    """WITH RECURSIVE daily AS (
+    s"""WITH RECURSIVE daily AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day, o_orderpriority AS pr,
       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(13,4))) AS DOUBLE) AS rev
       |  FROM orders WHERE o_orderdate >= DATE '1997-01-01'
@@ -626,10 +626,10 @@ object CurationQueries {
       |      + CAST(0.9 AS DOUBLE) * h.tr
       |  FROM s JOIN h ON s.pr = h.pr AND s.rn = h.rn + 1)
       |SELECT day, pr AS o_orderpriority,
-      |  FLOOR(rev * 1e4 + 0.5) / 1e4 AS rev,
-      |  FLOOR(lvl * 1e4 + 0.5) / 1e4 AS level,
-      |  FLOOR(tr * 1e4 + 0.5) / 1e4 AS trend,
-      |  FLOOR((lvl + tr) * 1e4 + 0.5) / 1e4 AS forecast
+      |  ${Parity.fixSql("rev", 4)} AS rev,
+      |  ${Parity.fixSql("lvl", 4)} AS level,
+      |  ${Parity.fixSql("tr", 4)} AS trend,
+      |  ${Parity.fixSql("(lvl + tr)", 4)} AS forecast
       |FROM h ORDER BY day, o_orderpriority""".stripMargin
 
   /** Robust outlier detection by median absolute deviation — q97's
@@ -1311,11 +1311,11 @@ object CurationQueries {
        |  FROM ($q143HoltSql) base),
        |q AS (
        |  SELECT o_orderpriority,
-       |    CAST(FLOOR(ABS(rev - f) * 1e4 + 0.5) AS BIGINT) AS eq,
-       |    CAST(FLOOR(ABS(rev - prev) * 1e4 + 0.5) AS BIGINT) AS nq,
+       |    ${Parity.quantSql("ABS(rev - f)", 4)} AS eq,
+       |    ${Parity.quantSql("ABS(rev - prev)", 4)} AS nq,
        |    CASE WHEN ABS(f) + ABS(rev) > 0.0 THEN
-       |      CAST(FLOOR(2.0 * ABS(rev - f) / (ABS(f) + ABS(rev))
-       |        * 1e9 + 0.5) AS BIGINT) ELSE 0 END AS sq
+       |      ${Parity.quantSql("2.0 * ABS(rev - f) / (ABS(f) + ABS(rev))", 9)}
+       |        ELSE 0 END AS sq
        |  FROM e WHERE f IS NOT NULL),
        |g AS (
        |  SELECT o_orderpriority, COUNT(*) AS n_days,
@@ -1323,10 +1323,10 @@ object CurationQueries {
        |    CAST(SUM(sq) AS BIGINT) AS ss
        |  FROM q GROUP BY o_orderpriority)
        |SELECT o_orderpriority, CAST(n_days AS BIGINT) AS n_days,
-       |  FLOOR(CAST(se AS DOUBLE) / 1e4 / n_days * 1e4 + 0.5) / 1e4 AS mae,
+       |  ${Parity.fixSql("CAST(se AS DOUBLE) / 1e4 / n_days", 4)} AS mae,
        |  CASE WHEN sn = 0 THEN NULL
-       |    ELSE FLOOR(CAST(se AS DOUBLE) / sn * 1e4 + 0.5) / 1e4 END AS mase,
-       |  FLOOR(CAST(ss AS DOUBLE) / 1e9 / n_days * 1e4 + 0.5) / 1e4 AS smape
+       |    ELSE ${Parity.fixSql("CAST(se AS DOUBLE) / sn", 4)} END AS mase,
+       |  ${Parity.fixSql("CAST(ss AS DOUBLE) / 1e9 / n_days", 4)} AS smape
        |FROM g ORDER BY o_orderpriority""".stripMargin
 
   /** L212 leakage-safe K-fold assignment: evaluation folds keyed on the
@@ -1516,7 +1516,7 @@ object CurationQueries {
   }
 
   val q359HoltWintersSql: String =
-    """WITH RECURSIVE daily AS (
+    s"""WITH RECURSIVE daily AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(13,4))) AS DOUBLE) AS rev,
       |    SUM(CAST(o_totalprice AS DECIMAL(13,4))) AS revd
@@ -1556,11 +1556,11 @@ object CurationQueries {
       |    h.lvl + h.tr + h.sea[(s.rn - 1) % 7 + 1]
       |  FROM s JOIN h ON s.rn = h.rn + 1)
       |SELECT day,
-      |  FLOOR(rev * 1e4 + 0.5) / 1e4 AS rev,
-      |  FLOOR(lvl * 1e4 + 0.5) / 1e4 AS level,
-      |  FLOOR(tr * 1e4 + 0.5) / 1e4 AS trend,
-      |  FLOOR(se * 1e4 + 0.5) / 1e4 AS seasonal,
-      |  FLOOR(fit * 1e4 + 0.5) / 1e4 AS fitted,
-      |  FLOOR((rev - fit) * 1e4 + 0.5) / 1e4 AS resid
+      |  ${Parity.fixSql("rev", 4)} AS rev,
+      |  ${Parity.fixSql("lvl", 4)} AS level,
+      |  ${Parity.fixSql("tr", 4)} AS trend,
+      |  ${Parity.fixSql("se", 4)} AS seasonal,
+      |  ${Parity.fixSql("fit", 4)} AS fitted,
+      |  ${Parity.fixSql("(rev - fit)", 4)} AS resid
       |FROM h WHERE rn >= 8 ORDER BY day""".stripMargin
 }

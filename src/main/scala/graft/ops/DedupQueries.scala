@@ -873,7 +873,7 @@ object DedupQueries {
   }
 
   val q401MinhashPanelSql: String = {
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS ts
       |  FROM documents),
       |toks AS (
@@ -908,9 +908,9 @@ object DedupQueries {
       |  GROUP BY 1, 2),
       |per AS (
       |  SELECT e.lang,
-      |    CAST(FLOOR(CAST(COALESCE(i.ninter, 0) AS DOUBLE)
-      |      / GREATEST(e.na + e.nb - COALESCE(i.ninter, 0), 1)
-      |      * 1e6 + 0.5) AS BIGINT) AS jq,
+      |    ${Parity.quantSql("CAST(COALESCE(i.ninter, 0) AS DOUBLE)" +
+                             " / GREATEST(e.na + e.nb - COALESCE(i.ninter, 0), 1)", 6)}
+      |      AS jq,
       |    e.match16 * 62500 AS eq
       |  FROM est e LEFT JOIN inter i ON e.a = i.a AND e.b = i.b),
       |p2 AS (
@@ -920,14 +920,14 @@ object DedupQueries {
       |      AS BIGINT) AS band
       |  FROM per)
       |SELECT lang, COUNT(*) AS n_pairs,
-      |  FLOOR(CAST(SUM(eq) AS DOUBLE) / 1e6 / COUNT(*) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS mean_est,
-      |  FLOOR(CAST(SUM(jq) AS DOUBLE) / 1e6 / COUNT(*) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS mean_exact,
-      |  FLOOR(CAST(SUM(ABS(eq - jq)) AS DOUBLE) / 1e6 / COUNT(*)
-      |    * 1e6 + 0.5) / 1e6 + 0 AS mae,
-      |  FLOOR(CAST(SUM(CASE WHEN ABS(eq - jq) <= band THEN 1 ELSE 0 END)
-      |    AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6 + 0 AS within_2sigma
+      |  ${Parity.fixSql("CAST(SUM(eq) AS DOUBLE) / 1e6 / COUNT(*)", 6)} + 0 AS mean_est,
+      |  ${Parity.fixSql("CAST(SUM(jq) AS DOUBLE) / 1e6 / COUNT(*)", 6)}
+      |    + 0 AS mean_exact,
+      |  ${Parity.fixSql("CAST(SUM(ABS(eq - jq)) AS DOUBLE) / 1e6 / COUNT(*)", 6)}
+      |    + 0 AS mae,
+      |  ${Parity.fixSql("CAST(SUM(CASE WHEN ABS(eq - jq) <= band THEN 1 ELSE 0 END)" +
+                         " AS DOUBLE) / COUNT(*)", 6)}
+      |    + 0 AS within_2sigma
       |FROM p2 GROUP BY lang ORDER BY lang""".stripMargin
   }
 }

@@ -60,7 +60,7 @@ object DriftQueries {
   }
 
   val q122ColumnEntropySql: String =
-    """WITH v AS (
+    s"""WITH v AS (
       |  SELECT 'l_returnflag' AS col_name, l_returnflag AS val FROM lineitem
       |  UNION ALL SELECT 'l_linestatus', l_linestatus FROM lineitem
       |  UNION ALL SELECT 'o_orderstatus', o_orderstatus FROM orders
@@ -73,8 +73,9 @@ object DriftQueries {
       |  MAX(tot) AS n_rows,
       |  COUNT(*) AS n_distinct,
       |  CAST(COALESCE(SUM(n) FILTER (WHERE val IS NULL), 0) AS BIGINT) AS n_null,
-      |  ROUND(-(CAST(SUM(CAST(FLOOR((CAST(n AS DOUBLE) / tot)
-      |      * LN(CAST(n AS DOUBLE) / tot) * 1e9 + 0.5) AS BIGINT))
+      |  ROUND(-(CAST(SUM(${Parity.quantSql("(CAST(n AS DOUBLE) / tot)" +
+                                            " * LN(CAST(n AS DOUBLE) / tot)", 9)}
+      |      )
       |    AS DOUBLE) / 1e9), 4) + 0 AS entropy,
       |  ROUND(CAST(MAX(n) AS DOUBLE) / MAX(tot), 4) AS top_share
       |FROM t GROUP BY col_name ORDER BY col_name""".stripMargin
@@ -405,9 +406,9 @@ object DriftQueries {
        |g AS (
        |  SELECT priority, COUNT(*) AS n, MAX(mug) AS mu_g,
        |    SUM(x) AS sum_g,
-       |    CAST(SUM(CAST(FLOOR(
-       |      (CAST(x AS DOUBLE) / mug) * ln(CAST(x AS DOUBLE) / mug)
-       |      * 1e9 + 0.5) AS BIGINT)) AS BIGINT) AS sq
+       |    CAST(SUM(
+       |      ${Parity.quantSql("(CAST(x AS DOUBLE) / mug) * ln(CAST(x AS DOUBLE) / mug)", 9)})
+       |      AS BIGINT) AS sq
        |  FROM r GROUP BY priority),
        |t AS (
        |  SELECT priority, n, mu_g, sq,
@@ -418,8 +419,9 @@ object DriftQueries {
        |SELECT priority, n, mu_g,
        |  (CAST(sq AS DOUBLE) / 1e9) / CAST(n AS DOUBLE) AS theil_within,
        |  (CAST(n AS DOUBLE) / CAST(big_n AS DOUBLE)) * (mu_g / mu) AS weight,
-       |  FLOOR(((CAST(n AS DOUBLE) / CAST(big_n AS DOUBLE)) * (mu_g / mu))
-       |    * ln(mu_g / mu) * 1e9 + 0.5) / 1e9 AS between_term
+       |  ${Parity.fixSql("((CAST(n AS DOUBLE) / CAST(big_n AS DOUBLE)) * (mu_g / mu))" +
+                          " * ln(mu_g / mu)", 9)}
+       |    AS between_term
        |FROM t ORDER BY priority""".stripMargin
 
   /** L148 Tukey-fence outlier audit (Tukey 1977 [PK], the boxplot
@@ -702,15 +704,14 @@ object DriftQueries {
   }
 
   val q249AtkinsonSql: String =
-    """WITH cust AS (
+    s"""WITH cust AS (
       |  SELECT c_mktsegment AS seg, c_custkey,
       |    SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS c
       |  FROM orders JOIN customer ON o_custkey = c_custkey
       |  GROUP BY 1, 2),
       |g AS (
       |  SELECT seg, COUNT(*) AS n, CAST(SUM(c) AS BIGINT) AS sc,
-      |    CAST(SUM(CAST(FLOOR(LN(CAST(c AS DOUBLE)) * 1e9 + 0.5)
-      |      AS BIGINT)) AS BIGINT) AS lnq
+      |    CAST(SUM(${Parity.quantSql("LN(CAST(c AS DOUBLE))", 9)}) AS BIGINT) AS lnq
       |  FROM cust GROUP BY seg)
       |SELECT seg AS c_mktsegment, n AS n_customers,
       |  ROUND(CAST(sc AS DOUBLE) / n / 100.0, 4) + 0 AS mean_rev,
@@ -867,7 +868,7 @@ object DriftQueries {
   }
 
   val q268MutualInfoSql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS n
       |  FROM orders GROUP BY 1, 2),
       |t AS (
@@ -879,14 +880,17 @@ object DriftQueries {
       |  FROM cells),
       |q AS (
       |  SELECT nt,
-      |    CAST(SUM(CAST(FLOOR(CAST(n AS DOUBLE) / nt
-      |      * ln(CAST(nt AS DOUBLE) * n / (CAST(nx AS DOUBLE) * ny))
-      |      * 1e9 + 0.5) AS BIGINT)) AS BIGINT) AS miq,
-      |    CAST(SUM(CAST(FLOOR(-(CAST(nx AS DOUBLE) / nt)
-      |      * ln(CAST(nx AS DOUBLE) / nt) / cx * 1e9 + 0.5) AS BIGINT))
+      |    CAST(SUM(
+      |      ${Parity.quantSql("CAST(n AS DOUBLE) / nt" +
+                               " * ln(CAST(nt AS DOUBLE) * n / (CAST(nx AS DOUBLE) * ny))", 9)}
+      |      ) AS BIGINT) AS miq,
+      |    CAST(SUM(${Parity.quantSql("-(CAST(nx AS DOUBLE) / nt)" +
+                                      " * ln(CAST(nx AS DOUBLE) / nt) / cx", 9)}
+      |      )
       |      AS BIGINT) AS hxq,
-      |    CAST(SUM(CAST(FLOOR(-(CAST(ny AS DOUBLE) / nt)
-      |      * ln(CAST(ny AS DOUBLE) / nt) / cy * 1e9 + 0.5) AS BIGINT))
+      |    CAST(SUM(${Parity.quantSql("-(CAST(ny AS DOUBLE) / nt)" +
+                                      " * ln(CAST(ny AS DOUBLE) / nt) / cy", 9)}
+      |      )
       |      AS BIGINT) AS hyq
       |  FROM t GROUP BY nt)
       |SELECT nt AS n_orders,
@@ -972,7 +976,7 @@ object DriftQueries {
   }
 
   val q280AdTwoSampleSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
       |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
       |  FROM orders),
@@ -991,15 +995,16 @@ object DriftQueries {
       |  FROM h),
       |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c),
       |t AS (
-      |  SELECT CAST(FLOOR(CAST(l AS DOUBLE)
-      |    * (CAST(CAST(cum_x AS HUGEINT) * nn
-      |         - CAST(nx AS HUGEINT) * cum_all AS DOUBLE)
-      |       * CAST(CAST(cum_x AS HUGEINT) * nn
-      |         - CAST(nx AS HUGEINT) * cum_all AS DOUBLE)
-      |       / (CAST(CAST(cum_all AS HUGEINT) * (nn - cum_all) AS DOUBLE)
-      |          * GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE),
-      |              1e-300)))
-      |    * 1e9 + 0.5) AS BIGINT) AS termq, nn, nx
+      |  SELECT
+      |    ${Parity.quantSql("CAST(l AS DOUBLE)" +
+                             " * (CAST(CAST(cum_x AS HUGEINT) * nn" +
+                             " - CAST(nx AS HUGEINT) * cum_all AS DOUBLE)" +
+                             " * CAST(CAST(cum_x AS HUGEINT) * nn" +
+                             " - CAST(nx AS HUGEINT) * cum_all AS DOUBLE)" +
+                             " / (CAST(CAST(cum_all AS HUGEINT) * (nn - cum_all) AS DOUBLE)" +
+                             " * GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE)," +
+                             " 1e-300)))", 9)}
+      |    AS termq, nn, nx
       |  FROM c, tot WHERE cum_all < nn),
       |g AS (
       |  SELECT MAX(nn) AS nn, MAX(nx) AS nx,
@@ -1007,7 +1012,7 @@ object DriftQueries {
       |  FROM t)
       |SELECT nx AS n_base, nn - nx AS n_new,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR(CAST(tq AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6
+      |    ELSE ${Parity.fixSql("CAST(tq AS DOUBLE) / 1e9", 6)}
       |    END AS a2
       |FROM g""".stripMargin
 
@@ -1064,7 +1069,7 @@ object DriftQueries {
   }
 
   val q352KuiperSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
       |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
       |  FROM orders),
@@ -1092,19 +1097,19 @@ object DriftQueries {
       |SELECT CAST(nx AS BIGINT) AS n_base,
       |  CAST(nn - nx AS BIGINT) AS n_new,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR(GREATEST(CAST(gmax AS DOUBLE), 0.0)
-      |      / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx)) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS d_plus,
+      |    ELSE ${Parity.fixSql("GREATEST(CAST(gmax AS DOUBLE), 0.0)" +
+                                " / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx))", 6)}
+      |      + 0 END AS d_plus,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR(GREATEST(-CAST(gmin AS DOUBLE), 0.0)
-      |      / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx)) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS d_minus,
+      |    ELSE ${Parity.fixSql("GREATEST(-CAST(gmin AS DOUBLE), 0.0)" +
+                                " / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx))", 6)}
+      |      + 0 END AS d_minus,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR((GREATEST(CAST(gmax AS DOUBLE), 0.0)
-      |        / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx))
-      |      + GREATEST(-CAST(gmin AS DOUBLE), 0.0)
-      |        / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx))) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS kuiper_v
+      |    ELSE ${Parity.fixSql("(GREATEST(CAST(gmax AS DOUBLE), 0.0)" +
+                                " / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx))" +
+                                " + GREATEST(-CAST(gmin AS DOUBLE), 0.0)" +
+                                " / (CAST(nx AS DOUBLE) * (CAST(nn AS DOUBLE) - nx)))", 6)}
+      |      + 0 END AS kuiper_v
       |FROM g""".stripMargin
 
   /** L322 generalized-entropy inequality panel GE(0)/GE(1)/GE(2)
@@ -1159,7 +1164,7 @@ object DriftQueries {
   }
 
   val q387GePanelSql: String =
-    """WITH perc AS (
+    s"""WITH perc AS (
       |  SELECT c_mktsegment AS seg, o_custkey,
       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
       |      AS BIGINT) AS x
@@ -1167,7 +1172,7 @@ object DriftQueries {
       |  GROUP BY 1, 2),
       |t AS (
       |  SELECT seg, x,
-      |    CAST(FLOOR(ln(CAST(x AS DOUBLE)) * 1e9 + 0.5) AS BIGINT) AS t9
+      |    ${Parity.quantSql("ln(CAST(x AS DOUBLE))", 9)} AS t9
       |  FROM perc),
       |g AS (
       |  SELECT seg, COUNT(*) AS n,
@@ -1188,9 +1193,9 @@ object DriftQueries {
       |  FROM g)
       |SELECT seg, CAST(n AS BIGINT) AS n_customers,
       |  CAST(FLOOR(mu + 0.5) AS BIGINT) AS mean_cents,
-      |  FLOOR((lnmu - mlnx) * 1e6 + 0.5) / 1e6 + 0 AS ge0_mld,
-      |  FLOOR((xlnx - lnmu) * 1e6 + 0.5) / 1e6 + 0 AS ge1_theil,
-      |  FLOOR(ge2 * 1e6 + 0.5) / 1e6 + 0 AS ge2_half_cv2
+      |  ${Parity.fixSql("(lnmu - mlnx)", 6)} + 0 AS ge0_mld,
+      |  ${Parity.fixSql("(xlnx - lnmu)", 6)} + 0 AS ge1_theil,
+      |  ${Parity.fixSql("ge2", 6)} + 0 AS ge2_half_cv2
       |FROM f ORDER BY seg""".stripMargin
 
   /** L335 Cramér–von Mises two-sample test *(added r17; [PK]
@@ -1259,7 +1264,7 @@ object DriftQueries {
   }
 
   val q400CvmTwoSampleSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
       |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
       |  FROM orders),
@@ -1278,16 +1283,16 @@ object DriftQueries {
       |  FROM h),
       |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c),
       |t AS (
-      |  SELECT CAST(FLOOR(CAST(l AS DOUBLE)
-      |    * (CAST(CAST(cum_x AS HUGEINT) * (nn - nx)
-      |         - CAST(cum_all - cum_x AS HUGEINT) * nx AS DOUBLE)
-      |       / GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE),
-      |           1e-300))
-      |    * (CAST(CAST(cum_x AS HUGEINT) * (nn - nx)
-      |         - CAST(cum_all - cum_x AS HUGEINT) * nx AS DOUBLE)
-      |       / GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE),
-      |           1e-300))
-      |    * 1e9 + 0.5) AS BIGINT) AS termq, nn, nx
+      |  SELECT ${Parity.quantSql("CAST(l AS DOUBLE)" +
+                                  " * (CAST(CAST(cum_x AS HUGEINT) * (nn - nx)" +
+                                  " - CAST(cum_all - cum_x AS HUGEINT) * nx AS DOUBLE)" +
+                                  " / GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE)," +
+                                  " 1e-300))" +
+                                  " * (CAST(CAST(cum_x AS HUGEINT) * (nn - nx)" +
+                                  " - CAST(cum_all - cum_x AS HUGEINT) * nx AS DOUBLE)" +
+                                  " / GREATEST(CAST(nx AS DOUBLE) * CAST(nn - nx AS DOUBLE)," +
+                                  " 1e-300))", 9)}
+      |    AS termq, nn, nx
       |  FROM c, tot),
       |g AS (
       |  SELECT MAX(nn) AS nn, MAX(nx) AS nx,
@@ -1295,13 +1300,14 @@ object DriftQueries {
       |  FROM t)
       |SELECT nx AS n_base, nn - nx AS n_new,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR(CAST(nx AS DOUBLE) * (nn - nx)
-      |      / (CAST(nn AS DOUBLE) * nn) * (CAST(tq AS DOUBLE) / 1e9)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS t_cvm,
+      |    ELSE ${Parity.fixSql("CAST(nx AS DOUBLE) * (nn - nx)" +
+                                " / (CAST(nn AS DOUBLE) * nn) * (CAST(tq AS DOUBLE) / 1e9)", 6)}
+      |      + 0 END AS t_cvm,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE CAST(CASE WHEN FLOOR(CAST(nx AS DOUBLE) * (nn - nx)
-      |      / (CAST(nn AS DOUBLE) * nn) * (CAST(tq AS DOUBLE) / 1e9)
-      |      * 1e6 + 0.5) / 1e6 + 0 > 0.461 THEN 1 ELSE 0 END AS BIGINT)
+      |    ELSE CAST(CASE WHEN
+      |      ${Parity.fixSql("CAST(nx AS DOUBLE) * (nn - nx)" +
+                             " / (CAST(nn AS DOUBLE) * nn) * (CAST(tq AS DOUBLE) / 1e9)", 6)}
+      |      + 0 > 0.461 THEN 1 ELSE 0 END AS BIGINT)
       |    END AS reject_5pct
       |FROM g""".stripMargin
 
@@ -1395,11 +1401,12 @@ object DriftQueries {
       |  FROM w)
       |SELECT nx AS n_weekday, nn - nx AS n_weekend,
       |  CASE WHEN nx = 0 OR nx = nn THEN NULL
-      |    ELSE FLOOR((CAST(nn AS DOUBLE) * CAST(sq AS DOUBLE)
-      |      - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-      |      / GREATEST(CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-      |        * CAST(nn AS DOUBLE) * CAST(nx AS DOUBLE)
-      |        * CAST(nn - nx AS DOUBLE), 1e-300) * 1e6 + 0.5) / 1e6 + 0
+      |    ELSE ${Parity.fixSql("(CAST(nn AS DOUBLE) * CAST(sq AS DOUBLE)" +
+                                " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))" +
+                                " / GREATEST(CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)" +
+                                " * CAST(nn AS DOUBLE) * CAST(nx AS DOUBLE)" +
+                                " * CAST(nn - nx AS DOUBLE), 1e-300)", 6)}
+      |        + 0
       |    END AS watson_u2
       |FROM g""".stripMargin
 }

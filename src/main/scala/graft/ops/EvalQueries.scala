@@ -300,7 +300,7 @@ object EvalQueries {
 
 
   val q297CronbachAlphaSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT
       |    LEAST(CAST(FLOOR(n_chars / 100.0) AS BIGINT), 10) AS i1,
       |    LEAST(CAST(FLOOR(len(string_split(text, ' ')) / 20.0) AS BIGINT),
@@ -338,9 +338,9 @@ object EvalQueries {
       |  FROM a)
       |SELECT n AS n_docs, CAST(4 AS BIGINT) AS k_items,
       |  CASE WHEN n < 2 OR vt <= 0 THEN NULL
-      |    ELSE FLOOR(ratio * 1e6 + 0.5) / 1e6 END AS var_share,
+      |    ELSE ${Parity.fixSql("ratio", 6)} END AS var_share,
       |  CASE WHEN n < 2 OR vt <= 0 THEN NULL
-      |    ELSE FLOOR(4.0 / 3.0 * (1.0 - ratio) * 1e6 + 0.5) / 1e6 END
+      |    ELSE ${Parity.fixSql("4.0 / 3.0 * (1.0 - ratio)", 6)} END
       |    AS cronbach_alpha
       |FROM c0""".stripMargin
 
@@ -485,7 +485,7 @@ object EvalQueries {
 
 
   val q301IccSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT
       |    LEAST(CAST(FLOOR(n_chars / 100.0) AS BIGINT), 10) AS i1,
       |    LEAST(CAST(FLOOR(len(string_split(text, ' ')) / 20.0) AS BIGINT),
@@ -530,24 +530,25 @@ object EvalQueries {
       |  FROM s)
       |SELECT n AS n_docs,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR(msr * 1e6 + 0.5) / 1e6 END AS ms_rows,
+      |    ELSE ${Parity.fixSql("msr", 6)} END AS ms_rows,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR(msc * 1e6 + 0.5) / 1e6 END AS ms_cols,
+      |    ELSE ${Parity.fixSql("msc", 6)} END AS ms_cols,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR(mse * 1e6 + 0.5) / 1e6 END AS ms_err,
+      |    ELSE ${Parity.fixSql("mse", 6)} END AS ms_err,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR((msr - mse)
-      |      / (msr + 3.0 * mse + 4.0 * (msc - mse) / CAST(n AS DOUBLE))
-      |      * 1e6 + 0.5) / 1e6 END AS icc_2_1,
+      |    ELSE
+      |      ${Parity.fixSql("(msr - mse)" +
+                             " / (msr + 3.0 * mse + 4.0 * (msc - mse) / CAST(n AS DOUBLE))", 6)}
+      |      END AS icc_2_1,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR((msr - mse)
-      |      / (msr + (msc - mse) / CAST(n AS DOUBLE)) * 1e6 + 0.5) / 1e6
+      |    ELSE ${Parity.fixSql("(msr - mse)" +
+                                " / (msr + (msc - mse) / CAST(n AS DOUBLE))", 6)}
       |    END AS icc_2_k,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR((msr - mse) / (msr + 3.0 * mse) * 1e6 + 0.5) / 1e6
+      |    ELSE ${Parity.fixSql("(msr - mse) / (msr + 3.0 * mse)", 6)}
       |    END AS icc_3_1,
       |  CASE WHEN n < 2 OR msr <= 0 THEN NULL
-      |    ELSE FLOOR((msr - mse) / msr * 1e6 + 0.5) / 1e6 END AS icc_3_k
+      |    ELSE ${Parity.fixSql("(msr - mse) / msr", 6)} END AS icc_3_k
       |FROM ms""".stripMargin
 
 
@@ -617,7 +618,7 @@ object EvalQueries {
 
 
   val q374BlandAltmanSql: String =
-    """WITH a AS (
+    s"""WITH a AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
       |      AS BIGINT) AS va
@@ -634,24 +635,27 @@ object EvalQueries {
       |  FROM diffs),
       |st AS (
       |  SELECT CAST(n AS BIGINT) AS n_days,
-      |    FLOOR(CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)
-      |      * 1e4 + 0.5) / 1e4 + 0 AS bias_cents,
-      |    FLOOR(sqrt(GREATEST((CAST(n AS DOUBLE) * CAST(sd2 AS DOUBLE)
-      |        - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))
-      |      / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0),
-      |        1e-300), 0.0)) * 1e4 + 0.5) / 1e4 + 0 AS sd_cents,
-      |    FLOOR((CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)
-      |      - 1.96 * sqrt(GREATEST((CAST(n AS DOUBLE)
-      |          * CAST(sd2 AS DOUBLE)
-      |        - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))
-      |      / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0),
-      |        1e-300), 0.0))) * 1e4 + 0.5) / 1e4 + 0 AS loa_lo,
-      |    FLOOR((CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)
-      |      + 1.96 * sqrt(GREATEST((CAST(n AS DOUBLE)
-      |          * CAST(sd2 AS DOUBLE)
-      |        - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))
-      |      / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0),
-      |        1e-300), 0.0))) * 1e4 + 0.5) / 1e4 + 0 AS loa_hi
+      |    ${Parity.fixSql("CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)", 4)}
+      |      + 0 AS bias_cents,
+      |    ${Parity.fixSql("sqrt(GREATEST((CAST(n AS DOUBLE) * CAST(sd2 AS DOUBLE)" +
+                           " - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))" +
+                           " / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)," +
+                           " 1e-300), 0.0))", 4)}
+      |        + 0 AS sd_cents,
+      |    ${Parity.fixSql("(CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)" +
+                           " - 1.96 * sqrt(GREATEST((CAST(n AS DOUBLE)" +
+                           " * CAST(sd2 AS DOUBLE)" +
+                           " - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))" +
+                           " / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)," +
+                           " 1e-300), 0.0)))", 4)}
+      |        + 0 AS loa_lo,
+      |    ${Parity.fixSql("(CAST(sd1 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)" +
+                           " + 1.96 * sqrt(GREATEST((CAST(n AS DOUBLE)" +
+                           " * CAST(sd2 AS DOUBLE)" +
+                           " - CAST(sd1 AS DOUBLE) * CAST(sd1 AS DOUBLE))" +
+                           " / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)," +
+                           " 1e-300), 0.0)))", 4)}
+      |        + 0 AS loa_hi
       |  FROM m),
       |cnt AS (
       |  SELECT n_days, bias_cents, sd_cents, loa_lo, loa_hi,
@@ -672,8 +676,8 @@ object EvalQueries {
       |  CASE WHEN n_days < 10 OR sd_cents <= 0.0 THEN NULL
       |    ELSE n_outside END AS n_outside,
       |  CASE WHEN n_days < 10 OR sd_cents <= 0.0 THEN NULL
-      |    ELSE FLOOR(CAST(n_outside AS DOUBLE) / n_days * 1e4 + 0.5)
-      |      / 1e4 + 0 END AS pct_outside
+      |    ELSE ${Parity.fixSql("CAST(n_outside AS DOUBLE) / n_days", 4)}
+      |      + 0 END AS pct_outside
       |FROM cnt""".stripMargin
 
 
@@ -746,7 +750,7 @@ object EvalQueries {
 
 
   val q375WeightedKappaSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
       |    CAST(NTILE(3) OVER (ORDER BY n_chars, doc_id) AS BIGINT)
       |      AS ra,
@@ -780,20 +784,20 @@ object EvalQueries {
       |  FROM m CROSS JOIN cross_t)
       |SELECT n AS n_docs,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(CAST(p0 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS po,
+      |    ${Parity.fixSql("CAST(p0 AS DOUBLE) / GREATEST(CAST(n AS DOUBLE), 1e-300)", 6)}
+      |      + 0 END AS po,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(CAST(n * p0 - e0 AS DOUBLE)
-      |      / GREATEST(CAST(n * n - e0 AS DOUBLE), 1e-300) * 1e6 + 0.5)
-      |      / 1e6 + 0 END AS kappa,
+      |    ${Parity.fixSql("CAST(n * p0 - e0 AS DOUBLE)" +
+                           " / GREATEST(CAST(n * n - e0 AS DOUBLE), 1e-300)", 6)}
+      |      + 0 END AS kappa,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(CAST(n * pl - el AS DOUBLE)
-      |      / GREATEST(CAST(2 * n * n - el AS DOUBLE), 1e-300)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS kappa_lin,
+      |    ${Parity.fixSql("CAST(n * pl - el AS DOUBLE)" +
+                           " / GREATEST(CAST(2 * n * n - el AS DOUBLE), 1e-300)", 6)}
+      |      + 0 END AS kappa_lin,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(CAST(n * pq - eq AS DOUBLE)
-      |      / GREATEST(CAST(4 * n * n - eq AS DOUBLE), 1e-300)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS kappa_quad
+      |    ${Parity.fixSql("CAST(n * pq - eq AS DOUBLE)" +
+                           " / GREATEST(CAST(4 * n * n - eq AS DOUBLE), 1e-300)", 6)}
+      |      + 0 END AS kappa_quad
       |FROM f""".stripMargin
 
   /** L321 Scott's π vs Cohen's κ *(added r17; [PK] Scott 1955;
@@ -849,7 +853,7 @@ object EvalQueries {
   }
 
   val q386ScottPiSql: String =
-    """WITH r AS (
+    s"""WITH r AS (
       |  SELECT CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS r1,
       |    CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
       |      AS r2,
@@ -887,14 +891,12 @@ object EvalQueries {
       |      + (1.0 - (p1 + p2) / 2.0) * (1.0 - (p1 + p2) / 2.0) AS pes
       |  FROM f)
       |SELECT pair, nt AS n_docs,
-      |  FLOOR(po * 1e6 + 0.5) / 1e6 + 0 AS p_obs,
-      |  FLOOR((po - pec) / GREATEST(1.0 - pec, 1e-300) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS kappa,
-      |  FLOOR((po - pes) / GREATEST(1.0 - pes, 1e-300) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS scott_pi,
-      |  FLOOR(((po - pec) / GREATEST(1.0 - pec, 1e-300)
-      |    - (po - pes) / GREATEST(1.0 - pes, 1e-300)) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS kappa_minus_pi
+      |  ${Parity.fixSql("po", 6)} + 0 AS p_obs,
+      |  ${Parity.fixSql("(po - pec) / GREATEST(1.0 - pec, 1e-300)", 6)} + 0 AS kappa,
+      |  ${Parity.fixSql("(po - pes) / GREATEST(1.0 - pes, 1e-300)", 6)} + 0 AS scott_pi,
+      |  ${Parity.fixSql("((po - pec) / GREATEST(1.0 - pec, 1e-300)" +
+                         " - (po - pes) / GREATEST(1.0 - pes, 1e-300))", 6)}
+      |    + 0 AS kappa_minus_pi
       |FROM f2 ORDER BY pair""".stripMargin
 
   /** L329 Lin's concordance correlation coefficient *(added r17;
@@ -948,7 +950,7 @@ object EvalQueries {
   }
 
   val q394LinCccSql: String =
-    """WITH a AS (
+    s"""WITH a AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
       |      AS BIGINT) AS va
@@ -986,9 +988,9 @@ object EvalQueries {
       |      * SQRT(GREATEST(vy, 0.0)), 1e-300) AS r
       |  FROM z)
       |SELECT CAST(n AS BIGINT) AS n_days,
-      |  FLOOR(r * 1e6 + 0.5) / 1e6 + 0 AS pearson_r,
+      |  ${Parity.fixSql("r", 6)} + 0 AS pearson_r,
       |  CASE WHEN ABS(r) < 1e-12 THEN NULL
-      |    ELSE FLOOR(ccc / r * 1e6 + 0.5) / 1e6 + 0 END AS c_b,
-      |  FLOOR(ccc * 1e6 + 0.5) / 1e6 + 0 AS ccc
+      |    ELSE ${Parity.fixSql("ccc / r", 6)} + 0 END AS c_b,
+      |  ${Parity.fixSql("ccc", 6)} + 0 AS ccc
       |FROM z2""".stripMargin
 }

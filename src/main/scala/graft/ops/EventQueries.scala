@@ -982,7 +982,7 @@ object EventQueries {
   }
 
   val q330PrefixPathsSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts, event_id, event_type
       |  FROM events WHERE user_id IS NOT NULL),
       |g AS (
@@ -1010,9 +1010,10 @@ object EventQueries {
       |  CAST(SUM(CASE WHEN next_path IS NOT NULL
       |    AND starts_with(next_path, path || '>') THEN 1 ELSE 0 END)
       |    AS BIGINT) AS n_covered,
-      |  FLOOR(SUM(CASE WHEN next_path IS NOT NULL
-      |    AND starts_with(next_path, path || '>') THEN 1 ELSE 0 END)
-      |    * 1.0 / COUNT(*) * 1e4 + 0.5) / 1e4 + 0 AS coverage
+      |  ${Parity.fixSql("SUM(CASE WHEN next_path IS NOT NULL" +
+                         " AND starts_with(next_path, path || '>') THEN 1 ELSE 0 END)" +
+                         " * 1.0 / COUNT(*)", 4)}
+      |    + 0 AS coverage
       |FROM adj GROUP BY 1
       |ORDER BY depth""".stripMargin
 }

@@ -862,7 +862,7 @@ object GraphQueries {
   }
 
   val q327LinkPanelSql: String =
-    """WITH cb AS (
+    s"""WITH cb AS (
       |  SELECT DISTINCT o_custkey AS c, p_brand AS b
       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |  JOIN part ON l_partkey = p_partkey),
@@ -882,8 +882,7 @@ object GraphQueries {
       |SELECT t.a, t.b, cn,
       |  CAST(dega.deg AS BIGINT) AS deg_a, CAST(degb.deg AS BIGINT)
       |    AS deg_b,
-      |  FLOOR(CAST(cn AS DOUBLE)
-      |    / (dega.deg + degb.deg - cn) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(cn AS DOUBLE) / (dega.deg + degb.deg - cn)", 6)} + 0
       |    AS jaccard,
       |  CAST(dega.deg * degb.deg AS BIGINT) AS pref_attach,
       |  ROUND(CAST(raqs AS DOUBLE) / 1e6, 6) + 0 AS res_alloc

@@ -76,7 +76,7 @@ object HypothesisTestQueries {
   }
 
   val q186Chi2Sql: String =
-    """WITH obs AS (
+    s"""WITH obs AS (
       |  SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
       |l AS (SELECT lang, COUNT(*) AS rl FROM documents GROUP BY 1),
       |s AS (SELECT source, COUNT(*) AS cs,
@@ -88,11 +88,12 @@ object HypothesisTestQueries {
       |  LEFT JOIN obs ON obs.lang = l.lang AND obs.source = s.source),
       |q AS (
       |  SELECT lang, source, n,
-      |    CAST(FLOOR(
-      |      (CAST(o AS DOUBLE) - CAST(rl * cs AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * (CAST(o AS DOUBLE) - CAST(rl * cs AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / (CAST(rl * cs AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * 1e6 + 0.5) AS BIGINT) AS cq
+      |    ${Parity.quantSql("(CAST(o AS DOUBLE) - CAST(rl * cs AS DOUBLE) / CAST(n" +
+                             " AS DOUBLE))" +
+                             " * (CAST(o AS DOUBLE) - CAST(rl * cs AS DOUBLE) / CAST(n" +
+                             " AS DOUBLE))" +
+                             " / (CAST(rl * cs AS DOUBLE) / CAST(n AS DOUBLE))", 6)}
+      |      AS cq
       |  FROM grid),
       |a AS (SELECT MAX(n) AS n_docs, COUNT(DISTINCT lang) AS r,
       |             COUNT(DISTINCT source) AS c, CAST(SUM(cq) AS BIGINT) AS sq
@@ -168,7 +169,7 @@ object HypothesisTestQueries {
   }
 
   val q216BhFdrSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT source, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
       |      AS x
@@ -181,14 +182,14 @@ object HypothesisTestQueries {
       |  FROM g),
       |p AS (
       |  SELECT source, n, x, zv,
-      |    CAST(FLOOR(2.0 * (exp(-abs(zv) * abs(zv) / 2.0)
-      |        / 2.5066282746310002)
-      |      * (0.319381530 * (1.0 / (1.0 + 0.2316419 * abs(zv)))
-      |       - 0.356563782 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 2)
-      |       + 1.781477937 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 3)
-      |       - 1.821255978 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 4)
-      |       + 1.330274429 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 5))
-      |      * 1e8 + 0.5) AS BIGINT) AS pq
+      |    ${Parity.quantSql("2.0 * (exp(-abs(zv) * abs(zv) / 2.0)" +
+                             " / 2.5066282746310002)" +
+                             " * (0.319381530 * (1.0 / (1.0 + 0.2316419 * abs(zv)))" +
+                             " - 0.356563782 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 2)" +
+                             " + 1.781477937 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 3)" +
+                             " - 1.821255978 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 4)" +
+                             " + 1.330274429 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 5))", 8)}
+      |      AS pq
       |  FROM z),
       |r AS (
       |  SELECT source, n, x, zv, pq,
@@ -470,7 +471,7 @@ object HypothesisTestQueries {
   }
 
   val q229MantelHaenszelSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment AS seg,
       |    o_orderpriority = '1-URGENT' AS expo,
       |    o_totalprice >= 200000.0 AS hi
@@ -488,10 +489,10 @@ object HypothesisTestQueries {
       |  FROM o GROUP BY seg),
       |t AS (
       |  SELECT seg, a, b, c, d,
-      |    CAST(FLOOR(CAST(a AS DOUBLE) * d
-      |      / CAST(a + b + c + d AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS adq,
-      |    CAST(FLOOR(CAST(b AS DOUBLE) * c
-      |      / CAST(a + b + c + d AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS bcq
+      |    ${Parity.quantSql("CAST(a AS DOUBLE) * d / CAST(a + b + c + d AS DOUBLE)", 6)}
+      |      AS adq,
+      |    ${Parity.quantSql("CAST(b AS DOUBLE) * c / CAST(a + b + c + d AS DOUBLE)", 6)}
+      |      AS bcq
       |  FROM g),
       |t2 AS (
       |  SELECT *, CAST(SUM(adq) OVER () AS BIGINT) AS sad,
@@ -560,7 +561,7 @@ object HypothesisTestQueries {
        |  FROM per)
        |SELECT a, b, c, d,
        |  ROUND($chi, 4) + 0 AS chi2_cc,
-       |  FLOOR(${asTwoSidedPSql(s"SQRT($chi)")} * 1e8 + 0.5) / 1e8 AS p
+       |  ${Parity.fixSql(asTwoSidedPSql(s"SQRT($chi)"), 8)} AS p
        |FROM cen""".stripMargin
   }
 
@@ -633,7 +634,7 @@ object HypothesisTestQueries {
        |SELECT priority, sc AS score, n_i, x_i,
        |  ROUND(CAST(x_i AS DOUBLE) / n_i, 4) + 0 AS rate,
        |  ROUND($z, 4) + 0 AS z_trend,
-       |  FLOOR(${asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p
+       |  ${Parity.fixSql(asTwoSidedPSql(z), 8)} AS p
        |FROM t2 ORDER BY score""".stripMargin
   }
 
@@ -711,17 +712,17 @@ object HypothesisTestQueries {
        |  FROM tot),
        |d AS (
        |  SELECT n, mu, sd,
-       |    CAST(FLOOR(GREATEST(
-       |      abs(CAST(cum AS DOUBLE) / n - $phi),
-       |      abs($phi - CAST(cum - cnt AS DOUBLE) / n)) * 1e9 + 0.5)
-       |      AS BIGINT) AS dq
+       |    ${Parity.quantSql("GREATEST(" +
+                              s" abs(CAST(cum AS DOUBLE) / n - $phi)," +
+                              s" abs($phi - CAST(cum - cnt AS DOUBLE) / n))", 9)}
+       |      AS dq
        |  FROM (SELECT cum.*, m.n, m.mu, m.sd,
        |      (CAST(c AS DOUBLE) - mu) / sd AS zv
        |    FROM cum, m) q)
        |SELECT n AS n_orders,
        |  ROUND(MAX(mu) / 100.0, 4) + 0 AS mean_price,
        |  ROUND(MAX(sd) / 100.0, 4) + 0 AS sd_price,
-       |  FLOOR(CAST(MAX(dq) AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 AS ks_d
+       |  ${Parity.fixSql("CAST(MAX(dq) AS DOUBLE) / 1e9", 6)} AS ks_d
        |FROM d GROUP BY n""".stripMargin
   }
 
@@ -877,7 +878,7 @@ object HypothesisTestQueries {
   }
 
   val q256JarqueBeraSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
       |  FROM orders),
       |cen AS (SELECT c, COUNT(*) AS cnt FROM o GROUP BY c),
@@ -911,8 +912,8 @@ object HypothesisTestQueries {
       |    ROUND(CAST(n AS DOUBLE) / 6.0 * (skew * skew + exk * exk / 4.0),
       |      4) + 0 END AS jb_stat,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(exp(-(CAST(n AS DOUBLE) / 6.0
-      |      * (skew * skew + exk * exk / 4.0)) / 2.0) * 1e8 + 0.5) / 1e8
+      |    ${Parity.fixSql("exp(-(CAST(n AS DOUBLE) / 6.0" +
+                           " * (skew * skew + exk * exk / 4.0)) / 2.0)", 8)}
       |    END AS p
       |FROM st""".stripMargin
 

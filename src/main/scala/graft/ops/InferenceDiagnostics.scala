@@ -282,7 +282,7 @@ object InferenceDiagnostics {
 
 
   val q289CucconiSql: String =
-    """WITH cell AS (
+    s"""WITH cell AS (
       |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
       |    COUNT(*) AS cnt,
       |    CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
@@ -332,7 +332,7 @@ object InferenceDiagnostics {
       |  CASE WHEN m = 0 OR m = n OR n < 5 THEN NULL
       |    ELSE ROUND(c, 4) + 0 END AS c,
       |  CASE WHEN m = 0 OR m = n OR n < 5 THEN NULL
-      |    ELSE FLOOR(EXP(-c) * 1e8 + 0.5) / 1e8 END AS p
+      |    ELSE ${Parity.fixSql("EXP(-c)", 8)} END AS p
       |FROM c1x""".stripMargin
 
 
@@ -418,7 +418,7 @@ object InferenceDiagnostics {
 
 
   val q291DagostinoK2Sql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
       |  FROM orders),
       |cen AS (SELECT c, COUNT(*) AS cnt FROM o GROUP BY c),
@@ -452,11 +452,11 @@ object InferenceDiagnostics {
       |  FROM mm),
       |t2 AS (
       |  SELECT n, s2, b2, w2,
-      |    (1.0 / SQRT(FLOOR(LN(SQRT(w2)) * 1e9 + 0.5) / 1e9))
-      |    * (FLOOR(LN(y / SQRT(2.0 / (w2 - 1.0))
-      |        + SQRT((y / SQRT(2.0 / (w2 - 1.0)))
-      |          * (y / SQRT(2.0 / (w2 - 1.0))) + 1.0)) * 1e9 + 0.5)
-      |      / 1e9) AS z1
+      |    (1.0 / SQRT(${Parity.fixSql("LN(SQRT(w2))", 9)}))
+      |    * (${Parity.fixSql("LN(y / SQRT(2.0 / (w2 - 1.0))" +
+                              " + SQRT((y / SQRT(2.0 / (w2 - 1.0)))" +
+                              " * (y / SQRT(2.0 / (w2 - 1.0))) + 1.0))", 9)}
+      |      ) AS z1
       |  FROM t1),
       |t3 AS (
       |  SELECT n, s2, w2, z1,
@@ -475,8 +475,9 @@ object InferenceDiagnostics {
       |t5 AS (
       |  SELECT n, s2, w2, z1, a,
       |    (1.0 - 2.0 / (9.0 * a)
-      |      - FLOOR(CBRT((1.0 - 2.0 / a)
-      |          / (1.0 + xx * SQRT(2.0 / (a - 4.0)))) * 1e12 + 0.5) / 1e12)
+      |      - ${Parity.fixSql("CBRT((1.0 - 2.0 / a)" +
+                               " / (1.0 + xx * SQRT(2.0 / (a - 4.0))))", 12)}
+      |          )
       |    * SQRT(9.0 * a / 2.0) AS z2
       |  FROM t4)
       |SELECT n AS n_orders,
@@ -487,7 +488,7 @@ object InferenceDiagnostics {
       |  CASE WHEN n < 20 OR s2 <= 0 OR w2 <= 1 OR a <= 4 THEN NULL
       |    ELSE ROUND(z1 * z1 + z2 * z2, 4) + 0 END AS k2,
       |  CASE WHEN n < 20 OR s2 <= 0 OR w2 <= 1 OR a <= 4 THEN NULL
-      |    ELSE FLOOR(EXP(-(z1 * z1 + z2 * z2) / 2.0) * 1e8 + 0.5) / 1e8
+      |    ELSE ${Parity.fixSql("EXP(-(z1 * z1 + z2 * z2) / 2.0)", 8)}
       |    END AS p
       |FROM t5""".stripMargin
 
@@ -798,7 +799,7 @@ object InferenceDiagnostics {
 
 
   val q299IsotonicFitSql: String =
-    """WITH c0 AS (
+    s"""WITH c0 AS (
       |  SELECT
       |    LEAST(CAST(FLOOR(len(string_split(text, ' ')) / 10.0)
       |      AS BIGINT), 19) AS bin,
@@ -825,9 +826,9 @@ object InferenceDiagnostics {
       |  FROM pairs),
       |iso AS (SELECT kb, MAX(bmin) AS iso FROM bmin GROUP BY kb)
       |SELECT bin, nb AS n_docs,
-      |  FLOOR(CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) * 1e6 + 0.5) / 1e6
+      |  ${Parity.fixSql("CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE)", 6)}
       |    AS raw_rate,
-      |  FLOOR(iso * 1e6 + 0.5) / 1e6 AS iso_rate
+      |  ${Parity.fixSql("iso", 6)} AS iso_rate
       |FROM pre JOIN iso ON pre.bin = iso.kb
       |ORDER BY bin""".stripMargin
 

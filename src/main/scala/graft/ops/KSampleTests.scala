@@ -473,7 +473,7 @@ object KSampleTests {
        |  ROUND(CAST(rj2 AS DOUBLE) / (b * 2.0), 4) + 0 AS mean_rank,
        |  CAST(l2 AS DOUBLE) / 2.0 AS l_stat,
        |  ROUND($z, 4) + 0 AS z_trend,
-       |  FLOOR(${asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p
+       |  ${Parity.fixSql(asTwoSidedPSql(z), 8)} AS p
        |FROM t ORDER BY score""".stripMargin
   }
 
@@ -573,7 +573,7 @@ object KSampleTests {
        |SELECT CAST(nt AS BIGINT) AS n_orders,
        |  CAST(j2 AS DOUBLE) / 2.0 AS j_stat,
        |  ROUND($z, 4) + 0 AS z_jt,
-       |  FLOOR(${asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p
+       |  ${Parity.fixSql(asTwoSidedPSql(z), 8)} AS p
        |FROM t""".stripMargin
   }
 
@@ -634,7 +634,7 @@ object KSampleTests {
 
 
   val q259MoodMedianSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderpriority AS priority,
       |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
       |  FROM orders),
@@ -670,8 +670,8 @@ object KSampleTests {
       |  CASE WHEN anybad = 1 THEN NULL
       |    ELSE ROUND(CAST(chiq AS DOUBLE) / 1e8, 4) + 0 END AS chi2,
       |  CASE WHEN anybad = 1 THEN NULL
-      |    ELSE FLOOR(exp(-(CAST(chiq AS DOUBLE) / 1e8) / 2.0)
-      |      * (1.0 + (CAST(chiq AS DOUBLE) / 1e8) / 2.0) * 1e8 + 0.5) / 1e8
+      |    ELSE ${Parity.fixSql("exp(-(CAST(chiq AS DOUBLE) / 1e8) / 2.0)" +
+                                " * (1.0 + (CAST(chiq AS DOUBLE) / 1e8) / 2.0)", 8)}
       |    END AS p
       |FROM w ORDER BY priority""".stripMargin
 
@@ -742,7 +742,7 @@ object KSampleTests {
 
 
   val q345BartlettSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c.c_mktsegment AS seg,
       |    CAST(FLOOR(o_totalprice + 0.5) AS HUGEINT) AS v
       |  FROM orders JOIN customer c ON o_custkey = c.c_custkey),
@@ -757,10 +757,8 @@ object KSampleTests {
       |  FROM g),
       |t AS (
       |  SELECT nk, ak // nk AS ek,
-      |    (nk - 1) * (CAST(FLOOR(LN(CAST(ak AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT)
-      |      - CAST(FLOOR(LN(CAST(bk AS DOUBLE)) * 1e9 + 0.5)
-      |        AS BIGINT)) AS termk,
+      |    (nk - 1) * (${Parity.quantSql("LN(CAST(ak AS DOUBLE))", 9)}
+      |      - ${Parity.quantSql("LN(CAST(bk AS DOUBLE))", 9)}) AS termk,
       |    1.0 / (CAST(nk AS DOUBLE) - 1.0) AS invk
       |  FROM a),
       |m AS (
@@ -772,21 +770,19 @@ object KSampleTests {
       |fin AS (
       |  SELECT *,
       |    ((CAST(n - k AS DOUBLE))
-      |        * CAST(CAST(FLOOR(LN(CAST(se AS DOUBLE)) * 1e9 + 0.5)
-      |            AS BIGINT)
-      |          - CAST(FLOOR(LN(CAST(n - k AS DOUBLE)) * 1e9 + 0.5)
-      |            AS BIGINT) AS DOUBLE)
+      |        * CAST(${Parity.quantSql("LN(CAST(se AS DOUBLE))", 9)}
+      |          - ${Parity.quantSql("LN(CAST(n - k AS DOUBLE))", 9)} AS DOUBLE)
       |      - CAST(sterm AS DOUBLE)) / 1e9 AS mstat,
       |    1.0 + (sinv - 1.0 / CAST(n - k AS DOUBLE))
       |      / (3.0 * (CAST(k AS DOUBLE) - 1.0)) AS cfac
       |  FROM m)
       |SELECT n AS n_total, CAST(k AS BIGINT) AS k_groups,
       |  CASE WHEN k < 2 OR n <= k THEN NULL
-      |    ELSE FLOOR(mstat / cfac * 1e4 + 0.5) / 1e4 + 0 END
+      |    ELSE ${Parity.fixSql("mstat / cfac", 4)} + 0 END
       |    AS bartlett_chi2,
       |  CAST(k - 1 AS BIGINT) AS df,
       |  CASE WHEN k < 2 OR n <= k THEN NULL
-      |    ELSE FLOOR(cfac * 1e6 + 0.5) / 1e6 + 0 END AS c_factor,
+      |    ELSE ${Parity.fixSql("cfac", 6)} + 0 END AS c_factor,
       |  CASE WHEN k < 2 OR n <= k OR k <> 5 THEN NULL
       |    ELSE CAST(CASE WHEN mstat / cfac > 9.4877 THEN 1 ELSE 0 END
       |      AS BIGINT) END AS reject_5pct

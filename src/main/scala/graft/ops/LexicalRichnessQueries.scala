@@ -241,7 +241,7 @@ object LexicalRichnessQueries {
   }
 
   val q235HellingerSql: String =
-    """WITH wc AS (
+    s"""WITH wc AS (
       |  SELECT source, w, COUNT(*) AS cnt
       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
       |        FROM documents)
@@ -254,14 +254,14 @@ object LexicalRichnessQueries {
       |  FROM wc JOIN tot ON wc.source = tot.source),
       |t AS (
       |  SELECT a.source AS src_a, b.source AS src_b,
-      |    CAST(FLOOR(SQRT(a.p * b.p) * 1e9 + 0.5) AS BIGINT) AS tq
+      |    ${Parity.quantSql("SQRT(a.p * b.p)", 9)} AS tq
       |  FROM p a JOIN p b ON a.w = b.w AND a.source < b.source),
       |g AS (
       |  SELECT src_a, src_b, COUNT(*) AS n_shared,
       |    CAST(SUM(tq) AS BIGINT) AS sq
       |  FROM t GROUP BY src_a, src_b)
       |SELECT src_a, src_b, n_shared,
-      |  FLOOR(CAST(sq AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 AS bc,
+      |  ${Parity.fixSql("CAST(sq AS DOUBLE) / 1e9", 6)} AS bc,
       |  ROUND(SQRT(GREATEST(1.0 - CAST(sq AS DOUBLE) / 1e9, 0.0)), 6) + 0
       |    AS hellinger
       |FROM g ORDER BY src_a, src_b""".stripMargin
@@ -377,7 +377,7 @@ object LexicalRichnessQueries {
   }
 
   val q271TermDispersionSql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT source, w
       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
       |        FROM documents)
@@ -392,12 +392,13 @@ object LexicalRichnessQueries {
       |  FROM cell),
       |q AS (
       |  SELECT w, nw,
-      |    CAST(SUM(CAST(FLOOR((ABS(CAST(nws AS DOUBLE) / nw
-      |      - CAST(ns AS DOUBLE) / nt) - CAST(ns AS DOUBLE) / nt) * 1e9
-      |      + 0.5) AS BIGINT)) AS BIGINT) AS sq
+      |    CAST(SUM(
+      |      ${Parity.quantSql("(ABS(CAST(nws AS DOUBLE) / nw" +
+                               " - CAST(ns AS DOUBLE) / nt) - CAST(ns AS DOUBLE) / nt)", 9)}
+      |      ) AS BIGINT) AS sq
       |  FROM t GROUP BY w, nw)
       |SELECT w AS term, nw AS n_occurrences,
-      |  FLOOR((CAST(sq AS DOUBLE) / 1e9 + 1.0) / 2.0 * 1e6 + 0.5) / 1e6 AS dp
+      |  ${Parity.fixSql("(CAST(sq AS DOUBLE) / 1e9 + 1.0) / 2.0", 6)} AS dp
       |FROM q WHERE nw >= 50
       |ORDER BY n_occurrences DESC, term LIMIT 20""".stripMargin
 
@@ -453,7 +454,7 @@ object LexicalRichnessQueries {
   }
 
   val q339AceRichnessSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT string_split(text, ' ') AS ts FROM documents),
       |tri AS (
       |  SELECT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS w
@@ -482,12 +483,13 @@ object LexicalRichnessQueries {
       |SELECT sa AS s_abund, sr AS s_rare, nr AS n_rare,
       |  f1 AS singletons,
       |  CASE WHEN nr < 2 OR f1 = nr THEN NULL
-      |    ELSE FLOOR(cov * 1e6 + 0.5) / 1e6 + 0 END AS coverage,
+      |    ELSE ${Parity.fixSql("cov", 6)} + 0 END AS coverage,
       |  CASE WHEN nr < 2 OR f1 = nr THEN NULL
-      |    ELSE FLOOR(g2 * 1e6 + 0.5) / 1e6 + 0 END AS gamma2,
+      |    ELSE ${Parity.fixSql("g2", 6)} + 0 END AS gamma2,
       |  CASE WHEN nr < 2 OR f1 = nr THEN NULL
-      |    ELSE FLOOR((CAST(sa AS DOUBLE) + CAST(sr AS DOUBLE) / cov
-      |      + CAST(f1 AS DOUBLE) / cov * g2) * 1e4 + 0.5) / 1e4 + 0 END
+      |    ELSE ${Parity.fixSql("(CAST(sa AS DOUBLE) + CAST(sr AS DOUBLE) / cov" +
+                                " + CAST(f1 AS DOUBLE) / cov * g2)", 4)}
+      |      + 0 END
       |    AS ace
       |FROM fin""".stripMargin
 

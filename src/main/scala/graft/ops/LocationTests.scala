@@ -471,7 +471,7 @@ object LocationTests {
        |  CASE WHEN n < 2 OR $v12 <= 0.0 THEN NULL
        |    ELSE ROUND($z, 4) + 0 END AS z,
        |  CASE WHEN n < 2 OR $v12 <= 0.0 THEN NULL
-       |    ELSE FLOOR(${asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 END AS p
+       |    ELSE ${Parity.fixSql(asTwoSidedPSql(z), 8)} END AS p
        |FROM g""".stripMargin
   }
 
@@ -573,18 +573,16 @@ object LocationTests {
       |    ma - mb AS diff, SQRT(sea + seb) AS se,
       |    (sea + seb) * (sea + seb)
       |      / (sea * sea / (n_a - 1.0) + seb * seb / (n_b - 1.0)) AS df,
-      |    FLOOR(((ma - mb) + margin) / SQRT(sea + seb) * 1e6 + 0.5)
-      |      / 1e6 + 0 AS t_lower,
-      |    FLOOR((margin - (ma - mb)) / SQRT(sea + seb) * 1e6 + 0.5)
-      |      / 1e6 + 0 AS t_upper
+      |    ${Parity.fixSql("((ma - mb) + margin) / SQRT(sea + seb)", 6)} + 0 AS t_lower,
+      |    ${Parity.fixSql("(margin - (ma - mb)) / SQRT(sea + seb)", 6)} + 0 AS t_upper
       |  FROM d)
       |SELECT n_a, n_b,
-      |  FLOOR(ma * 1e6 + 0.5) / 1e6 + 0 AS mean_a,
-      |  FLOOR(mb * 1e6 + 0.5) / 1e6 + 0 AS mean_b,
-      |  FLOOR(diff * 1e6 + 0.5) / 1e6 + 0 AS diff,
-      |  FLOOR(se * 1e6 + 0.5) / 1e6 + 0 AS se,
-      |  FLOOR(df * 1e4 + 0.5) / 1e4 + 0 AS df,
-      |  FLOOR(margin * 1e6 + 0.5) / 1e6 + 0 AS margin,
+      |  ${Parity.fixSql("ma", 6)} + 0 AS mean_a,
+      |  ${Parity.fixSql("mb", 6)} + 0 AS mean_b,
+      |  ${Parity.fixSql("diff", 6)} + 0 AS diff,
+      |  ${Parity.fixSql("se", 6)} + 0 AS se,
+      |  ${Parity.fixSql("df", 4)} + 0 AS df,
+      |  ${Parity.fixSql("margin", 6)} + 0 AS margin,
       |  t_lower, t_upper,
       |  CAST(CASE WHEN t_lower > 1.645 AND t_upper > 1.645
       |    THEN 1 ELSE 0 END AS BIGINT) AS equivalent
@@ -721,7 +719,7 @@ object LocationTests {
 
 
   val q367BrunnerMunzelSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT 'priority' AS pair,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 'x' ELSE 'y' END
       |      AS grp,
@@ -793,13 +791,13 @@ object LocationTests {
       |  FROM f)
       |SELECT pair, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(p_hat * 1e6 + 0.5) / 1e6 + 0 END AS p_hat,
+      |    ELSE ${Parity.fixSql("p_hat", 6)} + 0 END AS p_hat,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(w_stat * 1e4 + 0.5) / 1e4 + 0 END AS w_stat,
+      |    ELSE ${Parity.fixSql("w_stat", 4)} + 0 END AS w_stat,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(df * 1e2 + 0.5) / 1e2 + 0 END AS df,
+      |    ELSE ${Parity.fixSql("df", 2)} + 0 END AS df,
       |  CASE WHEN bad THEN NULL
-      |    ELSE CAST(CASE WHEN ABS(FLOOR(w_stat * 1e4 + 0.5) / 1e4 + 0)
+      |    ELSE CAST(CASE WHEN ABS(${Parity.fixSql("w_stat", 4)} + 0)
       |      > 1.96 THEN 1 ELSE 0 END AS BIGINT) END AS reject_5pct
       |FROM z ORDER BY pair""".stripMargin
 
@@ -923,7 +921,7 @@ object LocationTests {
 
 
   val q371BwsSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT 'priority' AS pair,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 'x' ELSE 'y' END
       |      AS grp,
@@ -960,13 +958,12 @@ object LocationTests {
       |  FROM pos, unnest(generate_series(0, cv - 1)) tk(k)),
       |t AS (
       |  SELECT pair, grp, n,
-      |    CAST(FLOOR(
-      |      CAST(CAST(n * r - (m + n) * i AS HUGEINT)
-      |          * CAST(n * r - (m + n) * i AS HUGEINT)
-      |          * CAST((n + 1) * (n + 1) AS HUGEINT) AS DOUBLE)
-      |      / CAST(CAST(n AS HUGEINT) * i * (n + 1 - i) * m * (m + n)
-      |          AS DOUBLE)
-      |      * 1e6 + 0.5) AS BIGINT) AS micro
+      |    ${Parity.quantSql("CAST(CAST(n * r - (m + n) * i AS HUGEINT)" +
+                             " * CAST(n * r - (m + n) * i AS HUGEINT)" +
+                             " * CAST((n + 1) * (n + 1) AS HUGEINT) AS DOUBLE)" +
+                             " / CAST(CAST(n AS HUGEINT) * i * (n + 1 - i) * m * (m + n)" +
+                             " AS DOUBLE)", 6)}
+      |      AS micro
       |  FROM ranked WHERE m > 0),
       |g AS (
       |  SELECT pair, grp, MAX(n) AS n, CAST(SUM(micro) AS BIGINT) AS s
@@ -979,11 +976,13 @@ object LocationTests {
       |    MAX(CASE WHEN grp = 'y' THEN s END) AS s2
       |  FROM g GROUP BY pair)
       |SELECT pair, n1, n2,
-      |  FLOOR((CAST(s1 AS DOUBLE) / 1e6 / n1
-      |    + CAST(s2 AS DOUBLE) / 1e6 / n2) / 2.0 * 1e4 + 0.5) / 1e4 + 0
+      |  ${Parity.fixSql("(CAST(s1 AS DOUBLE) / 1e6 / n1" +
+                         " + CAST(s2 AS DOUBLE) / 1e6 / n2) / 2.0", 4)}
+      |    + 0
       |    AS b_stat,
-      |  CAST(CASE WHEN FLOOR((CAST(s1 AS DOUBLE) / 1e6 / n1
-      |      + CAST(s2 AS DOUBLE) / 1e6 / n2) / 2.0 * 1e4 + 0.5) / 1e4 + 0
+      |  CAST(CASE WHEN ${Parity.fixSql("(CAST(s1 AS DOUBLE) / 1e6 / n1" +
+                                        " + CAST(s2 AS DOUBLE) / 1e6 / n2) / 2.0", 4)}
+      |      + 0
       |      > 2.493 THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
       |FROM p ORDER BY pair""".stripMargin
 
@@ -1103,9 +1102,9 @@ object LocationTests {
       |  FROM w CROSS JOIN tot)
       |SELECT CAST(n1t AS BIGINT) AS n_urgent,
       |  CAST(n2t AS BIGINT) AS n_low,
-      |  FLOOR(w1 * 1e4 + 0.5) / 1e4 + 0 AS w1_st,
-      |  FLOOR(zz * 1e4 + 0.5) / 1e4 + 0 AS z,
-      |  CAST(CASE WHEN ABS(FLOOR(zz * 1e4 + 0.5) / 1e4 + 0) > 1.96
+      |  ${Parity.fixSql("w1", 4)} + 0 AS w1_st,
+      |  ${Parity.fixSql("zz", 4)} + 0 AS z,
+      |  CAST(CASE WHEN ABS(${Parity.fixSql("zz", 4)} + 0) > 1.96
       |    THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
       |FROM z""".stripMargin
 }

@@ -29,6 +29,11 @@ import org.apache.spark.sql.types.DecimalType
   *    INTERNAL — that is what keeps SUM/AVG partition-order independent;
   *    only the last projection converts. Decimal(18,4) cannot round to
   *    IEEE -0.0 (BigDecimal has no signed zero), so no `+ 0.0` needed.
+  *
+  * Floor rounding has one vocabulary per engine: [[fix]] and [[quant]]
+  * build Spark columns, and their DuckDB twins [[fixSql]] and
+  * [[quantSql]] emit the same rule as oracle SQL text. No other file
+  * spells either form (ParitySpec's source guard).
   */
 object Parity {
   /** Measure columns (price/quantity/balance/value): exact, headroom for
@@ -54,12 +59,15 @@ object Parity {
   /** Fixed-point quantization: `floor(c * scale + 0.5)` as a BIGINT.
     * Half-ties go toward +∞ (−0.25 → −2 at scale 10, where HALF_UP
     * gives −3); NaN maps to 0 (Spark's double→long floor), null stays
-    * null. DuckDB twin: `FLOOR(x * scale + 0.5)`. */
+    * null. DuckDB twin: [[quantSql]], at scales 1eN only; a scale such
+    * as 100 keeps a hand-spelled `FLOOR(x * 100 + 0.5)` in the oracle,
+    * since DuckDB types `x * 100` INTEGER/DECIMAL where `x * 1e2` is
+    * DOUBLE. */
   def quant(c: Column, scale: Double): Column = floor(c * scale + 0.5)
 
   /** A double output rounded to `places` decimals by [[quant]]:
     * `quant(c, 10^places) / 10^places`. Same tie rule and NaN → 0;
-    * never −0.0. DuckDB twin: `FLOOR(x * 1eN + 0.5) / 1eN`. Unlike
+    * never −0.0. DuckDB twin: [[fixSql]]. Unlike
     * [[rnd]] (HALF_UP, DuckDB `ROUND`), both engines run the same IEEE
     * multiply, add, floor and divide, so they agree to the bit. */
   def fix(c: Column, places: Int): Column = {
@@ -72,4 +80,14 @@ object Parity {
   val DF = "DECIMAL(6,4)"
   def out4(expr: String): String =
     s"CAST(CAST(ROUND($expr, 4) AS DECIMAL(18,4)) AS DOUBLE)"
+
+  /** `FLOOR(e * 1eN + 0.5) / 1eN` with N = `places`: the DuckDB twin of
+    * [[fix]] (NaN stays NaN here where Spark's floor gives 0). */
+  def fixSql(e: String, places: Int): String =
+    s"FLOOR($e * 1e$places + 0.5) / 1e$places"
+
+  /** `CAST(FLOOR(e * 1eN + 0.5) AS BIGINT)` with N = `places`: the DuckDB
+    * twin of [[quant]] at scale 1eN. */
+  def quantSql(e: String, places: Int): String =
+    s"CAST(FLOOR($e * 1e$places + 0.5) AS BIGINT)"
 }

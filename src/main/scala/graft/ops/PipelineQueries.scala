@@ -1094,16 +1094,15 @@ object PipelineQueries {
        |t2 AS (
        |  SELECT *,
        |    CASE WHEN mh >= 1 THEN
-       |      CAST(FLOOR(CAST(nh AS DOUBLE) / nn
-       |        * (CAST(sh AS DOUBLE) / mh) * 1e9 + 0.5) AS BIGINT)
+       |      ${Parity.quantSql("CAST(nh AS DOUBLE) / nn * (CAST(sh AS DOUBLE) / mh)", 9)}
        |      ELSE 0 END AS post9,
        |    CASE WHEN mh >= 2 THEN
-       |      CAST(FLOOR(CAST(nh AS DOUBLE) / nn
-       |        * (CAST(nh AS DOUBLE) / nn)
-       |        * ((CAST(mh AS DOUBLE) * CAST(qh AS DOUBLE)
-       |            - CAST(sh AS DOUBLE) * CAST(sh AS DOUBLE))
-       |          / CAST(mh AS DOUBLE) / (CAST(mh AS DOUBLE) - 1.0))
-       |        / CAST(mh AS DOUBLE) * 1e4 + 0.5) AS BIGINT)
+       |      ${Parity.quantSql("CAST(nh AS DOUBLE) / nn" +
+                                " * (CAST(nh AS DOUBLE) / nn)" +
+                                " * ((CAST(mh AS DOUBLE) * CAST(qh AS DOUBLE)" +
+                                " - CAST(sh AS DOUBLE) * CAST(sh AS DOUBLE))" +
+                                " / CAST(mh AS DOUBLE) / (CAST(mh AS DOUBLE) - 1.0))" +
+                                " / CAST(mh AS DOUBLE)", 4)}
        |      ELSE 0 END AS pvar4
        |  FROM t),
        |pm AS (
@@ -1127,19 +1126,19 @@ object PipelineQueries {
        |    1.0 - CAST(ns AS DOUBLE) / npop AS fpc
        |  FROM m CROSS JOIN pm)
        |SELECT npop AS n_pop, ns AS n_sample,
-       |  FLOOR(truec / 100.0 * 1e2 + 0.5) / 1e2 + 0 AS true_mean,
+       |  ${Parity.fixSql("truec / 100.0", 2)} + 0 AS true_mean,
        |  CASE WHEN ns < 2 THEN NULL
-       |    ELSE FLOOR(srsmean / 100.0 * 1e2 + 0.5) / 1e2 + 0 END
+       |    ELSE ${Parity.fixSql("srsmean / 100.0", 2)} + 0 END
        |    AS srs_mean,
        |  CASE WHEN ns < 2 THEN NULL
-       |    ELSE FLOOR(CAST(sp9 AS DOUBLE) / 1e9 / 100.0 * 1e2 + 0.5)
-       |      / 1e2 + 0 END AS post_mean,
+       |    ELSE ${Parity.fixSql("CAST(sp9 AS DOUBLE) / 1e9 / 100.0", 2)}
+       |      + 0 END AS post_mean,
        |  CASE WHEN ns < 2 THEN NULL
-       |    ELSE FLOOR(SQRT(srsvar / CAST(ns AS DOUBLE) * fpc) / 100.0
-       |      * 1e4 + 0.5) / 1e4 + 0 END AS se_srs,
+       |    ELSE ${Parity.fixSql("SQRT(srsvar / CAST(ns AS DOUBLE) * fpc) / 100.0", 4)}
+       |      + 0 END AS se_srs,
        |  CASE WHEN ns < 2 THEN NULL
-       |    ELSE FLOOR(SQRT(CAST(sv4 AS DOUBLE) / 1e4) / 100.0 * 1e4
-       |      + 0.5) / 1e4 + 0 END AS se_post
+       |    ELSE ${Parity.fixSql("SQRT(CAST(sv4 AS DOUBLE) / 1e4) / 100.0", 4)}
+       |      + 0 END AS se_post
        |FROM fin""".stripMargin
   }
 
@@ -1186,7 +1185,7 @@ object PipelineQueries {
   }
 
   val q380KishNeffSql: String =
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT c_mktsegment AS segment, COUNT(*) AS n,
       |    SUM(CAST(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
       |      AS HUGEINT)) AS sw,
@@ -1198,16 +1197,17 @@ object PipelineQueries {
       |  GROUP BY 1)
       |SELECT segment, CAST(n AS BIGINT) AS n,
       |  CASE WHEN n < 10 OR sw2 <= 0 THEN NULL ELSE
-      |    FLOOR(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)
-      |      / GREATEST(CAST(sw2 AS DOUBLE), 1e-300) * 1e4 + 0.5)
-      |      / 1e4 + 0 END AS n_eff,
+      |    ${Parity.fixSql("CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)" +
+                           " / GREATEST(CAST(sw2 AS DOUBLE), 1e-300)", 4)}
+      |      + 0 END AS n_eff,
       |  CASE WHEN n < 10 OR sw2 <= 0 THEN NULL ELSE
-      |    FLOOR(CAST(n AS DOUBLE) * CAST(sw2 AS DOUBLE)
-      |      / GREATEST(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE), 1e-300)
-      |      * 1e4 + 0.5) / 1e4 + 0 END AS deff,
+      |    ${Parity.fixSql("CAST(n AS DOUBLE) * CAST(sw2 AS DOUBLE)" +
+                           " / GREATEST(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE), 1e-300)", 4)}
+      |      + 0 END AS deff,
       |  CASE WHEN n < 10 OR sw2 <= 0 THEN NULL ELSE
-      |    FLOOR((CAST(n AS DOUBLE) * CAST(sw2 AS DOUBLE)
-      |      / GREATEST(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE), 1e-300)
-      |      - 1.0) * 1e4 + 0.5) / 1e4 + 0 END AS cv2_weights
+      |    ${Parity.fixSql("(CAST(n AS DOUBLE) * CAST(sw2 AS DOUBLE)" +
+                           " / GREATEST(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE), 1e-300)" +
+                           " - 1.0)", 4)}
+      |      + 0 END AS cv2_weights
       |FROM m ORDER BY segment""".stripMargin
 }

@@ -122,7 +122,7 @@ object PrivacyQueries {
   }
 
   val q195LDiversitySql: String =
-    """WITH j AS (
+    s"""WITH j AS (
       |  SELECT c_nationkey AS nation, o_orderpriority AS priority,
       |    o_orderstatus AS status
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -135,10 +135,9 @@ object PrivacyQueries {
       |  FROM cell),
       |q AS (
       |  SELECT nation, priority, n,
-      |    CAST(FLOOR(
-      |      -(CAST(cs AS DOUBLE) / CAST(n AS DOUBLE))
-      |        * ln(CAST(cs AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * 1e9 + 0.5) AS BIGINT) AS tq
+      |    ${Parity.quantSql("-(CAST(cs AS DOUBLE) / CAST(n AS DOUBLE))" +
+                             " * ln(CAST(cs AS DOUBLE) / CAST(n AS DOUBLE))", 9)}
+      |      AS tq
       |  FROM w)
       |SELECT nation, priority, n AS n_rows, COUNT(*) AS l_distinct,
       |  ROUND(exp(CAST(SUM(tq) AS DOUBLE) / 1e9), 6) AS l_entropy,
@@ -212,7 +211,7 @@ object PrivacyQueries {
   }
 
   val q236TClosenessSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT n_name, c_mktsegment AS seg, o_orderpriority AS pr
       |  FROM orders
       |  JOIN customer ON o_custkey = c_custkey
@@ -232,8 +231,9 @@ object PrivacyQueries {
       |    AND g.pr = gl.pr),
       |tv AS (
       |  SELECT n_name, seg, ng,
-      |    CAST(SUM(CAST(FLOOR(abs(CAST(nc AS DOUBLE) / ng
-      |      - CAST(ngl AS DOUBLE) / nt) * 1e6 + 0.5) AS BIGINT)) AS BIGINT)
+      |    CAST(SUM(${Parity.quantSql("abs(CAST(nc AS DOUBLE) / ng" +
+                                      " - CAST(ngl AS DOUBLE) / nt)", 6)}
+      |      ) AS BIGINT)
       |      AS tvq
       |  FROM grid GROUP BY 1, 2, 3)
       |SELECT n_name, seg AS c_mktsegment, ng AS n_orders,

@@ -300,7 +300,7 @@ object RegressionQueries {
 
   val q312CooksDistanceSql: String =
     commonSql +
-      """,
+      s""",
         |hd AS (
         |  SELECT l_orderkey, x1, x2, e,
         |    (c00 + 2.0 * c01 * x1 + 2.0 * c02 * x2 + c11 * x1 * x1
@@ -318,8 +318,8 @@ object RegressionQueries {
         |SELECT l_orderkey, n_lines, units, resid_cents, leverage, cooks_d
         |FROM (
         |  SELECT l_orderkey, n_lines, units, resid_cents,
-        |    FLOOR(h * 1e6 + 0.5) / 1e6 AS leverage,
-        |    FLOOR(cook * 1e6 + 0.5) / 1e6 AS cooks_d
+        |    ${Parity.fixSql("h", 6)} AS leverage,
+        |    ${Parity.fixSql("cook", 6)} AS cooks_d
         |  FROM dd ORDER BY cook DESC, l_orderkey LIMIT 20)
         |ORDER BY cooks_d DESC, l_orderkey""".stripMargin
 
@@ -541,7 +541,7 @@ object RegressionQueries {
        |SELECT l_orderkey, rev_cents, units, n_lines, mahal_d2
        |FROM (
        |  SELECT l_orderkey, y AS rev_cents, x1 AS units, x2 AS n_lines,
-       |    FLOOR(d2 * 1e4 + 0.5) / 1e4 AS mahal_d2
+       |    ${Parity.fixSql("d2", 4)} AS mahal_d2
        |  FROM dd ORDER BY d2 DESC, l_orderkey LIMIT 20)
        |ORDER BY mahal_d2 DESC, l_orderkey""".stripMargin
 
@@ -679,9 +679,9 @@ object RegressionQueries {
       |  FROM c)
       |SELECT predictor, n_days,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(vif * 1e4 + 0.5) / 1e4 + 0 END AS vif,
+      |    ELSE ${Parity.fixSql("vif", 4)} + 0 END AS vif,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(num * 1e6 + 0.5) / 1e6 + 0 END AS num_1mr2
+      |    ELSE ${Parity.fixSql("num", 6)} + 0 END AS num_1mr2
       |FROM (
       |  SELECT n_days, bad, 'cnt' AS predictor,
       |    (1.0 - r23 * r23) / det AS vif, 1.0 - r23 * r23 AS num FROM f
@@ -766,7 +766,7 @@ object RegressionQueries {
   }
 
   val q372EivPanelSql: String =
-    """WITH p1 AS (
+    s"""WITH p1 AS (
       |  SELECT 'count_rev' AS pair, CAST(COUNT(*) AS HUGEINT) AS x,
       |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS HUGEINT)
       |      AS y
@@ -800,18 +800,19 @@ object RegressionQueries {
       |  FROM m)
       |SELECT pair, n_days,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(cxy / (sqrt(cxx) * sqrt(cyy)) * 1e6 + 0.5) / 1e6 + 0
+      |    ${Parity.fixSql("cxy / (sqrt(cxx) * sqrt(cyy))", 6)} + 0
       |    END AS r,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(cxy / cxx * 1e6 + 0.5) / 1e6 + 0 END AS b_ols,
+      |    ${Parity.fixSql("cxy / cxx", 6)} + 0 END AS b_ols,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR((cyy - cxx + sqrt((cyy - cxx) * (cyy - cxx)
-      |      + 4.0 * cxy * cxy)) / (2.0 * cxy) * 1e6 + 0.5) / 1e6 + 0
+      |    ${Parity.fixSql("(cyy - cxx + sqrt((cyy - cxx) * (cyy - cxx)" +
+                           " + 4.0 * cxy * cxy)) / (2.0 * cxy)", 6)}
+      |      + 0
       |    END AS b_deming,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(sign(cxy) * sqrt(cyy) / sqrt(cxx) * 1e6 + 0.5) / 1e6 + 0
+      |    ${Parity.fixSql("sign(cxy) * sqrt(cyy) / sqrt(cxx)", 6)} + 0
       |    END AS b_rma,
       |  CASE WHEN bad THEN NULL ELSE
-      |    FLOOR(cyy / cxy * 1e6 + 0.5) / 1e6 + 0 END AS b_inv
+      |    ${Parity.fixSql("cyy / cxy", 6)} + 0 END AS b_inv
       |FROM c ORDER BY pair""".stripMargin
 }

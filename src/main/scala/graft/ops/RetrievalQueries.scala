@@ -475,7 +475,7 @@ object RetrievalQueries {
   }
 
   val q238RankEvalSql: String =
-    """WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
+    s"""WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
       |ranked AS (
       |  SELECT ql, doc_id, lang, n_chars,
       |    ROW_NUMBER() OVER (PARTITION BY ql
@@ -490,24 +490,25 @@ object RetrievalQueries {
       |  SELECT ql, COUNT(*) AS n_docs,
       |    CAST(SUM(rel) AS BIGINT) AS n_rel,
       |    MIN(CASE WHEN rel = 1 THEN rk END) AS first_rel,
-      |    CAST(SUM(CASE WHEN rel = 1 THEN CAST(FLOOR(CAST(cumrel AS DOUBLE)
-      |      / rk * 1e9 + 0.5) AS BIGINT) ELSE 0 END) AS BIGINT) AS apq,
+      |    CAST(SUM(CASE WHEN rel = 1 THEN ${Parity.quantSql("CAST(cumrel AS DOUBLE)" +
+                                                             " / rk", 9)}
+      |      ELSE 0 END) AS BIGINT) AS apq,
       |    CAST(SUM(CASE WHEN rel = 1 AND rk <= 10 THEN
-      |      CAST(FLOOR(0.6931471805599453 / ln(CAST(rk AS DOUBLE) + 1.0)
-      |        * 1e9 + 0.5) AS BIGINT) ELSE 0 END) AS BIGINT) AS dcgq
+      |      ${Parity.quantSql("0.6931471805599453 / ln(CAST(rk AS DOUBLE) + 1.0)", 9)}
+      |        ELSE 0 END) AS BIGINT) AS dcgq
       |  FROM t GROUP BY ql),
       |i AS (
       |  SELECT *, CAST(list_sum(list_transform(
       |      range(1, CAST(LEAST(n_rel, 10) AS BIGINT) + 1),
-      |      k -> CAST(FLOOR(0.6931471805599453
-      |        / ln(CAST(k AS DOUBLE) + 1.0) * 1e9 + 0.5) AS BIGINT)))
+      |      k -> ${Parity.quantSql("0.6931471805599453" +
+                                    " / ln(CAST(k AS DOUBLE) + 1.0)", 9)}
+      |        ))
       |    AS BIGINT) AS idcgq
       |  FROM g)
       |SELECT ql AS query_lang, n_docs, n_rel,
-      |  FLOOR(1.0 / first_rel * 1e6 + 0.5) / 1e6 AS mrr,
-      |  FLOOR(CAST(apq AS DOUBLE) / 1e9 / n_rel * 1e6 + 0.5) / 1e6 AS map,
-      |  FLOOR(CAST(dcgq AS DOUBLE) / CAST(idcgq AS DOUBLE) * 1e6 + 0.5)
-      |    / 1e6 AS ndcg10
+      |  ${Parity.fixSql("1.0 / first_rel", 6)} AS mrr,
+      |  ${Parity.fixSql("CAST(apq AS DOUBLE) / 1e9 / n_rel", 6)} AS map,
+      |  ${Parity.fixSql("CAST(dcgq AS DOUBLE) / CAST(idcgq AS DOUBLE)", 6)} AS ndcg10
       |FROM i ORDER BY query_lang""".stripMargin
 
   /** L295 rank-biased precision @20 ([PK] Moffat & Zobel 2008): the
@@ -720,7 +721,7 @@ object RetrievalQueries {
   }
 
   val q378TauApSql: String =
-    """WITH top AS (
+    s"""WITH top AS (
       |  SELECT doc_id, n_chars, len(string_split(text, ' ')) AS ntok
       |  FROM documents ORDER BY n_chars DESC, doc_id LIMIT 50),
       |ranked AS (
@@ -735,9 +736,9 @@ object RetrievalQueries {
       |  FROM ranked a JOIN ranked b ON a.rs < b.rs),
       |peri AS (
       |  SELECT rsb,
-      |    CAST(FLOOR(CAST(SUM(CASE WHEN rta < rtb THEN 1 ELSE 0 END)
-      |        AS DOUBLE) / CAST(rsb - 1 AS DOUBLE) * 1e9 + 0.5)
-      |      AS BIGINT) AS p9
+      |    ${Parity.quantSql("CAST(SUM(CASE WHEN rta < rtb THEN 1 ELSE 0 END)" +
+                             " AS DOUBLE) / CAST(rsb - 1 AS DOUBLE)", 9)}
+      |      AS p9
       |  FROM pairs GROUP BY rsb),
       |tot AS (
       |  SELECT COUNT(*) AS npairs,
@@ -749,11 +750,13 @@ object RetrievalQueries {
       |    CAST(MAX(rsb) AS BIGINT) AS nmax
       |  FROM peri)
       |SELECT nmax AS n_items,
-      |  FLOOR((2.0 * CAST(nc * 2 - npairs AS DOUBLE))
-      |    / CAST(nmax * (nmax - 1) AS DOUBLE) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("(2.0 * CAST(nc * 2 - npairs AS DOUBLE))" +
+                         " / CAST(nmax * (nmax - 1) AS DOUBLE)", 6)}
+      |    + 0
       |    AS kendall_tau,
-      |  FLOOR((2.0 / CAST(nmax - 1 AS DOUBLE)
-      |    * (CAST(s9 AS DOUBLE) / 1e9) - 1.0) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("(2.0 / CAST(nmax - 1 AS DOUBLE)" +
+                         " * (CAST(s9 AS DOUBLE) / 1e9) - 1.0)", 6)}
+      |    + 0
       |    AS tau_ap
       |FROM tot CROSS JOIN ap""".stripMargin
 }

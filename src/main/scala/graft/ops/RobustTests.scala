@@ -166,7 +166,7 @@ object RobustTests {
   }
 
   val q317DispersionIndexSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT o_orderpriority, CAST(o_orderdate AS DATE) AS dd,
       |    COUNT(*) AS c
       |  FROM orders GROUP BY 1, 2),
@@ -189,8 +189,8 @@ object RobustTests {
       |  FROM c0)
       |SELECT o_orderpriority, n AS n_days, sc AS n_orders,
       |  CASE WHEN bad THEN NULL
-      |    ELSE FLOOR(disp * 1e4 + 0.5) / 1e4 END AS dispersion,
-      |  CASE WHEN bad THEN NULL ELSE FLOOR(z * 1e4 + 0.5) / 1e4 END AS z,
+      |    ELSE ${Parity.fixSql("disp", 4)} END AS dispersion,
+      |  CASE WHEN bad THEN NULL ELSE ${Parity.fixSql("z", 4)} END AS z,
       |  CASE WHEN bad THEN NULL
       |    WHEN z > 1.6449 THEN 'overdispersed'
       |    WHEN z < -1.6449 THEN 'underdispersed'

@@ -253,7 +253,7 @@ object ScoreEvalQueries {
   }
 
   val q197CalibrationSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT n_chars AS sc, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT)
       |      AS pos
@@ -265,10 +265,10 @@ object ScoreEvalQueries {
       |  FROM h),
       |q AS (
       |  SELECT (sc - mn) * 10 // (mx - mn + 1) AS bin, n, pos,
-      |    n * CAST(FLOOR(
-      |      CASE WHEN mx - mn > 0
-      |        THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)
-      |        ELSE 0.0 END * 1e9 + 0.5) AS BIGINT) AS pq
+      |    n * ${Parity.quantSql("CASE WHEN mx - mn > 0" +
+                                 " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
+                                 " ELSE 0.0 END", 9)}
+      |        AS pq
       |  FROM b),
       |a AS (
       |  SELECT bin, CAST(SUM(n) AS BIGINT) AS n_docs,
@@ -360,8 +360,7 @@ object ScoreEvalQueries {
        |      AS BIGINT) AS k
        |  FROM lineitem GROUP BY l_partkey),
        |wr AS (
-       |  SELECT *, CAST(FLOOR(CAST(k AS DOUBLE) / n * 1e9 + 0.5)
-       |    AS BIGINT) AS rq
+       |  SELECT *, ${Parity.quantSql("CAST(k AS DOUBLE) / n", 9)} AS rq
        |  FROM li),
        |mom AS (
        |  SELECT COUNT(*) AS g, SUM(CAST(rq AS HUGEINT)) AS sr,
@@ -372,9 +371,9 @@ object ScoreEvalQueries {
        |  CASE WHEN $bad THEN NULL
        |    ELSE ROUND($post, 4) + 0 END AS eb_rate,
        |  CASE WHEN $bad THEN NULL
-       |    ELSE FLOOR($m1 * 1e4 + 0.5) / 1e4 + 0 END AS prior_rate,
+       |    ELSE ${Parity.fixSql(m1, 4)} + 0 END AS prior_rate,
        |  CASE WHEN $bad THEN NULL
-       |    ELSE FLOOR(ABS($post - CAST(k AS DOUBLE) / n) * 1e9 + 0.5) / 1e9
+       |    ELSE ${Parity.fixSql(s"ABS($post - CAST(k AS DOUBLE) / n)", 9)}
        |    END AS shrinkage
        |FROM wr, mom
        |ORDER BY shrinkage DESC NULLS LAST, l_partkey LIMIT 15""".stripMargin
@@ -460,7 +459,7 @@ object ScoreEvalQueries {
   }
 
   val q276BrierMurphySql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT n_chars AS sc, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT)
       |      AS pos
@@ -472,10 +471,10 @@ object ScoreEvalQueries {
       |  FROM h),
       |q AS (
       |  SELECT (sc - mn) * 10 // (mx - mn + 1) AS bin, n, pos,
-      |    CAST(FLOOR(
-      |      CASE WHEN mx - mn > 0
-      |        THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)
-      |        ELSE 0.0 END * 1e9 + 0.5) AS BIGINT) AS pq
+      |    ${Parity.quantSql("CASE WHEN mx - mn > 0" +
+                             " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
+                             " ELSE 0.0 END", 9)}
+      |        AS pq
       |  FROM b),
       |bins AS (
       |  SELECT bin, CAST(SUM(n) AS BIGINT) AS nk,
@@ -490,16 +489,16 @@ object ScoreEvalQueries {
       |  SELECT bnk,
       |    CAST(SUM(nk) OVER () AS BIGINT) AS nn,
       |    CAST(SUM(pk) OVER () AS BIGINT) AS np,
-      |    CAST(FLOOR(CAST(nk AS DOUBLE)
-      |      * (CAST(spq AS DOUBLE) / 1e9 / nk - CAST(pk AS DOUBLE) / nk)
-      |      * (CAST(spq AS DOUBLE) / 1e9 / nk - CAST(pk AS DOUBLE) / nk)
-      |      * 1e12 + 0.5) AS BIGINT) AS relq,
-      |    CAST(FLOOR(CAST(nk AS DOUBLE)
-      |      * (CAST(pk AS DOUBLE) / nk
-      |         - CAST(SUM(pk) OVER () AS DOUBLE) / SUM(nk) OVER ())
-      |      * (CAST(pk AS DOUBLE) / nk
-      |         - CAST(SUM(pk) OVER () AS DOUBLE) / SUM(nk) OVER ())
-      |      * 1e12 + 0.5) AS BIGINT) AS resq
+      |    ${Parity.quantSql("CAST(nk AS DOUBLE)" +
+                             " * (CAST(spq AS DOUBLE) / 1e9 / nk - CAST(pk AS DOUBLE) / nk)" +
+                             " * (CAST(spq AS DOUBLE) / 1e9 / nk - CAST(pk AS DOUBLE) / nk)", 12)}
+      |      AS relq,
+      |    ${Parity.quantSql("CAST(nk AS DOUBLE)" +
+                             " * (CAST(pk AS DOUBLE) / nk" +
+                             " - CAST(SUM(pk) OVER () AS DOUBLE) / SUM(nk) OVER ())" +
+                             " * (CAST(pk AS DOUBLE) / nk" +
+                             " - CAST(SUM(pk) OVER () AS DOUBLE) / SUM(nk) OVER ())", 12)}
+      |      AS resq
       |  FROM bins),
       |g AS (
       |  SELECT nn, np, SUM(bnk) AS bsum,
@@ -573,7 +572,7 @@ object ScoreEvalQueries {
   }
 
   val q342SpiegelhalterZSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT n_chars AS sc, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
       |      AS BIGINT) AS pos
@@ -585,17 +584,18 @@ object ScoreEvalQueries {
       |  FROM h),
       |q AS (
       |  SELECT n, pos,
-      |    CAST(FLOOR(
-      |      CASE WHEN mx - mn > 0
-      |        THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)
-      |        ELSE 0.0 END * 1e9 + 0.5) AS BIGINT) / 1e9 AS p
+      |    ${Parity.quantSql("CASE WHEN mx - mn > 0" +
+                             " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
+                             " ELSE 0.0 END", 9)}
+      |        / 1e9 AS p
       |  FROM b),
       |t AS (
       |  SELECT n,
-      |    CAST(FLOOR((1.0 - 2.0 * p) * (CAST(pos AS DOUBLE)
-      |      - CAST(n AS DOUBLE) * p) * 1e9 + 0.5) AS BIGINT) AS t9,
-      |    CAST(FLOOR(CAST(n AS DOUBLE) * ((1.0 - 2.0 * p)
-      |      * (1.0 - 2.0 * p)) * p * (1.0 - p) * 1e9 + 0.5) AS BIGINT)
+      |    ${Parity.quantSql("(1.0 - 2.0 * p) * (CAST(pos AS DOUBLE)" +
+                             " - CAST(n AS DOUBLE) * p)", 9)}
+      |      AS t9,
+      |    ${Parity.quantSql("CAST(n AS DOUBLE) * ((1.0 - 2.0 * p)" +
+                             " * (1.0 - 2.0 * p)) * p * (1.0 - p)", 9)}
       |      AS d9
       |  FROM q),
       |m AS (
@@ -605,8 +605,9 @@ object ScoreEvalQueries {
       |  FROM t)
       |SELECT nd AS n_docs, CAST(nl AS BIGINT) AS n_lengths,
       |  CASE WHEN sd9 <= 0 THEN NULL
-      |    ELSE FLOOR((CAST(st9 AS DOUBLE) / 1e9)
-      |      / SQRT(CAST(sd9 AS DOUBLE) / 1e9) * 1e6 + 0.5) / 1e6 + 0
+      |    ELSE ${Parity.fixSql("(CAST(st9 AS DOUBLE) / 1e9)" +
+                                " / SQRT(CAST(sd9 AS DOUBLE) / 1e9)", 6)}
+      |      + 0
       |    END AS z,
       |  CASE WHEN sd9 <= 0 THEN NULL
       |    ELSE CAST(CASE WHEN ABS((CAST(st9 AS DOUBLE) / 1e9)
@@ -678,7 +679,7 @@ object ScoreEvalQueries {
   }
 
   val q381HosmerLemeshowSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT n_chars AS sc, COUNT(*) AS n,
       |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
       |      AS BIGINT) AS pos
@@ -694,9 +695,10 @@ object ScoreEvalQueries {
       |  FROM h),
       |q AS (
       |  SELECT (cumb * 10) // nt AS dec, n, pos, nt,
-      |    n * CAST(FLOOR(CASE WHEN mx - mn > 0
-      |      THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)
-      |      ELSE 0.0 END * 1e9 + 0.5) AS BIGINT) AS pq
+      |    n * ${Parity.quantSql("CASE WHEN mx - mn > 0" +
+                                 " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
+                                 " ELSE 0.0 END", 9)}
+      |      AS pq
       |  FROM b),
       |g AS (
       |  SELECT dec, CAST(SUM(n) AS BIGINT) AS ng,
@@ -705,11 +707,10 @@ object ScoreEvalQueries {
       |  FROM q GROUP BY dec),
       |t AS (
       |  SELECT nt, CASE WHEN eg9 > 0 AND eg9 < ng * 1000000000
-      |    THEN CAST(FLOOR((og - CAST(eg9 AS DOUBLE) / 1e9)
-      |      * (og - CAST(eg9 AS DOUBLE) / 1e9)
-      |      / (CAST(ng AS DOUBLE) * (CAST(eg9 AS DOUBLE) / 1e9 / ng)
-      |        * (1.0 - CAST(eg9 AS DOUBLE) / 1e9 / ng)) * 1e12 + 0.5)
-      |      AS BIGINT)
+      |    THEN ${Parity.quantSql("(og - CAST(eg9 AS DOUBLE) / 1e9)" +
+                                  " * (og - CAST(eg9 AS DOUBLE) / 1e9)" +
+                                  " / (CAST(ng AS DOUBLE) * (CAST(eg9 AS DOUBLE) / 1e9 / ng)" +
+                                  " * (1.0 - CAST(eg9 AS DOUBLE) / 1e9 / ng))", 12)}
       |    ELSE CAST(0 AS BIGINT) END AS t12
       |  FROM g),
       |m AS (
@@ -719,12 +720,12 @@ object ScoreEvalQueries {
       |  FROM t)
       |SELECT n_docs, n_groups,
       |  CASE WHEN n_groups < 5 THEN NULL
-      |    ELSE FLOOR(CAST(s12 AS DOUBLE) / 1e12 * 1e4 + 0.5) / 1e4 + 0
+      |    ELSE ${Parity.fixSql("CAST(s12 AS DOUBLE) / 1e12", 4)} + 0
       |    END AS hl_stat,
       |  n_groups - 2 AS df,
       |  CASE WHEN n_groups < 5 THEN NULL
-      |    ELSE CAST(CASE WHEN FLOOR(CAST(s12 AS DOUBLE) / 1e12 * 1e4
-      |      + 0.5) / 1e4 + 0 > 15.507 THEN 1 ELSE 0 END AS BIGINT) END
+      |    ELSE CAST(CASE WHEN ${Parity.fixSql("CAST(s12 AS DOUBLE) / 1e12", 4)}
+      |      + 0 > 15.507 THEN 1 ELSE 0 END AS BIGINT) END
       |    AS reject_5pct
       |FROM m""".stripMargin
 
@@ -813,12 +814,12 @@ object ScoreEvalQueries {
       |  FROM t GROUP BY k)
       |SELECT CAST(k AS DOUBLE) / 10.0 AS tau,
       |  CAST(n_days AS BIGINT) AS n_days,
-      |  FLOOR(CAST(se AS DOUBLE)
-      |    / GREATEST(100.0 * CAST(n_days AS DOUBLE), 1e-300) * 1e4 + 0.5)
-      |    / 1e4 + 0 AS pinball_quantile,
-      |  FLOOR(CAST(sp AS DOUBLE)
-      |    / GREATEST(100.0 * CAST(n_days AS DOUBLE), 1e-300) * 1e4 + 0.5)
-      |    / 1e4 + 0 AS pinball_persist
+      |  ${Parity.fixSql("CAST(se AS DOUBLE)" +
+                         " / GREATEST(100.0 * CAST(n_days AS DOUBLE), 1e-300)", 4)}
+      |    + 0 AS pinball_quantile,
+      |  ${Parity.fixSql("CAST(sp AS DOUBLE)" +
+                         " / GREATEST(100.0 * CAST(n_days AS DOUBLE), 1e-300)", 4)}
+      |    + 0 AS pinball_persist
       |FROM m ORDER BY tau""".stripMargin
 
   /** L325 decile lift / cumulative-gains table *(added r17; [PK] the
@@ -878,7 +879,7 @@ object ScoreEvalQueries {
   }
 
   val q390LiftTableSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT o_orderkey, o_custkey, c_acctbal,
       |    CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -900,13 +901,13 @@ object ScoreEvalQueries {
       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cpos
       |  FROM g)
       |SELECT decile, n, npos,
-      |  FLOOR(CAST(npos AS DOUBLE) / n * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(npos AS DOUBLE) / n", 6)} + 0
       |    AS response_rate,
-      |  FLOOR((CAST(npos AS DOUBLE) / n)
-      |    / GREATEST(CAST(pt AS DOUBLE) / nt, 1e-300) * 1e6 + 0.5)
-      |    / 1e6 + 0 AS lift,
-      |  FLOOR(CAST(cpos AS DOUBLE) / GREATEST(CAST(pt AS DOUBLE), 1e-300)
-      |    * 1e6 + 0.5) / 1e6 + 0 AS cum_capture
+      |  ${Parity.fixSql("(CAST(npos AS DOUBLE) / n)" +
+                         " / GREATEST(CAST(pt AS DOUBLE) / nt, 1e-300)", 6)}
+      |    + 0 AS lift,
+      |  ${Parity.fixSql("CAST(cpos AS DOUBLE) / GREATEST(CAST(pt AS DOUBLE), 1e-300)", 6)}
+      |    + 0 AS cum_capture
       |FROM f ORDER BY decile""".stripMargin
 
   /** The q392/q393 VaR-backtest frame: a trailing-100-day empirical
@@ -983,10 +984,10 @@ object ScoreEvalQueries {
        |      AS lr
        |  FROM g)
        |SELECT CAST(n AS BIGINT) AS n_days, x AS n_breach,
-       |  FLOOR(rate * 1e6 + 0.5) / 1e6 + 0 AS breach_rate,
-       |  FLOOR(lr * 1e4 + 0.5) / 1e4 + 0 AS lr_pof,
+       |  ${Parity.fixSql("rate", 6)} + 0 AS breach_rate,
+       |  ${Parity.fixSql("lr", 4)} + 0 AS lr_pof,
        |  CAST(CASE WHEN lr IS NULL THEN NULL
-       |    WHEN FLOOR(lr * 1e4 + 0.5) / 1e4 + 0 > 3.8415
+       |    WHEN ${Parity.fixSql("lr", 4)} + 0 > 3.8415
        |    THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
        |FROM f""".stripMargin
 
@@ -1076,10 +1077,10 @@ object ScoreEvalQueries {
        |      AS lr
        |  FROM f)
        |SELECT n00, n01, n10, n11,
-       |  FLOOR(pi1 * 1e6 + 0.5) / 1e6 + 0 AS p_breach_after_breach,
-       |  FLOOR(lr * 1e4 + 0.5) / 1e4 + 0 AS lr_ind,
+       |  ${Parity.fixSql("pi1", 6)} + 0 AS p_breach_after_breach,
+       |  ${Parity.fixSql("lr", 4)} + 0 AS lr_ind,
        |  CAST(CASE WHEN lr IS NULL THEN NULL
-       |    WHEN FLOOR(lr * 1e4 + 0.5) / 1e4 + 0 > 3.8415
+       |    WHEN ${Parity.fixSql("lr", 4)} + 0 > 3.8415
        |    THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
        |FROM z""".stripMargin
 
@@ -1147,7 +1148,7 @@ object ScoreEvalQueries {
   }
 
   val q395YoudenJSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
       |    CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS score
       |  FROM orders JOIN customer ON o_custkey = c_custkey
@@ -1187,13 +1188,13 @@ object ScoreEvalQueries {
       |  FROM best JOIN j ON j.score = best.thr AND j.num = best.mxnum)
       |SELECT post AS n_pos, negt AS n_neg,
       |  CAST(thr AS DOUBLE) / 100.0 AS threshold_dollars,
-      |  FLOOR(CAST(gep AS DOUBLE) / GREATEST(CAST(post AS DOUBLE), 1e-300)
-      |    * 1e6 + 0.5) / 1e6 + 0 AS tpr,
-      |  FLOOR(CAST(gen AS DOUBLE) / GREATEST(CAST(negt AS DOUBLE), 1e-300)
-      |    * 1e6 + 0.5) / 1e6 + 0 AS fpr,
-      |  FLOOR(CAST(mxnum AS DOUBLE)
-      |    / GREATEST(CAST(post AS DOUBLE) * CAST(negt AS DOUBLE), 1e-300)
-      |    * 1e6 + 0.5) / 1e6 + 0 AS youden_j
+      |  ${Parity.fixSql("CAST(gep AS DOUBLE) / GREATEST(CAST(post AS DOUBLE), 1e-300)", 6)}
+      |    + 0 AS tpr,
+      |  ${Parity.fixSql("CAST(gen AS DOUBLE) / GREATEST(CAST(negt AS DOUBLE), 1e-300)", 6)}
+      |    + 0 AS fpr,
+      |  ${Parity.fixSql("CAST(mxnum AS DOUBLE)" +
+                         " / GREATEST(CAST(post AS DOUBLE) * CAST(negt AS DOUBLE), 1e-300)", 6)}
+      |    + 0 AS youden_j
       |FROM b2""".stripMargin
 
   /** L331 information-gain optimal split *(added r17; [PK] Quinlan
@@ -1305,16 +1306,17 @@ object ScoreEvalQueries {
       |  FROM cum CROSS JOIN tot),
       |ig AS (
       |  SELECT score, post, negt,
-      |    CAST(FLOOR((
-      |      ${plogp("post", "(post + negt)")}
-      |        + ${plogp("negt", "(post + negt)")}
-      |      - (CAST(gep + gen AS DOUBLE) / (post + negt))
-      |        * (${plogp("gep", "(gep + gen)")}
-      |          + ${plogp("gen", "(gep + gen)")})
-      |      - (CAST(ltp + ltn AS DOUBLE) / (post + negt))
-      |        * (${plogp("ltp", "(ltp + ltn)")}
-      |          + ${plogp("ltn", "(ltp + ltn)")})
-      |      ) * 1e12 + 0.5) AS BIGINT) AS igq
+      |    ${Parity.quantSql("(" +
+                             s" ${plogp("post", "(post + negt)")}" +
+                             s" + ${plogp("negt", "(post + negt)")}" +
+                             " - (CAST(gep + gen AS DOUBLE) / (post + negt))" +
+                             s" * (${plogp("gep", "(gep + gen)")}" +
+                             s" + ${plogp("gen", "(gep + gen)")})" +
+                             " - (CAST(ltp + ltn AS DOUBLE) / (post + negt))" +
+                             s" * (${plogp("ltp", "(ltp + ltn)")}" +
+                             s" + ${plogp("ltn", "(ltp + ltn)")})" +
+                             " )", 12)}
+      |      AS igq
       |  FROM j),
       |mx AS (SELECT MAX(igq) AS mxig FROM ig),
       |best AS (
@@ -1323,10 +1325,11 @@ object ScoreEvalQueries {
       |  GROUP BY post, negt, mxig)
       |SELECT post AS n_pos, negt AS n_neg,
       |  CAST(thr AS DOUBLE) / 100.0 AS threshold_dollars,
-      |  FLOOR((${plogp("post", "(post + negt)")}
-      |    + ${plogp("negt", "(post + negt)")}) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql(s"(${plogp("post", "(post + negt)")}" +
+                         s" + ${plogp("negt", "(post + negt)")})", 6)}
+      |    + 0
       |    AS parent_entropy,
-      |  FLOOR(CAST(mxig AS DOUBLE) / 1e12 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(mxig AS DOUBLE) / 1e12", 6)} + 0
       |    AS info_gain
       |FROM best""".stripMargin
   }

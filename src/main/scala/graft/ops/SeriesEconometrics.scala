@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql}
+import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql, lagStack}
 
 /** Econometric screens on the daily order series (round 14): Granger
   * causality (q321), Newey–West HAC inference (q322), classical
@@ -196,15 +196,15 @@ object SeriesEconometrics {
        |  FROM dt)
        |SELECT CAST(n AS BIGINT) AS n_eff,
        |  CASE WHEN n < 5 OR det = 0 OR u1 <= 0 THEN NULL
-       |    ELSE FLOOR((r1 - u1) / (u1 / (nf - 3.0)) * 1e6 + 0.5) / 1e6 + 0
+       |    ELSE ${Parity.fixSql("(r1 - u1) / (u1 / (nf - 3.0))", 6)} + 0
        |    END AS f_cnt_to_rev,
        |  CASE WHEN n < 5 OR det = 0 OR u1 <= 0 THEN NULL
-       |    ELSE FLOOR(beta1 * 1e6 + 0.5) / 1e6 + 0 END AS beta_lag_cnt,
+       |    ELSE ${Parity.fixSql("beta1", 6)} + 0 END AS beta_lag_cnt,
        |  CASE WHEN n < 5 OR det = 0 OR u2 <= 0 THEN NULL
-       |    ELSE FLOOR((r2 - u2) / (u2 / (nf - 3.0)) * 1e6 + 0.5) / 1e6 + 0
+       |    ELSE ${Parity.fixSql("(r2 - u2) / (u2 / (nf - 3.0))", 6)} + 0
        |    END AS f_rev_to_cnt,
        |  CASE WHEN n < 5 OR det = 0 OR u2 <= 0 THEN NULL
-       |    ELSE FLOOR(beta2 * 1e6 * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("beta2 * 1e6", 6)} + 0 END
        |    AS beta_lag_rev_ppm
        |FROM fs""".stripMargin
 
@@ -228,14 +228,7 @@ object SeriesEconometrics {
   def q322NeweyWest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy("day")
     val d0 = daily(s, dir)
-    val withLags = d0.select(
-      (col("rev") +: (1 to 7).map(k =>
-        lag(col("rev"), k).over(w).as(s"x$k"))): _*)
-    val stackExpr = (1 to 7)
-      .map(k => s"${k}L, x$k").mkString("stack(7, ", ", ", ")")
-    val lags = withLags
-      .select(col("rev").as("y"), expr(s"$stackExpr as (lag, x)"))
-      .filter(col("x").isNotNull)
+    val lags = lagStack(d0, w, "rev", "rev", 1 to 7)
     def d(c: Column) = c.cast(dec)
     val perLag = lags.groupBy("lag").agg(count(lit(1)).as("m"),
       sum(d(col("y")) * d(col("x"))).as("sxy"),
@@ -312,16 +305,16 @@ object SeriesEconometrics {
        |      * CAST(s AS DOUBLE) / n) / n * (1.0 + rel_tail) AS lrv
        |  FROM g)
        |SELECT CAST(n AS BIGINT) AS n_days,
-       |  FLOOR(CAST(s AS DOUBLE) / n * 1e4 + 0.5) / 1e4 + 0 AS mean_rev,
-       |  FLOOR(g0 * 1e6 + 0.5) / 1e6 + 0 AS gamma0,
+       |  ${Parity.fixSql("CAST(s AS DOUBLE) / n", 4)} + 0 AS mean_rev,
+       |  ${Parity.fixSql("g0", 6)} + 0 AS gamma0,
        |  CASE WHEN lrv <= 0 THEN NULL
-       |    ELSE FLOOR(lrv * 1e6 + 0.5) / 1e6 + 0 END AS long_run_var,
+       |    ELSE ${Parity.fixSql("lrv", 6)} + 0 END AS long_run_var,
        |  CASE WHEN g0 <= 0 THEN NULL
-       |    ELSE FLOOR(CAST(s AS DOUBLE) / n / SQRT(g0 / n) * 1e6 + 0.5)
-       |      / 1e6 + 0 END AS t_iid,
+       |    ELSE ${Parity.fixSql("CAST(s AS DOUBLE) / n / SQRT(g0 / n)", 6)}
+       |      + 0 END AS t_iid,
        |  CASE WHEN lrv <= 0 THEN NULL
-       |    ELSE FLOOR(CAST(s AS DOUBLE) / n / SQRT(lrv / n) * 1e6 + 0.5)
-       |      / 1e6 + 0 END AS t_hac
+       |    ELSE ${Parity.fixSql("CAST(s AS DOUBLE) / n / SQRT(lrv / n)", 6)}
+       |      + 0 END AS t_hac
        |FROM g2""".stripMargin
 
   /** L257 classical additive seasonal decomposition ([PK] the
@@ -416,20 +409,20 @@ object SeriesEconometrics {
        |  FROM dow),
        |w1 AS (
        |  SELECT *, sdd - sd * sd / n AS sst,
-       |    CAST(FLOOR((CAST(sdd7 AS DOUBLE) - CAST(sd7 AS DOUBLE)
-       |      * CAST(sd7 AS DOUBLE) / m) / (sdd - sd * sd / n) * 1e9
-       |      + 0.5) AS BIGINT) AS rel9
+       |    ${Parity.quantSql("(CAST(sdd7 AS DOUBLE) - CAST(sd7 AS DOUBLE)" +
+                              " * CAST(sd7 AS DOUBLE) / m) / (sdd - sd * sd / n)", 9)}
+       |      AS rel9
        |  FROM w0),
        |w AS (
        |  SELECT *, CAST(SUM(rel9) OVER () AS DOUBLE) / 1e9 AS ssw_rel
        |  FROM w1)
        |SELECT isodow, CAST(m AS BIGINT) AS n_days,
-       |  FLOOR(CAST(sd7 AS DOUBLE) / m / 7.0 * 1e4 + 0.5) / 1e4 + 0
+       |  ${Parity.fixSql("CAST(sd7 AS DOUBLE) / m / 7.0", 4)} + 0
        |    AS seasonal,
-       |  FLOOR(sd / n / 7.0 * 1e4 + 0.5) / 1e4 + 0
+       |  ${Parity.fixSql("sd / n / 7.0", 4)} + 0
        |    AS grand_detrended_mean,
        |  CASE WHEN sst <= 0 THEN NULL
-       |    ELSE FLOOR(GREATEST(0.0, 1.0 - ssw_rel) * 1e6 + 0.5) / 1e6 + 0
+       |    ELSE ${Parity.fixSql("GREATEST(0.0, 1.0 - ssw_rel)", 6)} + 0
        |    END AS seasonal_strength
        |FROM w
        |ORDER BY isodow""".stripMargin
@@ -460,15 +453,7 @@ object SeriesEconometrics {
         ((col("rev") - col("f1")) * (col("rev") - col("f1")) -
           (col("rev") - col("f7")) * (col("rev") - col("f7"))).as("dt"))
       .localCheckpoint(eager = false)
-    val wd = Window.orderBy("day")
-    val withLags = base.select(
-      (col("dt") +: (1 to 7).map(k =>
-        lag(col("dt"), k).over(wd).as(s"x$k"))): _*)
-    val stackExpr = (1 to 7)
-      .map(k => s"${k}L, x$k").mkString("stack(7, ", ", ", ")")
-    val lags = withLags
-      .select(col("dt").as("y"), expr(s"$stackExpr as (lag, x)"))
-      .filter(col("x").isNotNull)
+    val lags = lagStack(base, w, "dt", "dt", 1 to 7)
     def d(c: Column) = c.cast(dec)
     val perLag = lags.groupBy("lag").agg(count(lit(1)).as("m"),
       sum(d(col("y")) * d(col("x"))).as("sxy"),
@@ -539,11 +524,11 @@ object SeriesEconometrics {
        |      * CAST(s AS DOUBLE) / n) / n * (1.0 + rel_tail) AS lrv
        |  FROM g)
        |SELECT CAST(n AS BIGINT) AS n_days,
-       |  FLOOR(CAST(s AS DOUBLE) / n * 1e4 + 0.5) / 1e4 + 0
+       |  ${Parity.fixSql("CAST(s AS DOUBLE) / n", 4)} + 0
        |    AS mean_loss_diff,
        |  CASE WHEN lrv <= 0 THEN NULL
-       |    ELSE FLOOR(CAST(s AS DOUBLE) / n / SQRT(lrv / n) * 1e6 + 0.5)
-       |      / 1e6 + 0 END AS dm_stat,
+       |    ELSE ${Parity.fixSql("CAST(s AS DOUBLE) / n / SQRT(lrv / n)", 6)}
+       |      + 0 END AS dm_stat,
        |  CASE WHEN lrv <= 0 THEN NULL
        |    ELSE CAST(SIGN(CAST(s AS DOUBLE)) AS BIGINT) END
        |    AS naive_worse
@@ -706,10 +691,10 @@ object SeriesEconometrics {
        |  FROM dt)
        |SELECT CAST(n AS BIGINT) AS n_eff,
        |  CASE WHEN n < 5 OR det = 0 OR tss <= 0 THEN NULL
-       |    ELSE FLOOR((1.0 - rss / tss) * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("(1.0 - rss / tss)", 6)} + 0 END
        |    AS aux_r2,
        |  CASE WHEN n < 5 OR det = 0 OR tss <= 0 THEN NULL
-       |    ELSE FLOOR(nf * (1.0 - rss / tss) * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("nf * (1.0 - rss / tss)", 6)} + 0 END
        |    AS arch_lm,
        |  CASE WHEN n < 5 OR det = 0 OR tss <= 0 THEN NULL
        |    ELSE CAST(CASE WHEN nf * (1.0 - rss / tss) > 5.991
@@ -796,9 +781,9 @@ object SeriesEconometrics {
        |SELECT CAST(n AS BIGINT) AS n_days, n1 AS n_above,
        |  n2 AS n_below, runs AS n_runs,
        |  CASE WHEN n1 = 0 OR n2 = 0 OR n < 20 THEN NULL
-       |    ELSE FLOOR(er * 1e6 + 0.5) / 1e6 + 0 END AS e_runs,
+       |    ELSE ${Parity.fixSql("er", 6)} + 0 END AS e_runs,
        |  CASE WHEN n1 = 0 OR n2 = 0 OR n < 20 THEN NULL
-       |    ELSE FLOOR((runs - er) / SQRT(vr) * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("(runs - er) / SQRT(vr)", 6)} + 0 END
        |    AS z,
        |  CASE WHEN n1 = 0 OR n2 = 0 OR n < 20 THEN NULL
        |    ELSE CAST(CASE WHEN ABS((runs - er) / SQRT(vr)) > 1.96
@@ -908,10 +893,11 @@ object SeriesEconometrics {
        |  CASE WHEN n < 30 OR s1 <= 0 THEN NULL
        |    ELSE FLOOR(s1 + 0.5) + 0 END AS var_1,
        |  CASE WHEN n < 30 OR s1 <= 0 THEN NULL
-       |    ELSE FLOOR(vrat * 1e6 + 0.5) / 1e6 + 0 END AS vr,
+       |    ELSE ${Parity.fixSql("vrat", 6)} + 0 END AS vr,
        |  CASE WHEN n < 30 OR s1 <= 0 THEN NULL
-       |    ELSE FLOOR((vrat - 1.0) / SQRT(2.0 * (2.0 * 5.0 - 1.0)
-       |      * (5.0 - 1.0) / (3.0 * 5.0 * nf)) * 1e6 + 0.5) / 1e6 + 0
+       |    ELSE ${Parity.fixSql("(vrat - 1.0) / SQRT(2.0 * (2.0 * 5.0 - 1.0)" +
+                                 " * (5.0 - 1.0) / (3.0 * 5.0 * nf))", 6)}
+       |      + 0
        |    END AS z,
        |  CASE WHEN n < 30 OR s1 <= 0 THEN NULL
        |    ELSE CAST(CASE WHEN ABS((vrat - 1.0) / SQRT(2.0
@@ -1025,21 +1011,20 @@ object SeriesEconometrics {
        |  FROM bw WHERE cnt = m GROUP BY m, blk),
        |ps AS (
        |  SELECT m, COUNT(*) AS b,
-       |    CAST(SUM(CAST(FLOOR((CAST(mx AS DOUBLE) - CAST(mn AS DOUBLE))
-       |      / SQRT(CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |        - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)) * 1e9 + 0.5)
-       |      AS BIGINT)) AS BIGINT) AS s9,
+       |    CAST(SUM(${Parity.quantSql("(CAST(mx AS DOUBLE) - CAST(mn AS DOUBLE))" +
+                                       " / SQRT(CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)" +
+                                       " - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))", 9)}
+       |      ) AS BIGINT) AS s9,
        |    MAX(mrn) AS mrn
        |  FROM blocks GROUP BY m),
        |lg AS (
        |  SELECT m, b, s9, mrn,
-       |    CAST(FLOOR(LN(CAST(m AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
+       |    ${Parity.quantSql("LN(CAST(m AS DOUBLE))", 9)}
        |      AS lx9,
-       |    CAST(FLOOR(LN(CAST(s9 AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
-       |    - CAST(FLOOR(LN(CAST(b AS DOUBLE) * 1e9) * 1e9 + 0.5)
-       |        AS BIGINT) AS ly9,
-       |    FLOOR(CAST(s9 AS DOUBLE) / (CAST(b AS DOUBLE) * 1e9) * 1e6
-       |      + 0.5) / 1e6 + 0 AS rs_mean
+       |    ${Parity.quantSql("LN(CAST(s9 AS DOUBLE))", 9)}
+       |    - ${Parity.quantSql("LN(CAST(b AS DOUBLE) * 1e9)", 9)} AS ly9,
+       |    ${Parity.fixSql("CAST(s9 AS DOUBLE) / (CAST(b AS DOUBLE) * 1e9)", 6)}
+       |      + 0 AS rs_mean
        |  FROM ps),
        |fin AS (
        |  SELECT CAST(MAX(mrn) AS BIGINT) AS n_covered, COUNT(*) AS k,
@@ -1053,11 +1038,11 @@ object SeriesEconometrics {
        |  FROM lg)
        |SELECT n_covered, rs_50, rs_100, rs_200,
        |  CASE WHEN k < 3 THEN NULL
-       |    ELSE FLOOR((CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-       |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-       |      / (CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * 1e6 + 0.5)
-       |      / 1e6 + 0 END AS hurst
+       |    ELSE ${Parity.fixSql("(CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)" +
+                                 " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))" +
+                                 " / (CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)" +
+                                 " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))", 6)}
+       |      + 0 END AS hurst
        |FROM fin""".stripMargin
 
   /** L275 turning-points randomness test ([PK] Kendall & Stuart; the
@@ -1121,9 +1106,9 @@ object SeriesEconometrics {
        |  FROM m)
        |SELECT CAST(ni + 2 AS BIGINT) AS n_days, tp AS n_turning,
        |  CASE WHEN ni < 20 THEN NULL
-       |    ELSE FLOOR(et * 1e6 + 0.5) / 1e6 + 0 END AS e_turning,
+       |    ELSE ${Parity.fixSql("et", 6)} + 0 END AS e_turning,
        |  CASE WHEN ni < 20 THEN NULL
-       |    ELSE FLOOR((tp - et) / SQRT(vt) * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("(tp - et) / SQRT(vt)", 6)} + 0 END
        |    AS z,
        |  CASE WHEN ni < 20 THEN NULL
        |    ELSE CAST(CASE WHEN ABS((tp - et) / SQRT(vt)) > 1.96
@@ -1231,15 +1216,16 @@ object SeriesEconometrics {
        |    SQRT(mse) / GREATEST(SQRT(maa) + SQRT(mff), 1e-300) AS u1
        |  FROM z)
        |SELECT CAST(n AS BIGINT) AS n_days,
-       |  FLOOR(u1 * 1e6 + 0.5) / 1e6 + 0 AS u1,
-       |  FLOOR(SQRT(e2 / GREATEST(p2, 1e-300)) * 1e6 + 0.5) / 1e6 + 0
+       |  ${Parity.fixSql("u1", 6)} + 0 AS u1,
+       |  ${Parity.fixSql("SQRT(e2 / GREATEST(p2, 1e-300))", 6)} + 0
        |    AS u2,
-       |  FLOOR((mf - ma) * (mf - ma) / GREATEST(mse, 1e-300) * 1e6 + 0.5)
-       |    / 1e6 + 0 AS um_bias,
-       |  FLOOR((sdf - sda) * (sdf - sda) / GREATEST(mse, 1e-300)
-       |    * 1e6 + 0.5) / 1e6 + 0 AS us_variance,
-       |  FLOOR(2.0 * (1.0 - cov / GREATEST(sdf * sda, 1e-300)) * sdf * sda
-       |    / GREATEST(mse, 1e-300) * 1e6 + 0.5) / 1e6 + 0
+       |  ${Parity.fixSql("(mf - ma) * (mf - ma) / GREATEST(mse, 1e-300)", 6)}
+       |    + 0 AS um_bias,
+       |  ${Parity.fixSql("(sdf - sda) * (sdf - sda) / GREATEST(mse, 1e-300)", 6)}
+       |    + 0 AS us_variance,
+       |  ${Parity.fixSql("2.0 * (1.0 - cov / GREATEST(sdf * sda, 1e-300)) * sdf * sda" +
+                          " / GREATEST(mse, 1e-300)", 6)}
+       |    + 0
        |    AS uc_covariance,
        |  CAST(CASE WHEN SQRT(e2 / GREATEST(p2, 1e-300)) < 1.0
        |    THEN 1 ELSE 0 END AS BIGINT) AS beats_persistence

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql,
-  trailingYear, trailingYearSql}
+  lagStack, trailingYear, trailingYearSql}
 
 /** Spectral / entropy / long-range-dependence statistics on the daily
   * order-revenue series — the SeriesStats split (r14, the
@@ -170,7 +170,7 @@ object SeriesSpectral {
   val q252HurstRsSql: String = {
     def lvl(w: Int): String =
       s"""SELECT $w AS w, COUNT(*) AS n_blocks,
-         |  CAST(SUM(CAST(FLOOR(rs * 1e9 + 0.5) AS BIGINT)) AS DOUBLE)
+         |  CAST(SUM(${Parity.quantSql("rs", 9)}) AS DOUBLE)
          |    / 1e9 / COUNT(*) AS rs_mean
          |FROM (
          |  SELECT b,
@@ -204,9 +204,9 @@ object SeriesSpectral {
        |${lvl(64)}),
        |lq AS (
        |  SELECT *,
-       |    CAST(CAST(FLOOR(LN(CAST(w AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
+       |    CAST(${Parity.quantSql("LN(CAST(w AS DOUBLE))", 9)}
        |      AS HUGEINT) AS lx9,
-       |    CAST(CAST(FLOOR(LN(rs_mean) * 1e9 + 0.5) AS BIGINT)
+       |    CAST(${Parity.quantSql("LN(rs_mean)", 9)}
        |      AS HUGEINT) AS ly9
        |  FROM lv),
        |t AS (
@@ -537,20 +537,14 @@ object SeriesSpectral {
       .select(col("day"), col("n"),
         (col("dx").cast(dec) * col("n").cast(dec) - col("sx")).as("e"))
       .localCheckpoint(eager = false)
-    val withLags = eps.select(
-      (Seq(col("n"), col("e")) ++ (1 to 6).map(k =>
-        lag(col("e"), k).over(w).as(s"e$k"))): _*)
-    val stackExpr = (1 to 6)
-      .map(k => s"${k}L, e$k").mkString("stack(6, ", ", ", ")")
-    val lagged = withLags
-      .select(col("n"), col("e").as("y"), expr(s"$stackExpr as (lag, x)"))
+    val lagged = lagStack(eps, w, "e", "e", 1 to 6)
     // denominator Σε² rides lag 1's rows plus its own head row, so sum
     // it from the eps census directly (one extra 1-row agg, no rescan:
     // eps is census-sized)
     val den = eps.agg(sum(col("e") * col("e")).as("see"),
       max(col("n")).as("nn"))
-    val perLag = lagged.filter(col("x").isNotNull)
-      .groupBy("lag").agg(sum(col("x") * col("y")).as("sxy"))
+    val perLag =
+      lagged.groupBy("lag").agg(sum(col("x") * col("y")).as("sxy"))
     // r16 libm-sum audit (adjacent class): the 6 per-lag terms are
     // IEEE-exact per term but were summed RAW — double addition is
     // order-sensitive, and engines visit the lag rows in different
@@ -609,10 +603,10 @@ object SeriesSpectral {
        |  WHERE x IS NOT NULL GROUP BY lag),
        |qs AS (
        |  SELECT den.nn,
-       |    CAST(SUM(CAST(FLOOR((CAST(sxy AS DOUBLE) / CAST(see AS DOUBLE))
-       |      * (CAST(sxy AS DOUBLE) / CAST(see AS DOUBLE))
-       |      / (CAST(nn AS DOUBLE) - CAST(lag AS DOUBLE))
-       |      * 1e15 + 0.5) AS BIGINT)) AS DOUBLE) / 1e15 AS tsum,
+       |    CAST(SUM(${Parity.quantSql("(CAST(sxy AS DOUBLE) / CAST(see AS DOUBLE))" +
+                                       " * (CAST(sxy AS DOUBLE) / CAST(see AS DOUBLE))" +
+                                       " / (CAST(nn AS DOUBLE) - CAST(lag AS DOUBLE))", 15)}
+       |      ) AS DOUBLE) / 1e15 AS tsum,
        |    MAX(CAST(see AS DOUBLE)) AS seed
        |  FROM perlag CROSS JOIN den GROUP BY den.nn)
        |SELECT CAST(nn AS BIGINT) AS n_diffs,
@@ -620,10 +614,10 @@ object SeriesSpectral {
        |    ROUND(CAST(nn AS DOUBLE) * (nn + 2.0) * tsum, 4) + 0 END AS lb_q,
        |  CAST(6 AS BIGINT) AS df,
        |  CASE WHEN seed <= 0 OR nn < 10 THEN NULL ELSE
-       |    FLOOR(exp(-(CAST(nn AS DOUBLE) * (nn + 2.0) * tsum) / 2.0)
-       |      * (1.0 + (nn * (nn + 2.0) * tsum) / 2.0
-       |        + (nn * (nn + 2.0) * tsum) * (nn * (nn + 2.0) * tsum) / 8.0)
-       |      * 1e8 + 0.5) / 1e8 END AS p
+       |    ${Parity.fixSql("exp(-(CAST(nn AS DOUBLE) * (nn + 2.0) * tsum) / 2.0)" +
+                            " * (1.0 + (nn * (nn + 2.0) * tsum) / 2.0" +
+                            " + (nn * (nn + 2.0) * tsum) * (nn * (nn + 2.0) * tsum) / 8.0)", 8)}
+       |      END AS p
        |FROM qs""".stripMargin
 
   /** L223 spectral entropy of the daily-revenue series ([PK] Inouye et
@@ -735,10 +729,10 @@ object SeriesSpectral {
        |  FROM p2),
        |t AS (
        |  SELECT n, nf, tp,
-       |    CASE WHEN pw > 0 THEN CAST(FLOOR(
-       |      -(CAST(pw AS DOUBLE) / CAST(tp AS DOUBLE))
-       |      * ln(CAST(pw AS DOUBLE) / CAST(tp AS DOUBLE)) * 1e9 + 0.5)
-       |      AS BIGINT) ELSE 0 END AS tq,
+       |    CASE WHEN pw > 0 THEN
+       |      ${Parity.quantSql("-(CAST(pw AS DOUBLE) / CAST(tp AS DOUBLE))" +
+                                " * ln(CAST(pw AS DOUBLE) / CAST(tp AS DOUBLE))", 9)}
+       |      ELSE 0 END AS tq,
        |    CASE WHEN pw = pmax THEN k END AS pk
        |  FROM sh),
        |g AS (
@@ -751,7 +745,7 @@ object SeriesSpectral {
        |    AS spectral_entropy,
        |  CASE WHEN tp <= 0 OR nf < 2 THEN NULL
        |    ELSE ROUND((CAST(hq AS DOUBLE) / 1e9)
-       |      / (FLOOR(LN(CAST(nf AS DOUBLE)) * 1e9 + 0.5) / 1e9), 6) + 0
+       |      / (${Parity.fixSql("LN(CAST(nf AS DOUBLE))", 9)}), 6) + 0
        |    END AS h_norm,
        |  CASE WHEN tp <= 0 OR nf < 2 THEN NULL
        |    ELSE CAST(peak_k AS BIGINT) END AS peak_k,
@@ -809,12 +803,14 @@ object SeriesSpectral {
       .withColumn("x1", lead(col("rev"), 1).over(wo))
       .withColumn("x2", lead(col("rev"), 2).over(wo))
       .filter(col("x1").isNotNull && col("x2").isNotNull)
-      .withColumnRenamed("rev", "x0")
+      // rn comes out of the carry, which a self-join cannot re-instance;
+      // renamed here, both sides get their own template index
+      .withColumnsRenamed(Map("rn" -> "t", "rev" -> "x0"))
     val bm = abs(col("a.x0") - col("b.x0")) <= col("a.rl") &&
       abs(col("a.x1") - col("b.x1")) <= col("a.rl")
     val am = bm && abs(col("a.x2") - col("b.x2")) <= col("a.rl")
     val g = emb.as("a").join(broadcast(emb.as("b")),
-        col("a.rn") < col("b.rn"))
+        col("a.t") < col("b.t"))
       .agg(max(col("a.nw")).as("n_days"), max(col("a.rl")).as("r_dollars"),
         sum(when(bm, 1L).otherwise(0L)).as("b_pairs"),
         sum(when(am, 1L).otherwise(0L)).as("a_pairs"))
@@ -861,9 +857,8 @@ object SeriesSpectral {
        |  FROM p)
        |SELECT n_days, r_dollars, b_pairs, a_pairs,
        |  CASE WHEN a_pairs = 0 OR b_pairs = 0 THEN NULL
-       |    ELSE ROUND(CAST(CAST(FLOOR(LN(CAST(b_pairs AS DOUBLE)) * 1e9
-       |        + 0.5) AS BIGINT)
-       |      - CAST(FLOOR(LN(CAST(a_pairs AS DOUBLE)) * 1e9 + 0.5)
-       |        AS BIGINT) AS DOUBLE) / 1e9, 6) + 0 END AS sampen
+       |    ELSE ROUND(CAST(${Parity.quantSql("LN(CAST(b_pairs AS DOUBLE))", 9)}
+       |      - ${Parity.quantSql("LN(CAST(a_pairs AS DOUBLE))", 9)}
+       |        AS DOUBLE) / 1e9, 6) + 0 END AS sampen
        |FROM g""".stripMargin
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Time-series robustness statistics over the daily order-revenue
@@ -40,6 +40,21 @@ object SeriesStats {
       |    CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)) AS BIGINT)
       |      AS rev
       |  FROM orders GROUP BY 1""".stripMargin
+
+  /** The lag stack of the ACF family: column `x` lagged k rows on
+    * `frame` for every k in `lags` (all lags on one window sort, named
+    * `x<k>`), unpivoted by `stack` into rows (`y`, `lag`, `x`),
+    * where `y` is the unlagged column `y`. Rows whose lag reaches before
+    * the series starts (null `x`) are dropped. */
+  private[ops] def lagStack(d: DataFrame, frame: WindowSpec, y: String,
+      x: String, lags: Range): DataFrame = {
+    val withLags = d.select((col(y) +: lags.map(k =>
+      lag(col(x), k).over(frame).as(s"x$k"))): _*)
+    val stackExpr = lags.map(k => s"${k}L, x$k")
+      .mkString(s"stack(${lags.size}, ", ", ", ")")
+    withLags.select(col(y).as("y"), expr(s"$stackExpr as (lag, x)"))
+      .filter(col("x").isNotNull)
+  }
 
   /** The trailing 365 days of a day-indexed frame: the rows whose `t`
     * lies within 365 of the frame's maximum `t`, kept with that `tmax`.
@@ -157,18 +172,10 @@ object SeriesStats {
     * displayed. Lag shifts are row windows over the scale-constant
     * series. */
   def q208Acf(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-    val w = Window.orderBy("day")
     // all 7 lags share ONE window spec → one sort, one exchange (the
     // per-lag union form paid 7 re-sorts); stack unpivots to rows
-    val withLags = d.select(
-      (col("rev") +: (1 to 7).map(k =>
-        lag(col("rev"), k).over(w).as(s"x$k"))): _*)
-    val stackExpr = (1 to 7)
-      .map(k => s"${k}L, x$k").mkString("stack(7, ", ", ", ")")
-    val lags = withLags
-      .select(col("rev").as("y"), expr(s"$stackExpr as (lag, x)"))
-      .filter(col("x").isNotNull)
+    val lags =
+      lagStack(daily(s, dir), Window.orderBy("day"), "rev", "rev", 1 to 7)
     // cast to decimal BEFORE multiplying: a daily total past ~$3B would
     // overflow an int64 per-term product; (38,0)x(38,0) stays exact for
     // any value that fits 38 digits
@@ -336,16 +343,8 @@ object SeriesStats {
     * double r chain, 6dp. Lag shifts are row windows over the
     * scale-constant day series; all 8 lags share one window sort. */
   def q213CrossCorr(s: SparkSession, dir: String): DataFrame = {
-    val d = daily2(s, dir)
-    val w = Window.orderBy("day")
-    val withLags = d.select(
-      (col("rev") +: (0 to 7).map(k =>
-        lag(col("cnt"), k).over(w).as(s"x$k"))): _*)
-    val stackExpr = (0 to 7)
-      .map(k => s"${k}L, x$k").mkString("stack(8, ", ", ", ")")
-    val lags = withLags
-      .select(col("rev").as("y"), expr(s"$stackExpr as (lag, x)"))
-      .filter(col("x").isNotNull)
+    val lags =
+      lagStack(daily2(s, dir), Window.orderBy("day"), "rev", "cnt", 0 to 7)
     val dec = "decimal(38,0)"
     lags.groupBy("lag")
       .agg(count(lit(1)).as("n"),
@@ -548,8 +547,7 @@ object SeriesStats {
        |  FROM dd GROUP BY dw),
        |e AS (
        |  SELECT day,
-       |    CAST(FLOOR((CAST(rev AS DOUBLE) - CAST(sr AS DOUBLE) / nd)
-       |      * 1e6 + 0.5) AS BIGINT) AS eq
+       |    ${Parity.quantSql("(CAST(rev AS DOUBLE) - CAST(sr AS DOUBLE) / nd)", 6)} AS eq
        |  FROM dd JOIN seas USING (dw)),
        |lagd AS (
        |  SELECT eq, LAG(eq, 1) OVER (ORDER BY day) AS ep FROM e),
@@ -694,13 +692,14 @@ object SeriesStats {
       |  CAST(d1 AS BIGINT) AS d1, CAST(d2 AS BIGINT) AS d2,
       |  CAST(d3 AS BIGINT) AS d3,
       |  CASE WHEN n < 5 THEN NULL
-      |    ELSE FLOOR(30.0 * ((CAST(n AS DOUBLE) - 2.0)
-      |        * (CAST(n AS DOUBLE) - 3.0) * CAST(d1 AS DOUBLE)
-      |        + CAST(d2 AS DOUBLE)
-      |        - 2.0 * (CAST(n AS DOUBLE) - 2.0) * CAST(d3 AS DOUBLE))
-      |      / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-      |        * (CAST(n AS DOUBLE) - 2.0) * (CAST(n AS DOUBLE) - 3.0)
-      |        * (CAST(n AS DOUBLE) - 4.0), 1e-300) * 1e6 + 0.5) / 1e6 + 0
+      |    ELSE ${Parity.fixSql("30.0 * ((CAST(n AS DOUBLE) - 2.0)" +
+                                " * (CAST(n AS DOUBLE) - 3.0) * CAST(d1 AS DOUBLE)" +
+                                " + CAST(d2 AS DOUBLE)" +
+                                " - 2.0 * (CAST(n AS DOUBLE) - 2.0) * CAST(d3 AS DOUBLE))" +
+                                " / GREATEST(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)" +
+                                " * (CAST(n AS DOUBLE) - 2.0) * (CAST(n AS DOUBLE) - 3.0)" +
+                                " * (CAST(n AS DOUBLE) - 4.0), 1e-300)", 6)}
+      |        + 0
       |    END AS hoeffding_d
       |FROM agg""".stripMargin
 
@@ -778,9 +777,9 @@ object SeriesStats {
       |SELECT n_days, n_pp, n_mm, n_pm, n_mp,
       |  n_days - (n_pp + n_mm + n_pm + n_mp) AS n_on_median,
       |  CASE WHEN n_pp + n_mm + n_pm + n_mp = 0 THEN NULL
-      |    ELSE FLOOR(CAST(n_pp + n_mm - n_pm - n_mp AS DOUBLE)
-      |      / GREATEST(CAST(n_pp + n_mm + n_pm + n_mp AS DOUBLE), 1e-300)
-      |      * 1e6 + 0.5)
-      |      / 1e6 + 0 END AS blomqvist_beta
+      |    ELSE
+      |      ${Parity.fixSql("CAST(n_pp + n_mm - n_pm - n_mp AS DOUBLE)" +
+                             " / GREATEST(CAST(n_pp + n_mm + n_pm + n_mp AS DOUBLE), 1e-300)", 6)}
+      |      + 0 END AS blomqvist_beta
       |FROM agg""".stripMargin
 }

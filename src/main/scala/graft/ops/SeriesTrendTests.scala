@@ -216,7 +216,7 @@ object SeriesTrendTests {
        |  FROM (SELECT rev, COUNT(*) AS tc FROM rc GROUP BY rev))
        |SELECT n AS n_days, s_stat,
        |  ROUND($z, 4) + 0 AS z_mk,
-       |  FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p,
+       |  ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} AS p,
        |  CASE WHEN s_stat > 0 THEN 'increasing'
        |    WHEN s_stat < 0 THEN 'decreasing' ELSE 'none' END AS trend
        |FROM sa, ties""".stripMargin
@@ -234,8 +234,9 @@ object SeriesTrendTests {
        |  FROM dd GROUP BY dw),
        |e AS (
        |  SELECT day,
-       |    CASE WHEN CAST(FLOOR((CAST(rev AS DOUBLE)
-       |      - CAST(sr AS DOUBLE) / nd) * 1e6 + 0.5) AS BIGINT) >= 0
+       |    CASE WHEN ${Parity.quantSql("(CAST(rev AS DOUBLE)" +
+                                        " - CAST(sr AS DOUBLE) / nd)", 6)}
+       |      >= 0
        |      THEN 1 ELSE 0 END AS sgn
        |  FROM dd JOIN seas ON dd.dw = seas.dw),
        |l AS (
@@ -255,7 +256,7 @@ object SeriesTrendTests {
        |SELECT n_days, n_pos, n_days - n_pos AS n_neg,
        |  switches + 1 AS runs,
        |  ROUND($z, 4) + 0 AS z_runs,
-       |  FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p
+       |  ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} AS p
        |FROM c""".stripMargin
   }
 
@@ -334,7 +335,7 @@ object SeriesTrendTests {
        |  CASE WHEN s_up + s_dn = 0 THEN NULL
        |    ELSE ROUND($z, 4) + 0 END AS z,
        |  CASE WHEN s_up + s_dn = 0 THEN NULL
-       |    ELSE FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 END
+       |    ELSE ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} END
        |    AS p
        |FROM g""".stripMargin
   }
@@ -399,7 +400,7 @@ object SeriesTrendTests {
        |    AS expected,
        |  CASE WHEN n_days < 3 THEN NULL ELSE ROUND($z, 4) + 0 END AS z,
        |  CASE WHEN n_days < 3 THEN NULL ELSE
-       |    FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 END AS p
+       |    ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} END AS p
        |FROM g""".stripMargin
   }
 
@@ -463,7 +464,7 @@ object SeriesTrendTests {
     val z = s"(($vr - 1.0) / SQRT(2.0 * 9.0 * 4.0 / (15.0 * CAST(n1 AS DOUBLE))))"
     s"""WITH d AS ($dailySql),
        |l AS (
-       |  SELECT CAST(FLOOR(ln(CAST(rev AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)
+       |  SELECT ${Parity.quantSql("ln(CAST(rev AS DOUBLE))", 9)}
        |    AS lx, day
        |  FROM d),
        |r AS (
@@ -487,7 +488,7 @@ object SeriesTrendTests {
        |  CASE WHEN n1 < 7 OR $v1 <= 0.0 OR nq < 2 THEN NULL
        |    ELSE ROUND($z, 4) + 0 END AS z,
        |  CASE WHEN n1 < 7 OR $v1 <= 0.0 OR nq < 2 THEN NULL
-       |    ELSE FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 END
+       |    ELSE ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} END
        |    AS p
        |FROM g""".stripMargin
   }
@@ -625,13 +626,15 @@ object SeriesTrendTests {
        |  GROUP BY dow),
        |va AS (
        |  SELECT CAST(SUM(nk) AS BIGINT) AS n, COUNT(*) AS k,
-       |    CAST(SUM(CAST(FLOOR((CAST(nk AS DOUBLE) * (nk - 1)
-       |      * (2 * CAST(nk AS DOUBLE) + 5) - CAST(tie_k AS DOUBLE))
-       |      / 18.0 * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS sv6
+       |    CAST(SUM(
+       |      ${Parity.quantSql("(CAST(nk AS DOUBLE) * (nk - 1)" +
+                                " * (2 * CAST(nk AS DOUBLE) + 5) - CAST(tie_k AS DOUBLE))" +
+                                " / 18.0", 6)}
+       |      ) AS BIGINT) AS sv6
        |  FROM tk)
        |SELECT n AS n_days, CAST(k AS BIGINT) AS n_seasons, s_stat,
        |  ROUND($z, 4) + 0 AS z_smk,
-       |  FLOOR(${StatFns.asTwoSidedPSql(z)} * 1e8 + 0.5) / 1e8 AS p,
+       |  ${Parity.fixSql(StatFns.asTwoSidedPSql(z), 8)} AS p,
        |  CASE WHEN s_stat > 0 THEN 'increasing'
        |    WHEN s_stat < 0 THEN 'decreasing' ELSE 'none' END AS trend
        |FROM sa, va""".stripMargin
@@ -718,11 +721,11 @@ object SeriesTrendTests {
        |SELECT CAST(n AS BIGINT) AS n_days,
        |  CAST(n * (n - 1) // 2 AS BIGINT) AS n_pairs,
        |  CAST(k AS BIGINT) AS k_rank, CAST(ad AS BIGINT) AS qn_raw,
-       |  FLOOR(2.2219 * CAST(ad AS DOUBLE) * 1e4 + 0.5) / 1e4 + 0
+       |  ${Parity.fixSql("2.2219 * CAST(ad AS DOUBLE)", 4)} + 0
        |    AS qn,
        |  CAST(sd AS BIGINT) AS sd,
-       |  FLOOR(2.2219 * CAST(ad AS DOUBLE) / CAST(sd AS DOUBLE) * 1e6
-       |    + 0.5) / 1e6 + 0 AS qn_over_sd
+       |  ${Parity.fixSql("2.2219 * CAST(ad AS DOUBLE) / CAST(sd AS DOUBLE)", 6)}
+       |    + 0 AS qn_over_sd
        |FROM pick""".stripMargin
 
   /** L299 Bartels rank von Neumann ratio ([PK] Bartels 1982) — the
@@ -893,19 +896,20 @@ object SeriesTrendTests {
        |  FROM marked GROUP BY series)
        |SELECT series, CAST(n AS BIGINT) AS n_days, rec_up, rec_dn,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE FLOOR(CAST(h1 AS DOUBLE) / 1e12 * 1e4 + 0.5) / 1e4 + 0
+       |    ELSE ${Parity.fixSql("CAST(h1 AS DOUBLE) / 1e12", 4)} + 0
        |    END AS e_records,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE FLOOR((rec_up - CAST(h1 AS DOUBLE) / 1e12)
-       |      / GREATEST(sqrt(CAST(h1 AS DOUBLE) / 1e12
-       |        - CAST(h2 AS DOUBLE) / 1e12), 1e-300) * 1e4 + 0.5)
-       |      / 1e4 + 0 END AS z_up,
+       |    ELSE ${Parity.fixSql("(rec_up - CAST(h1 AS DOUBLE) / 1e12)" +
+                                 " / GREATEST(sqrt(CAST(h1 AS DOUBLE) / 1e12" +
+                                 " - CAST(h2 AS DOUBLE) / 1e12), 1e-300)", 4)}
+       |      + 0 END AS z_up,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE CAST(CASE WHEN ABS(FLOOR((rec_up
-       |      - CAST(h1 AS DOUBLE) / 1e12)
-       |      / GREATEST(sqrt(CAST(h1 AS DOUBLE) / 1e12
-       |        - CAST(h2 AS DOUBLE) / 1e12), 1e-300) * 1e4 + 0.5)
-       |      / 1e4 + 0) > 1.96 THEN 1 ELSE 0 END AS BIGINT) END
+       |    ELSE CAST(CASE WHEN ABS(
+       |      ${Parity.fixSql("(rec_up" +
+                              " - CAST(h1 AS DOUBLE) / 1e12)" +
+                              " / GREATEST(sqrt(CAST(h1 AS DOUBLE) / 1e12" +
+                              " - CAST(h2 AS DOUBLE) / 1e12), 1e-300)", 4)}
+       |      + 0) > 1.96 THEN 1 ELSE 0 END AS BIGINT) END
        |    AS reject_5pct
        |FROM m ORDER BY series""".stripMargin
 
@@ -951,11 +955,11 @@ object SeriesTrendTests {
        |SELECT series, CAST(yr AS BIGINT) AS yr, CAST(n AS BIGINT)
        |    AS n_days,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE FLOOR(rvn * 1e6 + 0.5) / 1e6 + 0 END AS rvn,
+       |    ELSE ${Parity.fixSql("rvn", 6)} + 0 END AS rvn,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE FLOOR(z * 1e4 + 0.5) / 1e4 + 0 END AS z,
+       |    ELSE ${Parity.fixSql("z", 4)} + 0 END AS z,
        |  CASE WHEN n < 10 THEN NULL
-       |    ELSE CAST(CASE WHEN ABS(FLOOR(z * 1e4 + 0.5) / 1e4 + 0) > 1.96
+       |    ELSE CAST(CASE WHEN ABS(${Parity.fixSql("z", 4)} + 0) > 1.96
        |      THEN 1 ELSE 0 END AS BIGINT) END AS reject_5pct
        |FROM fin ORDER BY series, yr""".stripMargin
 
@@ -1033,8 +1037,8 @@ object SeriesTrendTests {
        |p2 AS (SELECT *, MAX(ph) OVER () AS mx FROM p)
        |SELECT CAST(nn AS BIGINT) AS n_days,
        |  MAX(day) AS change_day,
-       |  FLOOR(CAST(mx AS DOUBLE) / CAST(tt AS DOUBLE) * 1e6 + 0.5)
-       |    / 1e6 + 0 AS ph_max_mean_units,
+       |  ${Parity.fixSql("CAST(mx AS DOUBLE) / CAST(tt AS DOUBLE)", 6)}
+       |    + 0 AS ph_max_mean_units,
        |  CAST(CASE WHEN CAST(mx AS DOUBLE) / CAST(tt AS DOUBLE) > 1.0
        |    THEN 1 ELSE 0 END AS BIGINT) AS detected
        |FROM p2 WHERE ph = mx
@@ -1114,16 +1118,17 @@ object SeriesTrendTests {
        |  FROM p2 WHERE dev = mx
        |  GROUP BY nn, qq, mx)
        |SELECT CAST(nn AS BIGINT) AS n_days, break_day,
-       |  FLOOR(CAST(mx AS DOUBLE)
-       |    / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))
-       |    * 1e6 + 0.5) / 1e6 + 0 AS sup_deviation,
-       |  FLOOR(SQRT(CAST(nn AS DOUBLE) / 2.0) * CAST(mx AS DOUBLE)
-       |    / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))
-       |    * 1e4 + 0.5) / 1e4 + 0 AS bde_stat,
-       |  CAST(CASE WHEN FLOOR(SQRT(CAST(nn AS DOUBLE) / 2.0)
-       |      * CAST(mx AS DOUBLE)
-       |      / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))
-       |      * 1e4 + 0.5) / 1e4 + 0 > 1.358 THEN 1 ELSE 0 END AS BIGINT)
+       |  ${Parity.fixSql("CAST(mx AS DOUBLE)" +
+                          " / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))", 6)}
+       |    + 0 AS sup_deviation,
+       |  ${Parity.fixSql("SQRT(CAST(nn AS DOUBLE) / 2.0) * CAST(mx AS DOUBLE)" +
+                          " / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))", 4)}
+       |    + 0 AS bde_stat,
+       |  CAST(CASE WHEN
+       |    ${Parity.fixSql("SQRT(CAST(nn AS DOUBLE) / 2.0)" +
+                            " * CAST(mx AS DOUBLE)" +
+                            " / (CAST(nn AS DOUBLE) * GREATEST(CAST(qq AS DOUBLE), 1e-300))", 4)}
+       |      + 0 > 1.358 THEN 1 ELSE 0 END AS BIGINT)
        |    AS reject_5pct
        |FROM f""".stripMargin
 }

@@ -69,11 +69,12 @@ object SketchQueries {
       |SELECT CAST(n_exact AS BIGINT) AS n_exact,
       |  CAST(m AS BIGINT) AS k_used, CAST(uk AS BIGINT) AS kth_hash,
       |  CASE WHEN uk <= 0 OR m < 2 THEN NULL
-      |    ELSE FLOOR((m - 1.0) * 2.81474976710656e14
-      |      / uk * 1e4 + 0.5) / 1e4 + 0 END AS kmv_estimate,
+      |    ELSE ${Parity.fixSql("(m - 1.0) * 2.81474976710656e14 / uk", 4)}
+      |      + 0 END AS kmv_estimate,
       |  CASE WHEN uk <= 0 OR m < 2 THEN NULL
-      |    ELSE FLOOR(((m - 1.0) * 2.81474976710656e14 / uk
-      |      / n_exact - 1.0) * 1e6 + 0.5) / 1e6 + 0 END AS rel_err
+      |    ELSE ${Parity.fixSql("((m - 1.0) * 2.81474976710656e14 / uk" +
+                                " / n_exact - 1.0)", 6)}
+      |      + 0 END AS rel_err
       |FROM kth CROSS JOIN ex""".stripMargin
   /** L265 consistent hash sampling + rate audit ([PK] the classic
     * hash-mod/bottom-share Bernoulli sample — e.g. Broder 1997's
@@ -117,10 +118,12 @@ object SketchQueries {
       |SELECT o_orderpriority, COUNT(*) AS n_rows,
       |  CAST(SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) AS BIGINT)
       |    AS n_sampled,
-      |  FLOOR(SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) * 1.0
-      |    / COUNT(*) * 1e6 + 0.5) / 1e6 + 0 AS rate,
-      |  FLOOR((SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) * 1.0
-      |    / COUNT(*) - 0.0625) * 1e6 + 0.5) / 1e6 + 0 AS rate_dev
+      |  ${Parity.fixSql("SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) * 1.0" +
+                         " / COUNT(*)", 6)}
+      |    + 0 AS rate,
+      |  ${Parity.fixSql("(SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) * 1.0" +
+                         " / COUNT(*) - 0.0625)", 6)}
+      |    + 0 AS rate_dev
       |FROM h GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
@@ -199,13 +202,14 @@ object SketchQueries {
       |    AS k_overlap,
       |  CAST(n_exact_overlap AS BIGINT) AS n_exact_overlap,
       |  CASE WHEN uk <= 0 OR m < 2 THEN NULL
-      |    ELSE FLOOR(kb * 1.0 / m * ((m - 1.0)
-      |      * 2.81474976710656e14 / uk) * 1e4 + 0.5) / 1e4 + 0 END
+      |    ELSE ${Parity.fixSql("kb * 1.0 / m * ((m - 1.0)" +
+                                " * 2.81474976710656e14 / uk)", 4)}
+      |      + 0 END
       |    AS kmv_overlap_est,
       |  CASE WHEN uk <= 0 OR m < 2 OR n_exact_overlap = 0 THEN NULL
-      |    ELSE FLOOR((kb * 1.0 / m * ((m - 1.0)
-      |      * 2.81474976710656e14 / uk) / n_exact_overlap - 1.0) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS rel_err
+      |    ELSE ${Parity.fixSql("(kb * 1.0 / m * ((m - 1.0)" +
+                                " * 2.81474976710656e14 / uk) / n_exact_overlap - 1.0)", 6)}
+      |      + 0 END AS rel_err
       |FROM ag CROSS JOIN ex""".stripMargin
 
   /** L280 capture–recapture population estimate ([PK] Lincoln 1930 /
@@ -255,7 +259,7 @@ object SketchQueries {
   }
 
   val q346CaptureRecaptureSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_custkey, date_part('year', o_orderdate) AS yr
       |  FROM orders),
       |census AS (
@@ -280,12 +284,12 @@ object SketchQueries {
       |SELECT CAST(n_pop AS BIGINT) AS n_exact, n1 AS n_year1,
       |  n2 AS n_year2, mm AS n_both,
       |  CASE WHEN mm < 10 THEN NULL
-      |    ELSE FLOOR(nhat * 1e4 + 0.5) / 1e4 + 0 END AS chapman_est,
+      |    ELSE ${Parity.fixSql("nhat", 4)} + 0 END AS chapman_est,
       |  CASE WHEN mm < 10 THEN NULL
-      |    ELSE FLOOR(SQRT(varn) * 1e4 + 0.5) / 1e4 + 0 END AS se,
+      |    ELSE ${Parity.fixSql("SQRT(varn)", 4)} + 0 END AS se,
       |  CASE WHEN mm < 10 THEN NULL
-      |    ELSE FLOOR((nhat / CAST(n_pop AS DOUBLE) - 1.0) * 1e6 + 0.5)
-      |      / 1e6 + 0 END AS rel_err
+      |    ELSE ${Parity.fixSql("(nhat / CAST(n_pop AS DOUBLE) - 1.0)", 6)}
+      |      + 0 END AS rel_err
       |FROM fin""".stripMargin
 
   /** L285 KMV sketch ROLLUP ([PK] Beyer et al. 2007 §4 — the merge
@@ -384,9 +388,9 @@ object SketchQueries {
        |SELECT CAST(qtr AS BIGINT) AS qtr,
        |  CAST(n_exact AS BIGINT) AS n_exact,
        |  CAST(mu AS BIGINT) AS k_used,
-       |  FLOOR(est * 1e4 + 0.5) / 1e4 + 0 AS rollup_est,
+       |  ${Parity.fixSql("est", 4)} + 0 AS rollup_est,
        |  CASE WHEN n_exact = 0 THEN NULL
-       |    ELSE FLOOR((est / n_exact - 1.0) * 1e6 + 0.5) / 1e6 + 0 END
+       |    ELSE ${Parity.fixSql("(est / n_exact - 1.0)", 6)} + 0 END
        |    AS rel_err
        |FROM fin ORDER BY qtr""".stripMargin
 
@@ -476,7 +480,7 @@ object SketchQueries {
   }
 
   val q357HistogramRollupSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT date_part('year', o_orderdate) * 100
       |      + date_part('month', o_orderdate) AS m,
       |    date_part('year', o_orderdate) * 10
@@ -505,13 +509,12 @@ object SketchQueries {
       |  WHERE cum - c < p * n AND p * n <= cum),
       |est AS (
       |  SELECT qtr, n, p,
-      |    FLOOR((CAST(mn AS DOUBLE) +
-      |      (CAST(bin AS DOUBLE) + (t - CAST(cb AS DOUBLE))
-      |        / CAST(c AS DOUBLE))
-      |      * (CAST(mx - mn + 1 AS DOUBLE) / 32.0)) * 1e4 + 0.5)
-      |      / 1e4 + 0 AS e,
-      |    FLOOR(CAST(mx - mn + 1 AS DOUBLE) / 32.0 * 1e4 + 0.5)
-      |      / 1e4 + 0 AS bw
+      |    ${Parity.fixSql("(CAST(mn AS DOUBLE) +" +
+                           " (CAST(bin AS DOUBLE) + (t - CAST(cb AS DOUBLE))" +
+                           " / CAST(c AS DOUBLE))" +
+                           " * (CAST(mx - mn + 1 AS DOUBLE) / 32.0))", 4)}
+      |      + 0 AS e,
+      |    ${Parity.fixSql("CAST(mx - mn + 1 AS DOUBLE) / 32.0", 4)} + 0 AS bw
       |  FROM hit),
       |ests AS (
       |  SELECT qtr, MAX(n) AS n_orders, MAX(bw) AS bin_w,
@@ -520,17 +523,17 @@ object SketchQueries {
       |  FROM est GROUP BY qtr),
       |ex AS (
       |  SELECT qtr,
-      |    FLOOR(quantile_cont(cents, 0.5) * 1e4 + 0.5) / 1e4 + 0
+      |    ${Parity.fixSql("quantile_cont(cents, 0.5)", 4)} + 0
       |      AS exact_p50,
-      |    FLOOR(quantile_cont(cents, 0.9) * 1e4 + 0.5) / 1e4 + 0
+      |    ${Parity.fixSql("quantile_cont(cents, 0.9)", 4)} + 0
       |      AS exact_p90
       |  FROM o GROUP BY qtr)
       |SELECT CAST(ests.qtr AS BIGINT) AS qtr,
       |  n_orders, bin_w, est_p50, exact_p50,
-      |  FLOOR((est_p50 / exact_p50 - 1.0) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("(est_p50 / exact_p50 - 1.0)", 6)} + 0
       |    AS rel_err_p50,
       |  est_p90, exact_p90,
-      |  FLOOR((est_p90 / exact_p90 - 1.0) * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("(est_p90 / exact_p90 - 1.0)", 6)} + 0
       |    AS rel_err_p90
       |FROM ests JOIN ex ON ests.qtr = ex.qtr
       |ORDER BY qtr""".stripMargin
@@ -730,12 +733,13 @@ object SketchQueries {
        |  FROM agg JOIN ex USING (priority))
        |SELECT priority, CAST(n_exact AS BIGINT) AS n_exact,
        |  nreg AS n_registers, CAST(256 - nreg AS BIGINT) AS v_empty,
-       |  FLOOR(CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0
-       |      THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END
-       |    * 1e4 + 0.5) / 1e4 + 0 AS hll_est,
-       |  FLOOR((CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0
-       |      THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END
-       |      - n_exact) / n_exact * 1e4 + 0.5) / 1e4 + 0 AS rel_err
+       |  ${Parity.fixSql("CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0" +
+                          " THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END", 4)}
+       |    + 0 AS hll_est,
+       |  ${Parity.fixSql("(CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0" +
+                          " THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END" +
+                          " - n_exact) / n_exact", 4)}
+       |      + 0 AS rel_err
        |FROM fin ORDER BY priority""".stripMargin
 
   /** L311 HLL register rollup *(the q351 capability for the q362
@@ -829,12 +833,13 @@ object SketchQueries {
        |SELECT CAST(qtr AS BIGINT) AS quarter,
        |  CAST(n_exact AS BIGINT) AS n_exact,
        |  CAST(256 - nreg AS BIGINT) AS v_empty,
-       |  FLOOR(CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0
-       |      THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END
-       |    * 1e4 + 0.5) / 1e4 + 0 AS hll_est,
-       |  FLOOR((CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0
-       |      THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END
-       |      - n_exact) / n_exact * 1e4 + 0.5) / 1e4 + 0 AS rel_err
+       |  ${Parity.fixSql("CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0" +
+                          " THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END", 4)}
+       |    + 0 AS hll_est,
+       |  ${Parity.fixSql("(CASE WHEN e_raw <= 640.0 AND 256 - nreg > 0" +
+                          " THEN 256.0 * ln(256.0 / (256 - nreg)) ELSE e_raw END" +
+                          " - n_exact) / n_exact", 4)}
+       |      + 0 AS rel_err
        |FROM fin ORDER BY quarter""".stripMargin
 
   /** L298 AMS F2 tug-of-war sketch rollup ([PK] Alon, Matias &
@@ -933,7 +938,7 @@ object SketchQueries {
        |    FROM orders GROUP BY 1, 2) GROUP BY qtr)
        |SELECT CAST(est.qtr AS BIGINT) AS quarter, n_orders, f2_exact,
        |  ams_est,
-       |  FLOOR((ams_est - f2_exact) / f2_exact * 1e4 + 0.5) / 1e4 + 0
+       |  ${Parity.fixSql("(ams_est - f2_exact) / f2_exact", 4)} + 0
        |    AS rel_err
        |FROM est JOIN ex USING (qtr) ORDER BY quarter""".stripMargin
   }
@@ -1014,7 +1019,7 @@ object SketchQueries {
   }
 
   val q368BloomFprSql: String =
-    """WITH members AS (SELECT DISTINCT o_custkey FROM orders),
+    s"""WITH members AS (SELECT DISTINCT o_custkey FROM orders),
       |nrow AS (SELECT COUNT(*) AS n_members FROM members),
       |ms(m) AS (VALUES (CAST(1024 AS BIGINT)), (CAST(16384 AS BIGINT))),
       |bits AS (
@@ -1056,10 +1061,10 @@ object SketchQueries {
       |  CAST(n_members AS BIGINT) AS n_members,
       |  CAST(bits_set AS BIGINT) AS bits_set,
       |  CAST(n_probes AS BIGINT) AS n_probes, n_false_pos,
-      |  FLOOR(CAST(n_false_pos AS DOUBLE) / n_probes * 1e6 + 0.5) / 1e6
+      |  ${Parity.fixSql("CAST(n_false_pos AS DOUBLE) / n_probes", 6)}
       |    + 0 AS fpr_obs,
-      |  FLOOR(pow(1.0 - pow(1.0 - 1.0 / agg.m,
-      |      7.0 * CAST(n_members AS DOUBLE)), 7.0) * 1e6 + 0.5) / 1e6
+      |  ${Parity.fixSql("pow(1.0 - pow(1.0 - 1.0 / agg.m," +
+                         " 7.0 * CAST(n_members AS DOUBLE)), 7.0)", 6)}
       |    + 0 AS fpr_exp
       |FROM agg JOIN bc ON agg.m = bc.m CROSS JOIN nrow
       |ORDER BY m_bits""".stripMargin

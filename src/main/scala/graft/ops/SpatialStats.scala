@@ -326,7 +326,7 @@ object SpatialStats {
 
   val q294MoransISql: String =
     cellCtes +
-      """,
+      s""",
         |a AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS s,
@@ -353,16 +353,16 @@ object SpatialStats {
         |  FROM a)
         |SELECT n AS n_cells, w AS w_pairs,
         |  CASE WHEN n < 3 OR w = 0 OR vp <= 0 THEN NULL
-        |    ELSE FLOOR(i * 1e6 + 0.5) / 1e6 END AS morans_i,
+        |    ELSE ${Parity.fixSql("i", 6)} END AS morans_i,
         |  CASE WHEN n < 2 THEN NULL
-        |    ELSE FLOOR(e * 1e6 + 0.5) / 1e6 END AS e_i,
+        |    ELSE ${Parity.fixSql("e", 6)} END AS e_i,
         |  CASE WHEN n < 3 OR w = 0 OR vp <= 0 OR vi <= 0 THEN NULL
-        |    ELSE FLOOR((i - e) / SQRT(vi) * 1e4 + 0.5) / 1e4 END AS z
+        |    ELSE ${Parity.fixSql("(i - e) / SQRT(vi)", 4)} END AS z
         |FROM c0""".stripMargin
 
   val q295GearysCSql: String =
     cellCtes +
-      """,
+      s""",
         |a AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS s,
@@ -384,14 +384,14 @@ object SpatialStats {
         |  FROM a)
         |SELECT n AS n_cells, w AS w_pairs,
         |  CASE WHEN n < 3 OR w = 0 OR vp <= 0 THEN NULL
-        |    ELSE FLOOR(c * 1e6 + 0.5) / 1e6 END AS gearys_c,
+        |    ELSE ${Parity.fixSql("c", 6)} END AS gearys_c,
         |  CASE WHEN n < 3 OR w = 0 OR vp <= 0 OR vc <= 0 THEN NULL
-        |    ELSE FLOOR((c - 1.0) / SQRT(vc) * 1e4 + 0.5) / 1e4 END AS z
+        |    ELSE ${Parity.fixSql("(c - 1.0) / SQRT(vc)", 4)} END AS z
         |FROM c0""".stripMargin
 
   val q296GetisGiSql: String =
     cellCtes +
-      """,
+      s""",
         |g AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS gn,
         |    CAST(SUM(x) AS BIGINT) AS gs,
@@ -404,16 +404,19 @@ object SpatialStats {
         |  FROM g)
         |SELECT a.cx, a.cy, a.x AS n, a.ns + a.x AS nbhd,
         |  CASE WHEN m.gn < 2 OR m.var <= 0 OR m.gn = a.deg + 1 THEN NULL
-        |    ELSE FLOOR(((a.ns + a.x) - m.mean * (a.deg + 1))
-        |      / (SQRT(m.var)
-        |         * SQRT((m.gn * (a.deg + 1.0) - (a.deg + 1.0) * (a.deg + 1.0))
-        |                / (m.gn - 1.0))) * 1e4 + 0.5) / 1e4 END AS gi_z
+        |    ELSE
+        |      ${Parity.fixSql("((a.ns + a.x) - m.mean * (a.deg + 1))" +
+                               " / (SQRT(m.var)" +
+                               " * SQRT((m.gn * (a.deg + 1.0) - (a.deg + 1.0) * (a.deg +" +
+                               " 1.0))" +
+                               " / (m.gn - 1.0)))", 4)}
+        |                END AS gi_z
         |FROM aug a CROSS JOIN m
         |ORDER BY a.cx, a.cy""".stripMargin
 
   val q305JoinCountsSql: String =
     cellCtes +
-      """,
+      s""",
         |gtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS gn,
         |    CAST(SUM(x) AS BIGINT) AS gs
         |  FROM cells),
@@ -464,15 +467,15 @@ object SpatialStats {
         |  CAST(bw2 // 2 AS BIGINT) AS bw,
         |  CAST((w - bns - bw2) // 2 AS BIGINT) AS ww,
         |  CASE WHEN bad THEN NULL
-        |    ELSE FLOOR(e_bb0 * 1e4 + 0.5) / 1e4 END AS e_bb,
+        |    ELSE ${Parity.fixSql("e_bb0", 4)} END AS e_bb,
         |  CASE WHEN bad OR v_bb <= 0 THEN NULL
-        |    ELSE FLOOR((CAST(bns AS DOUBLE) / 2.0 - e_bb0) / SQRT(v_bb)
-        |      * 1e4 + 0.5) / 1e4 END AS z_bb,
+        |    ELSE ${Parity.fixSql("(CAST(bns AS DOUBLE) / 2.0 - e_bb0) / SQRT(v_bb)", 4)}
+        |      END AS z_bb,
         |  CASE WHEN bad THEN NULL
-        |    ELSE FLOOR(e_bw0 * 1e4 + 0.5) / 1e4 END AS e_bw,
+        |    ELSE ${Parity.fixSql("e_bw0", 4)} END AS e_bw,
         |  CASE WHEN bad OR v_bw <= 0 THEN NULL
-        |    ELSE FLOOR((CAST(bw2 AS DOUBLE) / 2.0 - e_bw0) / SQRT(v_bw)
-        |      * 1e4 + 0.5) / 1e4 END AS z_bw
+        |    ELSE ${Parity.fixSql("(CAST(bw2 AS DOUBLE) / 2.0 - e_bw0) / SQRT(v_bw)", 4)}
+        |      END AS z_bw
         |FROM c1""".stripMargin
   /** L262 Ripley's K / L point-pattern statistics ([PK] Ripley 1976;
     * Besag's L transform): for the synthetic customer point field,
@@ -580,14 +583,14 @@ object SpatialStats {
       |SELECT r, CAST(n AS BIGINT) AS n_points,
       |  CASE r WHEN 5 THEN p5 WHEN 10 THEN p10 ELSE p20 END
       |    AS pairs_le_r,
-      |  FLOOR(61200.0 * 2.0
-      |    * (CASE r WHEN 5 THEN p5 WHEN 10 THEN p10 ELSE p20 END)
-      |    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) * 1e4 + 0.5) / 1e4
+      |  ${Parity.fixSql("61200.0 * 2.0" +
+                         " * (CASE r WHEN 5 THEN p5 WHEN 10 THEN p10 ELSE p20 END)" +
+                         " / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))", 4)}
       |    + 0 AS k_hat,
-      |  FLOOR((SQRT(61200.0 * 2.0
-      |    * (CASE r WHEN 5 THEN p5 WHEN 10 THEN p10 ELSE p20 END)
-      |    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / PI()) - r) * 1e4
-      |    + 0.5) / 1e4 + 0 AS l_hat
+      |  ${Parity.fixSql("(SQRT(61200.0 * 2.0" +
+                         " * (CASE r WHEN 5 THEN p5 WHEN 10 THEN p10 ELSE p20 END)" +
+                         " / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / PI()) - r)", 4)}
+      |    + 0 AS l_hat
       |FROM r3 CROSS JOIN pc CROSS JOIN tot
       |ORDER BY r""".stripMargin
 
@@ -666,7 +669,7 @@ object SpatialStats {
        |    AS n_2000,
        |  CAST(SUM(CASE WHEN km <= 5000.0 THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_5000,
-       |  FLOOR(MIN(km) * 1e4 + 0.5) / 1e4 + 0 AS min_km
+       |  ${Parity.fixSql("MIN(km)", 4)} + 0 AS min_km
        |FROM dist
        |GROUP BY hub
        |ORDER BY hub""".stripMargin
@@ -748,8 +751,8 @@ object SpatialStats {
        |  SELECT id, hub, km FROM d
        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY km, hub) = 1)
        |SELECT hub, COUNT(*) AS n_assigned,
-       |  FLOOR(MIN(km) * 1e4 + 0.5) / 1e4 + 0 AS min_km,
-       |  FLOOR(MAX(km) * 1e4 + 0.5) / 1e4 + 0 AS max_km
+       |  ${Parity.fixSql("MIN(km)", 4)} + 0 AS min_km,
+       |  ${Parity.fixSql("MAX(km)", 4)} + 0 AS max_km
        |FROM n GROUP BY hub ORDER BY hub""".stripMargin
   }
 }

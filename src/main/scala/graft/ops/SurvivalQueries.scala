@@ -92,7 +92,7 @@ object SurvivalQueries {
   }
 
   val q175KaplanMeierSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
       |peru AS (
@@ -118,8 +118,8 @@ object SurvivalQueries {
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS dead,
       |    CAST(SUM(CASE WHEN d = 0 OR d >= n_risk THEN CAST(0 AS BIGINT)
-      |             ELSE CAST(FLOOR(LN(CAST(n_risk - d AS DOUBLE) / n_risk)
-      |               * 1e9 + 0.5) AS BIGINT) END) OVER
+      |             ELSE ${Parity.quantSql("LN(CAST(n_risk - d AS DOUBLE) / n_risk)", 9)}
+      |               END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS DOUBLE) / 1e9
       |      AS ln_s
@@ -183,7 +183,7 @@ object SurvivalQueries {
   }
 
   val q200NelsonAalenSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
       |peru AS (
@@ -206,8 +206,8 @@ object SurvivalQueries {
       |q AS (
       |  SELECT t, n_risk, d, c,
       |    CASE WHEN d = 0 OR n_risk <= 0 THEN 0
-      |      ELSE CAST(FLOOR(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)
-      |        * 1e9 + 0.5) AS BIGINT) END AS incq
+      |      ELSE ${Parity.quantSql("CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)", 9)}
+      |        END AS incq
       |  FROM risk),
       |cum AS (
       |  SELECT t, n_risk, d, c,
@@ -287,7 +287,7 @@ object SurvivalQueries {
   }
 
   val q224LogRankSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(epoch_us(ts)) AS end_us FROM e),
       |peru AS (
@@ -320,16 +320,17 @@ object SurvivalQueries {
       |  FROM day),
       |terms AS (
       |  SELECT nu1, nu2, d1,
-      |    CAST(FLOOR(CAST(d1 + d2 AS DOUBLE)
-      |      * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))
-      |      * 1e6 + 0.5) AS BIGINT) AS eq,
-      |    CAST(FLOOR(CASE WHEN n1r + n2r > 1
-      |      THEN CAST(d1 + d2 AS DOUBLE)
-      |        * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))
-      |        * (1.0 - CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))
-      |        * (CAST(n1r + n2r AS DOUBLE) - CAST(d1 + d2 AS DOUBLE))
-      |        / (CAST(n1r + n2r AS DOUBLE) - 1.0)
-      |      ELSE 0.0 END * 1e6 + 0.5) AS BIGINT) AS vq
+      |    ${Parity.quantSql("CAST(d1 + d2 AS DOUBLE)" +
+                             " * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))", 6)}
+      |      AS eq,
+      |    ${Parity.quantSql("CASE WHEN n1r + n2r > 1" +
+                             " THEN CAST(d1 + d2 AS DOUBLE)" +
+                             " * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))" +
+                             " * (1.0 - CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))" +
+                             " * (CAST(n1r + n2r AS DOUBLE) - CAST(d1 + d2 AS DOUBLE))" +
+                             " / (CAST(n1r + n2r AS DOUBLE) - 1.0)" +
+                             " ELSE 0.0 END", 6)}
+      |      AS vq
       |  FROM risk WHERE d1 + d2 > 0),
       |g AS (
       |  SELECT MAX(nu1) AS n_users_g0, MAX(nu2) AS n_users_g1,
@@ -337,9 +338,10 @@ object SurvivalQueries {
       |    CAST(SUM(eq) AS BIGINT) AS e1q, CAST(SUM(vq) AS BIGINT) AS v1q
       |  FROM terms)
       |SELECT n_users_g0, n_users_g1, o1,
-      |  FLOOR(CAST(e1q AS DOUBLE) / 1e6 * 1e4 + 0.5) / 1e4 AS e1,
-      |  FLOOR((CAST(o1 AS DOUBLE) - CAST(e1q AS DOUBLE) / 1e6)
-      |    / SQRT(CAST(v1q AS DOUBLE) / 1e6) * 1e4 + 0.5) / 1e4 AS z
+      |  ${Parity.fixSql("CAST(e1q AS DOUBLE) / 1e6", 4)} AS e1,
+      |  ${Parity.fixSql("(CAST(o1 AS DOUBLE) - CAST(e1q AS DOUBLE) / 1e6)" +
+                         " / SQRT(CAST(v1q AS DOUBLE) / 1e6)", 4)}
+      |    AS z
       |FROM g""".stripMargin
 
   /** L174 exponential inter-arrival fit + KS goodness-of-fit: the MLE
@@ -459,7 +461,7 @@ object SurvivalQueries {
   }
 
   val q242KmGreenwoodSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
       |peru AS (
@@ -485,15 +487,15 @@ object SurvivalQueries {
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS dead,
       |    CAST(SUM(CASE WHEN d = 0 OR d >= n_risk THEN CAST(0 AS BIGINT)
-      |             ELSE CAST(FLOOR(LN(CAST(n_risk - d AS DOUBLE) / n_risk)
-      |               * 1e9 + 0.5) AS BIGINT) END) OVER
+      |             ELSE ${Parity.quantSql("LN(CAST(n_risk - d AS DOUBLE) / n_risk)", 9)}
+      |               END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS DOUBLE) / 1e9
       |      AS ln_s,
       |    CAST(SUM(CASE WHEN d = 0 OR d >= n_risk THEN 0
-      |      ELSE CAST(FLOOR(CAST(d AS DOUBLE)
-      |        / (CAST(n_risk AS DOUBLE) * (n_risk - d)) * 1e9 + 0.5)
-      |        AS BIGINT) END) OVER
+      |      ELSE ${Parity.quantSql("CAST(d AS DOUBLE)" +
+                                    " / (CAST(n_risk AS DOUBLE) * (n_risk - d))", 9)}
+      |        END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS BIGINT) AS gw
       |  FROM risk)
@@ -512,7 +514,7 @@ object SurvivalQueries {
       |FROM cum ORDER BY t_hours""".stripMargin
 
   val q240ExpFitKsSql: String =
-    """WITH gg AS (
+    s"""WITH gg AS (
       |  SELECT (epoch_us(ts) - LAG(epoch_us(ts), 1) OVER (
       |      PARTITION BY user_id ORDER BY ts, event_id)) // 1000000 AS g
       |  FROM events WHERE user_id IS NOT NULL),
@@ -528,16 +530,16 @@ object SurvivalQueries {
       |  FROM cen),
       |d AS (
       |  SELECT n, sg,
-      |    CAST(FLOOR(GREATEST(
-      |      abs(CAST(cum AS DOUBLE) / n
-      |        - (1.0 - exp(-(CAST(n AS DOUBLE) / sg) * g))),
-      |      abs((1.0 - exp(-(CAST(n AS DOUBLE) / sg) * g))
-      |        - CAST(cum - cnt AS DOUBLE) / n)) * 1e9 + 0.5) AS BIGINT)
+      |    ${Parity.quantSql("GREATEST(" +
+                             " abs(CAST(cum AS DOUBLE) / n" +
+                             " - (1.0 - exp(-(CAST(n AS DOUBLE) / sg) * g)))," +
+                             " abs((1.0 - exp(-(CAST(n AS DOUBLE) / sg) * g))" +
+                             " - CAST(cum - cnt AS DOUBLE) / n))", 9)}
       |      AS dq
       |  FROM cum, tot)
       |SELECT n AS n_gaps,
       |  ROUND(CAST(sg AS DOUBLE) / n, 4) + 0 AS mean_gap_s,
-      |  FLOOR(CAST(MAX(dq) AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 AS ks_d
+      |  ${Parity.fixSql("CAST(MAX(dq) AS DOUBLE) / 1e9", 6)} AS ks_d
       |FROM d GROUP BY n, sg""".stripMargin
 
   /** L304 restricted mean survival time ([PK] Royston & Parmar 2013;
@@ -627,7 +629,7 @@ object SurvivalQueries {
   }
 
   val q369RmstSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
       |peru AS (
@@ -653,8 +655,8 @@ object SurvivalQueries {
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS dead,
       |    CAST(SUM(CASE WHEN d = 0 OR d >= n_risk THEN CAST(0 AS BIGINT)
-      |             ELSE CAST(FLOOR(LN(CAST(n_risk - d AS DOUBLE) / n_risk)
-      |               * 1e9 + 0.5) AS BIGINT) END) OVER
+      |             ELSE ${Parity.quantSql("LN(CAST(n_risk - d AS DOUBLE) / n_risk)", 9)}
+      |               END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS DOUBLE) / 1e9 AS ln_s
       |  FROM risk),
@@ -770,7 +772,7 @@ object SurvivalQueries {
   }
 
   val q373AalenJohansenSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts, event_type FROM events
       |  WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
@@ -807,14 +809,14 @@ object SurvivalQueries {
       |      AS dead_prev,
       |    CAST(SUM(CASE WHEN dp + dq = 0 OR dp + dq >= n_risk
       |        THEN CAST(0 AS BIGINT)
-      |        ELSE CAST(FLOOR(LN(CAST(n_risk - dp - dq AS DOUBLE)
-      |          / n_risk) * 1e9 + 0.5) AS BIGINT) END) OVER
+      |        ELSE ${Parity.quantSql("LN(CAST(n_risk - dp - dq AS DOUBLE) / n_risk)", 9)}
+      |          END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |      AS DOUBLE) / 1e9 AS ln_s,
       |    CAST(COALESCE(SUM(CASE WHEN dp + dq = 0 OR dp + dq >= n_risk
       |        THEN CAST(0 AS BIGINT)
-      |        ELSE CAST(FLOOR(LN(CAST(n_risk - dp - dq AS DOUBLE)
-      |          / n_risk) * 1e9 + 0.5) AS BIGINT) END) OVER
+      |        ELSE ${Parity.quantSql("LN(CAST(n_risk - dp - dq AS DOUBLE) / n_risk)", 9)}
+      |          END) OVER
       |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
       |      0) AS DOUBLE) / 1e9 AS ln_prev
       |  FROM risk),
@@ -825,20 +827,18 @@ object SurvivalQueries {
       |  FROM cum0),
       |cum2 AS (
       |  SELECT *,
-      |    CAST(SUM(CAST(FLOOR(s_prev * dp / n_risk * 1e9 + 0.5)
-      |      AS BIGINT)) OVER (ORDER BY t
+      |    CAST(SUM(${Parity.quantSql("s_prev * dp / n_risk", 9)}) OVER (ORDER BY t
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
       |      AS cifp9,
-      |    CAST(SUM(CAST(FLOOR(s_prev * dq / n_risk * 1e9 + 0.5)
-      |      AS BIGINT)) OVER (ORDER BY t
+      |    CAST(SUM(${Parity.quantSql("s_prev * dq / n_risk", 9)}) OVER (ORDER BY t
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
       |      AS cifq9
       |  FROM cum1)
       |SELECT t AS t_hours, n_risk, dp AS d_purchase, dq AS d_other,
       |  c AS n_censored,
-      |  FLOOR(CAST(cifp9 AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(cifp9 AS DOUBLE) / 1e9", 6)} + 0
       |    AS cif_purchase,
-      |  FLOOR(CAST(cifq9 AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(cifq9 AS DOUBLE) / 1e9", 6)} + 0
       |    AS cif_other,
       |  CASE WHEN dead = 1 THEN 0.0 ELSE ROUND(EXP(ln_s), 4) END
       |    AS survival
@@ -928,7 +928,7 @@ object SurvivalQueries {
   }
 
   val q384WeightedLogRankSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
       |b AS (SELECT MAX(epoch_us(ts)) AS end_us FROM e),
       |peru AS (
@@ -970,16 +970,17 @@ object SurvivalQueries {
       |  WHERE r.d1 + r.d2 > 0),
       |terms AS (
       |  SELECT method, nu1, nu2, d1,
-      |    CAST(FLOOR(w * (CAST(d1 AS DOUBLE) - CAST(d1 + d2 AS DOUBLE)
-      |      * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE)))
-      |      * 1e6 + 0.5) AS BIGINT) AS nq,
-      |    CAST(FLOOR(CASE WHEN n1r + n2r > 1
-      |      THEN w * w * CAST(d1 + d2 AS DOUBLE)
-      |        * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))
-      |        * (1.0 - CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))
-      |        * (CAST(n1r + n2r AS DOUBLE) - CAST(d1 + d2 AS DOUBLE))
-      |        / (CAST(n1r + n2r AS DOUBLE) - 1.0)
-      |      ELSE 0.0 END * 1e6 + 0.5) AS BIGINT) AS vq
+      |    ${Parity.quantSql("w * (CAST(d1 AS DOUBLE) - CAST(d1 + d2 AS DOUBLE)" +
+                             " * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE)))", 6)}
+      |      AS nq,
+      |    ${Parity.quantSql("CASE WHEN n1r + n2r > 1" +
+                             " THEN w * w * CAST(d1 + d2 AS DOUBLE)" +
+                             " * (CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))" +
+                             " * (1.0 - CAST(n1r AS DOUBLE) / CAST(n1r + n2r AS DOUBLE))" +
+                             " * (CAST(n1r + n2r AS DOUBLE) - CAST(d1 + d2 AS DOUBLE))" +
+                             " / (CAST(n1r + n2r AS DOUBLE) - 1.0)" +
+                             " ELSE 0.0 END", 6)}
+      |      AS vq
       |  FROM m),
       |g AS (
       |  SELECT method, MAX(nu1) AS n_users_g0, MAX(nu2) AS n_users_g1,
@@ -988,12 +989,13 @@ object SurvivalQueries {
       |    CAST(SUM(vq) AS BIGINT) AS varq
       |  FROM terms GROUP BY method)
       |SELECT method, n_users_g0, n_users_g1, o1,
-      |  FLOOR(CAST(numq AS DOUBLE) / 1e6
-      |    / SQRT(GREATEST(CAST(varq AS DOUBLE) / 1e6, 1e-300))
-      |    * 1e4 + 0.5) / 1e4 + 0 AS z,
-      |  CAST(CASE WHEN ABS(FLOOR(CAST(numq AS DOUBLE) / 1e6
-      |    / SQRT(GREATEST(CAST(varq AS DOUBLE) / 1e6, 1e-300))
-      |    * 1e4 + 0.5) / 1e4 + 0) > 1.96 THEN 1 ELSE 0 END AS BIGINT)
+      |  ${Parity.fixSql("CAST(numq AS DOUBLE) / 1e6" +
+                         " / SQRT(GREATEST(CAST(varq AS DOUBLE) / 1e6, 1e-300))", 4)}
+      |    + 0 AS z,
+      |  CAST(CASE WHEN ABS(
+      |    ${Parity.fixSql("CAST(numq AS DOUBLE) / 1e6" +
+                           " / SQRT(GREATEST(CAST(varq AS DOUBLE) / 1e6, 1e-300))", 4)}
+      |    + 0) > 1.96 THEN 1 ELSE 0 END AS BIGINT)
       |    AS reject_5pct
       |FROM g ORDER BY method""".stripMargin
 }

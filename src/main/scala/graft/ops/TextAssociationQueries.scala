@@ -297,7 +297,7 @@ object TextAssociationQueries {
   }
 
   val q343TheilsUSql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT lang, source, COUNT(*) AS c
       |  FROM documents GROUP BY lang, source),
       |aug AS (
@@ -308,18 +308,18 @@ object TextAssociationQueries {
       |  FROM cells),
       |t AS (
       |  SELECT nn,
-      |    CAST(FLOOR(-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))
-      |      * ln(CAST(cl AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9 + 0.5)
-      |      AS BIGINT) AS hl,
-      |    CAST(FLOOR(-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))
-      |      * ln(CAST(cs AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9 + 0.5)
-      |      AS BIGINT) AS hs,
-      |    CAST(FLOOR(-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))
-      |      * ln(CAST(c AS DOUBLE) / CAST(cs AS DOUBLE)) * 1e9 + 0.5)
-      |      AS BIGINT) AS hlgs,
-      |    CAST(FLOOR(-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))
-      |      * ln(CAST(c AS DOUBLE) / CAST(cl AS DOUBLE)) * 1e9 + 0.5)
-      |      AS BIGINT) AS hsgl
+      |    ${Parity.quantSql("-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))" +
+                             " * ln(CAST(cl AS DOUBLE) / CAST(nn AS DOUBLE))", 9)}
+      |      AS hl,
+      |    ${Parity.quantSql("-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))" +
+                             " * ln(CAST(cs AS DOUBLE) / CAST(nn AS DOUBLE))", 9)}
+      |      AS hs,
+      |    ${Parity.quantSql("-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))" +
+                             " * ln(CAST(c AS DOUBLE) / CAST(cs AS DOUBLE))", 9)}
+      |      AS hlgs,
+      |    ${Parity.quantSql("-(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE))" +
+                             " * ln(CAST(c AS DOUBLE) / CAST(cl AS DOUBLE))", 9)}
+      |      AS hsgl
       |  FROM aug),
       |m AS (
       |  SELECT CAST(MAX(nn) AS BIGINT) AS nd, COUNT(*) AS k,
@@ -329,20 +329,22 @@ object TextAssociationQueries {
       |    CAST(SUM(hsgl) AS BIGINT) AS shsgl
       |  FROM t)
       |SELECT nd AS n_docs, CAST(k AS BIGINT) AS n_cells,
-      |  FLOOR(CAST(shl AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(shl AS DOUBLE) / 1e9", 6)} + 0
       |    AS h_lang,
-      |  FLOOR(CAST(shs AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(shs AS DOUBLE) / 1e9", 6)} + 0
       |    AS h_source,
-      |  FLOOR(CAST(shlgs AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(shlgs AS DOUBLE) / 1e9", 6)} + 0
       |    AS h_lang_given_source,
       |  CASE WHEN shl <= 0 THEN NULL
-      |    ELSE FLOOR((CAST(shl AS DOUBLE) / 1e9
-      |      - CAST(shlgs AS DOUBLE) / 1e9) / (CAST(shl AS DOUBLE) / 1e9)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS u_lang_source,
+      |    ELSE
+      |      ${Parity.fixSql("(CAST(shl AS DOUBLE) / 1e9" +
+                             " - CAST(shlgs AS DOUBLE) / 1e9) / (CAST(shl AS DOUBLE) / 1e9)", 6)}
+      |      + 0 END AS u_lang_source,
       |  CASE WHEN shs <= 0 THEN NULL
-      |    ELSE FLOOR((CAST(shs AS DOUBLE) / 1e9
-      |      - CAST(shsgl AS DOUBLE) / 1e9) / (CAST(shs AS DOUBLE) / 1e9)
-      |      * 1e6 + 0.5) / 1e6 + 0 END AS u_source_lang
+      |    ELSE
+      |      ${Parity.fixSql("(CAST(shs AS DOUBLE) / 1e9" +
+                             " - CAST(shsgl AS DOUBLE) / 1e9) / (CAST(shs AS DOUBLE) / 1e9)", 6)}
+      |      + 0 END AS u_source_lang
       |FROM m""".stripMargin
 
   /** L283 Goodman–Kruskal λ ([PK] Goodman & Kruskal 1954), both
@@ -401,7 +403,7 @@ object TextAssociationQueries {
   }
 
   val q349GoodmanKruskalSql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT lang, source, COUNT(*) AS c
       |  FROM documents GROUP BY lang, source),
       |aug AS (
@@ -427,10 +429,10 @@ object TextAssociationQueries {
       |  sml AS sum_modal_by_lang, maxl AS modal_lang_n,
       |  maxs AS modal_source_n,
       |  CASE WHEN nd - maxl <= 0 THEN NULL
-      |    ELSE FLOOR(CAST(sms - maxl AS DOUBLE) / (nd - maxl) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS lambda_lang_source,
+      |    ELSE ${Parity.fixSql("CAST(sms - maxl AS DOUBLE) / (nd - maxl)", 6)}
+      |      + 0 END AS lambda_lang_source,
       |  CASE WHEN nd - maxs <= 0 THEN NULL
-      |    ELSE FLOOR(CAST(sml - maxs AS DOUBLE) / (nd - maxs) * 1e6
-      |      + 0.5) / 1e6 + 0 END AS lambda_source_lang
+      |    ELSE ${Parity.fixSql("CAST(sml - maxs AS DOUBLE) / (nd - maxs)", 6)}
+      |      + 0 END AS lambda_source_lang
       |FROM m""".stripMargin
 }

@@ -741,7 +741,7 @@ object TextQueries {
   }
 
   val q185JsDivergenceSql: String =
-    """WITH wc AS (
+    s"""WITH wc AS (
       |  SELECT source, w, COUNT(*) AS cnt
       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
       |        FROM documents)
@@ -754,11 +754,12 @@ object TextQueries {
       |  FROM wc JOIN tot ON wc.source = tot.source),
       |t AS (
       |  SELECT a.source AS src_a, b.source AS src_b,
-      |    CAST(FLOOR((
-      |      -((a.p + b.p) / 2.0) * ln((a.p + b.p) / 2.0)
-      |      - (-(a.p / 2.0) * ln(a.p / 2.0))
-      |      - (-(b.p / 2.0) * ln(b.p / 2.0))
-      |    ) * 1e9 + 0.5) AS BIGINT) AS tq
+      |    ${Parity.quantSql("(" +
+                             " -((a.p + b.p) / 2.0) * ln((a.p + b.p) / 2.0)" +
+                             " - (-(a.p / 2.0) * ln(a.p / 2.0))" +
+                             " - (-(b.p / 2.0) * ln(b.p / 2.0))" +
+                             " )", 9)}
+      |    AS tq
       |  FROM p a JOIN p b ON a.w = b.w AND a.source < b.source)
       |SELECT src_a, src_b, COUNT(*) AS n_shared,
       |  CAST(SUM(tq) AS DOUBLE) / 1e9 + 0.6931471805599453 AS js
@@ -805,7 +806,7 @@ object TextQueries {
   }
 
   val q187TokenEntropySql: String =
-    """WITH wc AS (
+    s"""WITH wc AS (
       |  SELECT doc_id, w, COUNT(*) AS cnt
       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
       |        FROM documents)
@@ -816,16 +817,15 @@ object TextQueries {
       |  FROM wc GROUP BY doc_id),
       |q AS (
       |  SELECT wc.doc_id, n_tokens, n_unique,
-      |    CAST(FLOOR(
-      |      -(CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-      |        * ln(CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-      |      * 1e9 + 0.5) AS BIGINT) AS tq
+      |    ${Parity.quantSql("-(CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))" +
+                             " * ln(CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))", 9)}
+      |      AS tq
       |  FROM wc JOIN nt ON wc.doc_id = nt.doc_id)
       |SELECT doc_id, n_tokens, n_unique,
       |  CAST(SUM(tq) AS DOUBLE) / 1e9 AS entropy,
       |  CASE WHEN n_unique > 1
-      |    THEN FLOOR((CAST(SUM(tq) AS DOUBLE) / 1e9)
-      |      / ln(CAST(n_unique AS DOUBLE)) * 1e9 + 0.5) / 1e9
+      |    THEN ${Parity.fixSql("(CAST(SUM(tq) AS DOUBLE) / 1e9)" +
+                                " / ln(CAST(n_unique AS DOUBLE))", 9)}
       |    ELSE 0.0 END AS norm_entropy
       |FROM q GROUP BY doc_id, n_tokens, n_unique ORDER BY doc_id""".stripMargin
 
@@ -866,7 +866,7 @@ object TextQueries {
   }
 
   val q192CondEntropySql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT lang, unnest(CASE WHEN len(string_split(text,' ')) < 2 THEN []
       |    ELSE list_transform(generate_series(1, len(string_split(text,' ')) - 1),
       |           i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]) END)
@@ -882,10 +882,9 @@ object TextQueries {
       |  SELECT lang, CAST(SUM(c12) AS BIGINT) AS nb FROM c12 GROUP BY lang),
       |q AS (
       |  SELECT c12.lang, nb,
-      |    CAST(FLOOR(
-      |      -(CAST(c12 AS DOUBLE) / CAST(nb AS DOUBLE))
-      |        * ln(CAST(c12 AS DOUBLE) / CAST(c1 AS DOUBLE))
-      |      * 1e9 + 0.5) AS BIGINT) AS tq
+      |    ${Parity.quantSql("-(CAST(c12 AS DOUBLE) / CAST(nb AS DOUBLE))" +
+                             " * ln(CAST(c12 AS DOUBLE) / CAST(c1 AS DOUBLE))", 9)}
+      |      AS tq
       |  FROM c12
       |  JOIN c1 ON c12.lang = c1.lang AND c12.w1 = c1.w1
       |  JOIN nb ON c12.lang = nb.lang)
@@ -961,7 +960,7 @@ object TextQueries {
   }
 
   val q398LangMarginSql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT doc_id, lang,
       |    unnest(list_transform(generate_series(1, length(text) - 1),
       |      i -> substr(text, i, 2))) AS b
@@ -1002,15 +1001,15 @@ object TextQueries {
       |  FROM documents d JOIN t USING (doc_id)
       |  GROUP BY pred_lang)
       |SELECT pred_lang, n_docs,
-      |  FLOOR(CAST(sum_margin AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(sum_margin AS DOUBLE) / n_docs", 6)} + 0
       |    AS mean_margin,
-      |  FLOOR(CAST(n_low_conf AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(n_low_conf AS DOUBLE) / n_docs", 6)} + 0
       |    AS low_conf_share,
-      |  FLOOR(CAST(n_correct AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6 + 0
+      |  ${Parity.fixSql("CAST(n_correct AS DOUBLE) / n_docs", 6)} + 0
       |    AS accuracy,
       |  CASE WHEN n_conf = 0 THEN NULL
-      |    ELSE FLOOR(CAST(n_correct_conf AS DOUBLE) / n_conf * 1e6 + 0.5)
-      |      / 1e6 + 0 END AS accuracy_confident
+      |    ELSE ${Parity.fixSql("CAST(n_correct_conf AS DOUBLE) / n_conf", 6)}
+      |      + 0 END AS accuracy_confident
       |FROM g ORDER BY pred_lang""".stripMargin
 
 }

@@ -445,8 +445,8 @@ object VectorQueries {
     // range(0, 0) silently drops — both engines must drop identically.
     val sigs = e.filter(size(col("embedding")) > 0)
       .select(col("vec_id"), col("embedding"),
-        expr("""transform(embedding,
-          |  x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT))
+        expr(s"""transform(embedding,
+          |  x -> ${Parity.quantSql("CAST(x AS DOUBLE)", 6)})
           |""".stripMargin).as("xq"))
       .select(col("vec_id"), col("embedding"), expr(sigExpr).as("sig"))
     val a = sigs.select(col("sig"), col("vec_id").as("a"),
@@ -464,7 +464,7 @@ object VectorQueries {
     s"""WITH e AS (
        |  SELECT vec_id, embedding,
        |    list_transform(embedding,
-       |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e6 + 0.5) AS BIGINT)) AS xq
+       |      x -> ${Parity.quantSql("CAST(x AS DOUBLE)", 6)}) AS xq
        |  FROM embeddings WHERE len(embedding) > 0),
        |ij AS (
        |  SELECT vec_id, j, i, xq[i + 1] AS v

@@ -102,6 +102,45 @@ class ParitySpec extends SparkSpec {
       s"use Parity.fix / Parity.quant instead of: ${offenders.mkString(", ")}")
   }
 
+  test("fixSql and quantSql spell the rounding forms they stand for") {
+    assert(Parity.fixSql("x / n", 4) == "FLOOR(x / n * 1e4 + 0.5) / 1e4")
+    assert(Parity.quantSql("LN(x)", 9) ==
+      "CAST(FLOOR(LN(x) * 1e9 + 0.5) AS BIGINT)")
+  }
+
+  test("no source file outside Parity spells a fixSql or quantSql form") {
+    val floorOpen = """(?i)\bFLOOR\(""".r
+    val scaled = """(?i)\* ?1e(\d+) ?\+ ?0\.5 ?$""".r.unanchored
+    val bigint = """(?i)^ ?AS BIGINT ?\)""".r.unanchored
+    val castOpen = """(?i)CAST\( ?$""".r.unanchored
+    val files =
+      mainSources.filterNot(_.getFileName.toString == "Parity.scala")
+    val offenders = files.flatMap { p =>
+      // margins and line breaks collapse, so a form split across
+      // stripMargin lines is still one match
+      val t = new String(Files.readAllBytes(p), "UTF-8")
+        .replaceAll("""\n\s*\|""", " ").replaceAll("""\s+""", " ")
+      floorOpen.findAllMatchIn(t).flatMap { m =>
+        var depth = 0
+        val close = (m.end - 1 until t.length).find { j =>
+          if (t(j) == '(') depth += 1
+          if (t(j) == ')') depth -= 1
+          depth == 0
+        }.getOrElse(t.length - 1)
+        val rest = t.substring(close + 1)
+        t.substring(m.end, close) match {
+          case scaled(n) if rest.matches(s"(?s) ?/ ?1e$n(?!\\d).*") ||
+              (castOpen.findFirstIn(t.substring(0, m.start)).isDefined &&
+                bigint.findFirstIn(rest).isDefined) =>
+            Some(s"${p.getFileName}: ${t.substring(m.start, close + 1)}")
+          case _ => None
+        }
+      }
+    }
+    assert(offenders.isEmpty, "use Parity.fixSql / Parity.quantSql " +
+      s"instead of: ${offenders.take(5).mkString("; ")}")
+  }
+
   test("each shared sample is spelled only inside its owning builder") {
     // needle -> the (file, object member) pairs allowed to spell it
     val owners = Map(

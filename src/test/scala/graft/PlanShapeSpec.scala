@@ -1019,7 +1019,8 @@ class PlanShapeSpec extends SparkSpec {
   // adjudication table in COVERAGE.md.
   private val libmRe = ("""\b(ln|log|log10|log2|log1p|exp|expm1|sin|cos|""" +
     """tan|asin|acos|atan|atan2|sinh|cosh|tanh|pow|power|cbrt)\s*\(""").r
-  private val quantRe = """(?i)floor\s*\(|Parity\.(?:quant|fix)\s*\(""".r
+  private val quantRe =
+    """(?i)floor\s*\(|Parity\.(?:quant|fix)(?:Sql)?\s*\(""".r
 
   /** Joins physical lines into logical statements: a line continues
     * while its parens/brackets are unbalanced, the NEXT line starts
@@ -1029,11 +1030,14 @@ class PlanShapeSpec extends SparkSpec {
     * SQL parens are unbalanced across lines, so merging would glue
     * whole mirrors into one blob — a floor( anywhere would then mask
     * every taint in it, and unrelated AS-names would absorb taints
-    * from distant expressions (both observed in development).
-    * Comment lines are dropped first. Twin of
-    * scripts/libm_audit.py's logical_statements. */
+    * from distant expressions (both observed in development). A
+    * `${...}` splice that a SQL line leaves open is glued back onto
+    * that line with its continuation lines, so the SQL after the
+    * closing brace (an `AS name`) is read as SQL of the line it sits
+    * in, not as a Scala statement. Comment lines are dropped first.
+    * Twin of scripts/libm_audit.py's logical_statements. */
   private def logicalStatements(text: String): Seq[String] = {
-    val lines = text.linesIterator.filterNot { l =>
+    val raw = text.linesIterator.filterNot { l =>
       val t = l.trim
       t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
     }.map(l => l.indexOf("//") match {
@@ -1045,6 +1049,37 @@ class PlanShapeSpec extends SparkSpec {
     val contHead = """^\s*[.+\-*/&|:]""".r
     def isSqlLine(l: String): Boolean =
       l.trim.startsWith("|") || l.contains("\"\"\"")
+    // brace depth of an open `${` splice after scanning `l` from depth d
+    def spliceDepth(l: String, d0: Int): Int = {
+      var d = d0; var i = 0
+      while (i < l.length) {
+        val c = l.charAt(i)
+        if (d == 0) {
+          if (c == '$' && i + 1 < l.length) {
+            if (l.charAt(i + 1) == '{') d = 1
+            i += 1 // `${` opens a splice, `$$` is a literal dollar
+          }
+        } else if (c == '{') d += 1
+        else if (c == '}') d -= 1
+        i += 1
+      }
+      d
+    }
+    val lines = {
+      val glued = Vector.newBuilder[String]
+      var open: Option[String] = None
+      var d = 0
+      raw.foreach { l =>
+        open match {
+          case Some(sql) => open = Some(sql + " " + l.trim); d = spliceDepth(l, d)
+          case None if isSqlLine(l) => open = Some(l); d = spliceDepth(l, 0)
+          case None => glued += l
+        }
+        if (d <= 0) { open.foreach(glued += _); open = None; d = 0 }
+      }
+      open.foreach(glued += _)
+      glued.result()
+    }
     val out = Vector.newBuilder[String]
     var buf = new StringBuilder
     var depth = 0
@@ -1209,5 +1244,30 @@ class PlanShapeSpec extends SparkSpec {
       assert(libmOffenders("ops/Planted.scala", quantized).isEmpty,
         s"the quantized continuation form $q must be clean")
     }
+    // the DuckDB side: a raw ln under SUM is flagged, its quantSql twin
+    // is clean
+    val rawSql = """      |SELECT SUM(ln(CAST(x AS DOUBLE))) AS t"""
+    assert(libmOffenders("ops/Planted.scala", rawSql).nonEmpty,
+      "a raw libm term under a SQL SUM must be flagged")
+    val twinSql = rawSql.replace("ln(CAST(x AS DOUBLE))",
+      """${Parity.quantSql("ln(CAST(x AS DOUBLE))", 9)}""")
+    assert(libmOffenders("ops/Planted.scala", twinSql).isEmpty,
+      s"the quantSql twin must be clean: $twinSql")
+    // a twin whose argument is split over Scala lines: the SQL after
+    // the splice's closing brace binds `tq` on the SQL line, under the
+    // twin, so the sum over tq is clean; the same layout without the
+    // twin is flagged
+    val splitTwin = """
+  val qSql = sQ3SELECT SUM(tq) AS t FROM (
+    |  SELECT ${Parity.quantSql("CAST(w AS DOUBLE) * " +
+        "ln(CAST(x AS DOUBLE))", 9)} AS tq
+    |  FROM t)Q3.stripMargin
+""".replace("Q3", "\"" * 3)
+    assert(libmOffenders("ops/Planted.scala", splitTwin).isEmpty,
+      s"a split quantSql splice must be clean: $splitTwin")
+    val splitRaw = splitTwin.replace("Parity.quantSql(", "(")
+      .replace(", 9)}", ")}")
+    assert(libmOffenders("ops/Planted.scala", splitRaw).nonEmpty,
+      s"a split raw splice under a SQL SUM must be flagged: $splitRaw")
   }
 }
