@@ -104,35 +104,9 @@ object Plans {
          |never fact-scale; PlanShapeSpec's global-window allowlist is
          |the executable copy of that contract,
          |`NESTED-LOOP` = cartesian/broadcast-nested-loop — expected ONLY
-         |where a deliberate broadcast small-side cross join exists: q10's
-         |bounded matrix, the one-row bounds/corpus-count rows of
-         |q43/q79/q88/q95/q96/q99/q103/q110/q146, the tiny broadcast query sides of
-         |q52/q53, q186's ≤100-row margin-grid cross join, q199's
-         |1-row basket-count broadcast, q202's 3-row broadcast
-         |query fleet, q206's 1-row pair-count broadcast, and (r11)
-         |q227's 1-row tie census, q236's 5-row priority census,
-         |q238's 5-row query-language fleet, q240's 1-row λ̂
-         |aggregate, q242's 1-row bounds broadcast, q244's 1-row
-         |aggregate pair join, q245's 4-row degree-ladder range
-         |join, q248's 1-row tie-census join, q253's 1-row day-count
-         |broadcast, and q255's 1-row fitted-moments broadcast
-         |(the r12/r13 in-plan-bounds and census-broadcast sites are
-         |enumerated in PlanShapeSpec's allowlist — the executable copy
-         |of this contract; r13 batch 2 adds q283/q285/q286/q288's
-         |1-row census broadcasts and q284's 10-row depth grid; r15
-         |adds q333's ≤25-row hub-table broadcast under the customer
-         |scan — the haversine band census's deliberate 25n build —
-         |and q335's 1-row broadcast of the collect_list'd hub array
-         |feeding the in-row Voronoi argmin fold, q336's 1-row
-         |mean broadcast onto the day census, q344/q347/q348's 1-row
-         |statistic/rank/true-mean broadcasts, and q340's 5-row
-         |broadcast query fleet; r16 adds q357's 1-row (mn, mx)
-         |histogram-bounds broadcast under the fact scan, q359's
-         |1-row Holt-Winters init broadcast onto the collected series,
-         |and q360's 5-row query-language fleet — the q238 pattern;
-         |q390's 1-row median broadcast).
-         |Anything else earning that flag is a regression —
-         |and since round 5 that contract is EXECUTABLE: PlanShapeSpec's
+         |where a deliberate broadcast small-side cross join exists; the
+         |sites and their counts are PlanShapeSpec's `allowedBnlj` and
+         |`bnljMax`, the one copy of that contract, and its
          |"nested-loop joins appear ONLY on the PLANS.md-enumerated
          |allowlist" test fails the build on any cartesian product or any
          |off-allowlist BNLJ).

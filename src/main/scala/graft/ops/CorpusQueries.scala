@@ -153,14 +153,7 @@ object CorpusQueries {
     * rank per query arm, one hash agg; nothing pairwise. */
   def q272Err20(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val langs = d.select(col("lang").as("ql")).distinct()
-    val w = Window.partitionBy("ql")
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    val ranked = d.crossJoin(broadcast(langs))
-      .withColumn("rk", row_number().over(w))
-      .withColumn("rel", (col("lang") === col("ql")).cast("long"))
+    val ranked = RetrievalQueries.langRanking(s, dir)
     val wc = Window.partitionBy("ql").orderBy("rk")
     val t = ranked.withColumn("cumrel", sum("rel").over(wc))
     val errTerm = when(col("rel") === 1L && col("rk") <= 20,
@@ -178,13 +171,7 @@ object CorpusQueries {
   }
 
   val q272Err20Sql: String =
-    s"""WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
-      |ranked AS (
-      |  SELECT ql, doc_id, lang, n_chars,
-      |    ROW_NUMBER() OVER (PARTITION BY ql
-      |      ORDER BY n_chars DESC, doc_id) AS rk,
-      |    CASE WHEN lang = ql THEN 1 ELSE 0 END AS rel
-      |  FROM documents CROSS JOIN langs),
+    s"""WITH ${RetrievalQueries.langRankingSql},
       |t AS (
       |  SELECT *, SUM(rel) OVER (PARTITION BY ql ORDER BY rk
       |    ROWS UNBOUNDED PRECEDING) AS cumrel

@@ -14,6 +14,74 @@ import org.apache.spark.sql.functions._
   * ride value censuses, never fact rows.
   */
 object DriftQueries {
+
+  /** Per-customer lifetime revenue by market segment: `seg`,
+    * `c_custkey` and `c`, the customer's exact int64 cents total over
+    * [[LocationTests.segmentOrders]] (q214, q215, q249).
+    * [[customerCentsSql]] is its oracle twin; the two change together. */
+  private[ops] def customerCents(s: SparkSession, dir: String): DataFrame =
+    LocationTests.segmentOrders(s, dir)
+      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
+      .agg(sum(Parity.quant(col("o_totalprice"), 100.0)).as("c"))
+
+  /** The oracle twin of [[customerCents]]; the two change together. */
+  private[ops] val customerCentsSql: String =
+    s"""SELECT c_mktsegment AS seg, c_custkey,
+      |    SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS c
+      |  ${LocationTests.segmentOrdersSql}
+      |  GROUP BY 1, 2""".stripMargin
+
+  /** The old/new order-price sample of the two-sample drift tests:
+    * `pc`, the order price in int64 cents (HALF_UP), and `is_new`, true
+    * for orders dated 1999-01-01 or later. [[oldNewCentsSql]] is its
+    * oracle twin; the two change together. */
+  private[ops] def oldNewCents(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select(
+      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
+      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
+        .as("is_new"))
+
+  /** The oracle twin of [[oldNewCents]]; the two change together. */
+  private[ops] val oldNewCentsSql: String =
+    """SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
+      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
+      |  FROM orders""".stripMargin
+
+  /** The `pc` census of [[oldNewCents]] with its empirical CDFs: per
+    * distinct `pc`, the order count `l` and old-period count `cx`, their
+    * cumulatives `cum_all`/`cum_x` in `pc` order from one [[PrefixSum]]
+    * pass (no single-partition window), and the totals `nn`/`nx`, fused
+    * into the same pass at no extra job (q280, q352, q400).
+    * [[oldNewCensusSql]] is its oracle twin; the two change together. */
+  private[ops] def oldNewCensus(s: SparkSession, dir: String): DataFrame = {
+    val h = oldNewCents(s, dir).groupBy("pc")
+      .agg(count(lit(1)).as("l"),
+        count(when(!col("is_new"), 1)).as("cx"))
+    PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
+      Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
+      Seq((col("l"), "nn"), (col("cx"), "nx")))
+  }
+
+  /** The CTEs `o`, `h`, `c` (the census with its cumulatives) and `tot`
+    * (`nn`, `nx`), the oracle twin of [[oldNewCensus]]; the two change
+    * together. */
+  private[ops] val oldNewCensusSql: String =
+    s"""o AS ($oldNewCentsSql),
+      |h AS (
+      |  SELECT pc, COUNT(*) AS l,
+      |    COUNT(*) FILTER (WHERE NOT is_new) AS cx
+      |  FROM o GROUP BY pc),
+      |c AS (
+      |  SELECT pc, l, cx,
+      |    CAST(SUM(l) OVER (ORDER BY pc
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |      AS cum_all,
+      |    CAST(SUM(cx) OVER (ORDER BY pc
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |      AS cum_x
+      |  FROM h),
+      |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c)""".stripMargin
+
   /** Categorical column profiling with Shannon entropy — the
     * value-distribution half of data profiling ([[DataQuality.profile]]
     * is the one-pass count/null/HLL half): per column, row count,
@@ -99,10 +167,7 @@ object DriftQueries {
     * one-row-bounds pattern — allowlisted BNLJ), one map-side bin
     * projection, one ≤10-group agg. No windows over fact rows. */
   def q146Psi(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir).select(
-      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .as("is_new"))
+    val o = oldNewCents(s, dir)
     val cuts = o.filter(!col("is_new"))
       .agg(expr(
         "percentile(pc, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))")
@@ -140,10 +205,7 @@ object DriftQueries {
   }
 
   val q146PsiSql: String =
-    """WITH o AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
-      |  FROM orders),
+    s"""WITH o AS ($oldNewCentsSql),
       |cuts AS (
       |  SELECT list_transform(
       |    quantile_cont(pc, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
@@ -186,11 +248,7 @@ object DriftQueries {
     * are immaterial because the CDF is read per distinct value (the
     * PrefixSum tie contract). */
   def q147Ks(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir).select(
-      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .as("is_new"))
-    val h = o.groupBy("pc")
+    val h = oldNewCents(s, dir).groupBy("pc")
       .agg(count(when(!col("is_new"), 1)).as("ca"),
         count(when(col("is_new"), 1)).as("cb"))
     // r20 (verdict mandate #2): side totals fused into the prefix pass
@@ -212,10 +270,7 @@ object DriftQueries {
   }
 
   val q147KsSql: String =
-    """WITH o AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
-      |  FROM orders),
+    s"""WITH o AS ($oldNewCentsSql),
       |h AS (
       |  SELECT pc, COUNT(*) FILTER (WHERE NOT is_new) AS ca,
       |    COUNT(*) FILTER (WHERE is_new) AS cb
@@ -451,13 +506,7 @@ object DriftQueries {
     * fact scale the same quartiles come from q98's [[RangedNtile]]
     * machinery), broadcast back over one customer-grain scan. */
   def q214TukeyFences(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
-        .as("c"))
+    val o = customerCents(s, dir)
     val q = o.groupBy("seg")
       .agg(percentile(col("c"), lit(0.25)).as("q1"),
         percentile(col("c"), lit(0.75)).as("q3"))
@@ -481,11 +530,7 @@ object DriftQueries {
   }
 
   val q214TukeyFencesSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg, c_custkey,
-      |    SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS c
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  GROUP BY 1, 2),
+    s"""WITH o AS ($customerCentsSql),
       |q AS (
       |  SELECT seg, quantile_cont(c, 0.25) AS q1, quantile_cont(c, 0.75) AS q3,
       |    CAST(FLOOR(quantile_cont(c, 0.25)
@@ -531,13 +576,7 @@ object DriftQueries {
     * over fact scans — the q214 shape, one extra pass for the
     * deviation median. */
   def q215MadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
-        .as("c"))
+    val o = customerCents(s, dir)
     val med = o.groupBy("seg")
       .agg(percentile(col("c") * 2, lit(0.5)).cast("long").as("m2"))
     val dev = o.join(broadcast(med), "seg")
@@ -560,11 +599,7 @@ object DriftQueries {
   }
 
   val q215MadOutliersSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg, c_custkey,
-      |    SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS c
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  GROUP BY 1, 2),
+    s"""WITH o AS ($customerCentsSql),
       |med AS (
       |  SELECT seg, CAST(quantile_cont(c * 2, 0.5) AS BIGINT) AS m2
       |  FROM o GROUP BY seg),
@@ -603,13 +638,7 @@ object DriftQueries {
   def q239NeymanAllocation(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
     val n = 1000L
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
-    val g = o.groupBy("seg")
+    val g = KSampleTests.segmentDollars(s, dir).groupBy("seg")
       .agg(count(lit(1)).as("nh"), sum(col("v").cast(dec)).as("sv"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qv"))
     val sh = sqrt((col("qv").cast("double") -
@@ -633,10 +662,7 @@ object DriftQueries {
   }
 
   val q239NeymanAllocationSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH o AS (${KSampleTests.segmentDollarsSql}),
       |g AS (
       |  SELECT seg, COUNT(*) AS nh,
       |    SUM(CAST(v AS HUGEINT)) AS sv,
@@ -683,14 +709,7 @@ object DriftQueries {
     *
     * Scale: customer rollup + one map-side-combinable segment agg. */
   def q249Atkinson(s: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
-        .as("c"))
-    val g = cust.groupBy("seg")
+    val g = customerCents(s, dir).groupBy("seg")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
         sum(Parity.quant(log(col("c").cast("double")), 1e9))
           .as("lnq"))
@@ -704,11 +723,7 @@ object DriftQueries {
   }
 
   val q249AtkinsonSql: String =
-    s"""WITH cust AS (
-      |  SELECT c_mktsegment AS seg, c_custkey,
-      |    SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS c
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  GROUP BY 1, 2),
+    s"""WITH cust AS ($customerCentsSql),
       |g AS (
       |  SELECT seg, COUNT(*) AS n, CAST(SUM(c) AS BIGINT) AS sc,
       |    CAST(SUM(${Parity.quantSql("LN(CAST(c AS DOUBLE))", 9)}) AS BIGINT) AS lnq
@@ -738,10 +753,7 @@ object DriftQueries {
     * single-valued outcome margin (N = modal margin) nulls that
     * direction's λ. */
   def q267GkLambda(s: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val cells = LocationTests.segmentOrders(s, dir)
       .groupBy(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("pri"))
       .agg(count(lit(1)).as("n"))
@@ -783,10 +795,10 @@ object DriftQueries {
   }
 
   val q267GkLambdaSql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT c_mktsegment AS seg, o_orderpriority AS pri,
       |    COUNT(*) AS n
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  ${LocationTests.segmentOrdersSql}
       |  GROUP BY 1, 2),
       |bs AS (
       |  SELECT CAST(SUM(mx) AS BIGINT) AS sum_max_seg,
@@ -931,19 +943,7 @@ object DriftQueries {
     * broadcast. Guards: an empty side → null statistic. */
   def q280AdTwoSample(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir).select(
-      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .as("is_new"))
-    val h = o.groupBy("pc")
-      .agg(count(lit(1)).as("l"),
-        count(when(!col("is_new"), 1)).as("cx"))
-    // r20 (verdict mandate #2): side totals fused into the prefix pass
-    // (they equal the max-of-cumulative the r13 pattern read back, but
-    // cost zero extra jobs — the driver already holds the partials)
-    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
-      Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
-      Seq((col("l"), "nn"), (col("cx"), "nx")))
+    val c = oldNewCensus(s, dir)
     // A² = (1/(n·m)) Σ_j l_j·(M_jN − nF_j)²/(F_j(N−F_j)) — the Pettitt
     // normalization with the ECDF read at distinct-value block ends
     // (the only well-defined ties form); each term is pre-divided by
@@ -976,24 +976,7 @@ object DriftQueries {
   }
 
   val q280AdTwoSampleSql: String =
-    s"""WITH o AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
-      |  FROM orders),
-      |h AS (
-      |  SELECT pc, COUNT(*) AS l,
-      |    COUNT(*) FILTER (WHERE NOT is_new) AS cx
-      |  FROM o GROUP BY pc),
-      |c AS (
-      |  SELECT pc, l, cx,
-      |    CAST(SUM(l) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_all,
-      |    CAST(SUM(cx) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_x
-      |  FROM h),
-      |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c),
+    s"""WITH $oldNewCensusSql,
       |t AS (
       |  SELECT
       |    ${Parity.quantSql("CAST(l AS DOUBLE)" +
@@ -1033,19 +1016,7 @@ object DriftQueries {
     * PrefixSum cumulatives, 1-row totals broadcast, one max/min agg. */
   def q352Kuiper(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir).select(
-      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .as("is_new"))
-    val h = o.groupBy("pc")
-      .agg(count(lit(1)).as("l"),
-        count(when(!col("is_new"), 1)).as("cx"))
-    // r20 (verdict mandate #2): side totals fused into the prefix pass
-    // (they equal the max-of-cumulative the r13 pattern read back, but
-    // cost zero extra jobs — the driver already holds the partials)
-    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
-      Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
-      Seq((col("l"), "nn"), (col("cx"), "nx")))
+    val c = oldNewCensus(s, dir)
     // scaled ECDF gap at each block end: ny·F_x − nx·F_y, exact int
     val gap = (col("nn") - col("nx")).cast(dec) * col("cum_x").cast(dec) -
       col("nx").cast(dec) *
@@ -1069,24 +1040,7 @@ object DriftQueries {
   }
 
   val q352KuiperSql: String =
-    s"""WITH o AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
-      |  FROM orders),
-      |h AS (
-      |  SELECT pc, COUNT(*) AS l,
-      |    COUNT(*) FILTER (WHERE NOT is_new) AS cx
-      |  FROM o GROUP BY pc),
-      |c AS (
-      |  SELECT pc, l, cx,
-      |    CAST(SUM(l) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_all,
-      |    CAST(SUM(cx) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_x
-      |  FROM h),
-      |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c),
+    s"""WITH $oldNewCensusSql,
       |g AS (
       |  SELECT MAX(nn) AS nn, MAX(nx) AS nx,
       |    MAX(CAST(nn - nx AS HUGEINT) * cum_x
@@ -1217,19 +1171,7 @@ object DriftQueries {
     * a 1-row totals broadcast; 1-row output. */
   def q400CvmTwoSample(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir).select(
-      expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-      (col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .as("is_new"))
-    val h = o.groupBy("pc")
-      .agg(count(lit(1)).as("l"),
-        count(when(!col("is_new"), 1)).as("cx"))
-    // r20 (verdict mandate #2): side totals fused into the prefix pass
-    // (they equal the max-of-cumulative the r13 pattern read back, but
-    // cost zero extra jobs — the driver already holds the partials)
-    val c = PrefixSum.withPrefixSumsAndTotals(h, Seq(col("pc")),
-      Seq((col("l"), "cum_all"), (col("cx"), "cum_x")), Nil,
-      Seq((col("l"), "nn"), (col("cx"), "nx")))
+    val c = oldNewCensus(s, dir)
     // F1 − F2 at a block end = (cum_x·ny − cum_y·nx)/(nx·ny), exact
     val cumY = col("cum_all") - col("cum_x")
     val nyC = col("nn") - col("nx")
@@ -1264,24 +1206,7 @@ object DriftQueries {
   }
 
   val q400CvmTwoSampleSql: String =
-    s"""WITH o AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    o_orderdate >= TIMESTAMP '1999-01-01' AS is_new
-      |  FROM orders),
-      |h AS (
-      |  SELECT pc, COUNT(*) AS l,
-      |    COUNT(*) FILTER (WHERE NOT is_new) AS cx
-      |  FROM o GROUP BY pc),
-      |c AS (
-      |  SELECT pc, l, cx,
-      |    CAST(SUM(l) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_all,
-      |    CAST(SUM(cx) OVER (ORDER BY pc
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_x
-      |  FROM h),
-      |tot AS (SELECT MAX(cum_all) AS nn, MAX(cum_x) AS nx FROM c),
+    s"""WITH $oldNewCensusSql,
       |t AS (
       |  SELECT ${Parity.quantSql("CAST(l AS DOUBLE)" +
                                   " * (CAST(CAST(cum_x AS HUGEINT) * (nn - nx)" +
@@ -1333,9 +1258,7 @@ object DriftQueries {
     * Scale: the day census is scale-CONSTANT (≤365 rows by
     * construction); one census PrefixSum + one fold. */
   def q411WatsonU2(s: SparkSession, dir: String): DataFrame = {
-    val d = SeriesStats.daily2(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"))
+    val d = SeriesStats.dayIndexed(SeriesStats.daily2(s, dir))
     val recent = SeriesStats.trailingYear(d)
       .select(col("rev"),
         // Sunday-epoch dow: 1995-01-01 was a Sunday; weekend = {0,6}
@@ -1371,10 +1294,7 @@ object DriftQueries {
 
   val q411WatsonU2Sql: String =
     s"""WITH daily AS (${SeriesStats.daily2Sql}),
-      |d AS (
-      |  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT)
-      |      AS t, rev
-      |  FROM daily),
+      |d AS (${SeriesStats.dayIndexedSql("daily")}),
       |recent AS (
       |  SELECT rev, ((t % 7) + 7) % 7 IN (0, 6) AS is_we
       |  ${SeriesStats.trailingYearSql("d")}),

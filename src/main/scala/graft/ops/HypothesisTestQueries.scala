@@ -144,16 +144,8 @@ object HypothesisTestQueries {
     val p0 = lit(0.2)
     val zv = (col("x").cast("double") / col("n") - p0) /
       sqrt(p0 * (lit(1.0) - p0) / col("n"))
-    val za = abs(col("zv"))
-    val tInv = lit(1.0) / (lit(1.0) + lit(0.2316419) * za)
-    val phi = exp(-za * za / 2.0) / lit(2.5066282746310002)
-    val pTail = phi * (lit(0.319381530) * tInv
-      - lit(0.356563782) * pow(tInv, 2)
-      + lit(1.781477937) * pow(tInv, 3)
-      - lit(1.821255978) * pow(tInv, 4)
-      + lit(1.330274429) * pow(tInv, 5))
     val p = g.withColumn("zv", zv)
-      .withColumn("pq", Parity.quant(lit(2.0) * pTail, 1e8))
+      .withColumn("pq", Parity.quant(asTwoSidedP(col("zv")), 1e8))
     val wRank = Window.orderBy(col("pq"), col("source"))
     val r = p.withColumn("rk", row_number().over(wRank))
       .withColumn("m", count(lit(1)).over(wAll))
@@ -182,14 +174,7 @@ object HypothesisTestQueries {
       |  FROM g),
       |p AS (
       |  SELECT source, n, x, zv,
-      |    ${Parity.quantSql("2.0 * (exp(-abs(zv) * abs(zv) / 2.0)" +
-                             " / 2.5066282746310002)" +
-                             " * (0.319381530 * (1.0 / (1.0 + 0.2316419 * abs(zv)))" +
-                             " - 0.356563782 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 2)" +
-                             " + 1.781477937 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 3)" +
-                             " - 1.821255978 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 4)" +
-                             " + 1.330274429 * POWER(1.0 / (1.0 + 0.2316419 * abs(zv)), 5))", 8)}
-      |      AS pq
+      |    ${Parity.quantSql(asTwoSidedPSql("zv"), 8)} AS pq
       |  FROM z),
       |r AS (
       |  SELECT source, n, x, zv, pq,
@@ -433,10 +418,7 @@ object HypothesisTestQueries {
     * Scale: one map-side-combinable (segment) census; ≤5-row algebra
     * + windows. */
   def q229MantelHaenszel(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val o = LocationTests.segmentOrders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
       .select(col("c_mktsegment").as("seg"),
         (col("o_orderpriority") === "1-URGENT").as("exp"),
@@ -475,7 +457,7 @@ object HypothesisTestQueries {
       |  SELECT c_mktsegment AS seg,
       |    o_orderpriority = '1-URGENT' AS expo,
       |    o_totalprice >= 200000.0 AS hi
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  ${LocationTests.segmentOrdersSql}
       |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
       |g AS (
       |  SELECT seg,

@@ -116,6 +116,29 @@ object InferenceDiagnostics {
       |FROM c ORDER BY arm""".stripMargin
 
 
+  /** The URGENT-vs-LOW cents census of the rank scale tests: per
+    * order price `pc` in int64 cents (HALF_UP), the order count `cnt`
+    * and the 1-URGENT count `c1` over orders of priority 1-URGENT or
+    * 5-LOW (q288, q289). [[urgentCentsCensusSql]] is its oracle twin;
+    * the two change together. */
+  private[ops] def urgentCentsCensus(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
+      .select(expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
+        (col("o_orderpriority") === "1-URGENT").cast("long").as("g1"))
+      .groupBy("pc")
+      .agg(count(lit(1)).as("cnt"), sum(col("g1")).as("c1"))
+
+  /** The oracle twin of [[urgentCentsCensus]]; the two change together. */
+  private[ops] val urgentCentsCensusSql: String =
+    """SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
+      |    COUNT(*) AS cnt,
+      |    CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
+      |      END) AS BIGINT) AS c1
+      |  FROM orders
+      |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
+      |  GROUP BY pc""".stripMargin
+
   /** L222 Ansari–Bradley scale test ([PK] Ansari & Bradley 1960): do
     * URGENT and LOW-priority orders differ in price DISPERSION (not
     * location)? Ranks are assigned from BOTH ends of the pooled sample
@@ -136,12 +159,7 @@ object InferenceDiagnostics {
     * one 1-row reduce. Guards: zero score variance (all values tied)
     * → null z. */
   def q288AnsariBradley(s: SparkSession, dir: String): DataFrame = {
-    val cell = Tables.orders(s, dir)
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-        (col("o_orderpriority") === "1-URGENT").cast("long").as("g1"))
-      .groupBy("pc")
-      .agg(count(lit(1)).as("cnt"), sum(col("g1")).as("c1"))
+    val cell = urgentCentsCensus(s, dir)
     // distributed rank backbone (q210 shape) + the r13 max-of-cumulative
     // 1-row totals broadcast (q147 form) for the from-both-ends fold
     // r20 (verdict mandate #2): the 1-row total fused into the prefix
@@ -177,14 +195,7 @@ object InferenceDiagnostics {
 
 
   val q288AnsariBradleySql: String =
-    """WITH cell AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    COUNT(*) AS cnt,
-      |    CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
-      |      END) AS BIGINT) AS c1
-      |  FROM orders
-      |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-      |  GROUP BY pc),
+    s"""WITH cell AS ($urgentCentsCensusSql),
       |r AS (
       |  SELECT pc, cnt, c1,
       |    SUM(cnt) OVER (ORDER BY pc
@@ -235,12 +246,7 @@ object InferenceDiagnostics {
     * Scale: identical to q288 — census agg + 1-row N broadcast.
     * Guards: an empty group or N < 5 → null statistics. */
   def q289Cucconi(s: SparkSession, dir: String): DataFrame = {
-    val cell = Tables.orders(s, dir)
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(expr("cast(round(o_totalprice * 100) as bigint)").as("pc"),
-        (col("o_orderpriority") === "1-URGENT").cast("long").as("g1"))
-      .groupBy("pc")
-      .agg(count(lit(1)).as("cnt"), sum(col("g1")).as("c1"))
+    val cell = urgentCentsCensus(s, dir)
     // r20 (verdict mandate #2): the 1-row total fused into the prefix
     // pass (Σcnt ≡ the max-of-cumulative it replaced; zero extra jobs)
     val cum = PrefixSum.withPrefixSumsAndTotals(cell,
@@ -282,14 +288,7 @@ object InferenceDiagnostics {
 
 
   val q289CucconiSql: String =
-    s"""WITH cell AS (
-      |  SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc,
-      |    COUNT(*) AS cnt,
-      |    CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
-      |      END) AS BIGINT) AS c1
-      |  FROM orders
-      |  WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-      |  GROUP BY pc),
+    s"""WITH cell AS ($urgentCentsCensusSql),
       |r AS (
       |  SELECT pc, cnt, c1,
       |    SUM(cnt) OVER (ORDER BY pc

@@ -21,6 +21,21 @@ import StatFns.{asTwoSidedP, asTwoSidedPSql}
   */
 object KSampleTests {
 
+  /** Whole-dollar order values by market segment: `seg` and `v`, the
+    * order price rounded half-up to an int64 dollar, over
+    * [[LocationTests.segmentOrders]] (q228, q232, q239, q391).
+    * [[segmentDollarsSql]] is its oracle twin; the two change together. */
+  private[ops] def segmentDollars(s: SparkSession, dir: String): DataFrame =
+    LocationTests.segmentOrders(s, dir)
+      .select(col("c_mktsegment").as("seg"),
+        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+
+  /** The oracle twin of [[segmentDollars]]; the two change together. */
+  private[ops] val segmentDollarsSql: String =
+    s"""SELECT c_mktsegment AS seg,
+      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
+      |  ${LocationTests.segmentOrdersSql}""".stripMargin
+
   /** L161 Kruskal–Wallis H (Kruskal & Wallis 1952 [PK]): the k-group
     * generalization of q210's two-sample rank test — do the five
     * market segments draw order values from the same distribution?
@@ -44,10 +59,7 @@ object KSampleTests {
     * DataFrame-build time); everything after is ≤5-row algebra. */
   def q227KruskalWallis(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val o = LocationTests.segmentOrders(s, dir)
       .select(col("c_mktsegment").as("seg"),
         Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("n"))
@@ -89,10 +101,10 @@ object KSampleTests {
 
 
   val q227KruskalWallisSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment AS seg,
       |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+      |  ${LocationTests.segmentOrdersSql}),
       |cen AS (SELECT c, COUNT(*) AS n FROM o GROUP BY c),
       |cum AS (
       |  SELECT c, n,
@@ -144,13 +156,7 @@ object KSampleTests {
     * algebra after. */
   def q228AnovaF(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
-    val g = o.groupBy("seg")
+    val g = segmentDollars(s, dir).groupBy("seg")
       .agg(count(lit(1)).as("nj"), sum(col("v").cast(dec)).as("sj"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qj"))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
@@ -187,10 +193,7 @@ object KSampleTests {
 
 
   val q228AnovaFSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH o AS ($segmentDollarsSql),
       |g AS (
       |  SELECT seg, COUNT(*) AS nj,
       |    SUM(CAST(v AS HUGEINT)) AS sj,
@@ -236,12 +239,7 @@ object KSampleTests {
     * one moment agg, ≤5-row algebra — two fact passes total. */
   def q232BrownForsythe(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = segmentDollars(s, dir)
     val med = o.groupBy("seg")
       .agg(percentile(col("v") * 2, lit(0.5)).cast("long").as("m2"))
     val dev = o.join(broadcast(med), "seg")
@@ -280,10 +278,7 @@ object KSampleTests {
 
 
   val q232BrownForsytheSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH o AS ($segmentDollarsSql),
       |med AS (
       |  SELECT seg, CAST(quantile_cont(v * 2, 0.5) AS BIGINT) AS m2
       |  FROM o GROUP BY seg),
@@ -698,10 +693,7 @@ object KSampleTests {
     * census (5 rows); everything after is census arithmetic. */
   def q345Bartlett(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val o = LocationTests.segmentOrders(s, dir)
       .select(col("c_mktsegment").as("seg"),
         floor(col("o_totalprice") + 0.5).cast(dec).as("v"))
     val g = o.groupBy("seg")
@@ -743,9 +735,9 @@ object KSampleTests {
 
   val q345BartlettSql: String =
     s"""WITH o AS (
-      |  SELECT c.c_mktsegment AS seg,
+      |  SELECT c_mktsegment AS seg,
       |    CAST(FLOOR(o_totalprice + 0.5) AS HUGEINT) AS v
-      |  FROM orders JOIN customer c ON o_custkey = c.c_custkey),
+      |  ${LocationTests.segmentOrdersSql}),
       |g AS (
       |  SELECT seg, COUNT(*) AS nk,
       |    CAST(SUM(v) AS HUGEINT) AS sv,
@@ -812,12 +804,7 @@ object KSampleTests {
     * q232's median pass); ≤5-row algebra after. */
   def q391LeveneMean(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val o = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = segmentDollars(s, dir)
     val mu = o.groupBy("seg")
       .agg(count(lit(1)).as("ng"), sum(col("v").cast(dec)).as("sg"))
     val dev = o.join(broadcast(mu), "seg")
@@ -860,10 +847,7 @@ object KSampleTests {
   }
 
   val q391LeveneMeanSql: String =
-    """WITH o AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH o AS ($segmentDollarsSql),
       |mu AS (
       |  SELECT seg, COUNT(*) AS ng,
       |    CAST(SUM(CAST(v AS HUGEINT)) AS HUGEINT) AS sg

@@ -48,23 +48,33 @@ object LocationTests {
       |  SELECT c, COUNT(*) AS n, CAST(SUM(g1) AS BIGINT) AS n1
       |  FROM f GROUP BY c)""".stripMargin
 
-  /** The BUILDING-vs-FURNITURE two-group sample: orders joined to
-    * their customer's market segment (a broadcast dimension join),
+  /** Orders joined to their customer's market segment `c_mktsegment`
+    * (a broadcast dimension join), the base of every segment sample.
+    * [[segmentOrdersSql]] is its oracle twin; the two change together. */
+  private[ops] def segmentOrders(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(broadcast(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment"))),
+        col("o_custkey") === col("c_custkey"))
+
+  /** The `FROM` clause, the oracle twin of [[segmentOrders]]; the two
+    * change together. */
+  private[ops] val segmentOrdersSql: String =
+    "FROM orders JOIN customer ON o_custkey = c_custkey"
+
+  /** The BUILDING-vs-FURNITURE two-group sample: [[segmentOrders]]
     * kept for those two segments. Callers project their own segment
     * flag and price (q231, q244, q247, q303, q361).
     * [[buildingFurnitureSql]] is its oracle twin; the two change
     * together. */
   private[ops] def buildingFurniture(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    segmentOrders(s, dir)
       .filter(col("c_mktsegment").isin("BUILDING", "FURNITURE"))
 
   /** The `FROM … WHERE` clause, the oracle twin of
     * [[buildingFurniture]]; the two change together. */
   private[ops] val buildingFurnitureSql: String =
-    """FROM orders JOIN customer ON o_custkey = c_custkey
+    s"""$segmentOrdersSql
       |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')""".stripMargin
 
   /** L147 Mann–Whitney U rank-sum test (Mann & Whitney 1947 [PK]):

@@ -20,6 +20,35 @@ import org.apache.spark.sql.functions._
   * collection anywhere.
   */
 object RetrievalQueries {
+
+  /** The per-language relevance ranking of the retrieval-eval family:
+    * one query per corpus language `ql` (a |langs|-row broadcast), each
+    * ranking every document by (`n_chars` desc, `doc_id`) into `rk`
+    * (one window partitioned by query), with `rel` = 1 when the
+    * document's `lang` matches the query (q238, q272, q360, q365).
+    * [[langRankingSql]] is its oracle twin; the two change together. */
+  private[ops] def langRanking(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(s, dir)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val langs = d.select(col("lang").as("ql")).distinct()
+    val w = Window.partitionBy("ql")
+      .orderBy(col("n_chars").desc, col("doc_id"))
+    d.crossJoin(broadcast(langs))
+      .withColumn("rk", row_number().over(w))
+      .withColumn("rel", (col("lang") === col("ql")).cast("long"))
+  }
+
+  /** The CTEs `langs` and `ranked`, the oracle twin of [[langRanking]];
+    * the two change together. */
+  private[ops] val langRankingSql: String =
+    """langs AS (SELECT DISTINCT lang AS ql FROM documents),
+      |ranked AS (
+      |  SELECT ql, doc_id, lang, n_chars,
+      |    ROW_NUMBER() OVER (PARTITION BY ql
+      |      ORDER BY n_chars DESC, doc_id) AS rk,
+      |    CASE WHEN lang = ql THEN 1 ELSE 0 END AS rel
+      |  FROM documents CROSS JOIN langs)""".stripMargin
+
   /** L12 tf-idf: top-3 terms per document by tf·ln(N/df), deterministic
     * tie-break on the term. N and df come from joins, not collect(). */
   def q43TfIdf(s: SparkSession, dir: String): DataFrame = {
@@ -439,14 +468,7 @@ object RetrievalQueries {
     * the retriever, so the window input is per-query constant); metric
     * aggregation is map-side combinable. */
   def q238RankEval(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val langs = d.select(col("lang").as("ql")).distinct()
-    val w = Window.partitionBy("ql")
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    val ranked = d.crossJoin(broadcast(langs))
-      .withColumn("rk", row_number().over(w))
-      .withColumn("rel", (col("lang") === col("ql")).cast("long"))
+    val ranked = langRanking(s, dir)
     val wc = Window.partitionBy("ql").orderBy("rk")
     val t = ranked.withColumn("cumrel", sum("rel").over(wc))
     val apTerm = when(col("rel") === 1L,
@@ -475,13 +497,7 @@ object RetrievalQueries {
   }
 
   val q238RankEvalSql: String =
-    s"""WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
-      |ranked AS (
-      |  SELECT ql, doc_id, lang, n_chars,
-      |    ROW_NUMBER() OVER (PARTITION BY ql
-      |      ORDER BY n_chars DESC, doc_id) AS rk,
-      |    CASE WHEN lang = ql THEN 1 ELSE 0 END AS rel
-      |  FROM documents CROSS JOIN langs),
+    s"""WITH $langRankingSql,
       |t AS (
       |  SELECT *, SUM(rel) OVER (PARTITION BY ql ORDER BY rk
       |    ROWS UNBOUNDED PRECEDING) AS cumrel
@@ -531,15 +547,7 @@ object RetrievalQueries {
     * the corpus, rank filter ≤ 20 BEFORE any per-term work, ≤ 5-row
     * output. */
   def q360Rbp(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val langs = d.select(col("lang").as("ql")).distinct()
-    val w = Window.partitionBy("ql")
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    val ranked = d.crossJoin(broadcast(langs))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 20)
-      .withColumn("rel", (col("lang") === col("ql")).cast("long"))
+    val ranked = langRanking(s, dir).filter(col("rk") <= 20)
     ranked.groupBy(col("ql").as("query_lang"))
       .agg(sum(col("rel")).as("n_rel20"),
         sum(expr("rel * shiftleft(1L, cast(20 - rk as int))")).as("num"))
@@ -551,13 +559,8 @@ object RetrievalQueries {
   }
 
   val q360RbpSql: String =
-    """WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
-      |ranked AS (
-      |  SELECT ql, lang,
-      |    ROW_NUMBER() OVER (PARTITION BY ql
-      |      ORDER BY n_chars DESC, doc_id) AS rk
-      |  FROM documents CROSS JOIN langs
-      |  QUALIFY rk <= 20)
+    s"""WITH $langRankingSql,
+      |top20 AS (SELECT * FROM ranked WHERE rk <= 20)
       |SELECT ql AS query_lang,
       |  CAST(SUM(CASE WHEN lang = ql THEN 1 ELSE 0 END) AS BIGINT)
       |    AS n_rel20,
@@ -568,7 +571,7 @@ object RetrievalQueries {
       |  CAST(SUM(CASE WHEN lang = ql
       |      THEN (CAST(1 AS BIGINT) << (20 - rk)) ELSE 0 END) + 1
       |    AS DOUBLE) / 1048576.0 AS rbp_max
-      |FROM ranked GROUP BY ql
+      |FROM top20 GROUP BY ql
       |ORDER BY query_lang""".stripMargin
 
   /** L300 bpref — Buckley & Voorhees' judged-only binary-preference
@@ -592,15 +595,7 @@ object RetrievalQueries {
     * language, rank filter ≤ 20 before any per-term work, ≤ 5-row
     * output. */
   def q365Bpref(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val langs = d.select(col("lang").as("ql")).distinct()
-    val w = Window.partitionBy("ql")
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    val ranked = d.crossJoin(broadcast(langs))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 20)
-      .withColumn("rel", (col("lang") === col("ql")).cast("long"))
+    val ranked = langRanking(s, dir).filter(col("rk") <= 20)
     val wq = Window.partitionBy("ql")
     val wna = Window.partitionBy("ql").orderBy("rk")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -630,13 +625,8 @@ object RetrievalQueries {
   }
 
   val q365BprefSql: String =
-    """WITH langs AS (SELECT DISTINCT lang AS ql FROM documents),
-      |ranked AS (
-      |  SELECT ql, lang,
-      |    ROW_NUMBER() OVER (PARTITION BY ql
-      |      ORDER BY n_chars DESC, doc_id) AS rk
-      |  FROM documents CROSS JOIN langs
-      |  QUALIFY rk <= 20),
+    s"""WITH $langRankingSql,
+      |top20 AS (SELECT * FROM ranked WHERE rk <= 20),
       |f AS (
       |  SELECT ql, rk,
       |    CASE WHEN lang = ql THEN 1 ELSE 0 END AS rel,
@@ -647,7 +637,7 @@ object RetrievalQueries {
       |    CAST(MAX(rk) OVER (PARTITION BY ql) AS BIGINT) AS pool,
       |    SUM(CASE WHEN lang = ql THEN 1 ELSE 0 END)
       |      OVER (PARTITION BY ql) AS r_rel
-      |  FROM ranked),
+      |  FROM top20),
       |g AS (
       |  SELECT ql, rel, na, r_rel, pool,
       |    LEAST(r_rel, pool - r_rel) AS mn

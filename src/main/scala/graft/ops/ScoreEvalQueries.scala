@@ -15,6 +15,48 @@ import org.apache.spark.sql.functions._
   */
 object ScoreEvalQueries {
 
+  /** The calibration histogram of the toy length classifier: documents
+    * by length `sc` (`n_chars`), with the document count `n`, the src0
+    * count `pos`, and on every row the smallest and largest length
+    * `mn`/`mx` from windows over the ≤|lengths|-row census, not a 1-row
+    * join (q197, q276, q342, q381). [[lengthHistogramSql]] is its oracle
+    * twin; the two change together. */
+  private[ops] def lengthHistogram(s: SparkSession, dir: String): DataFrame = {
+    val wAll = Window.partitionBy()
+    Tables.documents(s, dir)
+      .groupBy(col("n_chars").as("sc"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("source") === "src0", 1L).otherwise(0L)).as("pos"))
+      .withColumn("mn", min(col("sc")).over(wAll))
+      .withColumn("mx", max(col("sc")).over(wAll))
+  }
+
+  /** The CTEs `h` (the census) and `b` (with `mn`, `mx`), the oracle
+    * twin of [[lengthHistogram]]; the two change together. */
+  private[ops] val lengthHistogramSql: String =
+    """h AS (
+      |  SELECT n_chars AS sc, COUNT(*) AS n,
+      |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS pos
+      |  FROM documents GROUP BY n_chars),
+      |b AS (
+      |  SELECT sc, n, pos,
+      |    CAST(MIN(sc) OVER () AS BIGINT) AS mn,
+      |    CAST(MAX(sc) OVER () AS BIGINT) AS mx
+      |  FROM h)""".stripMargin
+
+  /** The classifier's prediction p̂ = (sc − mn)/(mx − mn) on a
+    * [[lengthHistogram]] row, 0 when every length is equal;
+    * [[pHatSql]] is its oracle twin. */
+  private val pHat: Column = when(col("mx") - col("mn") > 0L,
+    (col("sc") - col("mn")).cast("double") / (col("mx") - col("mn")).cast("double"))
+    .otherwise(lit(0.0))
+
+  private val pHatSql: String =
+    "CASE WHEN mx - mn > 0" +
+      " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
+      " ELSE 0.0 END"
+
   /** L119 exact ROC AUC via the Mann–Whitney rank statistic: how well
     * does n_chars separate the q179 focus source from the rest? AUC =
     * P(score_pos > score_neg) + ½P(=) — the threshold-free evaluation
@@ -220,22 +262,10 @@ object ScoreEvalQueries {
     * Scale: one map-side-combinable length census, a tiny unpartitioned
     * window over it, a ≤10-group agg. */
   def q197Calibration(s: SparkSession, dir: String): DataFrame = {
-    val h = Tables.documents(s, dir)
-      .groupBy(col("n_chars").as("sc"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("source") === "src0", 1L).otherwise(0L)).as("pos"))
-    val wAll = Window.partitionBy()
-    val withB = h
-      .withColumn("mn", min(col("sc")).over(wAll))
-      .withColumn("mx", max(col("sc")).over(wAll))
-    val span = col("mx") - col("mn")
     val bin = expr("(sc - mn) * 10 div (mx - mn + 1)")
-    val phat = when(span > 0L,
-      (col("sc") - col("mn")).cast("double") / span.cast("double"))
-      .otherwise(lit(0.0))
-    withB
+    lengthHistogram(s, dir)
       .select(bin.as("bin"), col("n"), col("pos"),
-        (col("n") * Parity.quant(phat, 1e9))
+        (col("n") * Parity.quant(pHat, 1e9))
           .as("pq"))
       .groupBy("bin")
       .agg(sum("n").as("n_docs"), sum("pos").as("n_pos"),
@@ -253,21 +283,10 @@ object ScoreEvalQueries {
   }
 
   val q197CalibrationSql: String =
-    s"""WITH h AS (
-      |  SELECT n_chars AS sc, COUNT(*) AS n,
-      |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS pos
-      |  FROM documents GROUP BY n_chars),
-      |b AS (
-      |  SELECT sc, n, pos,
-      |    CAST(MIN(sc) OVER () AS BIGINT) AS mn,
-      |    CAST(MAX(sc) OVER () AS BIGINT) AS mx
-      |  FROM h),
+    s"""WITH $lengthHistogramSql,
       |q AS (
       |  SELECT (sc - mn) * 10 // (mx - mn + 1) AS bin, n, pos,
-      |    n * ${Parity.quantSql("CASE WHEN mx - mn > 0" +
-                                 " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
-                                 " ELSE 0.0 END", 9)}
+      |    n * ${Parity.quantSql(pHatSql, 9)}
       |        AS pq
       |  FROM b),
       |a AS (
@@ -402,22 +421,11 @@ object ScoreEvalQueries {
     * span degenerates to bin 0 with zero reliability — still defined. */
   def q276BrierMurphy(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val h = Tables.documents(s, dir)
-      .groupBy(col("n_chars").as("sc"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("source") === "src0", 1L).otherwise(0L)).as("pos"))
     val wAll = Window.partitionBy()
-    val withB = h
-      .withColumn("mn", min(col("sc")).over(wAll))
-      .withColumn("mx", max(col("sc")).over(wAll))
-    val span = col("mx") - col("mn")
-    val phat = when(span > 0L,
-      (col("sc") - col("mn")).cast("double") / span.cast("double"))
-      .otherwise(lit(0.0))
-    val q = withB.select(
+    val q = lengthHistogram(s, dir).select(
       expr("(sc - mn) * 10 div (mx - mn + 1)").as("bin"),
       col("n"), col("pos"),
-      Parity.quant(phat, 1e9).as("pq"))
+      Parity.quant(pHat, 1e9).as("pq"))
     // raw Brier in 1e-18 units: Σ pos·(pq−1e9)² + (n−pos)·pq²
     val bnum = (col("pos").cast(dec) *
         ((col("pq") - lit(1000000000L)).cast(dec) *
@@ -459,21 +467,10 @@ object ScoreEvalQueries {
   }
 
   val q276BrierMurphySql: String =
-    s"""WITH h AS (
-      |  SELECT n_chars AS sc, COUNT(*) AS n,
-      |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS pos
-      |  FROM documents GROUP BY n_chars),
-      |b AS (
-      |  SELECT sc, n, pos,
-      |    CAST(MIN(sc) OVER () AS BIGINT) AS mn,
-      |    CAST(MAX(sc) OVER () AS BIGINT) AS mx
-      |  FROM h),
+    s"""WITH $lengthHistogramSql,
       |q AS (
       |  SELECT (sc - mn) * 10 // (mx - mn + 1) AS bin, n, pos,
-      |    ${Parity.quantSql("CASE WHEN mx - mn > 0" +
-                             " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
-                             " ELSE 0.0 END", 9)}
+      |    ${Parity.quantSql(pHatSql, 9)}
       |        AS pq
       |  FROM b),
       |bins AS (
@@ -536,25 +533,13 @@ object ScoreEvalQueries {
     * Scale: the q197 plan — one map-side length census, a tiny
     * unpartitioned window over ≤|lengths| rows, one sum agg. */
   def q342SpiegelhalterZ(s: SparkSession, dir: String): DataFrame = {
-    val h = Tables.documents(s, dir)
-      .groupBy(col("n_chars").as("sc"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("source") === "src0", 1L).otherwise(0L)).as("pos"))
-    val wAll = Window.partitionBy()
-    val withB = h
-      .withColumn("mn", min(col("sc")).over(wAll))
-      .withColumn("mx", max(col("sc")).over(wAll))
-    val span = col("mx") - col("mn")
-    val phat = when(span > 0L,
-      (col("sc") - col("mn")).cast("double") / span.cast("double"))
-      .otherwise(lit(0.0))
-    val p = Parity.fix(phat, 9)
+    val p = Parity.fix(pHat, 9)
     val oneM2p = lit(1.0) - lit(2.0) * p
     val num = oneM2p * (col("pos").cast("double") -
       col("n").cast("double") * p)
     val den = col("n").cast("double") * (oneM2p * oneM2p) * p *
       (lit(1.0) - p)
-    val m = withB
+    val m = lengthHistogram(s, dir)
       .select(col("n"),
         Parity.quant(num, 1e9).as("t9"),
         Parity.quant(den, 1e9).as("d9"))
@@ -572,21 +557,10 @@ object ScoreEvalQueries {
   }
 
   val q342SpiegelhalterZSql: String =
-    s"""WITH h AS (
-      |  SELECT n_chars AS sc, COUNT(*) AS n,
-      |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS pos
-      |  FROM documents GROUP BY n_chars),
-      |b AS (
-      |  SELECT sc, n, pos,
-      |    CAST(MIN(sc) OVER () AS BIGINT) AS mn,
-      |    CAST(MAX(sc) OVER () AS BIGINT) AS mx
-      |  FROM h),
+    s"""WITH $lengthHistogramSql,
       |q AS (
       |  SELECT n, pos,
-      |    ${Parity.quantSql("CASE WHEN mx - mn > 0" +
-                             " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
-                             " ELSE 0.0 END", 9)}
+      |    ${Parity.quantSql(pHatSql, 9)}
       |        / 1e9 AS p
       |  FROM b),
       |t AS (
@@ -634,25 +608,14 @@ object ScoreEvalQueries {
     * Scale: one length census, one tiny window over it, a ≤10-group
     * agg. 1 row. */
   def q381HosmerLemeshow(s: SparkSession, dir: String): DataFrame = {
-    val h = Tables.documents(s, dir)
-      .groupBy(col("n_chars").as("sc"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("source") === "src0", 1L).otherwise(0L)).as("pos"))
-    val wAll = Window.partitionBy()
     val wCum = Window.orderBy("sc")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val withB = h
-      .withColumn("mn", min(col("sc")).over(wAll))
-      .withColumn("mx", max(col("sc")).over(wAll))
-      .withColumn("nt", sum(col("n")).over(wAll))
+    val withB = lengthHistogram(s, dir)
+      .withColumn("nt", sum(col("n")).over(Window.partitionBy()))
       .withColumn("cumb", coalesce(sum(col("n")).over(wCum), lit(0L)))
-    val span = col("mx") - col("mn")
-    val phat = when(span > 0L,
-      (col("sc") - col("mn")).cast("double") / span.cast("double"))
-      .otherwise(lit(0.0))
     val g = withB
       .select(expr("(cumb * 10) div nt").as("dec"), col("n"), col("pos"),
-        (col("n") * Parity.quant(phat, 1e9)).as("pq"),
+        (col("n") * Parity.quant(pHat, 1e9)).as("pq"),
         col("nt"))
       .groupBy("dec")
       .agg(sum(col("n")).as("ng"), sum(col("pos")).as("og"),
@@ -679,27 +642,17 @@ object ScoreEvalQueries {
   }
 
   val q381HosmerLemeshowSql: String =
-    s"""WITH h AS (
-      |  SELECT n_chars AS sc, COUNT(*) AS n,
-      |    CAST(SUM(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS pos
-      |  FROM documents GROUP BY n_chars),
-      |b AS (
-      |  SELECT sc, n, pos,
-      |    CAST(MIN(sc) OVER () AS BIGINT) AS mn,
-      |    CAST(MAX(sc) OVER () AS BIGINT) AS mx,
-      |    CAST(SUM(n) OVER () AS BIGINT) AS nt,
+    s"""WITH $lengthHistogramSql,
+      |bt AS (
+      |  SELECT *, CAST(SUM(n) OVER () AS BIGINT) AS nt,
       |    CAST(COALESCE(SUM(n) OVER (ORDER BY sc
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
       |      AS BIGINT) AS cumb
-      |  FROM h),
+      |  FROM b),
       |q AS (
       |  SELECT (cumb * 10) // nt AS dec, n, pos, nt,
-      |    n * ${Parity.quantSql("CASE WHEN mx - mn > 0" +
-                                 " THEN CAST(sc - mn AS DOUBLE) / CAST(mx - mn AS DOUBLE)" +
-                                 " ELSE 0.0 END", 9)}
-      |      AS pq
-      |  FROM b),
+      |    n * ${Parity.quantSql(pHatSql, 9)} AS pq
+      |  FROM bt),
       |g AS (
       |  SELECT dec, CAST(SUM(n) AS BIGINT) AS ng,
       |    CAST(SUM(pos) AS BIGINT) AS og,

@@ -56,6 +56,20 @@ object SeriesStats {
       .filter(col("x").isNotNull)
   }
 
+  /** A day series indexed by `t`, whole days since 1995-01-01 as
+    * int64, first, in place of its `day` date; the frame's other
+    * columns follow in order. [[dayIndexedSql]] is its oracle twin; the
+    * two change together. */
+  private[ops] def dayIndexed(d: DataFrame): DataFrame =
+    d.select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t") +:
+      d.columns.filter(_ != "day").map(col): _*)
+
+  /** The oracle twin of [[dayIndexed]] over relation `rel`; the two
+    * change together. */
+  private[ops] def dayIndexedSql(rel: String): String =
+    "SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT) AS t," +
+      s" * EXCLUDE (day) FROM $rel"
+
   /** The trailing 365 days of a day-indexed frame: the rows whose `t`
     * lies within 365 of the frame's maximum `t`, kept with that `tmax`.
     * The maximum is a one-row aggregate broadcast back in-plan, so no
@@ -115,9 +129,7 @@ object SeriesStats {
     * rank/count consumers read the cut); the only SF-growing stage is
     * the day aggregation. */
   def q206TheilSen(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"))
+    val d = dayIndexed(daily(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
@@ -143,8 +155,7 @@ object SeriesStats {
 
   val q206TheilSenSql: String =
     s"""WITH d AS ($dailySql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dy, b.t - a.t AS dx,
@@ -240,9 +251,7 @@ object SeriesStats {
     * localCheckpoint as q206's (no job at plan-build time), so the one
     * visible plan is a single exact aggregate. */
   def q211KendallTau(s: SparkSession, dir: String): DataFrame = {
-    val d = daily2(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"), col("cnt"))
+    val d = dayIndexed(daily2(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
@@ -269,8 +278,7 @@ object SeriesStats {
 
   val q211KendallTauSql: String =
     s"""WITH d AS ($daily2Sql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev, cnt FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev, cnt ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dx, b.cnt - a.cnt AS dy
@@ -616,9 +624,7 @@ object SeriesStats {
     * fact-sized; windows run on the ≤365-row census. */
   def q403HoeffdingD(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val d = daily2(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"), col("cnt"))
+    val d = dayIndexed(daily2(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val ranked = recent
       .withColumn("r", row_number().over(
@@ -665,10 +671,7 @@ object SeriesStats {
 
   val q403HoeffdingDSql: String =
     s"""WITH daily AS ($daily2Sql),
-      |d AS (
-      |  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT)
-      |      AS t, rev, cnt
-      |  FROM daily),
+      |d AS (${dayIndexedSql("daily")}),
       |recent AS (
       |  SELECT t, rev, cnt ${trailingYearSql("d")}),
       |ranked AS (
@@ -720,9 +723,7 @@ object SeriesStats {
     * Scale: the day census + a 1-row medians broadcast (q242 form) +
     * one map-side-combinable agg. No pair build at all. */
   def q404BlomqvistBeta(s: SparkSession, dir: String): DataFrame = {
-    val d = daily2(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"), col("cnt"))
+    val d = dayIndexed(daily2(s, dir))
     val recent = trailingYear(d).select(col("rev"), col("cnt"))
       .localCheckpoint(eager = false)
     val med = recent.agg(expr("percentile(rev, 0.5)").as("mx"),
@@ -753,10 +754,7 @@ object SeriesStats {
 
   val q404BlomqvistBetaSql: String =
     s"""WITH daily AS ($daily2Sql),
-      |d AS (
-      |  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT)
-      |      AS t, rev, cnt
-      |  FROM daily),
+      |d AS (${dayIndexedSql("daily")}),
       |recent AS (
       |  SELECT rev, cnt ${trailingYearSql("d")}),
       |med AS (

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql,
-  trailingYear, trailingYearSql}
+  dayIndexed, dayIndexedSql, trailingYear, trailingYearSql}
 
 /** Trend / randomness / location tests on the daily order-revenue
   * series — the SeriesStats split (r14, the EventQueries discipline:
@@ -82,9 +82,7 @@ object SeriesTrendTests {
     * Scale: the q206/q211 shape — only the day aggregation scans
     * fact data. */
   def q251OrdinalAssoc(s: SparkSession, dir: String): DataFrame = {
-    val d = daily2(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"), col("cnt"))
+    val d = dayIndexed(daily2(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val pairs = recent.as("a")
       .join(broadcast(recent.as("b")), col("a.t") < col("b.t"))
@@ -115,8 +113,7 @@ object SeriesTrendTests {
 
   val q251OrdinalAssocSql: String =
     s"""WITH d AS ($daily2Sql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev, cnt FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev, cnt ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT b.rev - a.rev AS dx, b.cnt - a.cnt AS dy
@@ -157,9 +154,7 @@ object SeriesTrendTests {
     * Scale: only the day aggregation scans fact data — the q206
     * shape exactly. */
   def q248MannKendall(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"))
+    val d = dayIndexed(daily(s, dir))
     // lazy checkpoint: BOTH consumers (pair build and tie census) read
     // the cut, so the scale-constant window materializes once and the
     // plan's nested-loop budget stays at the single final 1-row join
@@ -202,8 +197,7 @@ object SeriesTrendTests {
       |   - CAST(tie_term AS DOUBLE)) / 18.0)
       | ELSE 0.0 END)""".stripMargin.replace("\n", " ")
     s"""WITH d AS ($dailySql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |sa AS (
        |  SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
@@ -511,9 +505,7 @@ object SeriesTrendTests {
     * census → ≤67k pairs — scale-constant); one exact percentile over
     * it. */
   def q262HodgesLehmann(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"))
+    val d = dayIndexed(daily(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
@@ -530,8 +522,7 @@ object SeriesTrendTests {
 
   val q262HodgesLehmannSql: String =
     s"""WITH d AS ($dailySql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |p AS (
        |  SELECT a.rev + b.rev AS walsh, a.t = b.t AS diag
@@ -563,9 +554,8 @@ object SeriesTrendTests {
     * the window is calendar-constant). Both consumers of the cut
     * share one lazy checkpoint. */
   def q344SeasonalMk(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        dayofweek(col("day")).cast("long").as("dow"), col("rev"))
+    val d = dayIndexed(daily(s, dir).select(col("day"),
+      dayofweek(col("day")).cast("long").as("dow"), col("rev")))
     val recent = trailingYear(d).select(col("t"), col("dow"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
@@ -611,9 +601,9 @@ object SeriesTrendTests {
       | / SQRT(CAST(sv6 AS DOUBLE) / 1e6)
       | ELSE 0.0 END)""".stripMargin.replace("\n", " ")
     s"""WITH d AS ($dailySql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t,
-       |    CAST(dayofweek(day) + 1 AS BIGINT) AS dow, rev FROM d),
+       |dw AS (SELECT day, CAST(dayofweek(day) + 1 AS BIGINT) AS dow, rev
+       |  FROM d),
+       |dd AS (${dayIndexedSql("dw")}),
        |rc AS (SELECT t, dow, rev ${trailingYearSql("dd")}),
        |sa AS (
        |  SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
@@ -661,9 +651,7 @@ object SeriesTrendTests {
     * (n, k, sd) broadcast picks the rank (q242 form). */
   def q347QnScale(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val d = daily(s, dir)
-      .select(datediff(col("day"), lit("1995-01-01")).cast("long").as("t"),
-        col("rev"))
+    val d = dayIndexed(daily(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
     val pairs = recent.as("a")
@@ -697,8 +685,7 @@ object SeriesTrendTests {
 
   val q347QnScaleSql: String =
     s"""WITH d AS ($dailySql),
-       |dd AS (SELECT CAST(date_diff('day', DATE '1995-01-01', day)
-       |    AS BIGINT) AS t, rev FROM d),
+       |dd AS (${dayIndexedSql("d")}),
        |rc AS (SELECT t, rev ${trailingYearSql("dd")}),
        |meta AS (
        |  SELECT COUNT(*) AS n,

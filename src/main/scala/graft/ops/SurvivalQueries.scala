@@ -21,6 +21,145 @@ import Parity._
   */
 object SurvivalQueries {
 
+  /** Per-user lifetimes, the survival family's shared sample: one row
+    * per user with an event, with `t` = whole hours between the user's
+    * first and last event, `churn` = 1 when the last event lies 12
+    * hours or more before the corpus' last event (else 0: censored),
+    * `cause` = the type of the user's last event, and `nu` = the number
+    * of users. Corpus end and `nu` ride an in-plan 1-row broadcast, so
+    * no driver action runs at build time; columns a caller never reads
+    * are pruned from its plan. [[lifetimesSql]] is its oracle twin; the
+    * two change together. */
+  private[ops] def lifetimes(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
+    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
+      countDistinct("user_id").as("nu"))
+    e.groupBy("user_id")
+      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"),
+        max(struct(col("ts"), col("event_type"))).as("last_ev"))
+      .crossJoin(broadcast(bounds))
+      .select(col("user_id"),
+        expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
+          " div 3600000000").as("t"),
+        when(unix_micros(col("last_ts")) <=
+          col("end_us") - 12L * 3600L * 1000000L, 1L)
+          .otherwise(0L).as("churn"),
+        col("last_ev.event_type").as("cause"),
+        col("nu"))
+  }
+
+  /** The CTEs `e`, `b` and `peru`, the oracle twin of [[lifetimes]]
+    * (`b` holds corpus end `end_us` and the user count `nu`); the two
+    * change together. */
+  private[ops] val lifetimesSql: String =
+    """e AS (
+      |  SELECT user_id, ts, event_type FROM events
+      |  WHERE user_id IS NOT NULL),
+      |b AS (
+      |  SELECT MAX(epoch_us(ts)) AS end_us, COUNT(DISTINCT user_id) AS nu
+      |  FROM e),
+      |peru AS (
+      |  SELECT user_id,
+      |    CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
+      |      AS BIGINT) AS t,
+      |    CASE WHEN epoch_us(MAX(ts)) <=
+      |      (SELECT end_us - 43200000000 FROM b)
+      |      THEN 1 ELSE 0 END AS churn,
+      |    (MAX({'ts': ts, 'et': event_type})).et AS cause
+      |  FROM e GROUP BY user_id)""".stripMargin
+
+  /** Rows before the current one, and rows up to it, in lifetime order. */
+  private val wPrev = Window.orderBy(col("t"))
+    .rowsBetween(Window.unboundedPreceding, -1)
+  private val wCum = Window.orderBy(col("t"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The one-arm risk table over [[lifetimes]]: per lifetime hour `t`,
+    * churn events `d`, censored users `c`, the user count `nu`, and
+    * `n_risk` = `nu` less every user who churned or was censored at an
+    * earlier hour. The windows run over the ≤|hours| census, never over
+    * users. [[riskTableSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] def riskTable(s: SparkSession, dir: String): DataFrame =
+    lifetimes(s, dir).groupBy("t")
+      .agg(sum(col("churn")).as("d"), sum(lit(1L) - col("churn")).as("c"),
+        max(col("nu")).as("nu"))
+      .withColumn("n_risk",
+        col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
+
+  /** [[lifetimesSql]] then the CTEs `day` and `risk` (`t`, `d`, `c`,
+    * `n_risk`), the oracle twin of [[riskTable]]; the two change
+    * together. */
+  private[ops] val riskTableSql: String =
+    s"""$lifetimesSql,
+      |day AS (
+      |  SELECT t, CAST(SUM(churn) AS BIGINT) AS d,
+      |    CAST(SUM(1 - churn) AS BIGINT) AS c
+      |  FROM peru GROUP BY t),
+      |risk AS (
+      |  SELECT t, d, c,
+      |    (SELECT nu FROM b) - CAST(COALESCE(SUM(d + c) OVER
+      |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+      |      0) AS BIGINT) AS n_risk
+      |  FROM day)""".stripMargin
+
+  /** The two-arm risk table over [[lifetimes]], arms by user id parity
+    * (`g` = 0 or 1): per lifetime hour `t` with a churn event in either
+    * arm, each arm's churn events `d1`/`d2` and censored users
+    * `c1`/`c2`, its user count `nu1`/`nu2`, and its users still at risk
+    * `n1r`/`n2r`. [[armRiskTableSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] def armRiskTable(s: SparkSession, dir: String): DataFrame = {
+    val day = lifetimes(s, dir)
+      .select(col("t"), col("churn"), pmod(col("user_id"), lit(2L)).as("g"))
+      .groupBy("t")
+      .agg(sum(when(col("g") === 0, col("churn")).otherwise(0L)).as("d1"),
+        sum(when(col("g") === 0, lit(1L) - col("churn")).otherwise(0L)).as("c1"),
+        sum(when(col("g") === 1, col("churn")).otherwise(0L)).as("d2"),
+        sum(when(col("g") === 1, lit(1L) - col("churn")).otherwise(0L)).as("c2"))
+    val wAll = Window.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    day
+      .withColumn("nu1", sum(col("d1") + col("c1")).over(wAll))
+      .withColumn("nu2", sum(col("d2") + col("c2")).over(wAll))
+      .withColumn("n1r", col("nu1") -
+        coalesce(sum(col("d1") + col("c1")).over(wPrev), lit(0L)))
+      .withColumn("n2r", col("nu2") -
+        coalesce(sum(col("d2") + col("c2")).over(wPrev), lit(0L)))
+      .filter(col("d1") + col("d2") > 0)
+  }
+
+  /** [[lifetimesSql]] then the CTEs `day` and `risk` (`t`, `d1`, `d2`,
+    * `nu1`, `nu2`, `n1r`, `n2r`), the oracle twin of [[armRiskTable]];
+    * the two change together. */
+  private[ops] val armRiskTableSql: String =
+    s"""$lifetimesSql,
+      |day AS (
+      |  SELECT t,
+      |    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN churn ELSE 0 END)
+      |      AS BIGINT) AS d1,
+      |    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 - churn ELSE 0 END)
+      |      AS BIGINT) AS c1,
+      |    CAST(SUM(CASE WHEN user_id % 2 = 1 THEN churn ELSE 0 END)
+      |      AS BIGINT) AS d2,
+      |    CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 - churn ELSE 0 END)
+      |      AS BIGINT) AS c2
+      |  FROM peru GROUP BY t),
+      |risk AS (
+      |  SELECT t, d1, d2,
+      |    CAST(SUM(d1 + c1) OVER () AS BIGINT) AS nu1,
+      |    CAST(SUM(d2 + c2) OVER () AS BIGINT) AS nu2,
+      |    CAST(SUM(d1 + c1) OVER () AS BIGINT)
+      |      - CAST(COALESCE(SUM(d1 + c1) OVER (ORDER BY t
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |        AS BIGINT) AS n1r,
+      |    CAST(SUM(d2 + c2) OVER () AS BIGINT)
+      |      - CAST(COALESCE(SUM(d2 + c2) OVER (ORDER BY t
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |        AS BIGINT) AS n2r
+      |  FROM day
+      |  QUALIFY d1 + d2 > 0)""".stripMargin
+
   /** L113 Kaplan–Meier survival of user lifetimes — the
     * retention-analytics estimator under RIGHT CENSORING: lifetime =
     * whole HOURS between a user's first and last event; a user whose
@@ -52,27 +191,6 @@ object SurvivalQueries {
     * ride an in-plan 1-row broadcast (the q242 form, backported r12 —
     * no build-time driver action). */
   def q175KaplanMeier(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
-      countDistinct("user_id").as("nu"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        col("nu"))
-    val day = peru.groupBy("t")
-      .agg(sum(col("churn")).as("d"), sum(lit(1L) - col("churn")).as("c"),
-        max(col("nu")).as("nu"))
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRisk = day.withColumn("n_risk",
-      col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
     val dead = max(when(col("d") >= col("n_risk"), 1L).otherwise(0L)).over(wCum)
     // r15 fuzz find (seed 122): each libm ln carries ~1-ulp cross-engine
     // drift, and the SUMMED drift once landed within an ulp of a 4dp
@@ -81,7 +199,7 @@ object SurvivalQueries {
     val lnTerm9 = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
       .otherwise(Parity.quant(log((col("n_risk") - col("d")).cast("double") /
         col("n_risk").cast("double")), 1e9))
-    withRisk
+    riskTable(s, dir)
       .withColumn("dead", dead)
       .withColumn("ln_s", sum(lnTerm9).over(wCum).cast("double") / 1e9)
       .select(col("t").as("t_hours"), col("n_risk"), col("d").as("n_churn"),
@@ -92,26 +210,7 @@ object SurvivalQueries {
   }
 
   val q175KaplanMeierSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT epoch_us(fin) - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t, CAST(SUM(churn) AS BIGINT) AS d,
-      |    CAST(SUM(1 - churn) AS BIGINT) AS c
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d, c,
-      |    (SELECT nu FROM b) - CAST(COALESCE(SUM(d + c) OVER
-      |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |      0) AS BIGINT) AS n_risk
-      |  FROM day),
+    s"""WITH $riskTableSql,
       |cum AS (
       |  SELECT t, n_risk, d, c,
       |    MAX(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER
@@ -147,32 +246,10 @@ object SurvivalQueries {
     * Scale: one keyed per-user agg, a ≤|days|-row census + two tiny
     * windows — the q175 shape exactly. */
   def q200NelsonAalen(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    // in-plan 1-row bounds broadcast (q242 form, backported r12)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
-      countDistinct("user_id").as("nu"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        col("nu"))
-    val day = peru.groupBy("t")
-      .agg(sum(col("churn")).as("d"), sum(lit(1L) - col("churn")).as("c"),
-        max(col("nu")).as("nu"))
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRisk = day.withColumn("n_risk",
-      col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
     val incQ = when(col("d") === 0L || col("n_risk") <= 0L, lit(0L))
       .otherwise(Parity.quant(col("d").cast("double") /
         col("n_risk").cast("double"), 1e9))
-    withRisk
+    riskTable(s, dir)
       .withColumn("hq", sum(incQ).over(wCum))
       .select(col("t").as("t_hours"), col("n_risk"), col("d").as("n_churn"),
         col("c").as("n_censored"),
@@ -183,26 +260,7 @@ object SurvivalQueries {
   }
 
   val q200NelsonAalenSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT epoch_us(fin) - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t, CAST(SUM(churn) AS BIGINT) AS d,
-      |    CAST(SUM(1 - churn) AS BIGINT) AS c
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d, c,
-      |    (SELECT nu FROM b) - CAST(COALESCE(SUM(d + c) OVER
-      |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |      0) AS BIGINT) AS n_risk
-      |  FROM day),
+    s"""WITH $riskTableSql,
       |q AS (
       |  SELECT t, n_risk, d, c,
       |    CASE WHEN d = 0 OR n_risk <= 0 THEN 0
@@ -239,35 +297,7 @@ object SurvivalQueries {
     * Scale: one per-user keyed agg over the fact scan; everything
     * after is the bounded day census. */
   def q224LogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    // in-plan 1-row bounds broadcast (q242 form, backported r12)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        pmod(col("user_id"), lit(2L)).as("g"))
-    val day = peru.groupBy("t")
-      .agg(sum(when(col("g") === 0, col("churn")).otherwise(0L)).as("d1"),
-        sum(when(col("g") === 0, lit(1L) - col("churn")).otherwise(0L)).as("c1"),
-        sum(when(col("g") === 1, col("churn")).otherwise(0L)).as("d2"),
-        sum(when(col("g") === 1, lit(1L) - col("churn")).otherwise(0L)).as("c2"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = day
-      .withColumn("nu1", sum(col("d1") + col("c1")).over(wAll))
-      .withColumn("nu2", sum(col("d2") + col("c2")).over(wAll))
-      .withColumn("n1r", col("nu1") -
-        coalesce(sum(col("d1") + col("c1")).over(wPrev), lit(0L)))
-      .withColumn("n2r", col("nu2") -
-        coalesce(sum(col("d2") + col("c2")).over(wPrev), lit(0L)))
-      .filter(col("d1") + col("d2") > 0)
+    val risk = armRiskTable(s, dir)
     val n = (col("n1r") + col("n2r")).cast("double")
     val d = (col("d1") + col("d2")).cast("double")
     val p1 = col("n1r").cast("double") / n
@@ -287,37 +317,7 @@ object SurvivalQueries {
   }
 
   val q224LogRankSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(epoch_us(ts)) AS end_us FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT end_us - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn,
-      |    user_id % 2 AS g
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t,
-      |    CAST(SUM(CASE WHEN g = 0 THEN churn ELSE 0 END) AS BIGINT) AS d1,
-      |    CAST(SUM(CASE WHEN g = 0 THEN 1 - churn ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(SUM(CASE WHEN g = 1 THEN churn ELSE 0 END) AS BIGINT) AS d2,
-      |    CAST(SUM(CASE WHEN g = 1 THEN 1 - churn ELSE 0 END) AS BIGINT) AS c2
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d1, d2,
-      |    CAST(SUM(d1 + c1) OVER () AS BIGINT) AS nu1,
-      |    CAST(SUM(d2 + c2) OVER () AS BIGINT) AS nu2,
-      |    CAST(SUM(d1 + c1) OVER () AS BIGINT)
-      |      - CAST(COALESCE(SUM(d1 + c1) OVER (ORDER BY t
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS BIGINT) AS n1r,
-      |    CAST(SUM(d2 + c2) OVER () AS BIGINT)
-      |      - CAST(COALESCE(SUM(d2 + c2) OVER (ORDER BY t
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS BIGINT) AS n2r
-      |  FROM day),
+    s"""WITH $armRiskTableSql,
       |terms AS (
       |  SELECT nu1, nu2, d1,
       |    ${Parity.quantSql("CAST(d1 + d2 AS DOUBLE)" +
@@ -331,7 +331,7 @@ object SurvivalQueries {
                              " / (CAST(n1r + n2r AS DOUBLE) - 1.0)" +
                              " ELSE 0.0 END", 6)}
       |      AS vq
-      |  FROM risk WHERE d1 + d2 > 0),
+      |  FROM risk),
       |g AS (
       |  SELECT MAX(nu1) AS n_users_g0, MAX(nu2) AS n_users_g1,
       |    CAST(SUM(d1) AS BIGINT) AS o1,
@@ -408,27 +408,6 @@ object SurvivalQueries {
     * Scale: the q175 shape — per-user agg, lifetime census,
     * census-sized cumulative windows. */
   def q242KmGreenwood(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
-      countDistinct("user_id").as("nu"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        col("nu"))
-    val day = peru.groupBy("t")
-      .agg(sum(col("churn")).as("d"), sum(lit(1L) - col("churn")).as("c"),
-        max(col("nu")).as("nu"))
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRisk = day.withColumn("n_risk",
-      col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
     val dead = max(when(col("d") >= col("n_risk"), 1L).otherwise(0L)).over(wCum)
     // r15 fuzz find (seed 122): each libm ln carries ~1-ulp cross-engine
     // drift, and the SUMMED drift once landed within an ulp of a 4dp
@@ -442,7 +421,7 @@ object SurvivalQueries {
         (col("n_risk").cast("double") * (col("n_risk") - col("d"))), 1e9))
     val surv = exp(col("ln_s"))
     val se = surv * sqrt(col("gw").cast("double") / 1e9)
-    withRisk
+    riskTable(s, dir)
       .withColumn("dead", dead)
       .withColumn("ln_s", sum(lnTerm9).over(wCum).cast("double") / 1e9)
       .withColumn("gw", sum(gwTerm).over(wCum))
@@ -461,26 +440,7 @@ object SurvivalQueries {
   }
 
   val q242KmGreenwoodSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT epoch_us(fin) - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t, CAST(SUM(churn) AS BIGINT) AS d,
-      |    CAST(SUM(1 - churn) AS BIGINT) AS c
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d, c,
-      |    (SELECT nu FROM b) - CAST(COALESCE(SUM(d + c) OVER
-      |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |      0) AS BIGINT) AS n_risk
-      |  FROM day),
+    s"""WITH $riskTableSql,
       |cum AS (
       |  SELECT t, n_risk, d, c,
       |    MAX(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER
@@ -564,33 +524,12 @@ object SurvivalQueries {
     * day census, tiny windows); the τ-explode multiplies only the
     * ≤|days| census ×3. */
   def q369Rmst(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
-      countDistinct("user_id").as("nu"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        col("nu"))
-    val day = peru.groupBy("t")
-      .agg(sum(col("churn")).as("d"), sum(lit(1L) - col("churn")).as("c"),
-        max(col("nu")).as("nu"))
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRisk = day.withColumn("n_risk",
-      col("nu") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
     val dead = max(when(col("d") >= col("n_risk"), 1L).otherwise(0L))
       .over(wCum)
     val lnTerm9 = when(col("d") === 0 || col("d") >= col("n_risk"), lit(0L))
       .otherwise(Parity.quant(log((col("n_risk") - col("d")).cast("double") /
         col("n_risk").cast("double")), 1e9))
-    val km = withRisk
+    val km = riskTable(s, dir)
       .withColumn("dead", dead)
       .withColumn("ln_s", sum(lnTerm9).over(wCum).cast("double") / 1e9)
       .select(col("t"),
@@ -615,7 +554,7 @@ object SurvivalQueries {
         // exact 4-dec rational -> the double cast is deterministic;
         // emitted as DOUBLE so the driver hasher sees one dtype
         .cast("double").as("rmst_hours"))
-    val naive = peru
+    val naive = lifetimes(s, dir)
       .select(col("t"), col("nu"),
         explode(array(lit(660L), lit(690L), lit(720L))).as("tau"))
       .groupBy("tau")
@@ -629,26 +568,7 @@ object SurvivalQueries {
   }
 
   val q369RmstSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT epoch_us(fin) - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t, CAST(SUM(churn) AS BIGINT) AS d,
-      |    CAST(SUM(1 - churn) AS BIGINT) AS c
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d, c,
-      |    (SELECT nu FROM b) - CAST(COALESCE(SUM(d + c) OVER
-      |      (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |      0) AS BIGINT) AS n_risk
-      |  FROM day),
+    s"""WITH $riskTableSql,
       |cum AS (
       |  SELECT t, n_risk, d,
       |    MAX(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER
@@ -711,31 +631,13 @@ object SurvivalQueries {
     * Scale: the q175 shape — per-user agg, ≤|days| census, tiny
     * windows; the cause split adds one max() to the user agg. */
   def q373AalenJohansen(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"),
-      countDistinct("user_id").as("nu"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"),
-        max(struct(col("ts"), col("event_type"))).as("last_ev"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        col("last_ev.event_type").as("cause"),
-        col("nu"))
-    val day = peru.groupBy("t")
+    val day = lifetimes(s, dir).groupBy("t")
       .agg(sum(when(col("churn") === 1L &&
           col("cause") === "purchase", 1L).otherwise(0L)).as("dp"),
         sum(when(col("churn") === 1L &&
           col("cause") =!= "purchase", 1L).otherwise(0L)).as("dq"),
         sum(lit(1L) - col("churn")).as("c"),
         max(col("nu")).as("nu"))
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val d = col("dp") + col("dq")
     val withRisk = day.withColumn("n_risk",
       col("nu") - coalesce(sum(d + col("c")).over(wPrev), lit(0L)))
@@ -772,18 +674,7 @@ object SurvivalQueries {
   }
 
   val q373AalenJohansenSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts, event_type FROM events
-      |  WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(ts) AS fin, COUNT(DISTINCT user_id) AS nu FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT epoch_us(fin) - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn,
-      |    (MAX({'ts': ts, 'et': event_type})).et AS cause
-      |  FROM e GROUP BY user_id),
+    s"""WITH $lifetimesSql,
       |day AS (
       |  SELECT t,
       |    CAST(SUM(CASE WHEN churn = 1 AND cause = 'purchase'
@@ -868,34 +759,7 @@ object SurvivalQueries {
     * rows; unpartitioned windows run over the census only (q224's
     * documented shape); 3-row output. */
   def q384WeightedLogRank(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
-    val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"))
-    val peru = e.groupBy("user_id")
-      .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-      .crossJoin(broadcast(bounds))
-      .select(expr("(unix_micros(last_ts) - unix_micros(first_ts))" +
-        " div 3600000000").as("t"),
-        when(unix_micros(col("last_ts")) <=
-          col("end_us") - 12L * 3600L * 1000000L, 1L)
-          .otherwise(0L).as("churn"),
-        pmod(col("user_id"), lit(2L)).as("g"))
-    val day = peru.groupBy("t")
-      .agg(sum(when(col("g") === 0, col("churn")).otherwise(0L)).as("d1"),
-        sum(when(col("g") === 0, lit(1L) - col("churn")).otherwise(0L)).as("c1"),
-        sum(when(col("g") === 1, col("churn")).otherwise(0L)).as("d2"),
-        sum(when(col("g") === 1, lit(1L) - col("churn")).otherwise(0L)).as("c2"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val wPrev = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = day
-      .withColumn("nu1", sum(col("d1") + col("c1")).over(wAll))
-      .withColumn("nu2", sum(col("d2") + col("c2")).over(wAll))
-      .withColumn("n1r", col("nu1") -
-        coalesce(sum(col("d1") + col("c1")).over(wPrev), lit(0L)))
-      .withColumn("n2r", col("nu2") -
-        coalesce(sum(col("d2") + col("c2")).over(wPrev), lit(0L)))
-      .filter(col("d1") + col("d2") > 0)
+    val risk = armRiskTable(s, dir)
       .withColumn("method", explode(array(
         lit("gehan"), lit("logrank"), lit("tarone_ware"))))
     val n = (col("n1r") + col("n2r")).cast("double")
@@ -928,37 +792,7 @@ object SurvivalQueries {
   }
 
   val q384WeightedLogRankSql: String =
-    s"""WITH e AS (
-      |  SELECT user_id, ts FROM events WHERE user_id IS NOT NULL),
-      |b AS (SELECT MAX(epoch_us(ts)) AS end_us FROM e),
-      |peru AS (
-      |  SELECT CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 3600000000
-      |      AS BIGINT) AS t,
-      |    CASE WHEN epoch_us(MAX(ts)) <=
-      |      (SELECT end_us - 43200000000 FROM b)
-      |      THEN 1 ELSE 0 END AS churn,
-      |    user_id % 2 AS g
-      |  FROM e GROUP BY user_id),
-      |day AS (
-      |  SELECT t,
-      |    CAST(SUM(CASE WHEN g = 0 THEN churn ELSE 0 END) AS BIGINT) AS d1,
-      |    CAST(SUM(CASE WHEN g = 0 THEN 1 - churn ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(SUM(CASE WHEN g = 1 THEN churn ELSE 0 END) AS BIGINT) AS d2,
-      |    CAST(SUM(CASE WHEN g = 1 THEN 1 - churn ELSE 0 END) AS BIGINT) AS c2
-      |  FROM peru GROUP BY t),
-      |risk AS (
-      |  SELECT t, d1, d2,
-      |    CAST(SUM(d1 + c1) OVER () AS BIGINT) AS nu1,
-      |    CAST(SUM(d2 + c2) OVER () AS BIGINT) AS nu2,
-      |    CAST(SUM(d1 + c1) OVER () AS BIGINT)
-      |      - CAST(COALESCE(SUM(d1 + c1) OVER (ORDER BY t
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS BIGINT) AS n1r,
-      |    CAST(SUM(d2 + c2) OVER () AS BIGINT)
-      |      - CAST(COALESCE(SUM(d2 + c2) OVER (ORDER BY t
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS BIGINT) AS n2r
-      |  FROM day),
+    s"""WITH $armRiskTableSql,
       |m AS (
       |  SELECT r.*, mm.method,
       |    CASE mm.method
@@ -966,8 +800,7 @@ object SurvivalQueries {
       |      WHEN 'gehan' THEN CAST(n1r + n2r AS DOUBLE) / (nu1 + nu2)
       |      ELSE SQRT(CAST(n1r + n2r AS DOUBLE) / (nu1 + nu2)) END AS w
       |  FROM risk r CROSS JOIN
-      |    (VALUES ('gehan'), ('logrank'), ('tarone_ware')) mm(method)
-      |  WHERE r.d1 + r.d2 > 0),
+      |    (VALUES ('gehan'), ('logrank'), ('tarone_ware')) mm(method)),
       |terms AS (
       |  SELECT method, nu1, nu2, d1,
       |    ${Parity.quantSql("w * (CAST(d1 AS DOUBLE) - CAST(d1 + d2 AS DOUBLE)" +

@@ -1017,8 +1017,8 @@ class PlanShapeSpec extends SparkSpec {
   // an identical argument (q354's documented rule) is exempt because
   // it is not accumulated. Offline twin: scripts/libm_audit.py;
   // adjudication table in COVERAGE.md.
-  private val libmRe = ("""\b(ln|log|log10|log2|log1p|exp|expm1|sin|cos|""" +
-    """tan|asin|acos|atan|atan2|sinh|cosh|tanh|pow|power|cbrt)\s*\(""").r
+  private val libmRe = ("""(?i)\b(ln|log|log10|log2|log1p|exp|expm1|sin|""" +
+    """cos|tan|asin|acos|atan|atan2|sinh|cosh|tanh|pow|power|cbrt)\s*\(""").r
   private val quantRe =
     """(?i)floor\s*\(|Parity\.(?:quant|fix)(?:Sql)?\s*\(""".r
 
@@ -1249,6 +1249,10 @@ class PlanShapeSpec extends SparkSpec {
     val rawSql = """      |SELECT SUM(ln(CAST(x AS DOUBLE))) AS t"""
     assert(libmOffenders("ops/Planted.scala", rawSql).nonEmpty,
       "a raw libm term under a SQL SUM must be flagged")
+    // upper-case SQL spellings count too, as in scripts/libm_audit.py
+    val upperSql = """      |SELECT SUM(LN(CAST(x AS DOUBLE))) AS t"""
+    assert(libmOffenders("ops/Planted.scala", upperSql).nonEmpty,
+      "an upper-case raw libm term under a SQL SUM must be flagged")
     val twinSql = rawSql.replace("ln(CAST(x AS DOUBLE))",
       """${Parity.quantSql("ln(CAST(x AS DOUBLE))", 9)}""")
     assert(libmOffenders("ops/Planted.scala", twinSql).isEmpty,
