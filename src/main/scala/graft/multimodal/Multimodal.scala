@@ -60,18 +60,30 @@ object Multimodal {
     * One `init` per partition (where a real codec/model would load),
     * then a streaming pass over rows — the batch shape a 1000-executor
     * cluster needs. The kernel itself is a STUB (byte-sum "feature"). */
-  def decodePartitions(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema.add("feature_sum", LongType).add("n_bytes", IntegerType)
+  def decodePartitions(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol,
+      "feature_sum" -> LongType, "n_bytes" -> IntegerType) { bytes =>
+      // STUB kernel: sum of bytes stands in for decode+featurize
+      var s = 0L; var i = 0
+      while (i < bytes.length) { s += bytes(i) & 0xff; i += 1 }
+      Seq[Any](s, bytes.length)
+    }
+
+  /** The per-partition payload scaffold of the row-decode operators:
+    * appends `fields` to `df`'s schema and, in one `mapPartitions`
+    * pass, hands each row's `payloadCol` bytes to `kernel`, whose
+    * values fill the new fields in order. A real codec would load
+    * once per partition, above the row loop. */
+  private def appendDecoded(df: DataFrame, payloadCol: String,
+      fields: (String, DataType)*)(kernel: Array[Byte] => Seq[Any])
+      : DataFrame = {
+    val schema = fields.foldLeft(df.schema) { case (st, (n, t)) => st.add(n, t) }
     val idx = df.schema.fieldIndex(payloadCol)
     val enc = org.apache.spark.sql.Encoders.row(schema)
     df.mapPartitions { rows =>
-      // real codec: val codec = Codec.load() — once per partition
       rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        // STUB kernel: sum of bytes stands in for decode+featurize
-        var s = 0L; var i = 0
-        while (i < bytes.length) { s += bytes(i) & 0xff; i += 1 }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ s :+ bytes.length)
+        org.apache.spark.sql.Row.fromSeq(
+          r.toSeq ++ kernel(r.getAs[Array[Byte]](idx)))
       }
     }(enc)
   }
@@ -82,26 +94,16 @@ object Multimodal {
     * (wrong kind, corrupt bytes) yield nulls instead of failing the
     * task. Same partition-batched shape as [[decodePartitions]] — a
     * heavier codec would hoist its init above the row loop. */
-  def decodeImages(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema
-      .add("img_width", IntegerType).add("img_height", IntegerType)
-      .add("img_bands", IntegerType)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val dims: Seq[Any] =
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            if (img == null) Seq(null, null, null)
-            else Seq(img.getWidth, img.getHeight, img.getRaster.getNumBands)
-          } catch { case _: Exception => Seq(null, null, null) }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ dims)
-      }
-    }(enc)
-  }
+  def decodeImages(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol, "img_width" -> IntegerType,
+      "img_height" -> IntegerType, "img_bands" -> IntegerType) { bytes =>
+      try {
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(bytes))
+        if (img == null) Seq(null, null, null)
+        else Seq(img.getWidth, img.getHeight, img.getRaster.getNumBands)
+      } catch { case _: Exception => Seq(null, null, null) }
+    }
 
   /** REAL image resize via the JDK (`java.awt` bilinear draw +
     * `javax.imageio` re-encode): appends `resized` (PNG bytes at
@@ -109,36 +111,29 @@ object Multimodal {
     * partition-batched shape as [[decodeImages]]; the Graphics2D
     * objects are per-row but cheap, a heavier codec would pool them
     * per partition. */
-  def resizeImages(df: DataFrame, payloadCol: String, w: Int, h: Int): DataFrame = {
-    val schema = df.schema.add("resized", BinaryType)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val out: Any =
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            if (img == null) null
-            else {
-              val scaled = new java.awt.image.BufferedImage(w, h,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = scaled.createGraphics()
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, w, h, null)
-              g.dispose()
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(scaled, "png", bos)
-              bos.toByteArray
-            }
-          } catch { case _: Exception => null }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
-  }
+  def resizeImages(df: DataFrame, payloadCol: String, w: Int, h: Int): DataFrame =
+    appendDecoded(df, payloadCol, "resized" -> BinaryType) { bytes =>
+      val out: Any =
+        try {
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(bytes))
+          if (img == null) null
+          else {
+            val scaled = new java.awt.image.BufferedImage(w, h,
+              java.awt.image.BufferedImage.TYPE_INT_RGB)
+            val g = scaled.createGraphics()
+            g.setRenderingHint(
+              java.awt.RenderingHints.KEY_INTERPOLATION,
+              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+            g.drawImage(img, 0, 0, w, h, null)
+            g.dispose()
+            val bos = new java.io.ByteArrayOutputStream()
+            javax.imageio.ImageIO.write(scaled, "png", bos)
+            bos.toByteArray
+          }
+        } catch { case _: Exception => null }
+      Seq(out)
+    }
 
   /** REAL perceptual difference hash (dHash): decode → 9×8 grayscale
     * bilinear downscale → 64 horizontal-gradient bits packed into one
@@ -150,84 +145,70 @@ object Multimodal {
     * Appends `dhash` (LongType, null for non-decodable payloads).
     * (Public technique: the dHash of Krawetz's "Kind of Like That",
     * the standard cheap perceptual fingerprint.) */
-  def dHashImages(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema.add("dhash", LongType)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val out: Any =
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            if (img == null) null
-            else {
-              val scaled = new java.awt.image.BufferedImage(9, 8,
-                java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-              val g = scaled.createGraphics()
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, 9, 8, null)
-              g.dispose()
-              val raster = scaled.getRaster
-              var bits = 0L
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) {
-                  val bit =
-                    if (raster.getSample(x, y, 0) <
-                        raster.getSample(x + 1, y, 0)) 1L else 0L
-                  bits = (bits << 1) | bit
-                  x += 1
-                }
-                y += 1
+  def dHashImages(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol, "dhash" -> LongType) { bytes =>
+      val out: Any =
+        try {
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(bytes))
+          if (img == null) null
+          else {
+            val scaled = new java.awt.image.BufferedImage(9, 8,
+              java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+            val g = scaled.createGraphics()
+            g.setRenderingHint(
+              java.awt.RenderingHints.KEY_INTERPOLATION,
+              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+            g.drawImage(img, 0, 0, 9, 8, null)
+            g.dispose()
+            val raster = scaled.getRaster
+            var bits = 0L
+            var y = 0
+            while (y < 8) {
+              var x = 0
+              while (x < 8) {
+                val bit =
+                  if (raster.getSample(x, y, 0) <
+                      raster.getSample(x + 1, y, 0)) 1L else 0L
+                bits = (bits << 1) | bit
+                x += 1
               }
-              bits
+              y += 1
             }
-          } catch { case _: Exception => null }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
-  }
+            bits
+          }
+        } catch { case _: Exception => null }
+      Seq(out)
+    }
 
   /** REAL per-channel feature extraction for images: appends mean R/G/B
     * in [0, 255] (`rgb_mean` array<double>), null for non-images — an
     * actual image statistic, not a stub, via one pixel pass. */
-  def imageRgbStats(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema.add("rgb_mean", ArrayType(DoubleType))
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val out: Any =
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            if (img == null) null
-            else {
-              var sr = 0L; var sg = 0L; var sb = 0L
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) {
-                  val p = img.getRGB(x, y)
-                  sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                  x += 1
-                }
-                y += 1
+  def imageRgbStats(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol, "rgb_mean" -> ArrayType(DoubleType)) { bytes =>
+      val out: Any =
+        try {
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(bytes))
+          if (img == null) null
+          else {
+            var sr = 0L; var sg = 0L; var sb = 0L
+            var y = 0
+            while (y < img.getHeight) {
+              var x = 0
+              while (x < img.getWidth) {
+                val p = img.getRGB(x, y)
+                sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+                x += 1
               }
-              val n = img.getWidth.toLong * img.getHeight
-              Seq(sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+              y += 1
             }
-          } catch { case _: Exception => null }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
-  }
+            val n = img.getWidth.toLong * img.getHeight
+            Seq(sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+          }
+        } catch { case _: Exception => null }
+      Seq(out)
+    }
 
   /** REAL audio decode via `javax.sound.sampled` (ships in the JDK — no
     * external dependency; PCM WAV/AIFF/AU containers): per-partition
@@ -238,51 +219,42 @@ object Multimodal {
     * first. Payloads that are not decodable audio yield nulls instead
     * of failing the task; compressed codecs (mp3/ogg) have no JDK SPI
     * in this environment and so also surface as nulls, by design. */
-  def decodeAudio(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema
-      .add("sample_rate", IntegerType).add("audio_channels", IntegerType)
-      .add("n_frames", LongType).add("duration_sec", DoubleType)
-      .add("rms", DoubleType)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val out: Seq[Any] =
-          try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            val fmt = ais.getFormat
-            val data = ais.readAllBytes()
-            ais.close()
-            val frameSize = fmt.getFrameSize
-            val nFrames =
-              if (frameSize > 0) data.length.toLong / frameSize else 0L
-            val dur =
-              if (fmt.getFrameRate > 0) nFrames / fmt.getFrameRate.toDouble
-              else null
-            // RMS only for the dominant on-disk layout (16-bit signed
-            // PCM); other widths keep metadata but report null level
-            val rms: Any =
-              if (fmt.getSampleSizeInBits == 16 && data.length >= 2) {
-                val big = fmt.isBigEndian
-                var sum = 0.0; var i = 0
-                while (i + 1 < data.length) {
-                  val s =
-                    if (big) ((data(i) << 8) | (data(i + 1) & 0xff)).toShort
-                    else ((data(i + 1) << 8) | (data(i) & 0xff)).toShort
-                  val x = s / 32768.0
-                  sum += x * x
-                  i += 2
-                }
-                math.sqrt(sum / (data.length / 2))
-              } else null
-            Seq(fmt.getSampleRate.toInt, fmt.getChannels, nFrames, dur, rms)
-          } catch { case _: Exception => Seq(null, null, null, null, null) }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ out)
-      }
-    }(enc)
-  }
+  def decodeAudio(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol,
+      "sample_rate" -> IntegerType, "audio_channels" -> IntegerType,
+      "n_frames" -> LongType, "duration_sec" -> DoubleType,
+      "rms" -> DoubleType) { bytes =>
+      try {
+        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        val fmt = ais.getFormat
+        val data = ais.readAllBytes()
+        ais.close()
+        val frameSize = fmt.getFrameSize
+        val nFrames =
+          if (frameSize > 0) data.length.toLong / frameSize else 0L
+        val dur =
+          if (fmt.getFrameRate > 0) nFrames / fmt.getFrameRate.toDouble
+          else null
+        // RMS only for the dominant on-disk layout (16-bit signed
+        // PCM); other widths keep metadata but report null level
+        val rms: Any =
+          if (fmt.getSampleSizeInBits == 16 && data.length >= 2) {
+            val big = fmt.isBigEndian
+            var sum = 0.0; var i = 0
+            while (i + 1 < data.length) {
+              val s =
+                if (big) ((data(i) << 8) | (data(i + 1) & 0xff)).toShort
+                else ((data(i + 1) << 8) | (data(i) & 0xff)).toShort
+              val x = s / 32768.0
+              sum += x * x
+              i += 2
+            }
+            math.sqrt(sum / (data.length / 2))
+          } else null
+        Seq(fmt.getSampleRate.toInt, fmt.getChannels, nFrames, dur, rms)
+      } catch { case _: Exception => Seq(null, null, null, null, null) }
+    }
 
   /** Little-endian u32 at offset `i` (RIFF/AVI sizes). */
   private def u32le(b: Array[Byte], i: Int): Long =
@@ -429,31 +401,21 @@ object Multimodal {
     * never dropped, the [[sampleVideoFrames]] contract). mapPartitions
     * is justified exactly as there — a byte-walk no Expression can
     * host; everything around it stays columnar. */
-  def demuxCensus(df: DataFrame, payloadCol: String): DataFrame = {
-    val schema = df.schema
-      .add("n_frames", IntegerType)
-      .add("payload_bytes", LongType)
-      .add("byte_checksum", LongType)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val frames =
-          if (bytes == null) Vector.empty
-          else try demuxVideoFrames(bytes)
-          catch { case _: Exception => Vector.empty[Array[Byte]] }
-        var (pb, cs) = (0L, 0L)
-        frames.foreach { f =>
-          pb += f.length
-          var k = 0
-          while (k < f.length) { cs += f(k) & 0xffL; k += 1 }
-        }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++
-          Seq(Int.box(frames.length), Long.box(pb), Long.box(cs)))
+  def demuxCensus(df: DataFrame, payloadCol: String): DataFrame =
+    appendDecoded(df, payloadCol, "n_frames" -> IntegerType,
+      "payload_bytes" -> LongType, "byte_checksum" -> LongType) { bytes =>
+      val frames =
+        if (bytes == null) Vector.empty
+        else try demuxVideoFrames(bytes)
+        catch { case _: Exception => Vector.empty[Array[Byte]] }
+      var (pb, cs) = (0L, 0L)
+      frames.foreach { f =>
+        pb += f.length
+        var k = 0
+        while (k < f.length) { cs += f(k) & 0xffL; k += 1 }
       }
-    }(enc)
-  }
+      Seq(Int.box(frames.length), Long.box(pb), Long.box(cs))
+    }
 
   /** STUB featurize: payload → fixed-dim fake embedding (hash-seeded),
     * the shape an encoder model would produce. */

@@ -829,7 +829,6 @@ object AggQueries {
     * agg; the only broadcast is 1 row. Guards: bottom shares of 0
     * (degenerate concentration) → null ratios. */
   def q283Inequality(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val perCust = Tables.orders(s, dir)
       .select(col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("pc"))

@@ -601,7 +601,6 @@ object AttributionQueries {
     * arm agg. Guards: var(X) = 0 → θ undefined → null CUPED columns,
     * raw means survive. */
   def q273Cuped(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
     val bounds = e.agg(max(unix_micros(col("ts"))).as("end_us"))
     val cut = col("end_us") - 14L * 86400L * 1000000L
@@ -616,11 +615,7 @@ object AttributionQueries {
         coalesce(sum(col("xv")), lit(0L)).as("x"))
       .withColumn("arm", pmod(col("user_id"), lit(2L)))
       .localCheckpoint(eager = false)
-    val mom = peru.agg(count(lit(1)).as("nu"),
-      sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-      sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-      sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-      sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+    val mom = peru.agg(count(lit(1)).as("nu"), SeriesStats.pairSums: _*)
     val nD = col("nu").cast("double")
     val vx = col("sxx").cast("double") -
       col("sx").cast("double") * (col("sx").cast("double") / nD)
@@ -724,7 +719,6 @@ object AttributionQueries {
     * control-totals broadcast; the walk is |days| rows. Guards: c₀=0,
     * c₀≥n₀·10/11 (p₁ ≥ 1), or empty test arm → no rows decided. */
   def q314SprtMonitor(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir).filter(col("user_id").isNotNull)
       .select(pmod(col("user_id"), lit(2L)).as("arm"),
         to_date(col("ts")).as("day"),

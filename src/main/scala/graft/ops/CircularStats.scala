@@ -28,7 +28,6 @@ import org.apache.spark.sql.functions._
   * census-row algebra. One fact pass total per query.
   */
 object CircularStats {
-  private val dec = "decimal(38,0)"
 
   /** L342 Rayleigh uniformity test on the annual circle ([PK] Mardia &
     * Jupp §6.3; Rayleigh 1880): per order-YEAR, map each order date to

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 /** Output compaction + clustering — the sink-side discipline that keeps
@@ -31,11 +31,22 @@ object Compaction {
   def writeClustered(df: DataFrame, path: String, sortCols: Seq[String],
       targetRowsPerFile: Long): Int = {
     require(sortCols.nonEmpty, "need at least one clustering column")
+    writeRanges(df, path, sortCols.map(col), targetRowsPerFile)
+  }
+
+  /** The write tail of every clustered sink ([[writeClustered]],
+    * [[ZOrder.writeZOrdered]], [[Hilbert.writeHilbertClustered]]):
+    * count `df`, range-partition it on `keys` into [[filesFor]] files,
+    * sort each file by `keys`, drop the `dropped` key column if one is
+    * given, and write at most `targetRowsPerFile` rows per file to
+    * `path` (overwrite). Returns the file count. */
+  private[ops] def writeRanges(df: DataFrame, path: String, keys: Seq[Column],
+      targetRowsPerFile: Long, dropped: Option[String] = None): Int = {
     val n = df.count()
     val k = filesFor(n, targetRowsPerFile)
-    val cols = sortCols.map(col)
-    df.repartitionByRange(k, cols: _*)
-      .sortWithinPartitions(cols: _*)
+    val sorted = df.repartitionByRange(k, keys: _*)
+      .sortWithinPartitions(keys: _*)
+    dropped.fold(sorted)(c => sorted.drop(c))
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", targetRowsPerFile)
       .parquet(path)

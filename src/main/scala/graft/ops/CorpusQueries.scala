@@ -43,7 +43,6 @@ object CorpusQueries {
     * selection is the allowlisted 1-row count broadcast (q242 form).
     * Nothing touches the pair space; driver state is zero. */
   def q270HeapsLaw(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = Tables.documents(s, dir)
     val toks = d.select(col("doc_id"), size(tokens(col("text")))
       .cast("long").as("nw"))
@@ -67,11 +66,9 @@ object CorpusQueries {
         Parity.quant(log(col("cum_n").cast("double")), 1e9).as("x"),
         Parity.quant(log(col("cum_v").cast("double")), 1e9).as("y"),
         col("cum_n"), col("cum_v"))
-    val g = ck.agg(count(lit(1)).as("m"),
-      sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-      sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-      sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-      max(col("cum_n")).as("n_tokens"), max(col("cum_v")).as("n_vocab"))
+    // syy is pruned: no column below reads it
+    val g = ck.agg(count(lit(1)).as("m"), SeriesStats.pairSums :+
+      max(col("cum_n")).as("n_tokens") :+ max(col("cum_v")).as("n_vocab"): _*)
     val num = col("m").cast(dec) * col("sxy") - col("sx") * col("sy")
     val den = col("m").cast(dec) * col("sxx") - col("sx") * col("sx")
     val beta = num.cast("double") / den.cast("double")
@@ -205,7 +202,6 @@ object CorpusQueries {
     * Scale: one (source, word) hash agg — map-side combinable — then a
     * |sources|-row census; no joins, no windows over fact data. */
   def q277Diversity(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val occ = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("n"))
@@ -279,16 +275,7 @@ object CorpusQueries {
     * no windows. Guards: zero discordance (kT = ΣR²: every doc
     * unanimous) → null Q/p. */
   def q281CochranQ(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = Tables.documents(s, dir)
-      .select(
-        when(col("n_chars") >= 100, 1L).otherwise(0L).as("r1"),
-        when(size(tokens(col("text"))) >= 20, 1L).otherwise(0L).as("r2"),
-        when(arrays_overlap(tokens(col("text")),
-          typedlit(Seq("the", "a", "of", "and", "to", "in", "is", "on"))),
-          1L).otherwise(0L).as("r3"))
-      .withColumn("g", col("r1") + col("r2") + col("r3"))
-    val a = d.agg(count(lit(1)).as("n_docs"),
+    val a = EvalQueries.raters(s, dir).agg(count(lit(1)).as("n_docs"),
       sum(col("r1")).as("c1"), sum(col("r2")).as("c2"),
       sum(col("r3")).as("c3"), sum(col("g")).as("t"),
       sum(col("g") * col("g")).as("sr2"))
@@ -309,15 +296,7 @@ object CorpusQueries {
   }
 
   val q281CochranQSql: String =
-    s"""WITH d AS (
-      |  SELECT
-      |    CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS r1,
-      |    CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
-      |      AS r2,
-      |    CASE WHEN len(list_intersect(string_split(text, ' '),
-      |      ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'on'])) > 0
-      |      THEN 1 ELSE 0 END AS r3
-      |  FROM documents),
+    s"""WITH d AS (${EvalQueries.ratersSql}),
       |a AS (
       |  SELECT COUNT(*) AS n_docs,
       |    CAST(SUM(r1) AS BIGINT) AS c1, CAST(SUM(r2) AS BIGINT) AS c2,
@@ -386,7 +365,6 @@ object CorpusQueries {
       w
     }
     val dGrid = s.range(1, 11).select(col("id").cast("int").as("d"))
-    val dec = "decimal(38,0)"
     val terms = dGrid.join(joined, lit(true), "left")
       .groupBy("d")
       .agg(coalesce(sum(when(col("m") <= col("d"), 1L).otherwise(0L)),
@@ -471,7 +449,6 @@ object CorpusQueries {
     * allowlisted). The per-source bigram census rides one lazy
     * localCheckpoint (it feeds the model AND the scoring join). */
   def q286LmScore(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val occ = Tables.documents(s, dir).select(col("source"),
       explode(graft.functions.SimFns.wordBigrams(col("text"))).as("bg"))
     val srcbg = occ.groupBy("source", "bg").agg(count(lit(1)).as("k"))
@@ -569,7 +546,6 @@ object CorpusQueries {
     * ≤|langs|-row broadcast. One lazy localCheckpoint on the bigram
     * census (feeds all three marginals + the scoring join). */
   def q300KneserNey(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val c12 = Tables.documents(s, dir).select(col("lang"),
         explode(graft.functions.SimFns.wordBigrams(col("text"))).as("bg"))
       .groupBy("lang", "bg").agg(count(lit(1)).as("c12"))
@@ -691,7 +667,6 @@ object CorpusQueries {
     * |sources|² — everything after the per-source term census is
     * bounded by the SOURCE count, never the corpus. */
   def q304BurrowsDelta(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cnt = Tables.documents(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
@@ -869,7 +844,6 @@ object CorpusQueries {
     * nano-quantized at source (q286 convention), so each doc's
     * Σ c_w·Δln9 is an exact int64/DECIMAL sum; display /1e9, 6dp. */
   def q313DsirWeights(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         explode(tokens(col("text"))).as("w"))
@@ -1098,7 +1072,7 @@ object CorpusQueries {
     val g = census.groupBy("lang")
       .agg(sum(col("c")).as("n"),
         count(lit(1)).as("n_distinct"),
-        sum(col("c").cast("decimal(38,0)") * (col("c") - 1L)).as("coll"))
+        sum(col("c").cast(dec) * (col("c") - 1L)).as("coll"))
     def f(c: Column) = c.cast("double")
     val ic = f(col("coll")) / (f(col("n")) * (f(col("n")) - 1.0))
     g.select(col("lang"), col("n").cast("long").as("n_chars"),

@@ -253,10 +253,6 @@ object CurationQueries {
   def q95ForwardFill(s: SparkSession, dir: String): DataFrame = {
     import Parity._
     val o = Tables.orders(s, dir)
-    val span = o.agg(min(to_date(col("o_orderdate"))).as("d0"),
-      max(to_date(col("o_orderdate"))).as("d1"))
-    val spine = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val prios = o.select("o_orderpriority").distinct()
     val daily = o.groupBy(to_date(col("o_orderdate")).as("day"),
         col("o_orderpriority"))
       .agg(sum(dm(col("o_totalprice"))).as("rev"))
@@ -264,8 +260,7 @@ object CurationQueries {
       .partitionBy(col("o_orderpriority")).orderBy(col("day"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    spine.crossJoin(prios)
-      .join(daily, Seq("day", "o_orderpriority"), "left")
+    PipelineQueries.prioritySpine(o, daily)
       .withColumn("rev_filled", last(col("rev"), ignoreNulls = true).over(w))
       .withColumn("obs_day",
         last(when(col("rev").isNotNull, col("day")), ignoreNulls = true).over(w))
@@ -278,21 +273,11 @@ object CurationQueries {
 
   val q95ForwardFillSql: String = {
     import Parity._
-    s"""WITH span AS (
-       |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-       |         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM orders),
-       |days AS (
-       |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-       |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
-       |prios AS (SELECT DISTINCT o_orderpriority FROM orders),
-       |daily AS (
+    s"""WITH daily AS (
        |  SELECT CAST(o_orderdate AS DATE) AS day, o_orderpriority,
        |    SUM(CAST(o_totalprice AS $DM)) AS rev
        |  FROM orders GROUP BY 1, 2),
-       |sparse AS (
-       |  SELECT day, o_orderpriority, rev
-       |  FROM days CROSS JOIN prios
-       |  LEFT JOIN daily USING (day, o_orderpriority))
+       |${PipelineQueries.prioritySpineSql("daily")}
        |SELECT day, o_orderpriority,
        |  ${out4("""last_value(rev IGNORE NULLS) OVER (
        |    PARTITION BY o_orderpriority ORDER BY day
@@ -319,10 +304,6 @@ object CurationQueries {
     import Parity._
     import org.apache.spark.sql.expressions.Window
     val o = Tables.orders(s, dir)
-    val span = o.agg(min(to_date(col("o_orderdate"))).as("d0"),
-      max(to_date(col("o_orderdate"))).as("d1"))
-    val spine = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val prios = o.select("o_orderpriority").distinct()
     val daily = o.groupBy(to_date(col("o_orderdate")).as("day"),
         col("o_orderpriority"))
       .agg(sum(dm(col("o_totalprice"))).cast("double").as("rev"))
@@ -339,8 +320,7 @@ object CurationQueries {
     val lerp = prevRev + (nextRev - prevRev) *
       (datediff(col("day"), prevDay).cast("double") /
         datediff(nextDay, prevDay).cast("double"))
-    spine.crossJoin(prios)
-      .join(daily, Seq("day", "o_orderpriority"), "left")
+    PipelineQueries.prioritySpine(o, daily)
       // floor-quantize, not round(,4): Spark rounds the double's
       // shortest DECIMAL repr half-up while DuckDB rounds the BINARY
       // value, so an interpolated .xxxx5 boundary flips between them
@@ -352,21 +332,11 @@ object CurationQueries {
   }
 
   val q96InterpolateSql: String =
-    s"""WITH span AS (
-      |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-      |         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM orders),
-      |days AS (
-      |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-      |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
-      |prios AS (SELECT DISTINCT o_orderpriority FROM orders),
-      |daily AS (
+    s"""WITH daily AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day, o_orderpriority,
       |    CAST(SUM(CAST(o_totalprice AS DECIMAL(13,4))) AS DOUBLE) AS rev
       |  FROM orders GROUP BY 1, 2),
-      |sparse AS (
-      |  SELECT day, o_orderpriority, rev
-      |  FROM days CROSS JOIN prios
-      |  LEFT JOIN daily USING (day, o_orderpriority)),
+      |${PipelineQueries.prioritySpineSql("daily")},
       |ctx AS (
       |  SELECT day, o_orderpriority, rev,
       |    last_value(rev IGNORE NULLS) OVER bk AS prev_rev,
@@ -1165,7 +1135,6 @@ object CurationQueries {
     * (dimension-sized; at 10⁸ suppliers the same bounds come from a
     * 1-row agg broadcast). Top-25 via TakeOrderedAndProject. */
   def q220Topsis(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .select(col("l_suppkey").as("sk"),
         Parity.quant(col("l_extendedprice"), 100.0).as("cents"),

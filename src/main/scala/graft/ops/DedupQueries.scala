@@ -19,6 +19,31 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries {
 
+  /** The blocked part-name pairs of the fuzzy-name family (q48, q161,
+    * q163): distinct part names paired within one (noun = second token,
+    * 8-char length band) block, each unordered pair once as
+    * `name_a < name_b`. [[namePairsSql]] is its oracle twin; the two
+    * change together. */
+  private[ops] def namePairs(s: SparkSession, dir: String): DataFrame = {
+    val names = Tables.part(s, dir).select(col("p_name")).distinct()
+      .withColumn("noun", element_at(split(col("p_name"), " "), 2))
+      .withColumn("len_bkt", (length(col("p_name")) / 8).cast("long"))
+    val a = names.select(col("p_name").as("name_a"), col("noun"), col("len_bkt"))
+    val b = names.select(col("p_name").as("name_b"), col("noun"), col("len_bkt"))
+    a.join(b, Seq("noun", "len_bkt"))
+      .filter(col("name_a") < col("name_b"))
+  }
+
+  /** The `FROM … JOIN … ON` clause over parts `a` and `b`, the oracle
+    * twin of [[namePairs]]; callers may append `AND` conditions. The
+    * two change together. */
+  private[ops] val namePairsSql: String =
+    """FROM (SELECT DISTINCT p_name FROM part) a
+      |  JOIN (SELECT DISTINCT p_name FROM part) b
+      |    ON string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
+      |   AND length(a.p_name) // 8 = length(b.p_name) // 8
+      |   AND a.p_name < b.p_name""".stripMargin
+
   /** L3 fuzzy dedup: near-identical part names by edit distance, blocked
     * on (noun = second token, length band) — the compound block is part
     * of the operator contract, mirrored in the oracle (the q49 len_bkt
@@ -30,13 +55,7 @@ object DedupQueries {
     * BEFORE the O(len²) levenshtein kernel runs. Shrinkage is pinned by
     * DedupBlockingSpec on a deliberately single-noun fixture. */
   def q48FuzzyNames(s: SparkSession, dir: String): DataFrame = {
-    val names = Tables.part(s, dir).select(col("p_name")).distinct()
-      .withColumn("noun", element_at(split(col("p_name"), " "), 2))
-      .withColumn("len_bkt", (length(col("p_name")) / 8).cast("long"))
-    val a = names.select(col("p_name").as("name_a"), col("noun"), col("len_bkt"))
-    val b = names.select(col("p_name").as("name_b"), col("noun"), col("len_bkt"))
-    a.join(b, Seq("noun", "len_bkt"))
-      .filter(col("name_a") < col("name_b"))
+    namePairs(s, dir)
       .filter(abs(length(col("name_a")) - length(col("name_b"))) <= 4)
       .withColumn("lev", levenshtein(col("name_a"), col("name_b")))
       .filter(col("lev") <= 4)
@@ -45,15 +64,11 @@ object DedupQueries {
   }
 
   val q48FuzzyNamesSql: String =
-    """SELECT name_a, name_b, lev FROM (
+    s"""SELECT name_a, name_b, lev FROM (
       |  SELECT a.p_name AS name_a, b.p_name AS name_b,
       |    levenshtein(a.p_name, b.p_name) AS lev
-      |  FROM (SELECT DISTINCT p_name FROM part) a
-      |  JOIN (SELECT DISTINCT p_name FROM part) b
-      |    ON string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
-      |   AND length(a.p_name) // 8 = length(b.p_name) // 8
-      |   AND abs(length(a.p_name) - length(b.p_name)) <= 4
-      |   AND a.p_name < b.p_name)
+      |  $namePairsSql
+      |   AND abs(length(a.p_name) - length(b.p_name)) <= 4)
       |WHERE lev <= 4 ORDER BY name_a, name_b""".stripMargin
 
   /** L4 token-set jaccard near-dups, blocked by (lang, length bucket).
@@ -641,13 +656,7 @@ object DedupQueries {
     * arithmetic, identical in both engines, zero false negatives for
     * the in-band pairs. */
   def q161JaroNames(s: SparkSession, dir: String): DataFrame = {
-    val names = Tables.part(s, dir).select(col("p_name")).distinct()
-      .withColumn("noun", element_at(split(col("p_name"), " "), 2))
-      .withColumn("len_bkt", (length(col("p_name")) / 8).cast("long"))
-    val a = names.select(col("p_name").as("name_a"), col("noun"), col("len_bkt"))
-    val b = names.select(col("p_name").as("name_b"), col("noun"), col("len_bkt"))
-    a.join(b, Seq("noun", "len_bkt"))
-      .filter(col("name_a") < col("name_b"))
+    namePairs(s, dir)
       .filter(least(length(col("name_a")), length(col("name_b"))) * 20 >=
         greatest(length(col("name_a")), length(col("name_b"))) * 13)
       .withColumn("jw", round(
@@ -658,16 +667,12 @@ object DedupQueries {
   }
 
   val q161JaroNamesSql: String =
-    """SELECT name_a, name_b, jw FROM (
+    s"""SELECT name_a, name_b, jw FROM (
       |  SELECT a.p_name AS name_a, b.p_name AS name_b,
       |    ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 4) AS jw
-      |  FROM (SELECT DISTINCT p_name FROM part) a
-      |  JOIN (SELECT DISTINCT p_name FROM part) b
-      |    ON string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
-      |   AND length(a.p_name) // 8 = length(b.p_name) // 8
+      |  $namePairsSql
       |   AND least(length(a.p_name), length(b.p_name)) * 20
-      |       >= greatest(length(a.p_name), length(b.p_name)) * 13
-      |   AND a.p_name < b.p_name)
+      |       >= greatest(length(a.p_name), length(b.p_name)) * 13)
       |WHERE jw >= 0.93 ORDER BY name_a, name_b""".stripMargin
 
   /** Reranker training features for fuzzy-match candidates: every
@@ -687,13 +692,7 @@ object DedupQueries {
     * doubles derived from identical integer tuples; len_delta cast to
     * int64 on both engines. */
   def q163PairFeatures(s: SparkSession, dir: String): DataFrame = {
-    val names = Tables.part(s, dir).select(col("p_name")).distinct()
-      .withColumn("noun", element_at(split(col("p_name"), " "), 2))
-      .withColumn("len_bkt", (length(col("p_name")) / 8).cast("long"))
-    val a = names.select(col("p_name").as("name_a"), col("noun"), col("len_bkt"))
-    val b = names.select(col("p_name").as("name_b"), col("noun"), col("len_bkt"))
-    a.join(b, Seq("noun", "len_bkt"))
-      .filter(col("name_a") < col("name_b"))
+    namePairs(s, dir)
       .withColumn("lev", levenshtein(col("name_a"), col("name_b")))
       .filter(col("lev") <= 6)
       .withColumn("jw", round(
@@ -708,7 +707,7 @@ object DedupQueries {
   }
 
   val q163PairFeaturesSql: String =
-    """SELECT name_a, name_b, lev, jw, tok_jac, len_delta FROM (
+    s"""SELECT name_a, name_b, lev, jw, tok_jac, len_delta FROM (
       |  SELECT a.p_name AS name_a, b.p_name AS name_b,
       |    levenshtein(a.p_name, b.p_name) AS lev,
       |    ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 4) AS jw,
@@ -719,11 +718,7 @@ object DedupQueries {
       |         - len(list_intersect(list_distinct(string_split(a.p_name, ' ')),
       |                              list_distinct(string_split(b.p_name, ' '))))), 4) AS tok_jac,
       |    CAST(abs(length(a.p_name) - length(b.p_name)) AS BIGINT) AS len_delta
-      |  FROM (SELECT DISTINCT p_name FROM part) a
-      |  JOIN (SELECT DISTINCT p_name FROM part) b
-      |    ON string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
-      |   AND length(a.p_name) // 8 = length(b.p_name) // 8
-      |   AND a.p_name < b.p_name)
+      |  $namePairsSql)
       |WHERE lev <= 6 ORDER BY name_a, name_b""".stripMargin
 
   /** L127 content-defined chunk dedup — Rabin-style CDC boundaries

@@ -636,7 +636,6 @@ object DriftQueries {
     * Scale: one map-side moment agg; everything after runs on the
     * ≤5-row census via windows. */
   def q239NeymanAllocation(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val n = 1000L
     val g = KSampleTests.segmentDollars(s, dir).groupBy("seg")
       .agg(count(lit(1)).as("nh"), sum(col("v").cast(dec)).as("sv"),
@@ -942,7 +941,6 @@ object DriftQueries {
     * PrefixSum cumulatives, no single-partition window, 1-row
     * broadcast. Guards: an empty side → null statistic. */
   def q280AdTwoSample(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val c = oldNewCensus(s, dir)
     // A² = (1/(n·m)) Σ_j l_j·(M_jN − nF_j)²/(F_j(N−F_j)) — the Pettitt
     // normalization with the ECDF read at distinct-value block ends
@@ -1015,7 +1013,6 @@ object DriftQueries {
     * Scale: the q280 shape end-to-end — distinct-cents census,
     * PrefixSum cumulatives, 1-row totals broadcast, one max/min agg. */
   def q352Kuiper(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val c = oldNewCensus(s, dir)
     // scaled ECDF gap at each block end: ny·F_x − nx·F_y, exact int
     val gap = (col("nn") - col("nx")).cast(dec) * col("cum_x").cast(dec) -
@@ -1086,7 +1083,6 @@ object DriftQueries {
     * per-segment 5-row moment agg, all map-side combinable; no
     * windows, no fact-sized joins. */
   def q387GePanel(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val perc = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
@@ -1170,7 +1166,6 @@ object DriftQueries {
     * Scale: the q280 shape — cent census + ONE [[PrefixSum]] pass +
     * a 1-row totals broadcast; 1-row output. */
   def q400CvmTwoSample(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val c = oldNewCensus(s, dir)
     // F1 − F2 at a block end = (cum_x·ny − cum_y·nx)/(nx·ny), exact
     val cumY = col("cum_all") - col("cum_x")

@@ -16,13 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries {
 
-
-  private val dec = "decimal(38,0)"
-
-
-  /** The q274/q281 three-screen rater table: one row per document with
-    * 0/1 verdicts from the length / verbosity / stopword screens. */
-  private def raters(s: SparkSession, dir: String): DataFrame =
+  /** The three-screen rater table: one row per document with 0/1
+    * verdicts `r1`, `r2`, `r3` from the length / verbosity / stopword
+    * screens and their sum `g` (q274, q281, q282, q310, q386).
+    * [[ratersSql]] is its oracle twin; the two change together. */
+  private[ops] def raters(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(
         when(col("n_chars") >= 100, 1L).otherwise(0L).as("r1"),
@@ -31,6 +29,17 @@ object EvalQueries {
           typedlit(Seq("the", "a", "of", "and", "to", "in", "is", "on"))),
           1L).otherwise(0L).as("r3"))
       .withColumn("g", col("r1") + col("r2") + col("r3"))
+
+  /** The oracle twin of [[raters]]; the two change together. */
+  private[ops] val ratersSql: String =
+    """SELECT *, r1 + r2 + r3 AS g FROM (
+      |  SELECT CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS r1,
+      |    CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
+      |      AS r2,
+      |    CASE WHEN len(list_intersect(string_split(text, ' '),
+      |      ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'on'])) > 0
+      |      THEN 1 ELSE 0 END AS r3
+      |  FROM documents)""".stripMargin
 
 
   /** L215 Krippendorff's α, nominal, 3 raters ([PK] Krippendorff 1970):
@@ -77,15 +86,7 @@ object EvalQueries {
 
 
   val q282KrippAlphaSql: String =
-    """WITH d AS (
-      |  SELECT
-      |    (CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END)
-      |    + (CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0
-      |       END)
-      |    + (CASE WHEN len(list_intersect(string_split(text, ' '),
-      |        ['the','a','of','and','to','in','is','on'])) > 0
-      |       THEN 1 ELSE 0 END) AS g
-      |  FROM documents),
+    s"""WITH d AS ($ratersSql),
       |a AS (
       |  SELECT COUNT(*) AS n_docs,
       |    CAST(SUM(g) AS BIGINT) AS votes_good,
@@ -452,15 +453,7 @@ object EvalQueries {
 
 
   val q310GwetAc1Sql: String =
-    """WITH d AS (
-      |  SELECT
-      |    (CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END)
-      |    + (CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0
-      |       END)
-      |    + (CASE WHEN len(list_intersect(string_split(text, ' '),
-      |        ['the','a','of','and','to','in','is','on'])) > 0
-      |       THEN 1 ELSE 0 END) AS g
-      |  FROM documents),
+    s"""WITH d AS ($ratersSql),
       |a AS (
       |  SELECT COUNT(*) AS n, CAST(SUM(g) AS BIGINT) AS gg,
       |    CAST(SUM(g * g - g * 3 + 3) AS BIGINT) AS agr
@@ -579,7 +572,6 @@ object EvalQueries {
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(Parity.quant(col("l_extendedprice"), 100.0))
         .as("vb"))
-    val dec = "decimal(38,0)"
     val diffs = a.join(b, Seq("day"))
       .select((col("va") - col("vb")).as("d"))
     val m = diffs.agg(count(lit(1)).as("n"),
@@ -853,14 +845,7 @@ object EvalQueries {
   }
 
   val q386ScottPiSql: String =
-    s"""WITH r AS (
-      |  SELECT CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END AS r1,
-      |    CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0 END
-      |      AS r2,
-      |    CASE WHEN len(list_intersect(string_split(text, ' '),
-      |      ['the', 'a', 'of', 'and', 'to', 'in', 'is', 'on'])) > 0
-      |      THEN 1 ELSE 0 END AS r3
-      |  FROM documents),
+    s"""WITH r AS ($ratersSql),
       |cen AS (
       |  SELECT r1, r2, r3, COUNT(*) AS n FROM r GROUP BY r1, r2, r3),
       |p AS (

@@ -757,9 +757,9 @@ object EventQueries {
   def q167Lorenz(s: SparkSession, dir: String): DataFrame = {
     val perUser = Tables.events(s, dir)
       .groupBy("user_id").agg(count(lit(1)).as("n"))
-    val dec = RangedNtile.withNtile(perUser, 10,
+    val deciles = RangedNtile.withNtile(perUser, 10,
       Seq(col("n").desc, col("user_id")), "decile")
-    val byDec = dec.groupBy("decile")
+    val byDec = deciles.groupBy("decile")
       .agg(count(lit(1)).as("n_users"), sum("n").as("n_events"))
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -674,7 +674,6 @@ object GraphQueries {
     * equi-join + map-side-combinable agg; the final window runs over
     * the ≤|brands| census. */
   def q209Hits(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val e = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))

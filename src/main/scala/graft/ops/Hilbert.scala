@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.HilbertFns
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hilbert-curve clustering — the locality-tighter sibling of
@@ -29,16 +29,8 @@ object Hilbert {
       bits: Int = 8): Int = {
     val rx = ZOrder.quantileRank(df, xCol, bits).cast("long")
     val ry = ZOrder.quantileRank(df, yCol, bits).cast("long")
-    val h = HilbertFns.hilbertIndex(rx, ry, bits)
-    val n = df.count()
-    val k = Compaction.filesFor(n, targetRowsPerFile)
-    df.withColumn("__h", h)
-      .repartitionByRange(k, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(path)
-    k
+    Compaction.writeRanges(
+      df.withColumn("__h", HilbertFns.hilbertIndex(rx, ry, bits)), path,
+      Seq(col("__h")), targetRowsPerFile, dropped = Some("__h"))
   }
 }

@@ -638,7 +638,6 @@ object HypothesisTestQueries {
     *
     * Scale: the q240 shape — census, prefix sums, one max agg. */
   def q255NormalFitKs(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("cnt"))
@@ -726,7 +725,6 @@ object HypothesisTestQueries {
     * Scale: two censuses + prefix sums + one linear explode; no
     * sort of fact data beyond the census ranks. */
   def q244CramerVonMises(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = LocationTests.buildingFurniture(s, dir)
       .select((col("c_mktsegment") === "BUILDING").as("gx"),
         Parity.quant(col("o_totalprice"), 100.0).as("c"))
@@ -822,7 +820,6 @@ object HypothesisTestQueries {
     * algebra — the q255 shape minus the CDF pass. Fuzz-hardened at
     * birth: n < 2 or zero variance → null statistics. */
   def q256JarqueBera(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(Parity.quant(col("o_totalprice"), 100.0).as("c"))
     val cen = o.groupBy("c").agg(count(lit(1)).as("cnt"))
@@ -929,8 +926,7 @@ object HypothesisTestQueries {
       .select(col("c_custkey"), col("c_mktsegment").as("seg"))
     val c = Tables.orders(s, dir)
       .join(broadcast(seg), col("o_custkey") === col("c_custkey"))
-      .groupBy((year(col("o_orderdate")) * 10 +
-        quarter(col("o_orderdate"))).cast("long").as("qtr"), col("seg"))
+      .groupBy(SketchQueries.quarterKey.cast("long").as("qtr"), col("seg"))
       .agg(sum(Parity.quant(col("o_totalprice"), 100.0))
         .as("rev"))
     val x = c.select(col("qtr"), col("seg").as("seg_a"),
@@ -980,9 +976,8 @@ object HypothesisTestQueries {
   }
 
   val q366SignTestSql: String =
-    """WITH RECURSIVE c AS (
-      |  SELECT date_part('year', o_orderdate) * 10
-      |      + date_part('quarter', o_orderdate) AS qtr,
+    s"""WITH RECURSIVE c AS (
+      |  SELECT ${SketchQueries.quarterKeySql} AS qtr,
       |    c_mktsegment AS seg,
       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
       |      AS BIGINT) AS rev

@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object InferenceDiagnostics {
 
-  private val dec = "decimal(38,0)"
-
   /** L220 delta-method ratio-metric CI ([PK] Cochran 1977 ratio
     * estimation; Deng, Knoblich & Lu 2018 for the A/B framing):
     * revenue-per-event per experiment arm. The metric is a ratio of
@@ -171,7 +169,6 @@ object InferenceDiagnostics {
       .withColumn("r2", lit(2L) * col("cumn") - col("cnt") + 1L)
       .withColumn("a2",
         least(col("r2"), lit(2L) * (col("nn") + 1L) - col("r2")))
-    val dec = "decimal(38,0)"
     val a = ranked.agg(max(col("nn")).as("n"),
       sum(col("c1")).as("m"),
       sum(col("c1").cast(dec) * col("a2").cast(dec)).as("ab2"),
@@ -513,12 +510,8 @@ object InferenceDiagnostics {
     * reduce — no joins, no windows. Guards: any zero variance or
     * |r_xz|,|r_yz| = 1 → null partial. */
   def q293PartialCorr(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-      .groupBy("l_orderkey")
-      .agg(sum(expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .as("x"),
-        sum(expr("cast(round(l_quantity) as bigint)")).as("y"),
-        count(lit(1)).as("z"))
+    val li = RegressionQueries.perOrder(s, dir)
+      .select(col("y").as("x"), col("x1").as("y"), col("x2").as("z"))
     val a = li.agg(count(lit(1)).as("n"),
       sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
       sum(col("z").cast(dec)).as("sz"),
@@ -558,13 +551,8 @@ object InferenceDiagnostics {
 
 
   val q293PartialCorrSql: String =
-    """WITH li AS (
-      |  SELECT
-      |    CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-      |      AS x,
-      |    CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS y,
-      |    COUNT(*) AS z
-      |  FROM lineitem GROUP BY l_orderkey),
+    s"""WITH per AS (${RegressionQueries.perOrderSql}),
+      |li AS (SELECT y AS x, x1 AS y, x2 AS z FROM per),
       |a AS (
       |  SELECT COUNT(*) AS n,
       |    CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
@@ -632,17 +620,8 @@ object InferenceDiagnostics {
     * Guards: n < 4, zero exact variance in either regressor, or
     * det(X'X) = 0 (collinear) → null coefficients. */
   def q298OlsGram(s: SparkSession, dir: String): DataFrame = {
-    val per = Tables.lineitem(s, dir).groupBy("l_orderkey")
-      .agg(sum(expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .as("y"),
-        sum(expr("cast(round(l_quantity) as bigint)")).as("x1"),
-        count(lit(1)).as("x2"))
-    def d(c: String) = col(c).cast(dec)
-    val a = per.agg(count(lit(1)).as("n"),
-      sum(d("x1")).as("s1"), sum(d("x2")).as("s2"), sum(d("y")).as("sy"),
-      sum(d("x1") * d("x1")).as("s11"), sum(d("x2") * d("x2")).as("s22"),
-      sum(d("x1") * d("x2")).as("s12"), sum(d("x1") * d("y")).as("s1y"),
-      sum(d("x2") * d("y")).as("s2y"), sum(d("y") * d("y")).as("syy"))
+    import RegressionQueries.{gram, perOrder}
+    val a = gram(perOrder(s, dir))
     def f(c: String) = col(c).cast("double")
     val (n, s1, s2, sy) = (f("n"), f("s1"), f("s2"), f("sy"))
     val (s11, s22, s12) = (f("s11"), f("s22"), f("s12"))
@@ -679,24 +658,8 @@ object InferenceDiagnostics {
 
 
   val q298OlsGramSql: String =
-    """WITH per AS (
-      |  SELECT
-      |    CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-      |      AS y,
-      |    CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS x1,
-      |    COUNT(*) AS x2
-      |  FROM lineitem GROUP BY l_orderkey),
-      |a AS (
-      |  SELECT COUNT(*) AS n,
-      |    CAST(SUM(x1) AS HUGEINT) AS s1, CAST(SUM(x2) AS HUGEINT) AS s2,
-      |    CAST(SUM(y) AS HUGEINT) AS sy,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * x1) AS HUGEINT) AS s11,
-      |    CAST(SUM(CAST(x2 AS HUGEINT) * x2) AS HUGEINT) AS s22,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * x2) AS HUGEINT) AS s12,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * y) AS HUGEINT) AS s1y,
-      |    CAST(SUM(CAST(x2 AS HUGEINT) * y) AS HUGEINT) AS s2y,
-      |    CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-      |  FROM per),
+    s"""WITH per AS (${RegressionQueries.perOrderSql}),
+      |a AS (${RegressionQueries.gramSql}),
       |f AS (
       |  SELECT n,
       |    CAST(n AS DOUBLE) AS nf, CAST(s1 AS DOUBLE) AS s1,
@@ -856,18 +819,10 @@ object InferenceDiagnostics {
     * Guards: q298's own singularity guards, aux SST ≤ 0, or n < 5 →
     * null. */
   def q306BreuschPagan(s: SparkSession, dir: String): DataFrame = {
-    val per = Tables.lineitem(s, dir).groupBy("l_orderkey")
-      .agg(sum(expr("cast(round(l_extendedprice * 100) as bigint)"))
-        .as("y"),
-        sum(expr("cast(round(l_quantity) as bigint)")).as("x1"),
-        count(lit(1)).as("x2"))
-      .localCheckpoint(eager = false)
+    val per = RegressionQueries.perOrder(s, dir).localCheckpoint(eager = false)
     def d(c: String) = col(c).cast(dec)
-    val gram = per.agg(count(lit(1)).as("n"),
-      sum(d("x1")).as("s1"), sum(d("x2")).as("s2"), sum(d("y")).as("sy"),
-      sum(d("x1") * d("x1")).as("s11"), sum(d("x2") * d("x2")).as("s22"),
-      sum(d("x1") * d("x2")).as("s12"), sum(d("x1") * d("y")).as("s1y"),
-      sum(d("x2") * d("y")).as("s2y"))
+    // syy is pruned: no column below reads it
+    val gram = RegressionQueries.gram(per)
     def f(c: String) = col(c).cast("double")
     def cramer(sy: String, s1y: String, s2y: String)
         : (Column, Column, Column, Column) = {
@@ -939,23 +894,8 @@ object InferenceDiagnostics {
 
 
   val q306BreuschPaganSql: String =
-    """WITH per AS (
-      |  SELECT
-      |    CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-      |      AS y,
-      |    CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS x1,
-      |    COUNT(*) AS x2
-      |  FROM lineitem GROUP BY l_orderkey),
-      |g AS (
-      |  SELECT COUNT(*) AS n,
-      |    CAST(SUM(x1) AS HUGEINT) AS s1, CAST(SUM(x2) AS HUGEINT) AS s2,
-      |    CAST(SUM(y) AS HUGEINT) AS sy,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * x1) AS HUGEINT) AS s11,
-      |    CAST(SUM(CAST(x2 AS HUGEINT) * x2) AS HUGEINT) AS s22,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * x2) AS HUGEINT) AS s12,
-      |    CAST(SUM(CAST(x1 AS HUGEINT) * y) AS HUGEINT) AS s1y,
-      |    CAST(SUM(CAST(x2 AS HUGEINT) * y) AS HUGEINT) AS s2y
-      |  FROM per),
+    s"""WITH per AS (${RegressionQueries.perOrderSql}),
+      |g AS (${RegressionQueries.gramSql}),
       |gf AS (
       |  SELECT n,
       |    CAST(n AS DOUBLE) AS nf, CAST(s1 AS DOUBLE) AS s1f,

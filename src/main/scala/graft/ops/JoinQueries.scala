@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Parity._
@@ -367,10 +367,7 @@ object JoinQueries {
     * salting treatment. */
   def q131GeoJoin(s: SparkSession, dir: String): DataFrame = {
     val r = 20.0
-    def lat(key: Column): Column =
-      pmod(key * 2654435761L, lit(1700L)).cast("double") / 10.0 - 85.0
-    def lon(key: Column): Column =
-      pmod(key * 1103515245L + 12345L, lit(3600L)).cast("double") / 10.0 - 180.0
+    import SpatialStats.{gridLat => lat, gridLon => lon}
     val c = Tables.customer(s, dir).select(
       col("c_custkey"),
       lat(col("c_custkey")).as("clat"), lon(col("c_custkey")).as("clon"))
@@ -395,15 +392,15 @@ object JoinQueries {
   }
 
   val q131GeoJoinSql: String =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT c_custkey,
-      |    CAST(((c_custkey * 2654435761) % 1700 + 1700) % 1700 AS DOUBLE) / 10.0 - 85.0 AS clat,
-      |    CAST(((c_custkey * 1103515245 + 12345) % 3600 + 3600) % 3600 AS DOUBLE) / 10.0 - 180.0 AS clon
+      |    ${SpatialStats.gridLatSql("c_custkey")} AS clat,
+      |    ${SpatialStats.gridLonSql("c_custkey")} AS clon
       |  FROM customer),
       |s AS (
       |  SELECT s_suppkey,
-      |    CAST(((s_suppkey * 2654435761) % 1700 + 1700) % 1700 AS DOUBLE) / 10.0 - 85.0 AS slat,
-      |    CAST(((s_suppkey * 1103515245 + 12345) % 3600 + 3600) % 3600 AS DOUBLE) / 10.0 - 180.0 AS slon
+      |    ${SpatialStats.gridLatSql("s_suppkey")} AS slat,
+      |    ${SpatialStats.gridLonSql("s_suppkey")} AS slon
       |  FROM supplier)
       |SELECT c_custkey, s_suppkey,
       |  ROUND(SQRT((clat - slat) * (clat - slat)
@@ -597,14 +594,7 @@ object JoinQueries {
     * neighbor lookup is an equi-join of the CELL table against its
     * exploded offsets — cell-sized, never point-sized. */
   def q149Hotspots(s: SparkSession, dir: String): DataFrame = {
-    def lat(key: Column): Column =
-      pmod(key * 2654435761L, lit(1700L)).cast("double") / 10.0 - 85.0
-    def lon(key: Column): Column =
-      pmod(key * 1103515245L + 12345L, lit(3600L)).cast("double") / 10.0 - 180.0
-    val cell = 10.0
-    val cells = Tables.customer(s, dir)
-      .select(floor(lon(col("c_custkey")) / cell).cast("int").as("cx"),
-        floor(lat(col("c_custkey")) / cell).cast("int").as("cy"))
+    val cells = SpatialStats.customerGrid(s, dir)
       .groupBy("cx", "cy").agg(count(lit(1)).as("n"))
     val offsets = typedlit(for { dx <- -1 to 1; dy <- -1 to 1 }
       yield (dx, dy))
@@ -620,13 +610,7 @@ object JoinQueries {
   }
 
   val q149HotspotsSql: String =
-    """WITH pts AS (
-      |  SELECT
-      |    CAST(FLOOR((CAST(((c_custkey * 1103515245 + 12345) % 3600 + 3600) % 3600 AS DOUBLE)
-      |      / 10.0 - 180.0) / 10.0) AS INTEGER) AS cx,
-      |    CAST(FLOOR((CAST(((c_custkey * 2654435761) % 1700 + 1700) % 1700 AS DOUBLE)
-      |      / 10.0 - 85.0) / 10.0) AS INTEGER) AS cy
-      |  FROM customer),
+    s"""WITH pts AS (${SpatialStats.customerGridSql}),
       |cells AS (SELECT cx, cy, COUNT(*) AS n FROM pts GROUP BY cx, cy),
       |offs AS (
       |  SELECT dx.dx, dy.dy

@@ -36,6 +36,61 @@ object KSampleTests {
       |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
       |  ${LocationTests.segmentOrdersSql}""".stripMargin
 
+  /** The one-way ANOVA table over a per-group census `(nj, sj, qj)`
+    * (count, Σv, Σv² as DECIMAL(38,0)): each group's Sⱼ²/nⱼ pinned to
+    * int64 by one floor chain (`vq`), and over the whole frame the
+    * totals `nt`, `st`, `qt` and `sv` = Σvq (q228, q232, q391).
+    * [[anovaTableSql]] is its oracle twin; the two change together. */
+  private[ops] def anovaTable(g: DataFrame): DataFrame = {
+    val wAll = Window.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    g.withColumn("vq",
+        floor((col("sj").cast("double") * col("sj").cast("double")) /
+          col("nj").cast("double") + 0.5).cast("long"))
+      .withColumn("nt", sum(col("nj")).over(wAll))
+      .withColumn("st", sum(col("sj")).over(wAll))
+      .withColumn("qt", sum(col("qj")).over(wAll))
+      .withColumn("sv", sum(col("vq")).over(wAll))
+  }
+
+  /** The `t` and `t2` CTEs over relation `g`, the oracle twin of
+    * [[anovaTable]]; `t2` also carries the pinned grand term
+    * `grand` = St²/N that [[ssBetween]] spells on the Spark side. The
+    * two change together. */
+  private[ops] val anovaTableSql: String =
+    """t AS (
+      |  SELECT *,
+      |    CAST(FLOOR((CAST(sj AS DOUBLE) * CAST(sj AS DOUBLE))
+      |      / CAST(nj AS DOUBLE) + 0.5) AS BIGINT) AS vq,
+      |    CAST(SUM(nj) OVER () AS BIGINT) AS nt,
+      |    SUM(sj) OVER () AS st,
+      |    SUM(qj) OVER () AS qt
+      |  FROM g),
+      |t2 AS (
+      |  SELECT *,
+      |    CAST(SUM(vq) OVER () AS BIGINT) AS sv,
+      |    CAST(FLOOR((CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
+      |      / CAST(nt AS DOUBLE) + 0.5) AS BIGINT) AS grand
+      |  FROM t)""".stripMargin
+
+  /** SSB over an [[anovaTable]]: Σvq minus the grand term St²/N, pinned
+    * to int64 by the same floor chain as `vq`. */
+  private val ssBetween: Column = col("sv") -
+    floor((col("st").cast("double") * col("st").cast("double")) /
+      col("nt").cast("double") + 0.5).cast("long")
+
+  /** SSW over an [[anovaTable]]: Σv² stays DECIMAL(38,0), since a cast
+    * of qt ≈ n·E[v²] to long would overflow far below the SSW ≈ n·Var[v]
+    * it yields; sv is subtracted as decimal and only the difference
+    * must fit int64 (r18/r19). The vq/grand int64 grid is the
+    * remaining scale ceiling (q385/q395 convention). */
+  private val ssWithin: Column = col("qt") - col("sv").cast(dec)
+
+  /** The five-group F = (SSB/4)/(SSW/(N − 5)) over an [[anovaTable]],
+    * one double chain. */
+  private val anovaF: Column = (ssBetween.cast("double") / 4.0) /
+    (ssWithin.cast("double") / (col("nt").cast("double") - 5.0))
+
   /** L161 Kruskal–Wallis H (Kruskal & Wallis 1952 [PK]): the k-group
     * generalization of q210's two-sample rank test — do the five
     * market segments draw order values from the same distribution?
@@ -58,7 +113,6 @@ object KSampleTests {
     * broadcast back in-plan (q211's tmax pattern — no driver action at
     * DataFrame-build time); everything after is ≤5-row algebra. */
   def q227KruskalWallis(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = LocationTests.segmentOrders(s, dir)
       .select(col("c_mktsegment").as("seg"),
         Parity.quant(col("o_totalprice"), 100.0).as("c"))
@@ -155,39 +209,17 @@ object KSampleTests {
     * Scale: one map-side-combinable (segment) moment agg; ≤5-row
     * algebra after. */
   def q228AnovaF(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val g = segmentDollars(s, dir).groupBy("seg")
       .agg(count(lit(1)).as("nj"), sum(col("v").cast(dec)).as("sj"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qj"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val t = g
-      .withColumn("vq",
-        floor((col("sj").cast("double") * col("sj").cast("double")) /
-          col("nj").cast("double") + 0.5).cast("long"))
-      .withColumn("nt", sum(col("nj")).over(wAll))
-      .withColumn("st", sum(col("sj")).over(wAll))
-      .withColumn("qt", sum(col("qj")).over(wAll))
-      .withColumn("sv", sum(col("vq")).over(wAll))
-    val grand = floor((col("st").cast("double") * col("st").cast("double")) /
-      col("nt").cast("double") + 0.5).cast("long")
-    val ssb = col("sv") - grand
-    // r19 (r18 verdict, q391 pattern): Σv² stays DECIMAL(38,0) —
-    // `cast(qt as long)` overflows near SF ~200 for raw whole-dollar
-    // totalprice (qt ≈ n·E[v²] ≈ 4.6e16·SF). Subtract sv as decimal;
-    // the DIFFERENCE (≈ n·Var[v] ≈ 1.2e16·SF) is the only value that
-    // must fit int64, raising the exact-output ceiling to ~SF 760,
-    // where the ANSI long cast fails LOUDLY instead of saturating
-    // (q385/q395 convention; the vq/grand quantization grid itself
-    // holds to ~SF 1300).
-    val ssw = col("qt") - col("sv").cast(dec)
-    val f = (ssb.cast("double") / 4.0) /
-      (ssw.cast("double") / (col("nt").cast("double") - 5.0))
-    t.select(col("seg").as("c_mktsegment"), col("nj"),
+    // ss_within fits int64 to ~SF 760 for raw whole-dollar totalprice;
+    // past it the ANSI long cast fails LOUDLY instead of saturating
+    // (q385/q395 convention; see [[ssWithin]])
+    anovaTable(g).select(col("seg").as("c_mktsegment"), col("nj"),
         (round(col("sj").cast("double") / col("nj"), 4) + 0.0)
           .as("mean_value"),
-        ssb.as("ss_between"), ssw.cast("long").as("ss_within"),
-        (round(f, 4) + 0.0).as("f_stat"))
+        ssBetween.as("ss_between"), ssWithin.cast("long").as("ss_within"),
+        (round(anovaF, 4) + 0.0).as("f_stat"))
       .orderBy("c_mktsegment")
   }
 
@@ -199,20 +231,7 @@ object KSampleTests {
       |    SUM(CAST(v AS HUGEINT)) AS sj,
       |    SUM(CAST(v AS HUGEINT) * v) AS qj
       |  FROM o GROUP BY seg),
-      |t AS (
-      |  SELECT seg, nj, sj, qj,
-      |    CAST(FLOOR((CAST(sj AS DOUBLE) * CAST(sj AS DOUBLE))
-      |      / CAST(nj AS DOUBLE) + 0.5) AS BIGINT) AS vq,
-      |    CAST(SUM(nj) OVER () AS BIGINT) AS nt,
-      |    SUM(sj) OVER () AS st,
-      |    SUM(qj) OVER () AS qt
-      |  FROM g),
-      |t2 AS (
-      |  SELECT *,
-      |    CAST(SUM(vq) OVER () AS BIGINT) AS sv,
-      |    CAST(FLOOR((CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-      |      / CAST(nt AS DOUBLE) + 0.5) AS BIGINT) AS grand
-      |  FROM t)
+      |$anovaTableSql
       |SELECT seg AS c_mktsegment, nj,
       |  ROUND(CAST(sj AS DOUBLE) / nj, 4) + 0 AS mean_value,
       |  sv - grand AS ss_between,
@@ -238,7 +257,6 @@ object KSampleTests {
     * Scale: one exact-percentile census (≤5 groups) broadcast back,
     * one moment agg, ≤5-row algebra — two fact passes total. */
   def q232BrownForsythe(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = segmentDollars(s, dir)
     val med = o.groupBy("seg")
       .agg(percentile(col("v") * 2, lit(0.5)).cast("long").as("m2"))
@@ -247,30 +265,10 @@ object KSampleTests {
     val g = dev.groupBy("seg")
       .agg(count(lit(1)).as("nj"), sum(col("dev2").cast(dec)).as("sj"),
         sum(col("dev2").cast(dec) * col("dev2").cast(dec)).as("qj"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val t = g
-      .withColumn("vq",
-        floor((col("sj").cast("double") * col("sj").cast("double")) /
-          col("nj").cast("double") + 0.5).cast("long"))
-      .withColumn("nt", sum(col("nj")).over(wAll))
-      .withColumn("st", sum(col("sj")).over(wAll))
-      .withColumn("qt", sum(col("qj")).over(wAll))
-      .withColumn("sv", sum(col("vq")).over(wAll))
-    val grand = floor((col("st").cast("double") * col("st").cast("double")) /
-      col("nt").cast("double") + 0.5).cast("long")
-    val ssb = col("sv") - grand
-    // r19 (r18 verdict, q391 pattern): Σdev2² stays DECIMAL(38,0) —
-    // see the q228 note; the doubled deviations make qt ≈ 4n·Var[v],
-    // so the old `cast(qt as long)` saturated near SF ~450 while the
-    // decimal difference holds and the F chain goes double-only here.
-    val ssw = col("qt") - col("sv").cast(dec)
-    val f = (ssb.cast("double") / 4.0) /
-      (ssw.cast("double") / (col("nt").cast("double") - 5.0))
-    t.select(col("seg").as("c_mktsegment"), col("nj"),
+    anovaTable(g).select(col("seg").as("c_mktsegment"), col("nj"),
         (round(col("sj").cast("double") / (col("nj") * lit(2.0)), 4) + 0.0)
           .as("mean_absdev"),
-        (round(f, 4) + 0.0).as("bf_stat"),
+        (round(anovaF, 4) + 0.0).as("bf_stat"),
         lit(4).as("df1"),
         (col("nt") - 5).as("df2"))
       .orderBy("c_mktsegment")
@@ -290,20 +288,7 @@ object KSampleTests {
       |    SUM(CAST(dev2 AS HUGEINT)) AS sj,
       |    SUM(CAST(dev2 AS HUGEINT) * dev2) AS qj
       |  FROM dev GROUP BY seg),
-      |t AS (
-      |  SELECT seg, nj, sj, qj,
-      |    CAST(FLOOR((CAST(sj AS DOUBLE) * CAST(sj AS DOUBLE))
-      |      / CAST(nj AS DOUBLE) + 0.5) AS BIGINT) AS vq,
-      |    CAST(SUM(nj) OVER () AS BIGINT) AS nt,
-      |    SUM(sj) OVER () AS st,
-      |    SUM(qj) OVER () AS qt
-      |  FROM g),
-      |t2 AS (
-      |  SELECT *,
-      |    CAST(SUM(vq) OVER () AS BIGINT) AS sv,
-      |    CAST(FLOOR((CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-      |      / CAST(nt AS DOUBLE) + 0.5) AS BIGINT) AS grand
-      |  FROM t)
+      |$anovaTableSql
       |SELECT seg AS c_mktsegment, nj,
       |  ROUND(CAST(sj AS DOUBLE) / (nj * 2.0), 4) + 0 AS mean_absdev,
       |  ROUND((CAST(sv - grand AS DOUBLE) / 4.0)
@@ -491,7 +476,6 @@ object KSampleTests {
     * Scale: one value census, ONE multi-column prefix pass, map-side
     * aggregation of the 10 ordered-pair terms — no pair blow-up. */
   def q254JonckheereTerpstra(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(Parity.quant(col("o_totalprice"), 100.0).as("c"),
         substring(col("o_orderpriority"), 1, 1).cast("int").as("g"))
@@ -692,7 +676,6 @@ object KSampleTests {
     * Scale: one broadcast-dim join + ONE map-side (segment) moment
     * census (5 rows); everything after is census arithmetic. */
   def q345Bartlett(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = LocationTests.segmentOrders(s, dir)
       .select(col("c_mktsegment").as("seg"),
         floor(col("o_totalprice") + 0.5).cast(dec).as("v"))
@@ -803,7 +786,6 @@ object KSampleTests {
     * aggs (the mean pass then the deviation pass — same shape as
     * q232's median pass); ≤5-row algebra after. */
   def q391LeveneMean(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = segmentDollars(s, dir)
     val mu = o.groupBy("seg")
       .agg(count(lit(1)).as("ng"), sum(col("v").cast(dec)).as("sg"))
@@ -815,32 +797,10 @@ object KSampleTests {
     val g = dev.groupBy("seg")
       .agg(count(lit(1)).as("nj"), sum(col("zq").cast(dec)).as("sj"),
         sum(col("zq").cast(dec) * col("zq").cast(dec)).as("qj"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val t = g
-      .withColumn("vq",
-        floor((col("sj").cast("double") * col("sj").cast("double")) /
-          col("nj").cast("double") + 0.5).cast("long"))
-      .withColumn("nt", sum(col("nj")).over(wAll))
-      .withColumn("st", sum(col("sj")).over(wAll))
-      .withColumn("qt", sum(col("qj")).over(wAll))
-      .withColumn("sv", sum(col("vq")).over(wAll))
-    val grand = floor((col("st").cast("double") * col("st").cast("double")) /
-      col("nt").cast("double") + 0.5).cast("long")
-    val ssb = col("sv") - grand
-    // r18 (r17 advisor): Σz² stays DECIMAL(38,0) — cast(qt as long)
-    // overflows around SF 800 (Σz² ≈ n·var); subtract sv as decimal
-    // and go to double only inside the F chain. Residual scale gate:
-    // the vq/grand int64 quantization grid itself saturates near
-    // SF ~2000 (sj²/nj → 2⁶³) — the documented ceiling of the
-    // whole-dollar exact construction (q385/q395 convention).
-    val ssw = col("qt") - col("sv").cast(dec)
-    val f = (ssb.cast("double") / 4.0) /
-      (ssw.cast("double") / (col("nt").cast("double") - 5.0))
-    t.select(col("seg").as("c_mktsegment"), col("nj"),
+    anovaTable(g).select(col("seg").as("c_mktsegment"), col("nj"),
         (round(col("sj").cast("double") / col("nj"), 4) + 0.0)
           .as("mean_absdev_dollars"),
-        (round(f, 4) + 0.0).as("levene_stat"),
+        (round(anovaF, 4) + 0.0).as("levene_stat"),
         lit(4).as("df1"),
         (col("nt") - 5).as("df2"))
       .orderBy("c_mktsegment")
@@ -862,21 +822,9 @@ object KSampleTests {
       |    CAST(SUM(CAST(zq AS HUGEINT)) AS HUGEINT) AS sj,
       |    CAST(SUM(CAST(zq AS HUGEINT) * zq) AS HUGEINT) AS qj
       |  FROM dev GROUP BY seg),
-      |t AS (
-      |  SELECT seg, nj, sj, qj,
-      |    CAST(FLOOR(CAST(sj AS DOUBLE) * CAST(sj AS DOUBLE)
-      |      / nj + 0.5) AS BIGINT) AS vq,
-      |    CAST(SUM(nj) OVER () AS BIGINT) AS nt,
-      |    CAST(SUM(qj) OVER () AS HUGEINT) AS qt
-      |  FROM g),
-      |t2 AS (
-      |  SELECT *, CAST(SUM(vq) OVER () AS BIGINT) AS sv,
-      |    CAST(SUM(sj) OVER () AS HUGEINT) AS st
-      |  FROM t),
+      |$anovaTableSql,
       |f AS (
-      |  SELECT seg, nj, sj, nt,
-      |    sv - CAST(FLOOR(CAST(st AS DOUBLE) * CAST(st AS DOUBLE)
-      |      / nt + 0.5) AS BIGINT) AS ssb,
+      |  SELECT seg, nj, sj, nt, sv - grand AS ssb,
       |    qt - CAST(sv AS HUGEINT) AS ssw
       |  FROM t2)
       |SELECT seg AS c_mktsegment, nj,
@@ -1007,7 +955,6 @@ object KSampleTests {
     * Scale: one value census + PrefixSum (the q227 shape: exchanged
     * volume ∝ distinct cents), one ≤5-group fold. */
   def q410CuzickTrend(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("l"),
         Parity.quant(col("o_totalprice"), 100.0).as("c"))

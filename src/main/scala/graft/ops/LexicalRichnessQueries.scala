@@ -85,7 +85,6 @@ object LexicalRichnessQueries {
     * Scale: the same map-side-combinable (lang, word) census as
     * q40/q170; the K algebra runs on ≤|langs| rows. */
   def q222YuleK(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val wc = Tables.documents(s, dir)
       .select(col("lang"), explode(tokens(col("text"))).as("w"))
       .groupBy("lang", "w").agg(count(lit(1)).as("cnt"))

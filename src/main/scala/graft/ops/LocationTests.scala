@@ -77,6 +77,22 @@ object LocationTests {
     s"""$segmentOrdersSql
       |  WHERE c_mktsegment IN ('BUILDING', 'FURNITURE')""".stripMargin
 
+  /** The whole-dollar two-group sample: over [[buildingFurniture]],
+    * the flag `ga` (BUILDING) and the order price rounded half-up to
+    * an int64 dollar `v` (q231, q247, q303, q361).
+    * [[buildingDollarsSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] def buildingDollars(s: SparkSession, dir: String): DataFrame =
+    buildingFurniture(s, dir)
+      .select((col("c_mktsegment") === "BUILDING").as("ga"),
+        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+
+  /** The oracle twin of [[buildingDollars]]; the two change together. */
+  private[ops] val buildingDollarsSql: String =
+    s"""SELECT c_mktsegment = 'BUILDING' AS ga,
+      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
+      |  $buildingFurnitureSql""".stripMargin
+
   /** L147 Mann–Whitney U rank-sum test (Mann & Whitney 1947 [PK]):
     * does the URGENT order population spend differently from the LOW
     * one? The NONPARAMETRIC two-sample location test — q172's z-test
@@ -97,7 +113,6 @@ object LocationTests {
     * single-partition window anywhere; the oracle SQL's sequential
     * window is the semantic mirror only. */
   def q210MannWhitney(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cen = urgentLowCensus(s, dir)
     val cum = graft.ops.PrefixSum.withPrefixSums(cen,
       Seq(col("c")), Seq((col("n"), "cumn")))
@@ -160,10 +175,7 @@ object LocationTests {
     * Scale: one map-side-combinable 2-group moment agg; everything
     * after is 1-row algebra. */
   def q231WelchTtest(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val o = buildingFurniture(s, dir)
-      .select((col("c_mktsegment") === "BUILDING").as("ga"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = buildingDollars(s, dir)
     val g = o.groupBy("ga")
       .agg(count(lit(1)).as("n"), sum(col("v").cast(dec)).as("sv"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qv"))
@@ -195,10 +207,7 @@ object LocationTests {
 
 
   val q231WelchTtestSql: String =
-    s"""WITH o AS (
-      |  SELECT c_mktsegment = 'BUILDING' AS ga,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  $buildingFurnitureSql),
+    s"""WITH o AS ($buildingDollarsSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -244,10 +253,7 @@ object LocationTests {
     *
     * Scale: the q231 shape — one 2-group moment agg, 1-row algebra. */
   def q247EffectSize(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val o = buildingFurniture(s, dir)
-      .select((col("c_mktsegment") === "BUILDING").as("ga"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = buildingDollars(s, dir)
     val g = o.groupBy("ga")
       .agg(count(lit(1)).as("n"), sum(col("v").cast(dec)).as("sv"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qv"))
@@ -279,10 +285,7 @@ object LocationTests {
 
 
   val q247EffectSizeSql: String =
-    s"""WITH o AS (
-      |  SELECT c_mktsegment = 'BUILDING' AS ga,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  $buildingFurnitureSql),
+    s"""WITH o AS ($buildingDollarsSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -335,7 +338,6 @@ object LocationTests {
     * Scale: the q210 shape verbatim — census + [[PrefixSum]], no
     * fact-data sort. */
   def q250CliffsDelta(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cen = urgentLowCensus(s, dir)
     val cum = graft.ops.PrefixSum.withPrefixSums(cen,
       Seq(col("c")), Seq((col("n"), "cumn")))
@@ -401,7 +403,6 @@ object LocationTests {
     * PrefixSum → 1-row algebra. Guards: no nonzero pairs, or an
     * all-tied |d| census (variance numerator ≤ 0), → null. */
   def q260WilcoxonSignedRank(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(col("o_custkey"),
         (col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
@@ -508,10 +509,7 @@ object LocationTests {
     * Scale: one broadcast dim join + a 2-group moment agg — the q231
     * plan exactly. */
   def q361Tost(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val o = buildingFurniture(s, dir)
-      .select((col("c_mktsegment") === "BUILDING").as("ga"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = buildingDollars(s, dir)
     val g = o.groupBy("ga")
       .agg(count(lit(1)).as("n"), sum(col("v").cast(dec)).as("sv"),
         sum(col("v").cast(dec) * col("v").cast(dec)).as("qv"))
@@ -551,10 +549,7 @@ object LocationTests {
 
 
   val q361TostSql: String =
-    s"""WITH o AS (
-      |  SELECT c_mktsegment = 'BUILDING' AS ga,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  $buildingFurnitureSql),
+    s"""WITH o AS ($buildingDollarsSql),
       |g AS (
       |  SELECT ga, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS sv,
       |    SUM(CAST(v AS HUGEINT) * v) AS qv
@@ -647,7 +642,6 @@ object LocationTests {
         Parity.quant(col("l_extendedprice") * (lit(1) - col("l_discount")),
           1e6).as("v")))
     val base = pri.unionByName(disc)
-    val dec = "decimal(38,0)"
     // (pair, v) census, per-group counts pivoted into columns (q254
     // shape) — the only fact-scale pass, map-side combinable
     val cen = base.groupBy("pair", "v").agg(
@@ -870,7 +864,6 @@ object LocationTests {
     // yields the per-pair totals — so it needs no checkpoint
     val census = base.groupBy("pair", "grp", "v")
       .agg(count(lit(1)).as("cv"))
-    val dec = "decimal(38,0)"
     // the census is fact-CARDINALITY (micro-unit prices), so no
     // per-pair window: ONE [[PrefixSum]] pass over the pooled order
     // (pair, v, grp — x before y at ties). A grp-x row's cumulative of
@@ -1024,7 +1017,6 @@ object LocationTests {
     * low-cardinality window anywhere; everything after the keyed agg
     * is 1-row algebra. */
   def q385SiegelTukey(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val cen = urgentLowCensus(s, dir)
     // r20 (verdict mandate #2): totals fused into the prefix pass —
     // the old cen.agg re-executed the fact-scale census build

@@ -421,6 +421,36 @@ object PipelineQueries {
       |FROM events
       |GROUP BY 1 ORDER BY k""".stripMargin
 
+  /** The day × priority spine of the date-spine family (q79, q95,
+    * q96): every calendar day from the first to the last order date
+    * (one tiny agg → sequence, never a driver-side loop) crossed with
+    * the distinct order priorities, left-joined to the caller's
+    * `daily` frame on (`day`, `o_orderpriority`), so a missing day
+    * surfaces as a row of nulls. [[prioritySpineSql]] is its oracle
+    * twin; the two change together. */
+  private[ops] def prioritySpine(o: DataFrame, daily: DataFrame): DataFrame = {
+    val span = o.agg(min(to_date(col("o_orderdate"))).as("d0"),
+      max(to_date(col("o_orderdate"))).as("d1"))
+    span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
+      .crossJoin(o.select("o_orderpriority").distinct())
+      .join(daily, Seq("day", "o_orderpriority"), "left")
+  }
+
+  /** The `span`, `days`, `prios` and `sparse` CTEs over the caller's
+    * relation `daily`, the oracle twin of [[prioritySpine]] (`sparse`
+    * is its frame); the two change together. */
+  private[ops] def prioritySpineSql(daily: String): String =
+    s"""span AS (
+       |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
+       |         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM orders),
+       |days AS (
+       |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
+       |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
+       |prios AS (SELECT DISTINCT o_orderpriority FROM orders),
+       |sparse AS (
+       |  SELECT * FROM days CROSS JOIN prios
+       |  LEFT JOIN $daily USING (day, o_orderpriority))""".stripMargin
+
   /** Date-spine densification under the oracle gate: the classic
     * time-series integration op — generate the full calendar between
     * the data's min and max day, cross it with the priority dimension,
@@ -432,16 +462,11 @@ object PipelineQueries {
   def q79DateSpine(s: SparkSession, dir: String): DataFrame = {
     import Parity._
     val o = Tables.orders(s, dir)
-    val span = o.agg(min(to_date(col("o_orderdate"))).as("d0"),
-      max(to_date(col("o_orderdate"))).as("d1"))
-    val spine = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val prios = o.select("o_orderpriority").distinct()
     val daily = o.groupBy(to_date(col("o_orderdate")).as("day"),
         col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
         sum(dm(col("o_totalprice"))).as("rev"))
-    spine.crossJoin(prios)
-      .join(daily, Seq("day", "o_orderpriority"), "left")
+    prioritySpine(o, daily)
       .select(col("day"), col("o_orderpriority"),
         coalesce(col("n_orders"), lit(0L)).as("n_orders"),
         dec4(coalesce(col("rev"), lit(0))).as("revenue"))
@@ -450,22 +475,15 @@ object PipelineQueries {
 
   val q79DateSpineSql: String = {
     import Parity._
-    s"""WITH span AS (
-       |  SELECT MIN(CAST(o_orderdate AS DATE)) AS d0,
-       |         MAX(CAST(o_orderdate AS DATE)) AS d1 FROM orders),
-       |days AS (
-       |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-       |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
-       |prios AS (SELECT DISTINCT o_orderpriority FROM orders),
-       |daily AS (
+    s"""WITH daily AS (
        |  SELECT CAST(o_orderdate AS DATE) AS day, o_orderpriority,
        |    COUNT(*) AS n_orders, SUM(CAST(o_totalprice AS $DM)) AS rev
-       |  FROM orders GROUP BY 1, 2)
+       |  FROM orders GROUP BY 1, 2),
+       |${prioritySpineSql("daily")}
        |SELECT day, o_orderpriority,
        |  COALESCE(n_orders, 0) AS n_orders,
        |  ${out4("COALESCE(rev, 0)")} AS revenue
-       |FROM days CROSS JOIN prios
-       |LEFT JOIN daily USING (day, o_orderpriority)
+       |FROM sparse
        |ORDER BY day, o_orderpriority""".stripMargin
   }
 
@@ -1007,7 +1025,6 @@ object PipelineQueries {
     * moments side by side (the sample is a map-side predicate, q331's
     * point); a ≤5-row census aggregate after. No second scan. */
   def q348PostStratified(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val inS = graft.ops.Kmv.hashCol(col("o_orderkey")) <
       graft.ops.Kmv.HashSpace / 16L
     val cents = Parity.quant(col("o_totalprice"), 100.0)
@@ -1157,7 +1174,6 @@ object PipelineQueries {
     * Scale: one broadcast-dim fact agg (map-side combinable), 5-row
     * output. */
   def q380KishNeff(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val seg = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
     val m = Tables.orders(s, dir)

@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object RegressionQueries {
 
-  private val dec = "decimal(38,0)"
-
-  /** Per-order census shared by the whole q298 family. */
-  private def perOrder(s: SparkSession, dir: String): DataFrame =
+  /** Per-order census shared by the whole q298 family: per
+    * `l_orderkey`, the order's cents `y`, units `x1` and line count
+    * `x2` (q293, q298, q306, q311, q312, q315, q316).
+    * [[perOrderSql]] is its oracle twin; the two change together. */
+  private[ops] def perOrder(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).groupBy("l_orderkey")
       .agg(sum(expr("cast(round(l_extendedprice * 100) as bigint)"))
         .as("y"),
@@ -39,7 +40,8 @@ object RegressionQueries {
       // across q306/q311/q312/q315/q316 (the census shuffle cost ate
       // the Gram-stage parallelism gain)
 
-  private val perOrderSql: String =
+  /** The oracle twin of [[perOrder]]; the two change together. */
+  private[ops] val perOrderSql: String =
     """SELECT l_orderkey,
       |    CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
       |      AS BIGINT) AS y,
@@ -47,8 +49,10 @@ object RegressionQueries {
       |    COUNT(*) AS x2
       |  FROM lineitem GROUP BY l_orderkey""".stripMargin
 
-  /** Gram moments (q298's ten) as one map-side agg. */
-  private def gram(per: DataFrame): DataFrame = {
+  /** Gram moments (q298's ten) of a [[perOrder]] census as one
+    * map-side agg, exact in DECIMAL(38,0). [[gramSql]] is its oracle
+    * twin over relation `per`; the two change together. */
+  private[ops] def gram(per: DataFrame): DataFrame = {
     def d(c: String) = col(c).cast(dec)
     per.agg(count(lit(1)).as("n"),
       sum(d("x1")).as("s1"), sum(d("x2")).as("s2"), sum(d("y")).as("sy"),
@@ -57,7 +61,8 @@ object RegressionQueries {
       sum(d("x2") * d("y")).as("s2y"), sum(d("y") * d("y")).as("syy"))
   }
 
-  private val gramSql: String =
+  /** The oracle twin of [[gram]]; the two change together. */
+  private[ops] val gramSql: String =
     """SELECT COUNT(*) AS n,
       |    CAST(SUM(x1) AS HUGEINT) AS s1, CAST(SUM(x2) AS HUGEINT) AS s2,
       |    CAST(SUM(y) AS HUGEINT) AS sy,

@@ -21,8 +21,6 @@ import SeriesStats.{daily, dailySql}
   */
 object RobustTests {
 
-  private val dec = "decimal(38,0)"
-
   /** L236 Dickey–Fuller unit-root test ([PK] Dickey & Fuller 1979;
     * MacKinnon 1994 critical values): Δy_t = α + ρ·y_{t−1} + ε over
     * the daily revenue series; the t-ratio of ρ̂ against the 5%
@@ -359,9 +357,7 @@ object RobustTests {
     * the first groupBy is census-sized. Guards: h < 2 on either side
     * → null. */
   def q303YuenTrimmed(s: SparkSession, dir: String): DataFrame = {
-    val o = LocationTests.buildingFurniture(s, dir)
-      .select((col("c_mktsegment") === "BUILDING").as("ga"),
-        floor(col("o_totalprice") + 0.5).cast("long").as("v"))
+    val o = LocationTests.buildingDollars(s, dir)
     val census = o.groupBy("ga", "v").agg(count(lit(1)).as("c"))
     val wc = Window.partitionBy("ga").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -416,10 +412,7 @@ object RobustTests {
   }
 
   val q303YuenTrimmedSql: String =
-    s"""WITH o AS (
-      |  SELECT c_mktsegment = 'BUILDING' AS ga,
-      |    CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v
-      |  ${LocationTests.buildingFurnitureSql}),
+    s"""WITH o AS (${LocationTests.buildingDollarsSql}),
       |census AS (SELECT ga, v, COUNT(*) AS c FROM o GROUP BY ga, v),
       |cum0 AS (
       |  SELECT ga, v, c,

@@ -322,7 +322,6 @@ object ScoreEvalQueries {
     * (or below binomial noise ⇒ α,β ≤ 0) nulls the shrunken column —
     * the raw column always survives. */
   def q261EbShrinkage(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .groupBy("l_partkey")
       .agg(count(lit(1)).as("n"),
@@ -420,7 +419,6 @@ object ScoreEvalQueries {
     * table, 1-row algebra. Guards: an empty period or single-value
     * span degenerates to bin 0 with zero reliability — still defined. */
   def q276BrierMurphy(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val wAll = Window.partitionBy()
     val q = lengthHistogram(s, dir).select(
       expr("(sc - mn) * 10 div (mx - mn + 1)").as("bin"),
@@ -808,10 +806,10 @@ object ScoreEvalQueries {
     val scored = base.crossJoin(broadcast(med))
       .withColumn("y", (col("cents").cast("double") > col("med"))
         .cast("long"))
-    val dec = RangedNtile.withNtile(scored, 10,
+    val deciles = RangedNtile.withNtile(scored, 10,
       Seq(col("c_acctbal").desc, col("o_custkey"), col("o_orderkey")),
       "decile")
-    val g = dec.groupBy("decile")
+    val g = deciles.groupBy("decile")
       .agg(count(lit(1)).as("n"), sum(col("y")).as("npos"))
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -1054,7 +1052,6 @@ object ScoreEvalQueries {
     * Scale: census + PrefixSum (no single-reducer sort); the argmax
     * is one exact max + equality filter; 1-row output. */
   def q395YoudenJ(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     // null filter (fuzz seed 138): a NULL score would land FIRST in
     // Spark's range order but LAST in DuckDB's ORDER BY, skewing every
     // cumulative count after it — scores and labels must be non-null
@@ -1170,7 +1167,6 @@ object ScoreEvalQueries {
     * Scale: census + PrefixSum + broadcast 1-row argmax — the q395
     * shape verbatim; 1-row output. */
   def q396InfoGainSplit(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val base = Tables.orders(s, dir)
       .filter(col("o_totalprice").isNotNull)
       .select(col("o_custkey"),

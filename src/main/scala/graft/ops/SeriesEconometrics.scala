@@ -23,8 +23,6 @@ import graft.ops.SeriesStats.{daily, dailySql, daily2, daily2Sql, lagStack}
   */
 object SeriesEconometrics {
 
-  private val dec = "decimal(38,0)"
-
   /** L255 Granger-causality screen, lag 1, both directions ([PK]
     * Granger 1969): does yesterday's ORDER COUNT improve today's
     * revenue forecast beyond yesterday's revenue (and vice versa)?
@@ -1135,7 +1133,6 @@ object SeriesEconometrics {
     * the scale-constant day census (the q205 documented shape);
     * 1-row output. */
   def q389TheilU(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = daily(s, dir)
     val wLag = Window.orderBy("day")
     val f = d

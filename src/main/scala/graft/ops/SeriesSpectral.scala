@@ -33,7 +33,6 @@ object SeriesSpectral {
     * Scale: day agg → ≤|months| census (scale-constant); single-row
     * output. */
   def q221Gumbel(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val blocks = daily(s, dir)
       .groupBy(trunc(col("day"), "month").as("m"))
       .agg(max(col("rev")).as("mx"))
@@ -109,7 +108,6 @@ object SeriesSpectral {
     * per-block windows partition BY block (parallel, bounded width);
     * ≤4-row algebra after. */
   def q252HurstRs(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d0 = graft.ops.PrefixSum.withPrefixSums(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")))
@@ -243,7 +241,6 @@ object SeriesSpectral {
     * fact data); the m = 7 lag windows run over the scale-constant
     * series. */
   def q253Kpss(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val m = 7
     val tot = daily(s, dir).agg(count(lit(1)).as("n"),
       sum(col("rev")).as("sr"))
@@ -335,7 +332,6 @@ object SeriesSpectral {
     * (the census row number rides [[PrefixSum]], not a global
     * window); everything is map-side combinable. */
   def q246HaarEnergy(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d0 = graft.ops.PrefixSum.withPrefixSums(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")))
@@ -429,7 +425,6 @@ object SeriesSpectral {
     * map-side summed. Guards: n < 2·period or zero variance → null
     * share for that period. */
   def q266Periodogram(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val e = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")), Nil,
@@ -522,7 +517,6 @@ object SeriesSpectral {
     * broadcast is the allowlisted BNLJ class. Guards: Σε² = 0
     * (constant diffs) or n < 10 → null Q/p. */
   def q275LjungBox(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val w = Window.orderBy("day")
     val diffs = daily(s, dir)
       .withColumn("dx", col("rev") - lag(col("rev"), 1).over(w))
@@ -640,7 +634,6 @@ object SeriesSpectral {
     * corpus; one window over the ≤n/2-row power census. Guards: n < 4
     * or zero variance → null entropy. */
   def q290SpectralEntropy(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val e = graft.ops.PrefixSum.withPrefixSumsAndTotals(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")), Nil,
@@ -776,7 +769,6 @@ object SeriesSpectral {
     * embedded census — scale-constant work however large the corpus.
     * Guards: A = 0 or B = 0 → null SampEn (counts still reported). */
   def q292SampleEntropy(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d0 = graft.ops.PrefixSum.withPrefixSums(
       daily(s, dir).select(col("day"), col("rev")),
       Seq(col("day")), Seq((lit(1L), "rn")))

@@ -56,6 +56,28 @@ object SeriesStats {
       .filter(col("x").isNotNull)
   }
 
+  /** The bivariate moment sums `sx, sy, sxy, sxx, syy` of columns `x`
+    * and `y`, for an `agg` beside the caller's own count (q208, q213,
+    * q219, q270, q273). Each factor is cast to DECIMAL(38,0) BEFORE it
+    * multiplies: a daily total past ~$3B would overflow an int64
+    * product, and (38,0)×(38,0) stays exact for any value that fits 38
+    * digits. [[pairSumsSql]] is its oracle twin; the two change
+    * together. */
+  private[ops] val pairSums: Seq[Column] = Seq(
+    sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
+    sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
+    sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
+    sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+
+  /** The oracle twin of [[pairSums]], as a select list; the two change
+    * together. */
+  private[ops] val pairSumsSql: String =
+    """CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
+      |    CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
+      |    CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
+      |    CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
+      |    CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy""".stripMargin
+
   /** A day series indexed by `t`, whole days since 1995-01-01 as
     * int64, first, in place of its `day` date; the frame's other
     * columns follow in order. [[dayIndexedSql]] is its oracle twin; the
@@ -187,16 +209,8 @@ object SeriesStats {
     // per-lag union form paid 7 re-sorts); stack unpivots to rows
     val lags =
       lagStack(daily(s, dir), Window.orderBy("day"), "rev", "rev", 1 to 7)
-    // cast to decimal BEFORE multiplying: a daily total past ~$3B would
-    // overflow an int64 per-term product; (38,0)x(38,0) stays exact for
-    // any value that fits 38 digits
-    val dec = "decimal(38,0)"
     lags.groupBy("lag")
-      .agg(count(lit(1)).as("n"),
-        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-        sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-        sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+      .agg(count(lit(1)).as("n"), pairSums: _*)
       .select(col("lag"), col("n"),
         // fuzz hardening (r12): a single-pair lag or constant series
         // zeroes a variance factor — correlation undefined, not a crash
@@ -353,13 +367,8 @@ object SeriesStats {
   def q213CrossCorr(s: SparkSession, dir: String): DataFrame = {
     val lags =
       lagStack(daily2(s, dir), Window.orderBy("day"), "rev", "cnt", 0 to 7)
-    val dec = "decimal(38,0)"
     lags.groupBy("lag")
-      .agg(count(lit(1)).as("n"),
-        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-        sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-        sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+      .agg(count(lit(1)).as("n"), pairSums: _*)
       .select(col("lag"), col("n"),
         // fuzz hardening (r12): a single-pair lag or constant series
         // zeroes a variance factor — correlation undefined, not a crash
@@ -387,11 +396,7 @@ object SeriesStats {
        |  FROM d CROSS JOIN (SELECT unnest(range(0, 8)) AS lag) k),
        |m AS (
        |  SELECT lag, COUNT(*) AS n,
-       |    CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-       |    CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-       |    CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-       |    CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
-       |    CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
+       |    $pairSumsSql
        |  FROM lg WHERE x IS NOT NULL GROUP BY lag)
        |SELECT lag, n,
        |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
@@ -421,22 +426,10 @@ object SeriesStats {
     * 6dp displayed. Scale: identical cost to q208 — one shared window
     * sort over the scale-constant day series, ≤3-row census algebra. */
   def q219Pacf(s: SparkSession, dir: String): DataFrame = {
-    val d = daily(s, dir)
-    val w = Window.orderBy("day")
-    val withLags = d.select(
-      (col("rev") +: (1 to 3).map(k =>
-        lag(col("rev"), k).over(w).as(s"x$k"))): _*)
-    val lags = withLags
-      .select(col("rev").as("y"),
-        expr("stack(3, 1L, x1, 2L, x2, 3L, x3) as (lag, x)"))
-      .filter(col("x").isNotNull)
-    val dec = "decimal(38,0)"
+    val lags =
+      lagStack(daily(s, dir), Window.orderBy("day"), "rev", "rev", 1 to 3)
     val m = lags.groupBy("lag")
-      .agg(count(lit(1)).as("n"),
-        sum(col("x").cast(dec)).as("sx"), sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy"),
-        sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"),
-        sum(col("y").cast(dec) * col("y").cast(dec)).as("syy"))
+      .agg(count(lit(1)).as("n"), pairSums: _*)
     val r = (col("n").cast("double") * col("sxy").cast("double") -
       col("sx").cast("double") * col("sy").cast("double")) /
       (sqrt(col("n").cast("double") * col("sxx").cast("double") -
@@ -470,11 +463,7 @@ object SeriesStats {
        |  FROM d CROSS JOIN (SELECT unnest(range(1, 4)) AS lag) k),
        |m AS (
        |  SELECT lag, COUNT(*) AS n,
-       |    CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-       |    CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-       |    CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-       |    CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
-       |    CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
+       |    $pairSumsSql
        |  FROM lg WHERE x IS NOT NULL GROUP BY lag),
        |rr AS (
        |  SELECT lag,
@@ -523,7 +512,6 @@ object SeriesStats {
     * Scale: day agg → ≤7-row dow census broadcast back → one lag
     * window over the scale-constant series. */
   def q230DurbinWatson(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = daily(s, dir)
       .select(col("day"), col("rev"), (weekday(col("day")) + 1).as("dw"))
     val seas = d.groupBy("dw")
@@ -578,11 +566,7 @@ object SeriesStats {
        |  FROM d CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) k),
        |m AS (
        |  SELECT lag, COUNT(*) AS n,
-       |    CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-       |    CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-       |    CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-       |    CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
-       |    CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
+       |    $pairSumsSql
        |  FROM lg WHERE x IS NOT NULL GROUP BY lag)
        |SELECT lag, n,
        |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
@@ -623,7 +607,6 @@ object SeriesStats {
     * a bounded broadcast pair build under a lazy checkpoint, never
     * fact-sized; windows run on the ≤365-row census. */
   def q403HoeffdingD(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = dayIndexed(daily2(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"), col("cnt"))
     val ranked = recent

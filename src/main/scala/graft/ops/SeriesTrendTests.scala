@@ -415,7 +415,6 @@ object SeriesTrendTests {
     * Scale: day census + two lag windows over it; 1-row algebra.
     * Guards: n < q+2 or zero base variance → null. */
   def q265VarianceRatio(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val q = 5
     val w = Window.orderBy("day")
     val d0 = daily(s, dir)
@@ -650,7 +649,6 @@ object SeriesTrendTests {
     * over that bounded set (the q205 honest-plan note). One 1-row
     * (n, k, sd) broadcast picks the rank (q242 form). */
   def q347QnScale(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = dayIndexed(daily(s, dir))
     val recent = trailingYear(d).select(col("t"), col("rev"))
       .localCheckpoint(eager = false)
@@ -972,7 +970,6 @@ object SeriesTrendTests {
     * scale-constant day census (the q205/q379 documented shape);
     * 1-row output. */
   def q388PageHinkley(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = daily(s, dir)
     val tot = d.agg(count(lit(1)).as("nn"), sum(col("rev")).as("tt"))
     val wCum = Window.orderBy("day")
@@ -1055,7 +1052,6 @@ object SeriesTrendTests {
     * rollup, windows over the scale-constant day census); 1-row
     * output. */
   def q397CusumSquares(s: SparkSession, dir: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val d = daily(s, dir).withColumn("x2",
       col("rev").cast(dec) * col("rev").cast(dec))
     val tot = d.agg(count(lit(1)).as("nn"), sum(col("x2")).as("qq"))

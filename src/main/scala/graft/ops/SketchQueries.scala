@@ -20,6 +20,23 @@ import org.apache.spark.sql.functions._
   */
 object SketchQueries {
 
+  /** The rollup keys of the sketch-merge family (q351, q357, q358,
+    * q363, q376; q366 reads the quarter): the order's month
+    * `year·100 + month` and quarter `year·10 + quarter` as int.
+    * [[monthKeySql]] and [[quarterKeySql]] are their oracle twins;
+    * each pair changes together. */
+  private[ops] val monthKey: Column =
+    year(col("o_orderdate")) * 100 + month(col("o_orderdate"))
+  private[ops] val quarterKey: Column =
+    year(col("o_orderdate")) * 10 + quarter(col("o_orderdate"))
+
+  /** The oracle twins of [[monthKey]] and [[quarterKey]]; each pair
+    * changes together. */
+  private[ops] val monthKeySql: String =
+    "date_part('year', o_orderdate) * 100 + date_part('month', o_orderdate)"
+  private[ops] val quarterKeySql: String =
+    "date_part('year', o_orderdate) * 10 + date_part('quarter', o_orderdate)"
+
   /** L260 KMV (k-minimum-values) distinct-count sketch ([PK]
     * Bar-Yossef et al. 2002; Beyer et al. 2007 unbiased (k−1)/u_k
     * form): estimate |distinct o_custkey| from the k = 256 smallest
@@ -317,11 +334,7 @@ object SketchQueries {
     val k = 256
     val o = Tables.orders(s, dir)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
-      .select((year(col("o_orderdate")) * 100 +
-        month(col("o_orderdate"))).as("m"),
-        (year(col("o_orderdate")) * 10 +
-          quarter(col("o_orderdate"))).as("qtr"),
-        col("o_custkey"))
+      .select(monthKey.as("m"), quarterKey.as("qtr"), col("o_custkey"))
     val monthly = o.select(col("m"), col("qtr"),
         Kmv.hashCol(col("o_custkey")).as("hv"))
       .groupBy("m", "qtr", "hv").agg(count(lit(1)).as("_d"))
@@ -352,11 +365,7 @@ object SketchQueries {
 
   val q351KmvRollupSql: String =
     s"""WITH o AS (
-       |  SELECT date_part('year', o_orderdate) * 100
-       |      + date_part('month', o_orderdate) AS m,
-       |    date_part('year', o_orderdate) * 10
-       |      + date_part('quarter', o_orderdate) AS qtr,
-       |    o_custkey
+       |  SELECT $monthKeySql AS m, $quarterKeySql AS qtr, o_custkey
        |  FROM orders
        |  WHERE date_part('year', o_orderdate) IN (1995, 1996)),
        |mh AS (
@@ -422,10 +431,7 @@ object SketchQueries {
   def q357HistogramRollup(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
       .filter(year(col("o_orderdate")).isin(1995, 1996))
-      .select((year(col("o_orderdate")) * 100 +
-        month(col("o_orderdate"))).as("m"),
-        (year(col("o_orderdate")) * 10 +
-          quarter(col("o_orderdate"))).as("qtr"),
+      .select(monthKey.as("m"), quarterKey.as("qtr"),
         Parity.quant(col("o_totalprice"), 100.0).as("cents"))
       .localCheckpoint(eager = false)
     val b = o.agg(min(col("cents")).as("mn"), max(col("cents")).as("mx"))
@@ -481,10 +487,7 @@ object SketchQueries {
 
   val q357HistogramRollupSql: String =
     s"""WITH o AS (
-      |  SELECT date_part('year', o_orderdate) * 100
-      |      + date_part('month', o_orderdate) AS m,
-      |    date_part('year', o_orderdate) * 10
-      |      + date_part('quarter', o_orderdate) AS qtr,
+      |  SELECT $monthKeySql AS m, $quarterKeySql AS qtr,
       |    CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
       |  FROM orders
       |  WHERE date_part('year', o_orderdate) IN (1995, 1996)),
@@ -566,8 +569,7 @@ object SketchQueries {
       pmod(conv(substring(md5(concat(lit(s"cm$j:"),
         key.cast("string"))), 1, 6), 16, 10).cast("long"), lit(w.toLong))
     val o = Tables.orders(s, dir)
-      .select((year(col("o_orderdate")) * 100 +
-        month(col("o_orderdate"))).as("m"), col("o_custkey"))
+      .select(monthKey.as("m"), col("o_custkey"))
     val monthly = o
       .select(col("m"),
         cell(0, col("o_custkey")).as("c0"),
@@ -610,8 +612,7 @@ object SketchQueries {
          |      * (CAST(1 AS BIGINT) << CAST(4 * (5 - i) AS INT)))) % 1024)"""
         .stripMargin
     s"""WITH o AS (
-       |  SELECT date_part('year', o_orderdate) * 100
-       |      + date_part('month', o_orderdate) AS m, o_custkey
+       |  SELECT $monthKeySql AS m, o_custkey
        |  FROM orders),
        |cells AS (
        |  SELECT m, j,
@@ -763,10 +764,8 @@ object SketchQueries {
   def q376HllRollup(s: SparkSession, dir: String): DataFrame = {
     val mask = 1099511627775L
     val o = Tables.orders(s, dir)
-      .select((year(col("o_orderdate")) * 100 +
-        month(col("o_orderdate"))).cast("long").as("m"),
-        (year(col("o_orderdate")) * 10 +
-          quarter(col("o_orderdate"))).cast("long").as("qtr"),
+      .select(monthKey.cast("long").as("m"),
+        quarterKey.cast("long").as("qtr"),
         col("o_custkey"),
         Kmv.hashCol(col("o_custkey")).as("hv"))
     val monthly = o
@@ -781,8 +780,7 @@ object SketchQueries {
       count(lit(1)).as("nreg"),
       sum(expr("shiftleft(1L, cast(41 - m as int))")).as("s_obs"))
     val ex = Tables.orders(s, dir)
-      .groupBy((year(col("o_orderdate")) * 10 +
-        quarter(col("o_orderdate"))).cast("long").as("qtr"))
+      .groupBy(quarterKey.cast("long").as("qtr"))
       .agg(countDistinct(col("o_custkey")).as("n_exact"))
     val v = lit(256L) - col("nreg")
     val sInt = col("s_obs") + v * lit(2199023255552L)
@@ -801,10 +799,7 @@ object SketchQueries {
 
   val q376HllRollupSql: String =
     s"""WITH h AS (
-       |  SELECT date_part('year', o_orderdate) * 100
-       |      + date_part('month', o_orderdate) AS m,
-       |    date_part('year', o_orderdate) * 10
-       |      + date_part('quarter', o_orderdate) AS qtr,
+       |  SELECT $monthKeySql AS m, $quarterKeySql AS qtr,
        |    ${Kmv.hashSql("o_custkey")} AS hv
        |  FROM orders),
        |monthly AS (
@@ -820,8 +815,7 @@ object SketchQueries {
        |      AS BIGINT) AS s_obs
        |  FROM merged GROUP BY qtr),
        |ex AS (
-       |  SELECT date_part('year', o_orderdate) * 10
-       |      + date_part('quarter', o_orderdate) AS qtr,
+       |  SELECT $quarterKeySql AS qtr,
        |    COUNT(DISTINCT o_custkey) AS n_exact
        |  FROM orders GROUP BY 1),
        |fin AS (
@@ -870,10 +864,8 @@ object SketchQueries {
     * replaces, kept as the measuring stick. */
   def q363AmsF2Rollup(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(s, dir)
-      .select((year(col("o_orderdate")) * 100 +
-        month(col("o_orderdate"))).cast("long").as("m"),
-        (year(col("o_orderdate")) * 10 +
-          quarter(col("o_orderdate"))).cast("long").as("qtr"),
+      .select(monthKey.cast("long").as("m"),
+        quarterKey.cast("long").as("qtr"),
         col("o_custkey"),
         Kmv.hashCol(col("o_custkey")).as("hv"))
     val signSums = (0 until 32).map { j =>
@@ -890,8 +882,7 @@ object SketchQueries {
     val est = quarterly.select(col("qtr"),
       (sumSq.cast("double") / 32.0).as("ams_est"))
     val ex = Tables.orders(s, dir)
-      .groupBy((year(col("o_orderdate")) * 10 +
-        quarter(col("o_orderdate"))).cast("long").as("qtr"),
+      .groupBy(quarterKey.cast("long").as("qtr"),
         col("o_custkey"))
       .agg(count(lit(1)).as("n"))
       .groupBy("qtr")
@@ -913,10 +904,7 @@ object SketchQueries {
       s"CAST(SUM(x$j) AS BIGINT) AS x$j").mkString(", ")
     val sumSq = (0 until 32).map(j => s"x$j*x$j").mkString(" + ")
     s"""WITH h AS (
-       |  SELECT date_part('year', o_orderdate) * 100
-       |      + date_part('month', o_orderdate) AS m,
-       |    date_part('year', o_orderdate) * 10
-       |      + date_part('quarter', o_orderdate) AS qtr,
+       |  SELECT $monthKeySql AS m, $quarterKeySql AS qtr,
        |    ${Kmv.hashSql("o_custkey")} AS hv
        |  FROM orders),
        |monthly AS (
@@ -932,8 +920,7 @@ object SketchQueries {
        |  SELECT qtr, CAST(SUM(n * n) AS BIGINT) AS f2_exact,
        |    CAST(SUM(n) AS BIGINT) AS n_orders
        |  FROM (
-       |    SELECT date_part('year', o_orderdate) * 10
-       |        + date_part('quarter', o_orderdate) AS qtr,
+       |    SELECT $quarterKeySql AS qtr,
        |      o_custkey, COUNT(*) AS n
        |    FROM orders GROUP BY 1, 2) GROUP BY qtr)
        |SELECT CAST(est.qtr AS BIGINT) AS quarter, n_orders, f2_exact,

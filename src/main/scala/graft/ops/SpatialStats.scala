@@ -32,16 +32,39 @@ import org.apache.spark.sql.functions._
   */
 object SpatialStats {
 
-  private val dec = "decimal(38,0)"
+  /** The q149 synthetic coordinates of an integer key: latitude from
+    * the multiplicative hash key·2654435761 mod 1700 and longitude from
+    * key·1103515245 + 12345 mod 3600, each /10 − offset (q131, q149 and
+    * the cell-grid tests here). [[gridLatSql]] and [[gridLonSql]] are
+    * their oracle twins; each pair changes together. */
+  private[ops] def gridLat(key: Column): Column =
+    pmod(key * 2654435761L, lit(1700L)).cast("double") / 10.0 - 85.0
+  private[ops] def gridLon(key: Column): Column =
+    pmod(key * 1103515245L + 12345L, lit(3600L)).cast("double") / 10.0 - 180.0
 
+  /** The oracle twins of [[gridLat]] and [[gridLon]] over the SQL
+    * expression `key`; each pair changes together. */
+  private[ops] def gridLatSql(key: String): String =
+    s"CAST((($key * 2654435761) % 1700 + 1700) % 1700 AS DOUBLE) / 10.0 - 85.0"
+  private[ops] def gridLonSql(key: String): String =
+    s"CAST((($key * 1103515245 + 12345) % 3600 + 3600) % 3600 AS DOUBLE)" +
+      " / 10.0 - 180.0"
 
-  /** The q149 synthetic geo-grid: customers hashed to (lat, lon) with
-    * the q149 multiplicative hashes, bucketed to 10° cells, counted.
-    * Spatially RANDOM by construction (the hash has no spatial
-    * structure) — so the global tests should sit in the null band,
-    * which NonDegeneracySpec pins; the structured-field behaviour
-    * (I→1, C→0 on a ramp) is pinned by StatBruteSpec through the same
-    * [[moransI]]/[[gearysC]] kernels on an in-test grid. */
+  /** Each customer's 10° cell (`cx`, `cy`) of its [[gridLon]]/[[gridLat]]
+    * point (q149 and the cell-grid tests here). [[customerGridSql]] is
+    * its oracle twin; the two change together. */
+  private[ops] def customerGrid(s: SparkSession, dir: String): DataFrame =
+    Tables.customer(s, dir)
+      .select(floor(gridLon(col("c_custkey")) / 10.0).cast("int").as("cx"),
+        floor(gridLat(col("c_custkey")) / 10.0).cast("int").as("cy"))
+
+  /** The oracle twin of [[customerGrid]]; the two change together. */
+  private[ops] val customerGridSql: String =
+    s"""SELECT
+      |    CAST(FLOOR((${gridLonSql("c_custkey")}) / 10.0) AS INTEGER) AS cx,
+      |    CAST(FLOOR((${gridLatSql("c_custkey")}) / 10.0) AS INTEGER) AS cy
+      |  FROM customer""".stripMargin
+
   /** md5-scattered POINT coordinates (q328/q333/q335 family): lat from
     * hex digits 1–6 of md5(key) mod 1700, lon from digits 7–12 mod
     * 3600, each /10 − offset. Unlike the q149 multiplicative hash
@@ -70,17 +93,15 @@ object SpatialStats {
   private def mdLonSql(keyExpr: String): String =
     s"CAST(${mdFoldSql(keyExpr, 7, 3600)}\n      AS DOUBLE) / 10.0 - 180.0"
 
-  private def customerCells(s: SparkSession, dir: String): DataFrame = {
-    def lat(key: Column): Column =
-      pmod(key * 2654435761L, lit(1700L)).cast("double") / 10.0 - 85.0
-    def lon(key: Column): Column =
-      pmod(key * 1103515245L + 12345L, lit(3600L)).cast("double") / 10.0 - 180.0
-    val cell = 10.0
-    Tables.customer(s, dir)
-      .select(floor(lon(col("c_custkey")) / cell).cast("int").as("cx"),
-        floor(lat(col("c_custkey")) / cell).cast("int").as("cy"))
-      .groupBy("cx", "cy").agg(count(lit(1)).as("x"))
-  }
+  /** The q149 synthetic geo-grid: customers hashed to (lat, lon) with
+    * the q149 multiplicative hashes, bucketed to 10° cells, counted.
+    * Spatially RANDOM by construction (the hash has no spatial
+    * structure) — so the global tests should sit in the null band,
+    * which NonDegeneracySpec pins; the structured-field behaviour
+    * (I→1, C→0 on a ramp) is pinned by StatBruteSpec through the same
+    * [[moransI]]/[[gearysC]] kernels on an in-test grid. */
+  private def customerCells(s: SparkSession, dir: String): DataFrame =
+    customerGrid(s, dir).groupBy("cx", "cy").agg(count(lit(1)).as("x"))
 
   /** Queen-adjacency augmentation: for each occupied cell, the count
     * of occupied 8-neighbours (deg), their value sum (ns) and value
@@ -300,13 +321,7 @@ object SpatialStats {
   /** Shared mirror CTEs: the q149 grid hash, queen offsets, and the
     * per-cell augmentation (deg/ns/ns2) — HUGEINT exact. */
   private val cellCtes: String =
-    """WITH pts AS (
-      |  SELECT
-      |    CAST(FLOOR((CAST(((c_custkey * 1103515245 + 12345) % 3600 + 3600) % 3600 AS DOUBLE)
-      |      / 10.0 - 180.0) / 10.0) AS INTEGER) AS cx,
-      |    CAST(FLOOR((CAST(((c_custkey * 2654435761) % 1700 + 1700) % 1700 AS DOUBLE)
-      |      / 10.0 - 85.0) / 10.0) AS INTEGER) AS cy
-      |  FROM customer),
+    s"""WITH pts AS ($customerGridSql),
       |cells AS (SELECT cx, cy, COUNT(*) AS x FROM pts GROUP BY cx, cy),
       |offs AS (
       |  SELECT dx.dx, dy.dy

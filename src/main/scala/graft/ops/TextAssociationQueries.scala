@@ -179,16 +179,8 @@ object TextAssociationQueries {
     * Scale: one per-doc map (3 boolean screens), one 1-row agg.
     * Guards: P_e = 1 (all raters constant) nulls κ. */
   def q274FleissKappa(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(
-        when(col("n_chars") >= 100, 1L).otherwise(0L).as("r1"),
-        when(size(tokens(col("text"))) >= 20, 1L).otherwise(0L).as("r2"),
-        when(arrays_overlap(tokens(col("text")),
-          typedlit(Seq("the", "a", "of", "and", "to", "in", "is", "on"))),
-          1L).otherwise(0L).as("r3"))
-      .withColumn("g", col("r1") + col("r2") + col("r3"))
     val m = 3.0
-    val g = d.agg(count(lit(1)).as("n_docs"),
+    val g = EvalQueries.raters(s, dir).agg(count(lit(1)).as("n_docs"),
       sum(col("g")).as("votes_good"),
       // Σ_i [n_good(n_good−1) + n_bad(n_bad−1)] with n_bad = 3 − n_good
       sum(col("g") * (col("g") - 1) +
@@ -206,15 +198,7 @@ object TextAssociationQueries {
   }
 
   val q274FleissKappaSql: String =
-    s"""WITH d AS (
-       |  SELECT
-       |    (CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END)
-       |    + (CASE WHEN len(string_split(text, ' ')) >= 20 THEN 1 ELSE 0
-       |       END)
-       |    + (CASE WHEN len(list_intersect(string_split(text, ' '),
-       |        ['the','a','of','and','to','in','is','on'])) > 0
-       |       THEN 1 ELSE 0 END) AS g
-       |  FROM documents),
+    s"""WITH d AS (${EvalQueries.ratersSql}),
        |t AS (
        |  SELECT COUNT(*) AS n_docs,
        |    CAST(SUM(g) AS BIGINT) AS votes_good,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) clustering — the multi-dimensional data-
@@ -58,16 +58,7 @@ object ZOrder {
     require(zCols.size >= 2,
       "z-order needs >= 2 columns; use Compaction.writeClustered for 1")
     val ranks = zCols.map(quantileRank(df, _, bits))
-    val z = interleaveBits(ranks, bits)
-    val n = df.count()
-    val k = Compaction.filesFor(n, targetRowsPerFile)
-    df.withColumn("__z", z)
-      .repartitionByRange(k, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(path)
-    k
+    Compaction.writeRanges(df.withColumn("__z", interleaveBits(ranks, bits)),
+      path, Seq(col("__z")), targetRowsPerFile, dropped = Some("__z"))
   }
 }

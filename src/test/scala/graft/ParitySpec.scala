@@ -200,7 +200,62 @@ class ParitySpec extends SparkSpec {
       """d.select(col("lang").as("ql")).distinct()""" ->
         Set("RetrievalQueries.scala" -> "langRanking"),
       "ORDER BY n_chars DESC, doc_id) AS rk" ->
-        Set("RetrievalQueries.scala" -> "langRankingSql"))
+        Set("RetrievalQueries.scala" -> "langRankingSql"),
+      """sum(expr("cast(round(l_quantity) as bigint)"))""" -> Set(
+        "RegressionQueries.scala" -> "perOrder",
+        // a per-part census, not the per-order one
+        "CorpusQueries.scala" -> "q284Rbo"),
+      "CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT)" -> Set(
+        "RegressionQueries.scala" -> "perOrderSql",
+        "CorpusQueries.scala" -> "q284RboSql"),
+      """sum(d("x1") * d("y")).as("s1y")""" ->
+        Set("RegressionQueries.scala" -> "gram"),
+      "CAST(SUM(CAST(x1 AS HUGEINT) * y) AS HUGEINT) AS s1y" ->
+        Set("RegressionQueries.scala" -> "gramSql"),
+      """sum(col("qj")).over(wAll)""" ->
+        Set("KSampleTests.scala" -> "anovaTable"),
+      "SUM(qj) OVER ()" -> Set("KSampleTests.scala" -> "anovaTableSql"),
+      """sum(col("x").cast(dec) * col("y").cast(dec)).as("sxy")""" -> Set(
+        "SeriesStats.scala" -> "pairSums",
+        // trivariate moments, not the pair sums
+        "InferenceDiagnostics.scala" -> "q293PartialCorr"),
+      "CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy" ->
+        Set("SeriesStats.scala" -> "pairSumsSql"),
+      """(col("c_mktsegment") === "BUILDING").as("ga")""" ->
+        Set("LocationTests.scala" -> "buildingDollars"),
+      "c_mktsegment = 'BUILDING' AS ga" ->
+        Set("LocationTests.scala" -> "buildingDollarsSql"),
+      """year(col("o_orderdate")) * 100""" ->
+        Set("SketchQueries.scala" -> "monthKey"),
+      """year(col("o_orderdate")) * 10 +""" ->
+        Set("SketchQueries.scala" -> "quarterKey"),
+      "date_part('year', o_orderdate) * 100" ->
+        Set("SketchQueries.scala" -> "monthKeySql"),
+      "date_part('year', o_orderdate) * 10 +" ->
+        Set("SketchQueries.scala" -> "quarterKeySql"),
+      """explode(sequence(col("d0"), col("d1")))""" ->
+        Set("PipelineQueries.scala" -> "prioritySpine"),
+      "INTERVAL 1 DAY)) AS DATE) AS day FROM span" ->
+        Set("PipelineQueries.scala" -> "prioritySpineSql"),
+      "pmod(key * 2654435761L, lit(1700L))" ->
+        Set("SpatialStats.scala" -> "gridLat"),
+      "pmod(key * 1103515245L + 12345L, lit(3600L))" ->
+        Set("SpatialStats.scala" -> "gridLon"),
+      "* 2654435761) % 1700 + 1700) % 1700" ->
+        Set("SpatialStats.scala" -> "gridLatSql"),
+      "* 1103515245 + 12345) % 3600 + 3600) % 3600" ->
+        Set("SpatialStats.scala" -> "gridLonSql"),
+      """.cast("int").as("cx")""" ->
+        Set("SpatialStats.scala" -> "customerGrid"),
+      "AS INTEGER) AS cx" -> Set("SpatialStats.scala" -> "customerGridSql"),
+      """element_at(split(col("p_name"), " "), 2)""" ->
+        Set("DedupQueries.scala" -> "namePairs"),
+      "ON string_split(a.p_name, ' ')[2]" ->
+        Set("DedupQueries.scala" -> "namePairsSql"),
+      """when(col("n_chars") >= 100, 1L)""" ->
+        Set("EvalQueries.scala" -> "raters"),
+      "CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END" ->
+        Set("EvalQueries.scala" -> "ratersSql"))
     val member = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r.unanchored
     def flat(line: String) =
       line.trim.stripPrefix("|").trim.replaceAll("""\s+""", " ")
